@@ -82,21 +82,23 @@ def main():
 
     # -- leg A: start, wait for the first committed batch, SIGKILL ---
     t0 = time.perf_counter()
-    p = spawn(root_i, sf_dir, mult, cpus, os.path.join(base, "legA.log"))
-    committed_at_kill = 0
-    while True:
-        if p.poll() is not None:
-            raise SystemExit("job finished before the kill — corpus too "
-                             "small for a mid-job kill; raise mult")
-        snaps = read_manifest(root_i, "dedup_sigs")
-        if len(snaps) >= 1:
-            committed_at_kill = len(snaps)
-            break
+    log_a = os.path.join(base, "legA.log")
+    p = spawn(root_i, sf_dir, mult, cpus, log_a)
+    while not read_manifest(root_i, "dedup_sigs") and p.poll() is None:
         time.sleep(0.5)
+    if p.returncode:
+        raise SystemExit(f"leg A failed before the kill "
+                         f"(rc={p.returncode}), see {log_a}")
+    if p.returncode == 0:
+        raise SystemExit("job finished before the kill — corpus too "
+                         "small for a mid-job kill; raise mult")
     kill_at = time.perf_counter() - t0
     # batch N+1 is in flight right now; kill the whole process group
     os.killpg(os.getpgid(p.pid), signal.SIGKILL)
     p.wait()
+    # more batches may have committed between the poll and the kill:
+    # count from the manifest as the kill left it
+    committed_at_kill = len(read_manifest(root_i, "dedup_sigs"))
     orphans = [d for d in os.listdir(os.path.join(root_i, "dedup_sigs"))
                if d.startswith("snap-")]
 

@@ -27,8 +27,8 @@ from s2geometry_spark.operators import (ann, corpus, dedup, media,
 from s2geometry_spark.operators.distjoin import (chord2_of_angle,
                                                  distance_join)
 from s2geometry_spark.operators.knn import demo_knn_queries, knn_join
-from s2geometry_spark.operators.pip_join import (coverings_df, pip_join,
-                                                 region_overlap_candidates)
+from s2geometry_spark.operators.pip_join import (
+    covering_range_join, coverings_df, pip_join, region_overlap_candidates)
 from s2geometry_spark.sources.pages import (documents_to_pages,
                                             load_documents, load_pages)
 
@@ -84,15 +84,15 @@ def _q_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10–A13 as portable bit algebra: level/range come from pure SQL on
-    the signed id — cross-checks the kernel-built ids structurally."""
+    """A10–A13 as portable bit algebra: level/range/order key are pure SQL
+    on the signed id — cross-checks the kernel-built ids structurally."""
     pages = load_pages(spark, sf_dir)
     return pages.select(
         "doc_id", "cell_id",
-        geo.cell_level_udf(F.col("cell_id")).alias("level"),
-        geo.cell_range_min_key_udf(F.col("cell_l8")).alias("l8_range_min_key"),
-        geo.cell_range_max_key_udf(F.col("cell_l8")).alias("l8_range_max_key"),
-        geo.cell_order_key_udf(F.col("cell_id")).alias("cell_key"))
+        geo.level_col(F.col("cell_id")).alias("level"),
+        geo.range_min_key_col(F.col("cell_l8")).alias("l8_range_min_key"),
+        geo.range_max_key_col(F.col("cell_l8")).alias("l8_range_max_key"),
+        geo.order_key_col(F.col("cell_id")).alias("cell_key"))
 
 
 def _q_pip_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,17 +149,8 @@ def _q_covering_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverer output + BETWEEN machinery against DuckDB directly."""
     pages = load_pages(spark, sf_dir)
     cov = coverings_df(spark, demo_regions(), max_cells=64)
-    pages_k = pages.withColumn("cell_key", geo.cell_order_key_udf(F.col("cell_id")))
-    # coalesce(cond, false): same single-UDF-evaluation guard as
-    # pip_join's range strategy (a plain BETWEEN lets Catalyst infer
-    # isnotnull(cell_key) and re-inline the whole geocode+order-key UDF
-    # chain into a second ArrowEvalPython per scan row)
-    return (pages_k.join(
-        F.broadcast(cov),
-        F.coalesce((F.col("cell_key") >= cov["range_min_key"])
-                   & (F.col("cell_key") <= cov["range_max_key"]),
-                   F.lit(False)), "inner")
-        .select("url", "region_id", "is_interior"))
+    return covering_range_join(pages, cov) \
+        .select("url", "region_id", "is_interior")
 
 
 def _q_pip_polyline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,14 +197,8 @@ def _q_covering_candidates_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = load_pages(spark, sf_dir)
     cov = coverings_df(spark, demo_regions(), max_cells=64,
                        mode="best_first")
-    pages_k = pages.withColumn("cell_key", geo.cell_order_key_udf(F.col("cell_id")))
-    # coalesce guard — see _q_covering_candidates
-    return (pages_k.join(
-        F.broadcast(cov),
-        F.coalesce((F.col("cell_key") >= cov["range_min_key"])
-                   & (F.col("cell_key") <= cov["range_max_key"]),
-                   F.lit(False)), "inner")
-        .select("url", "region_id", "is_interior"))
+    return covering_range_join(pages, cov) \
+        .select("url", "region_id", "is_interior")
 
 
 def _q_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:

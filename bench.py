@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: every CPU this process may use) and
+prints ONE JSON line.
 
 Each query is forced end-to-end with a noop-sink write (full column
 materialization — a bare count() would let Catalyst prune the very
@@ -33,7 +34,8 @@ def force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from s2geometry_spark.session import default_cores
+    cpus = default_cores()
     pages_mult = int(os.environ.get("SPARK_GRAFT_PAGES_MULT", "100"))
     text_mult = int(os.environ.get("SPARK_GRAFT_TEXT_MULT", "10"))
     # fixed partitioning makes the 8-vs-32-core comparison controlled:

@@ -63,7 +63,7 @@ def spark_hashes(sf_dir: str):
 
 
 def latlng_from_hash(h: int):
-    """Exact replica of functions/geo.py LAT/LNG_FROM_HASH_SQL in Python."""
+    """Exact replica of functions/geo.py lat/lng_from_hash in Python."""
     h_lo = h & 4294967295
     h_hi = (h - h_lo) / 4294967296  # exact: numerator is a multiple of 2**32
     lat = ((h_hi + 2147483648) / 4294967296) * 180.0 - 90.0

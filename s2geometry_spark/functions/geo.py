@@ -2,17 +2,17 @@
 
 Two kinds of functions:
 
-1. **Pure-SQL column expressions** (JVM-side, whole-stage codegen) for
-   everything that is exact integer/float arithmetic — notably the
-   deterministic url→(lat,lng) geocoding (A36). These are written with
-   *portable* arithmetic (no engine-specific hash, no shift-on-negative
-   semantics) so the identical formula runs in DuckDB for the oracle.
+1. **Column expressions** (JVM-side, whole-stage codegen) for all
+   exact integer/float arithmetic: the url→(lat,lng) geocoding (A36)
+   and the cell-id hierarchy algebra (parent, level, range, order key).
+   *Portable* arithmetic (no engine-specific hash, no shift-on-negative
+   semantics), so the identical formula runs in DuckDB for the oracle.
 
 2. **Arrow-batched pandas UDFs** wrapping the numpy kernels for the
-   parts SQL cannot express (Hilbert cell ids, neighbors). Trig also
-   stays in numpy — NOT ``F.cos`` — because JVM ``Math.cos`` may differ
-   from libm by 1 ulp, and bit-exactness vs the Python oracle is a gate
-   (BASELINE.md #2).
+   parts SQL cannot express (Hilbert cell ids, tokens, neighbors). Trig
+   also stays in numpy — NOT ``F.cos`` — because JVM ``Math.cos`` may
+   differ from libm by 1 ulp, and bit-exactness vs the Python oracle is
+   a gate (BASELINE.md #2).
 """
 
 from __future__ import annotations
@@ -22,8 +22,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from .. import kernels as K
 
@@ -35,13 +35,9 @@ from .. import kernels as K
 #   h_hi = (h - h_lo) / 2**32              ∈ [-2**31, 2**31), exact division
 #   lat  = ((h_hi + 2**31) / 2**32) * 180 - 90
 #   lng  = ( h_lo          / 2**32) * 360 - 180
-# The same text appears verbatim in oracle SQL (DuckDB) — identical
-# IEEE-754 results because every op is exact or correctly rounded with
-# the same operand order.
-
-LAT_FROM_HASH_SQL = ("((((h - (h & 4294967295)) / 4294967296) + 2147483648)"
-                     " / 4294967296) * 180.0 - 90.0")
-LNG_FROM_HASH_SQL = "((h & 4294967295) / 4294967296) * 360.0 - 180.0"
+# The same formula is the oracle's SQL (DuckDB, __spark_entry__._LAT_SQL)
+# — identical IEEE-754 results because every op is exact or correctly
+# rounded with the same operand order.
 
 
 def lat_from_hash(h: Column) -> Column:
@@ -55,22 +51,45 @@ def lng_from_hash(h: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Hierarchy bit algebra as pure SQL (portable; used where no UDF needed)
+# Hierarchy bit algebra as JVM column expressions
 # ---------------------------------------------------------------------------
+# On the signed int64 bit pattern of the uint64 id, never overflowing:
+# no valid id is INT64_MIN and no leaf range crosses the face 3|4 sign
+# wrap. Reference: the numpy kernels; sql_api registers the same math.
 
-def parent_sql_expr(cell_col: str, level: int) -> str:
-    """parent(id, level) as portable SQL bit math (works on the signed
-    int64 bit pattern — identical in Spark, DuckDB, numpy).
-
-    lsb = 1 << (2*(30-level)); parent = (id & -lsb) | lsb
-    """
-    lsb = 1 << (2 * (K.MAX_LEVEL - level))
-    return f"(({cell_col} & {-lsb}) | {lsb})"
+INT64_MIN = -(1 << 63)
 
 
 def parent_col(cell: Column, level: int) -> Column:
     lsb = 1 << (2 * (K.MAX_LEVEL - level))
     return cell.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
+
+
+def order_key_col(cell: Column) -> Column:
+    """Signed-flip key: int64 whose < order equals uint64 id order."""
+    return cell.bitwiseXOR(F.lit(INT64_MIN))
+
+
+# old name, kept because perfbench/workloads.py still calls it
+cell_order_key_udf = order_key_col
+
+
+def _lsb_minus_one(cell: Column) -> Column:
+    return cell.bitwiseAND(-cell) - F.lit(1)
+
+
+def range_min_key_col(cell: Column) -> Column:
+    """rangeMin in signed-flip order-key space (for BETWEEN joins)."""
+    return order_key_col(cell - _lsb_minus_one(cell))
+
+
+def range_max_key_col(cell: Column) -> Column:
+    return order_key_col(cell + _lsb_minus_one(cell))
+
+
+def level_col(cell: Column) -> Column:
+    """30 − ntz(id)/2, with ntz(id) = bit_count(lsb − 1)."""
+    return F.lit(K.MAX_LEVEL) - F.shiftright(F.bit_count(_lsb_minus_one(cell)), 1)
 
 
 # ---------------------------------------------------------------------------
@@ -83,39 +102,6 @@ def cell_id_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.Series:
     ids = K.latlng_degrees_to_cell_id(lat_deg.to_numpy("float64"),
                                       lng_deg.to_numpy("float64"))
     return pd.Series(K.uint64_to_signed(ids))
-
-
-@pandas_udf(LongType())
-def cell_parent_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
-    """A11 — tile assignment. level is a (constant) column."""
-    ids = K.signed_to_uint64(cell_id.to_numpy("int64"))
-    return pd.Series(K.uint64_to_signed(K.parent(ids, level.to_numpy("int64"))))
-
-
-@pandas_udf(IntegerType())
-def cell_level_udf(cell_id: pd.Series) -> pd.Series:
-    ids = K.signed_to_uint64(cell_id.to_numpy("int64"))
-    return pd.Series(K.level(ids).astype("int32"))
-
-
-@pandas_udf(LongType())
-def cell_range_min_key_udf(cell_id: pd.Series) -> pd.Series:
-    """rangeMin in signed-flip order-key space (for BETWEEN joins)."""
-    ids = K.signed_to_uint64(cell_id.to_numpy("int64"))
-    return pd.Series(K.signed_order_key(K.range_min(ids)))
-
-
-@pandas_udf(LongType())
-def cell_range_max_key_udf(cell_id: pd.Series) -> pd.Series:
-    ids = K.signed_to_uint64(cell_id.to_numpy("int64"))
-    return pd.Series(K.signed_order_key(K.range_max(ids)))
-
-
-@pandas_udf(LongType())
-def cell_order_key_udf(cell_id: pd.Series) -> pd.Series:
-    """Signed-flip key: int64 whose < order equals uint64 id order."""
-    ids = K.signed_to_uint64(cell_id.to_numpy("int64"))
-    return pd.Series(K.signed_order_key(ids))
 
 
 @pandas_udf(StringType())

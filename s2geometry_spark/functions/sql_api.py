@@ -10,10 +10,12 @@ API (the form a SQL-first user of the reference library would expect).
         FROM pages
     ''')
 
-All functions are the same Arrow-batched pandas UDFs the DataFrame
-operators use (functions/geo.py) — registration adds names, not new
-code paths — plus pure-SQL helper expressions for the hash-geocode
-(those inline as strings because they are plain arithmetic).
+The integer hierarchy algebra (parent, level, order key, range keys)
+is registered as SQL-bodied temporary functions: the bit math of geo's
+Column functions, inlined by the analyzer, no Python hop. Cell id (trig),
+token (string formatting) and neighbors (the neighbor kernel) need
+numpy, so they are the Arrow-batched pandas UDFs the DataFrame
+operators use (functions/geo.py).
 """
 
 from __future__ import annotations
@@ -22,29 +24,30 @@ from pyspark.sql import SparkSession
 
 from . import geo
 
-#: name -> (udf, description)
-SQL_FUNCTIONS = {
-    "s2_cell_id": (geo.cell_id_udf,
-                   "leaf (level-30) S2CellId from lat/lng degrees"),
-    "s2_parent": (geo.cell_parent_udf,
-                  "ancestor cell at a level (tile assignment)"),
-    "s2_level": (geo.cell_level_udf, "level of a cell id"),
-    "s2_token": (geo.cell_token_udf, "token string of a cell id"),
-    "s2_order_key": (geo.cell_order_key_udf,
-                     "signed-flip key whose int64 order == uint64 id "
-                     "order (for BETWEEN range predicates)"),
-    "s2_range_min_key": (geo.cell_range_min_key_udf,
-                         "rangeMin in order-key space"),
-    "s2_range_max_key": (geo.cell_range_max_key_udf,
-                         "rangeMax in order-key space"),
-    "s2_neighbors": (geo.all_neighbors_udf,
-                     "deduped sorted 8-ring of same-level neighbors"),
+UDF_FUNCTIONS = {"s2_cell_id": geo.cell_id_udf,
+                 "s2_token": geo.cell_token_udf,
+                 "s2_neighbors": geo.all_neighbors_udf}
+
+_LSB = "shiftleft(1L, 2 * (30 - level))"
+_FLIP = f" ^ {geo.INT64_MIN}L"
+_LSB_M1 = "((id & -id) - 1)"
+
+#: name -> (parameters, return type, body)
+SQL_BODIED_FUNCTIONS = {
+    "s2_parent": ("id BIGINT, level INT", "BIGINT", f"(id & -{_LSB}) | {_LSB}"),
+    "s2_level": ("id BIGINT", "INT", f"30 - (bit_count{_LSB_M1} >> 1)"),
+    "s2_order_key": ("id BIGINT", "BIGINT", f"id{_FLIP}"),
+    "s2_range_min_key": ("id BIGINT", "BIGINT", f"(id - {_LSB_M1}){_FLIP}"),
+    "s2_range_max_key": ("id BIGINT", "BIGINT", f"(id + {_LSB_M1}){_FLIP}"),
 }
 
 
 def register_sql_functions(spark: SparkSession) -> list[str]:
-    """Register every kernel under its s2_* SQL name; returns the
+    """Register every function under its s2_* SQL name; returns the
     registered names (idempotent — re-registration replaces)."""
-    for name, (udf, _desc) in SQL_FUNCTIONS.items():
+    for name, udf in UDF_FUNCTIONS.items():
         spark.udf.register(name, udf)
-    return sorted(SQL_FUNCTIONS)
+    for name, (params, ret, body) in SQL_BODIED_FUNCTIONS.items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params}) "
+                  f"RETURNS {ret} RETURN {body}")
+    return sorted([*UDF_FUNCTIONS, *SQL_BODIED_FUNCTIONS])

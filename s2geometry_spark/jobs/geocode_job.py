@@ -6,8 +6,9 @@ resumes from the last committed snapshot").
     spark-submit --py-files s2geometry_spark.zip \\
         -m s2geometry_spark.jobs.geocode_job  # or path to this file
 
-Work decomposition: tiles at TILE_LEVEL are hashed into N_BATCHES
-work units (pmod(tile, n) — deterministic, independent of data order).
+Work decomposition: tiles at TILE_LEVEL L go to N_BATCHES work units by
+face + Hilbert position, pmod(tile >> (2*(30-L)+1), n) — deterministic,
+independent of data order (the bits below are the constant lsb pattern).
 Each batch commits as ONE snapshot with its batch id in the manifest
 metadata and per-file-split lineage in the metrics table. A re-run
 reads ``done_keys`` and processes only missing batches — crash-safe at
@@ -44,7 +45,8 @@ OUT_COLS = ("url", "warc_ts", "text", "lang", "h", "lat", "lng",
 
 
 def batch_of(tile_col: str, n_batches: int = N_BATCHES):
-    return F.pmod(F.col(tile_col), F.lit(n_batches)).cast("int")
+    pos = F.shiftright(F.col(tile_col), 2 * (30 - TILE_LEVEL) + 1)
+    return F.pmod(pos, F.lit(n_batches)).cast("int")
 
 
 def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,

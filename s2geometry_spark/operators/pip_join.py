@@ -148,6 +148,25 @@ def make_region_mask_udf(regions, level: int, max_cells: int = 64):
     return mask_udf
 
 
+def covering_range_join(pages: DataFrame, cov: DataFrame) -> DataFrame:
+    """pages ⋈ broadcast(cov) on ``order_key(cell_id) BETWEEN
+    range_min_key AND range_max_key``, no exact filter.
+
+    coalesce(cond, false) keeps the condition null-tolerant: a plain
+    BETWEEN lets Catalyst infer ``isnotnull(cell_key)`` and re-inline the
+    cell_id_udf chain into a second ArrowEvalPython (the eqNullSafe trap
+    below; asserted in tests/test_plans.py). A null never matched anyway.
+    """
+    keyed = pages.withColumn("cell_key", geo.order_key_col(F.col("cell_id")))
+    cov = F.broadcast(cov.select("region_id", "range_min_key",
+                                 "range_max_key", "is_interior"))
+    return keyed.join(
+        cov,
+        F.coalesce((F.col("cell_key") >= cov["range_min_key"])
+                   & (F.col("cell_key") <= cov["range_max_key"]),
+                   F.lit(False)), "inner")
+
+
 def pip_join(pages: DataFrame, spark: SparkSession, regions,
              strategy: str = "equi", level: int = 8,
              max_cells: int = 64,
@@ -245,18 +264,7 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
         # identical either way (superset covering + exact filter).
         cov = coverings_df(spark, regions, max_cells=max_cells,
                            mode=cover_mode)
-        pages_k = pages.withColumn("cell_key", geo.cell_order_key_udf(F.col("cell_id")))
-        # coalesce(cond, false) wraps the BETWEEN so it is not
-        # null-intolerant — same double-UDF-evaluation guard as the
-        # eqNullSafe above (here the inferred `isnotnull(cell_key)`
-        # would re-inline BOTH cell_id_udf and cell_order_key_udf).
-        # Identical semantics: a null comparison never matched anyway.
-        joined = pages_k.join(
-            F.broadcast(cov.select("region_id", "range_min_key", "range_max_key",
-                                   "is_interior")),
-            F.coalesce((F.col("cell_key") >= cov["range_min_key"])
-                       & (F.col("cell_key") <= cov["range_max_key"]),
-                       F.lit(False)), "inner")
+        joined = covering_range_join(pages, cov)
     else:
         raise ValueError(strategy)
     # One pass with the interior flag pushed INTO the UDF. Two rejected

@@ -478,7 +478,7 @@ def gopher_rep(pages: DataFrame, id_col: str = "url",
 
     Definitions (documented adaptations of Rae et al., self-contained
     so the operator needs NO second pass over the raw text):
-    - a "duplicate line" is any non-empty '\n'-line whose exact bytes
+    - a "duplicate line" is any non-empty '\\n'-line whose exact bytes
       occur >= 2 times in the SAME document; n_dup_lines counts every
       occurrence. Denominators: n_lines (non-empty lines) for the count
       rule, line_chars (sum of their lengths) for the char rule.

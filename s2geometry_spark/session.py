@@ -11,10 +11,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
+def default_driver_memory() -> str:
+    """SPARK_DRIVER_MEMORY, else half of MemTotal (the rest is for the
+    Python workers and page cache), capped at 16g."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    with open("/proc/meminfo") as f:  # first line: MemTotal: <n> kB
+        kib = int(f.readline().split()[1])
+    return f"{min(kib // 2048, 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "s2geometry-spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 32)
     builder = (
@@ -31,9 +47,7 @@ def get_spark(app_name: str = "s2geometry-spark", cores: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # 32 task threads + Arrow buffers + broadcasts live in ONE JVM
-        # in local mode; 16g leaves GC headroom on the 128 GiB host.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         # Engine arithmetic is deliberately overflow-free; keep ANSI on
         # (Spark 4 default) so real errors surface.
     )

@@ -140,7 +140,9 @@ def test_sql_function_surface(spark):
     from s2geometry_spark import kernels as K
     from s2geometry_spark.functions.sql_api import register_sql_functions
     names = register_sql_functions(spark)
-    assert "s2_cell_id" in names and "s2_parent" in names
+    assert names == ["s2_cell_id", "s2_level", "s2_neighbors",
+                     "s2_order_key", "s2_parent", "s2_range_max_key",
+                     "s2_range_min_key", "s2_token"]
 
     row = spark.sql(
         "SELECT s2_parent(s2_cell_id(10.5D, 20.25D), 4) AS tile,"
@@ -152,6 +154,31 @@ def test_sql_function_surface(spark):
     assert row["tile"] == tile
     assert row["lvl"] == 30
     assert row["tok"] == K.token_of(K.parent(leaf, 4))[0]
+
+    # the five integer functions are SQL-bodied: JVM bit math, no
+    # Python node, equal to the kernels on every face and level
+    from s2geometry_spark.plans import explain as X
+    from tests.test_kernels_property import seeded_cell_ids
+    ids = K.uint64_to_signed(seeded_cell_ids(n=2000))
+    spark.createDataFrame(pd.DataFrame({"id": ids})) \
+        .createOrReplaceTempView("sql_api_ids")
+    keys = spark.sql("""
+        SELECT id, s2_order_key(id) AS key, s2_range_min_key(id) AS rmin,
+               s2_range_max_key(id) AS rmax, s2_level(id) AS lvl,
+               s2_parent(id, 0) AS face_cell
+        FROM sql_api_ids
+    """)
+    assert "EvalPython" not in X.formatted_plan(keys)
+    got = keys.toPandas().sort_values("id", kind="stable")
+    u = K.signed_to_uint64(np.sort(ids))
+    assert np.array_equal(got["key"].to_numpy(), K.signed_order_key(u))
+    assert np.array_equal(got["rmin"].to_numpy(),
+                          K.signed_order_key(K.range_min(u)))
+    assert np.array_equal(got["rmax"].to_numpy(),
+                          K.signed_order_key(K.range_max(u)))
+    assert np.array_equal(got["lvl"].to_numpy(), K.level(u))
+    assert np.array_equal(got["face_cell"].to_numpy(),
+                          K.uint64_to_signed(K.parent(u, 0)))
 
     from s2geometry_spark.sources.pages import (documents_to_pages,
                                                 load_documents)

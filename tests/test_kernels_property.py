@@ -75,3 +75,48 @@ def test_union_normalize_properties(points):
     assert bool(np.all(U.union_contains_ids(norm, ids)))
     # idempotent
     assert np.array_equal(U.normalize(norm), norm)
+
+
+def seeded_cell_ids(n: int = 20_000, seed: int = 20261017) -> np.ndarray:
+    """uint64 ids over all six faces at random levels 0–30, plus each
+    face cell and its two extreme leaves (the ids nearest the int64
+    sign flip and the ends of the id space)."""
+    rng = np.random.default_rng(seed)
+    lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, n)))
+    lng = rng.uniform(-180.0, 180.0, n)
+    cells = K.parent(K.latlng_degrees_to_cell_id(lat, lng),
+                     rng.integers(0, K.MAX_LEVEL + 1, n))
+    faces = np.array([(f << 61) | (1 << 60) for f in range(6)],
+                     dtype=np.uint64)
+    return np.concatenate([cells, faces, K.range_min(faces),
+                           K.range_max(faces)])
+
+
+def test_column_exprs_match_kernels(spark):
+    """geo's JVM bit algebra equals the numpy kernels on every face and
+    level (ANSI on, so any int64 overflow would raise)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from s2geometry_spark.functions import geo
+
+    ids = seeded_cell_ids()
+    assert set(K.level(ids).tolist()) == set(range(K.MAX_LEVEL + 1))
+    assert set((ids >> np.uint64(61)).tolist()) == set(range(6))
+    c = F.col("id")
+    got = (spark.createDataFrame(pd.DataFrame({"id": K.uint64_to_signed(ids)}))
+           .select("id",
+                   geo.order_key_col(c).alias("key"),
+                   geo.range_min_key_col(c).alias("rmin"),
+                   geo.range_max_key_col(c).alias("rmax"),
+                   geo.level_col(c).alias("level"))
+           .toPandas().sort_values("id", kind="stable"))
+    ids = np.sort(K.uint64_to_signed(ids))
+    u = K.signed_to_uint64(ids)
+    assert np.array_equal(got["id"].to_numpy(), ids)
+    assert np.array_equal(got["key"].to_numpy(), K.signed_order_key(u))
+    assert np.array_equal(got["rmin"].to_numpy(),
+                          K.signed_order_key(K.range_min(u)))
+    assert np.array_equal(got["rmax"].to_numpy(),
+                          K.signed_order_key(K.range_max(u)))
+    assert np.array_equal(got["level"].to_numpy(), K.level(u))

@@ -146,6 +146,18 @@ def test_geocode_job_resume(spark, tmp_path):
     assert len(io.history("pages_tiled")) == 8
 
 
+def test_geocode_job_batches_all_nonempty(spark, pages):
+    """The batch key spreads level-4 tiles over every batch (the low
+    bits of a level-4 id are its constant lsb pattern, so keying on the
+    raw id would put every row in batch 0)."""
+    from s2geometry_spark.jobs.geocode_job import N_BATCHES, batch_of
+    counts = dict(pages.groupBy(batch_of(TL.tile_col(LEVEL)).alias("b"))
+                  .count().collect())
+    assert sorted(counts) == list(range(N_BATCHES)), counts
+    assert all(n > 0 for n in counts.values()), counts
+    assert sum(counts.values()) == pages.count()
+
+
 def test_package_pyfiles(tmp_path):
     dest = str(tmp_path / "pkg.zip")
     out = package_pyfiles(dest)
@@ -154,6 +166,23 @@ def test_package_pyfiles(tmp_path):
     assert "s2geometry_spark/kernels.py" in names
     assert "s2geometry_spark/jobs/geocode_job.py" in names
     assert not any("__pycache__" in n for n in names)
+
+
+def test_session_defaults_fit_host(monkeypatch):
+    """Unset, cores come from the CPU affinity mask and driver memory
+    is half of MemTotal capped at 16g; the env vars still override."""
+    from s2geometry_spark import session
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert session.default_cores() == len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        total_kib = int(f.readline().split()[1])  # first line: MemTotal
+    assert session.default_driver_memory() \
+        == f"{min(total_kib // 2048, 16 * 1024)}m"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    assert session.default_cores() == 3
+    assert session.default_driver_memory() == "2g"
 
 
 def test_bucketed_join_has_no_exchange(spark, pages):
