@@ -181,9 +181,6 @@ def main() -> None:
     bench("exact_dedup", lambda: force(dedup.exact_dedup(text_docs)))
     bench("minhash_pairs", lambda: force(
         dedup.minhash_lsh_pairs(text_docs, threshold=0.5)))
-    bench("minhash_pairs_xxh", lambda: force(
-        dedup.minhash_lsh_pairs(text_docs, threshold=0.5,
-                                hash_impl="xxhash64")))
     bench("simhash_pairs", lambda: force(
         dedup.simhash_pairs(text_docs, max_hamming=3)))
     bench("text_quality", lambda: force(textstats.text_quality(text_docs)))

@@ -47,7 +47,11 @@ class CheckpointRotator:
         return cur                             # newest stays cached:
                                                # it backs the result
 
-    Error paths call release_all() so nothing is stranded.
+    Error paths call unpersist() so nothing is stranded. The same
+    method makes a rotator a ``cache_registry`` handle, like a persisted
+    DataFrame: an operator whose result is backed by its newest
+    checkpoint appends the rotator, and ``dedup.release_caches`` frees
+    it once the caller has materialized the result.
     """
 
     def __init__(self, sc):
@@ -80,9 +84,9 @@ class CheckpointRotator:
             self._unpersist(ids)
         self._sets = [newest]
 
-    def release_all(self) -> None:
-        """Free everything, newest included (abort/error paths, or when
-        the final checkpoint does not escape to the caller)."""
+    def unpersist(self) -> None:
+        """Free everything, newest included (abort/error paths, or once
+        the result the newest checkpoint backs has been consumed)."""
         for ids in self._sets:
             self._unpersist(ids)
         self._sets = []

@@ -2,8 +2,8 @@
 
 Semantics follow ``S2RegionCoverer.swift :: getCovering`` [spec]: start
 from the 6 face cells, subdivide cells that intersect the region, keep
-cells where ``region.may_intersect(cell)``, mark terminal when
-``region.contains_cell(cell)`` (those become ``is_interior`` rows that
+cells where ``region.may_intersect_cells(ids)``, mark terminal when
+``region.contains_cells(ids)`` (those become ``is_interior`` rows that
 skip the exact post-filter — the interior short-circuit of §4.1) or
 when ``max_level`` is reached, and stop subdividing once the output
 budget ``max_cells`` would be exceeded.

@@ -9,10 +9,13 @@ Both are built from engine-portable operations only:
 * ``h60(s)`` — a 60-bit hash: first 15 hex digits of md5(utf8(s)) read
   as an integer. md5 is bit-identical everywhere; 60 bits always fit a
   *positive* int64, so no signed-order pitfalls (SURVEY §2.2 does not
-  apply here). At 100 TB scale the same operators accept a
-  ``hash="xxhash64"`` fast path (Spark-builtin seeded xxhash64 — ~4×
-  cheaper than md5 but not reproducible in DuckDB); the md5 spec is the
-  gated default, xxhash64 is benchmarked separately.
+  apply here). The MinHash operators also accept
+  ``hash_impl="xxhash64"`` (Spark-builtin xxhash64, not reproducible
+  in DuckDB, so never gated): an alternating A/B of
+  ``dedup.minhash_lsh_pairs`` in one Spark session (sf0.1 text x10,
+  local[4] on a 4-vCPU host) measured it 13% faster end to end (median
+  15.8 s vs 18.1 s, 10 of 10 pairs — BENCH/PLAN_EVIDENCE.md). The md5
+  spec is the gated default.
 
 * tokenization — split on runs of ``[ \\t\\n\\r\\f\\x0b]`` (an explicit
   class, not ``\\s``: Java regex ``\\s`` includes vertical tab \\x0b
@@ -110,8 +113,8 @@ MASK32 = (1 << 32) - 1
 
 def xxh_h1(s: Column) -> Column:
     """Production fast-path twin of h60: xxhash64 truncated to 60
-    nonneg bits (~4x cheaper than md5+hex; NOT DuckDB-reproducible, so
-    never used in gated queries)."""
+    nonneg bits (no md5 hex build and reparse; NOT DuckDB-reproducible,
+    so never used in gated queries)."""
     return F.xxhash64(s).bitwiseAND(F.lit(MASK60))
 
 

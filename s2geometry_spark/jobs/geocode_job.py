@@ -59,11 +59,15 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
     `max_batches_this_run` exists for crash-injection tests and for
     bounded incremental runs — production leaves it None.
     """
+    done = io.done_keys(table)
+    if done >= set(range(n_batches)):
+        # nothing left to run: return before the input scan and the
+        # hot-tile histogram, so an idempotent re-run starts no job
+        return {"committed": [], "skipped": list(range(n_batches)),
+                "hot_tiles": []}
     tcol = TL.tile_col(TILE_LEVEL)
     pages = load_pages(spark, sf_dir).select(*OUT_COLS)
-
     hot = TL.hot_tiles(pages, TILE_LEVEL, hot_threshold)
-    done = io.done_keys(table)
     committed, skipped = [], []
     for b in range(n_batches):
         if b in done:

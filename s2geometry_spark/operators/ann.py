@@ -13,7 +13,9 @@ array<float>, label int)``:
 * ``ann_lsh_topk`` — random-hyperplane LSH: a 16-bit signature bucket
   per vector (sign of 16 fixed hyperplane dots), query joins its own
   bucket (plus optional 1-bit-flip probes), exact cosine rank within
-  the candidates. Bucketing is a map-only JVM fold; the join is a
+  the candidates. Bucketing is a map-only JVM fold (``lsh_bucket_col``,
+  also used by ``emb_near_dup_lsh``) — the one bucketing path, because
+  it is the one the DuckDB oracle reproduces bit-for-bit; the join is a
   bucket equi-join, so at scale work is proportional to bucket
   occupancy, not corpus size.
 
@@ -30,11 +32,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from .dedup import _fold_dot, cosine_col
@@ -59,25 +58,6 @@ def lsh_bucket_col(vec: Column) -> Column:
         dot = _fold_dot(vec, _plane_lit(plane))
         out = out + F.when(dot >= 0.0, F.lit(1 << b)).otherwise(F.lit(0))
     return out
-
-
-def lsh_bucket_fast_udf():
-    """Vectorized numpy twin of lsh_bucket_col — the 10^9-vector scale
-    path (one BLAS matmul per Arrow batch vs an interpreted 16x64-term
-    fold per row; measured ~100x faster). Sign-identical to the fold
-    whenever no |dot| falls inside the float reassociation error
-    (~1e-13; tests assert the corpus margin is orders above it). The
-    GATED queries use the fold so the DuckDB oracle is bit-exact."""
-    H = np.array(HYPERPLANES, dtype=np.float64)  # (N_PLANES, dim)
-    weights = (np.int64(1) << np.arange(N_PLANES, dtype=np.int64))
-
-    @pandas_udf(LongType())
-    def bucket(vec: pd.Series) -> pd.Series:
-        mat = np.array(vec.tolist(), dtype=np.float64)  # (n, dim)
-        dots = mat @ H.T                                # (n, N_PLANES)
-        return pd.Series(((dots >= 0.0) @ weights).astype(np.int64))
-
-    return bucket
 
 
 def lsh_bucket_sql(vec_col: str) -> str:
@@ -159,17 +139,11 @@ def _probe_query_df(queries: DataFrame, vec_col: str,
 def ann_lsh_topk(embs: DataFrame, queries: DataFrame, k: int = 10,
                  id_col: str = "vec_id",
                  vec_col: str = "embedding",
-                 bucket_impl: str = "fold",
                  probes: int = 0) -> DataFrame:
     """(query_id, vec_id, rank): cosine top-k *within the query's LSH
     probe set* — the scale path. Smaller recall than brute force by
     construction; the approximation is part of the spec and the oracle
     reproduces it exactly (same hyperplanes, same fold).
-
-    bucket_impl: "fold" = JVM left-fold (bit-exact vs DuckDB oracle —
-    the gated default); "numpy" = BLAS matmul pandas UDF (the
-    large-corpus path; sign-identical on any corpus with non-degenerate
-    hyperplane margins, asserted in tests).
 
     probes: number of 1-bit-flip neighbor buckets each query probes IN
     ADDITION to its own, chosen in ascending |hyperplane margin| order
@@ -183,21 +157,13 @@ def ann_lsh_topk(embs: DataFrame, queries: DataFrame, k: int = 10,
     tests/test_text_ops.py::test_ann_multiprobe_recall."""
     if not 0 <= probes <= N_PLANES:
         raise ValueError(f"probes must be in [0, {N_PLANES}]")
-    if bucket_impl == "numpy":
-        fast = lsh_bucket_fast_udf()
-        bcol = fast
-    else:
-        bcol = lambda c: lsh_bucket_col(c)  # noqa: E731
     bucketed = embs.select(F.col(id_col), F.col(vec_col).alias("_cv"),
-                           bcol(F.col(vec_col)).alias("_bkt"))
+                           lsh_bucket_col(F.col(vec_col)).alias("_bkt"))
     if probes == 0:
         q = queries.select(
             F.col("query_id"), F.col(vec_col).alias("_qv"),
-            bcol(F.col(vec_col)).alias("_bkt"))
+            lsh_bucket_col(F.col(vec_col)).alias("_bkt"))
     else:
-        # probe construction always uses the fold (bit-exact) buckets —
-        # the query side is tiny; bucket_impl only matters for the
-        # corpus side (sign-identical by the fixture-margin test)
         q = _probe_query_df(queries, vec_col, probes)
     # probe buckets are distinct per query and each corpus vector lives
     # in exactly one bucket, so no (query_id, vec_id) pair duplicates
@@ -414,8 +380,7 @@ def ann_ivf_topk(embs: DataFrame, queries: DataFrame, k: int = 10,
 
 def emb_near_dup_lsh(embs: DataFrame, tau: float = 0.4,
                      id_col: str = "vec_id", vec_col: str = "embedding",
-                     max_hamming: int = 1,
-                     bucket_impl: str = "fold") -> DataFrame:
+                     max_hamming: int = 1) -> DataFrame:
     """Bucketed embedding near-dup pairs — the 100 TB scale path for
     dedup.emb_near_dup's brute-force baseline.
 
@@ -438,12 +403,8 @@ def emb_near_dup_lsh(embs: DataFrame, tau: float = 0.4,
     if max_hamming not in (0, 1):
         raise ValueError("max_hamming must be 0 or 1 (probe set is the "
                          "1-bit-flip ring)")
-    if bucket_impl == "numpy":
-        fast = lsh_bucket_fast_udf()
-        bcol = fast
-    else:
-        bcol = lambda c: lsh_bucket_col(c)  # noqa: E731
-    ids = embs.select(F.col(id_col), bcol(F.col(vec_col)).alias("_bkt"))
+    ids = embs.select(F.col(id_col),
+                      lsh_bucket_col(F.col(vec_col)).alias("_bkt"))
     if max_hamming == 0:
         a = ids.select(F.col(id_col).alias("vec_a"), "_bkt")
     else:

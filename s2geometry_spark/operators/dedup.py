@@ -49,12 +49,13 @@ DEFAULT_MAX_BUCKET = 1000
 
 def release_caches(cache_registry: list) -> None:
     """Unpersist every handle collected through a `cache_registry=`
-    argument (minhash_lsh_pairs / simhash_pairs). Call AFTER
-    materializing the returned pairs — the result is lazy, so
-    releasing earlier would force a full recompute of the signature
-    pipeline. Long-lived sessions that skip the registry can still
-    spark.catalog.clearCache(); the production path (jobs/dedup_job)
-    checkpoints signatures through TableIO instead of persisting."""
+    argument — persisted DataFrames, and the checkpoint rotator behind
+    connected_components' labels. Call AFTER materializing the
+    returned result — it is lazy, so releasing earlier would force a
+    full recompute of the signature pipeline. Long-lived sessions that
+    skip the registry can still spark.catalog.clearCache(); the
+    production path (jobs/dedup_job) checkpoints signatures through
+    TableIO instead of persisting."""
     while cache_registry:
         cache_registry.pop().unpersist()
 
@@ -114,8 +115,10 @@ def minhash_signatures(pages: DataFrame, id_col: str = "url",
     text.py).
 
     hash_impl: "md5" (the gated spec — DuckDB-reproducible) or
-    "xxhash64" (the production fast path — Spark-builtin, ~4x cheaper,
-    same operator structure, no SQL oracle).
+    "xxhash64" (the production fast path — Spark-builtin, same operator
+    structure, no SQL oracle; minhash_lsh_pairs measured 13% faster
+    end to end at sf0.1 text x10, local[4] on a 4-vCPU host,
+    BENCH/PLAN_EVIDENCE.md).
 
     Docs with < k tokens have no shingles and are excluded (a 2-token
     page cannot be a shingle near-dup of anything).
@@ -395,7 +398,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def connected_components(pairs: DataFrame, id_a: str = "url_a",
                          id_b: str = "url_b",
-                         max_iters: int = 50) -> DataFrame:
+                         max_iters: int = 50,
+                         cache_registry: list | None = None) -> DataFrame:
     """(url, cluster) labeling of the near-dup pair graph: every vertex
     gets the MINIMUM url of its connected component — the canonical
     per-cluster dedup verdict (jobs/dedup_job.py's keep-min-neighbor
@@ -418,6 +422,10 @@ def connected_components(pairs: DataFrame, id_a: str = "url_a",
     the per-round counts are single aggregate rows, like kNN's loop.
     max_iters stays as a safety bound; non-convergence raises rather
     than returning a partial labeling.
+
+    The returned labels are backed by one checkpoint; pass
+    `cache_registry` and call release_caches after materializing them,
+    as with minhash_lsh_pairs.
     """
     from ..ckpt import CheckpointRotator
 
@@ -451,7 +459,7 @@ def connected_components(pairs: DataFrame, id_a: str = "url_a",
         if stable_l and stable_s:
             break
     else:
-        rot.release_all()
+        rot.unpersist()
         raise RuntimeError(f"connected_components did not converge in "
                            f"{max_iters} rounds")
     # Fixpoint edges are (vertex, component-min) stars: every non-root
@@ -462,13 +470,15 @@ def connected_components(pairs: DataFrame, id_a: str = "url_a",
     # checkpoint. Checkpointing the labels (then releasing the edge
     # checkpoint they read) keeps the round-3 contract: the input
     # pipeline is fully consumed at call time and exactly ONE cached
-    # RDD — the returned labels — survives; callers drop it with
-    # spark.catalog.clearCache or by writing the labels out (TableIO).
+    # RDD — the returned labels — survives, held by the rotator that
+    # goes into cache_registry.
     labels = rot.checkpoint(
         edges.select(F.col("u").alias("url"), F.col("v").alias("cluster"))
         .union(edges.select(F.col("v").alias("url"),
                             F.col("v").alias("cluster")).distinct()))
     rot.release_previous()
+    if cache_registry is not None:
+        cache_registry.append(rot)
     return labels
 
 
@@ -530,7 +540,8 @@ def dedup_apply(pages: DataFrame, threshold: float = 0.5,
                               max_bucket=max_bucket, hash_impl=hash_impl,
                               cache_registry=cache_registry) \
         .select("url_a", "url_b")
-    labels = connected_components(pairs)     # eager; checkpoint-backed
+    labels = connected_components(            # eager; checkpoint-backed
+        pairs, cache_registry=cache_registry)
     cluster = F.coalesce("cluster", F.col(id_col))
     return (pages.select(id_col)
             .join(labels.withColumnRenamed("url", id_col), id_col, "left")

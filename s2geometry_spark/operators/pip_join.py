@@ -100,54 +100,6 @@ def make_contains_udf(regions):
     return contains_udf
 
 
-def make_region_mask_udf(regions, level: int, max_cells: int = 64):
-    """One-pass PIP: a single pandas UDF that runs the covering
-    prefilter (np.isin against each region's covering-cell set at
-    `level`) AND the exact containment test, returning a per-row region
-    bitmask. The strategy="map" physical plan built on this has NO join
-    and only ONE JVM→Python hop — see pip_join docstring."""
-    from ..coverer import covering_rows
-
-    prepared = []  # (bit, region, interior_cells, boundary_cells)
-    for bit, reg in enumerate(regions):
-        rows = covering_rows(reg, max_cells=max_cells, uniform_level=level)
-        interior = np.array([r["cell_id"] for r in rows if r["is_interior"]],
-                            dtype=np.int64)
-        boundary = np.array([r["cell_id"] for r in rows
-                             if not r["is_interior"]], dtype=np.int64)
-        prepared.append((bit, reg, interior, boundary))
-
-    @pandas_udf(LongType())
-    def mask_udf(cell_l: pd.Series, lat_deg: pd.Series,
-                 lng_deg: pd.Series) -> pd.Series:
-        from ..regions import RegionUnion, Rect
-        ids = cell_l.to_numpy("int64")
-        lat = np.radians(lat_deg.to_numpy("float64"))
-        lng = np.radians(lng_deg.to_numpy("float64"))
-        mask = np.zeros(len(ids), dtype=np.int64)
-        x = y = z = None
-        for bit, reg, interior, boundary in prepared:
-            inside = np.isin(ids, interior)
-            bnd = np.isin(ids, boundary)
-            if bnd.any():
-                if isinstance(reg, Rect):
-                    inside[bnd] = reg.contains_points_np(lat[bnd], lng[bnd])
-                else:
-                    if x is None:
-                        x, y, z = K.latlng_to_xyz(lat, lng)
-                    if isinstance(reg, RegionUnion):
-                        inside[bnd] = reg.contains_points_np(
-                            x[bnd], y[bnd], z[bnd],
-                            lat=lat[bnd], lng=lng[bnd])
-                    else:
-                        inside[bnd] = reg.contains_points_np(x[bnd], y[bnd],
-                                                             z[bnd])
-            mask |= inside.astype(np.int64) << bit
-        return pd.Series(mask)
-
-    return mask_udf
-
-
 def covering_range_join(pages: DataFrame, cov: DataFrame) -> DataFrame:
     """pages ⋈ broadcast(cov) on ``order_key(cell_id) BETWEEN
     range_min_key AND range_max_key``, no exact filter.
@@ -182,17 +134,10 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
     * "equi"  — broadcast hash join on the uniform-level covering +
       exact post-filter UDF. Two Python hops (geocode upstream +
       containment) — the general shape; coverings can be any size.
+      Also the streaming path: Structured Streaming runs it as an
+      inner stream-static broadcast join
+      (streaming.tile_stream.streaming_pip_counts).
     * "range" — hierarchical covering, broadcast BETWEEN join.
-    * "map"   — NO JOIN: one pandas UDF computes a per-row region
-      bitmask (np.isin covering prefilter + exact test fused), then
-      set bits explode to region_id rows. One Python hop total,
-      map-only plan end-to-end. Measured comparable to "equi" at 10M
-      rows x 8 regions (the equi join prunes rows before its exact
-      UDF, offsetting the extra hop) — its value is structural: a
-      join-free PIP drops straight into Structured Streaming (where
-      stream-static join + watermark combinations are restricted) and
-      into mapInPandas pipelines. <= 63 regions per call (bitmask);
-      shard larger catalogs across calls.
     * "salted" — the NON-broadcast scale path (tiles.salted_equi_join):
       shuffle-hash join on (tile, salt) with hot tiles fanned out
       n_salt ways, for region catalogs too big to broadcast (10^6+
@@ -203,29 +148,6 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
       (same uniform-level covering + exact filter; asserted in
       tests/test_scale_ops.py, oracle-gated as pip_salted_shuffle).
     """
-    if strategy == "map":
-        if len(regions) > 63:
-            raise ValueError("map strategy: <= 63 regions per call")
-        mask_udf = make_region_mask_udf(regions, level, max_cells)
-        # No `.filter(_rmask != 0)` here: the explode of an empty hits
-        # array below already drops non-matching rows, and an explicit
-        # null-intolerant filter on the UDF column gets pushed through
-        # the projection by Catalyst, re-inlining mask_udf AND the whole
-        # upstream geocode chain into a second ArrowEvalPython cascade
-        # over every scan row (same trap as the eqNullSafe note below;
-        # single-evaluation asserted in tests/test_plans.py).
-        masked = pages.withColumn(
-            "_rmask", mask_udf(F.col(f"cell_l{level}"), F.col("lat"),
-                               F.col("lng")))
-        rid_hits = F.array(*[
-            F.when(F.col("_rmask").bitwiseAND(F.lit(1 << bit)) != 0,
-                   F.lit(int(reg.region_id)))
-            for bit, reg in enumerate(regions)])
-        return (masked
-                .withColumn("region_id",
-                            F.explode(F.filter(rid_hits,
-                                               lambda v: v.isNotNull())))
-                .drop("_rmask"))
     contains_udf = make_contains_udf(regions)
     if strategy == "salted":
         from .tiles import hot_tiles, salted_equi_join

@@ -67,13 +67,6 @@ def angle(p, q) -> float:
                       p[0] * q[0] + p[1] * q[1] + p[2] * q[2])
 
 
-def _cell_center(cell_id: int):
-    lat, lng = K.cell_id_to_latlng_degrees(np.array([cell_id], dtype=np.uint64))
-    la, ln = math.radians(float(lat[0])), math.radians(float(lng[0]))
-    cl = math.cos(la)
-    return (cl * math.cos(ln), cl * math.sin(ln), math.sin(la))
-
-
 def point_to_arc_distance(p, a, b) -> float:
     """Spherical distance from p to geodesic arc a→b.
 
@@ -256,12 +249,6 @@ class Cap:
 
     def contains_points_np(self, x, y, z):
         return K.cap_contains_points(self.cx, self.cy, self.cz, self.height, x, y, z)
-
-    def may_intersect_cell(self, cell_id: int) -> bool:
-        return bool(self.may_intersect_cells(np.array([cell_id], np.uint64))[0])
-
-    def contains_cell(self, cell_id: int) -> bool:
-        return bool(self.contains_cells(np.array([cell_id], np.uint64))[0])
 
     def _center_angles(self, ids: np.ndarray):
         _, _, x, y, z, lvl = _cell_centers_np(ids)
@@ -567,12 +554,6 @@ class Rect:
         d2 = np.minimum(d2, 2 * math.pi - d2)
         return np.where(inside, 0.0, np.minimum(d1, d2))
 
-    def may_intersect_cell(self, cell_id: int) -> bool:
-        return bool(self.may_intersect_cells(np.array([cell_id], np.uint64))[0])
-
-    def contains_cell(self, cell_id: int) -> bool:
-        return bool(self.contains_cells(np.array([cell_id], np.uint64))[0])
-
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         """Conservative: rect expanded by r in lat, r/cos(max|lat|) in lng."""
         lat, lng, _x, _y, _z, lvl = _cell_centers_np(ids)
@@ -667,12 +648,6 @@ class Polygon:
                               math.sin(la)))
         return _vertex_cap(verts)
 
-    def may_intersect_cell(self, cell_id: int) -> bool:
-        return bool(self.may_intersect_cells(np.array([cell_id], np.uint64))[0])
-
-    def contains_cell(self, cell_id: int) -> bool:
-        return bool(self.contains_cells(np.array([cell_id], np.uint64))[0])
-
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         _lat, _lng, x, y, z, lvl = _cell_centers_np(ids)
         r = half_diag(lvl)
@@ -742,12 +717,6 @@ class Polyline:
         verts = [(math.cos(la) * math.cos(ln), math.cos(la) * math.sin(ln),
                   math.sin(la)) for la, ln in zip(self.lats, self.lngs)]
         return _vertex_cap(verts, extra_radius=self.radius)
-
-    def may_intersect_cell(self, cell_id: int) -> bool:
-        return bool(self.may_intersect_cells(np.array([cell_id], np.uint64))[0])
-
-    def contains_cell(self, cell_id: int) -> bool:
-        return bool(self.contains_cells(np.array([cell_id], np.uint64))[0])
 
     def may_intersect_cells(self, ids: np.ndarray) -> np.ndarray:
         _lat, _lng, x, y, z, lvl = _cell_centers_np(ids)
@@ -998,13 +967,6 @@ class RegionUnion:
         for m in self.members:
             out |= m.contains_cells(ids)
         return out
-
-    def may_intersect_cell(self, cell_id: int) -> bool:
-        return bool(self.may_intersect_cells(
-            np.array([cell_id], np.uint64))[0])
-
-    def contains_cell(self, cell_id: int) -> bool:
-        return bool(self.contains_cells(np.array([cell_id], np.uint64))[0])
 
     def cap_bound(self):
         cap = Cap.empty(self.region_id)

@@ -105,16 +105,17 @@ def streaming_pip_counts(pages_stream: DataFrame, regions,
                          watermark: str = "1 hour") -> DataFrame:
     """(window, region_id, n_docs): incremental point-in-region counts.
 
-    Uses the join-free "map" PIP strategy (operators/pip_join.py) —
-    a single pandas-UDF bitmask stage composes into the stream with no
-    stream-static join, so the full geocode → covering prefilter →
-    exact containment → windowed count pipeline runs incrementally
-    with ordinary watermark semantics.
+    Uses the batch "equi" PIP strategy (operators/pip_join.py): the
+    uniform-level covering is a static broadcast side, and Spark
+    supports an inner stream-static join, so the full geocode →
+    covering join → exact containment → windowed count pipeline runs
+    incrementally with ordinary watermark semantics. Any number of
+    regions.
     """
     from ..operators.pip_join import pip_join
 
     geo = geocode_pages(pages_stream, tile_levels=(level,))
-    hits = pip_join(geo, geo.sparkSession, regions, strategy="map",
+    hits = pip_join(geo, geo.sparkSession, regions, strategy="equi",
                     level=level)
     return (hits
             .withWatermark("warc_ts", watermark)

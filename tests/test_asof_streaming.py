@@ -160,7 +160,7 @@ def test_streaming_pip_counts_equal_batch(spark, pages_stream_dir):
 
     batch = geocode_pages(spark.read.parquet(pages_stream_dir),
                           tile_levels=(4,))
-    hits = pip_join(batch, spark, demo_regions(), strategy="map", level=4)
+    hits = pip_join(batch, spark, demo_regions(), strategy="equi", level=4)
     expect = {(r["win"]["start"], r["region_id"]): r["n"]
               for r in hits.groupBy(F.window("warc_ts", "10 minutes")
                                     .alias("win"), "region_id")
@@ -231,8 +231,8 @@ def test_first_seen_fn_ttl_contract():
 
 def test_streaming_pip_supports_polyline_region(spark, pages_stream_dir):
     """The polyline buffer region composes into the streaming PIP path
-    (map strategy dispatches on contains_points_np, which Polyline
-    provides) — counts must equal the batch computation."""
+    (the containment UDF dispatches on contains_points_np, which
+    Polyline provides) — counts must equal the batch computation."""
     from s2geometry_spark.demo_regions import demo_polyline
     from s2geometry_spark.operators.pip_join import pip_join
     from s2geometry_spark.sources.pages import geocode_pages
@@ -246,7 +246,7 @@ def test_streaming_pip_supports_polyline_region(spark, pages_stream_dir):
 
     batch = geocode_pages(spark.read.parquet(pages_stream_dir),
                           tile_levels=(4,))
-    hits = pip_join(batch, spark, [demo_polyline()], strategy="map",
+    hits = pip_join(batch, spark, [demo_polyline()], strategy="equi",
                     level=4)
     expect = {(r["win"]["start"], r["region_id"]): r["n"]
               for r in hits.groupBy(F.window("warc_ts", "10 minutes")
@@ -305,8 +305,8 @@ def test_asof_tolerance_semantics(spark):
 
 
 def test_streaming_pip_supports_region_union(spark, pages_stream_dir):
-    """RegionUnion composes into the streaming PIP path (map strategy,
-    r3) — counts must equal the batch computation."""
+    """RegionUnion composes into the streaming PIP path — counts must
+    equal the batch computation."""
     from s2geometry_spark.demo_regions import demo_region_union
     from s2geometry_spark.operators.pip_join import pip_join
     from s2geometry_spark.sources.pages import geocode_pages
@@ -320,7 +320,7 @@ def test_streaming_pip_supports_region_union(spark, pages_stream_dir):
 
     batch = geocode_pages(spark.read.parquet(pages_stream_dir),
                           tile_levels=(4,))
-    hits = pip_join(batch, spark, [demo_region_union()], strategy="map",
+    hits = pip_join(batch, spark, [demo_region_union()], strategy="equi",
                     level=4)
     expect = {(r["win"]["start"], r["region_id"]): r["n"]
               for r in hits.groupBy(F.window("warc_ts", "10 minutes")

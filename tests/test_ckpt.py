@@ -46,9 +46,9 @@ def test_checkpoint_tracks_and_release_frees(spark):
     assert not (after1 - base) & after2, "previous checkpoint not freed"
     assert after2 - base, "newest checkpoint must survive release_previous"
     assert df2.count() == 94  # newest still readable
-    rot.release_all()
+    rot.unpersist()
     assert set(sc._jsc.getPersistentRDDs().keys()) == base, \
-        "release_all left cached RDDs behind"
+        "unpersist left cached RDDs behind"
 
 
 def test_rotation_loop_keeps_at_most_one_round(spark):
@@ -69,11 +69,11 @@ def test_rotation_loop_keeps_at_most_one_round(spark):
     # pins one RDD per frame here)
     assert max(per_round_ids) <= max(per_round_ids[0], 1)
     assert cur.agg(F.min("id")).collect()[0][0] == 4
-    rot.release_all()
+    rot.unpersist()
     assert not set(sc._jsc.getPersistentRDDs().keys()) - base
 
 
 def test_release_previous_on_empty_rotator_is_noop(spark):
     rot = CheckpointRotator(spark.sparkContext)
     rot.release_previous()
-    rot.release_all()
+    rot.unpersist()

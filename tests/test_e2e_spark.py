@@ -104,34 +104,6 @@ def test_equi_and_range_strategies_agree(spark):
     assert b.exceptAll(a).count() == 0
 
 
-def test_map_strategy_equals_equi(spark):
-    """The join-free one-hop 'map' strategy must produce exactly the
-    broadcast equi-join's rows."""
-    from s2geometry_spark.demo_regions import demo_regions
-    from s2geometry_spark.operators.pip_join import pip_join
-    from s2geometry_spark.sources.pages import load_pages
-    pages = load_pages(spark, SF_DIR)
-    a = pip_join(pages, spark, demo_regions(), strategy="equi", level=4) \
-        .select("url", "region_id")
-    m = pip_join(pages, spark, demo_regions(), strategy="map", level=4) \
-        .select("url", "region_id")
-    assert a.exceptAll(m).count() == 0
-    assert m.exceptAll(a).count() == 0
-
-
-def test_map_strategy_plan_is_join_free(spark):
-    from s2geometry_spark.demo_regions import demo_regions
-    from s2geometry_spark.operators.pip_join import pip_join
-    from s2geometry_spark.plans import explain as X
-    from s2geometry_spark.sources.pages import load_pages
-    pages = load_pages(spark, SF_DIR)
-    m = pip_join(pages, spark, demo_regions(), strategy="map", level=4) \
-        .select("url", "region_id")
-    plan = X.formatted_plan(m)
-    assert "Join" not in plan
-    assert X.count_shuffles(plan) == 0
-
-
 def test_sql_function_surface(spark):
     """The s2_* SQL registrations must agree with the kernels and be
     usable in a pure-SQL pipeline over a temp view."""

@@ -140,9 +140,19 @@ def test_geocode_job_resume(spark, tmp_path):
     b = io_full.read(spark, "pages_tiled").select("url", "cell_id")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
-    # idempotent: a third run does nothing
-    r3 = run_geocode_job(spark, SF_DIR, io, n_batches=8, hot_threshold=100)
-    assert r3["committed"] == []
+    # idempotent: a third run does nothing — not even the input scan
+    # for the hot-tile histogram (no Spark job in its job group)
+    sc = spark.sparkContext
+    sc.setJobGroup("geocode_job_noop_resume", "idempotent re-run")
+    try:
+        r3 = run_geocode_job(spark, SF_DIR, io, n_batches=8,
+                             hot_threshold=100)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r3 == {"committed": [], "skipped": list(range(8)),
+                  "hot_tiles": []}
+    assert sc.statusTracker().getJobIdsForGroup(
+        "geocode_job_noop_resume") == []
     assert len(io.history("pages_tiled")) == 8
 
 

@@ -255,28 +255,6 @@ def test_simhash_cap_contract_and_oversize_reporting(spark):
     assert all(r["n_members"] == n for r in over)
 
 
-def test_lsh_bucket_fast_matches_fold(spark):
-    """The numpy matmul bucket (scale path) must agree with the JVM
-    fold bucket (gated path) on every corpus vector."""
-    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    fold = {r["vec_id"]: r["b"] for r in embs.select(
-        "vec_id", ann.lsh_bucket_col(F.col("embedding")).alias("b")).collect()}
-    fast_udf = ann.lsh_bucket_fast_udf()
-    fast = {r["vec_id"]: r["b"] for r in embs.select(
-        "vec_id", fast_udf(F.col("embedding")).alias("b")).collect()}
-    assert fold == fast
-
-
-def test_ann_lsh_numpy_impl_equals_fold_impl(spark):
-    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 8) \
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    a = {tuple(r) for r in ann.ann_lsh_topk(embs, q, k=10).collect()}
-    b = {tuple(r) for r in
-         ann.ann_lsh_topk(embs, q, k=10, bucket_impl="numpy").collect()}
-    assert a == b
-
-
 def test_minhash_xxhash64_fast_path_finds_planted_pairs(spark, docs):
     """The xxhash64 production variant is a different hash family but
     the SAME operator; set-Jaccard of surfaced pairs is hash-agnostic,
@@ -573,7 +551,9 @@ def test_ivf_training_improves_objective_and_composes(spark):
 def test_pair_ops_cache_registry_releases(spark):
     """materialize + release_caches must leave no cached RDDs behind
     (round-2 review: minhash/simhash persisted without an unpersist
-    contract, accumulating cache across long-lived sessions)."""
+    contract, accumulating cache across long-lived sessions). Covers
+    dedup_apply too: its connected-components label checkpoint must
+    reach the registry, not only the signature persist."""
     from s2geometry_spark.sources.pages import (documents_to_pages,
                                                 load_documents)
     docs = documents_to_pages(load_documents(spark, SF_DIR))
@@ -587,7 +567,10 @@ def test_pair_ops_cache_registry_releases(spark):
     n1 = pairs.count()  # materialize BEFORE releasing
     sims = dedup.simhash_pairs(docs, max_hamming=3, cache_registry=reg)
     n2 = sims.count()
-    assert len(reg) == 2 and n1 > 0 and n2 > 0
+    verdicts = dedup.dedup_apply(docs, threshold=0.2, cache_registry=reg)
+    n3 = verdicts.filter(~F.col("kept")).count()
+    # signatures x2, simhashes, and dedup_apply's label checkpoint
+    assert len(reg) == 4 and n1 > 0 and n2 > 0 and n3 > 0
     dedup.release_caches(reg)
     assert not reg
     leaked = set(sc._jsc.getPersistentRDDs().keys()) - before
