@@ -189,18 +189,6 @@ def _q_pip_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
                     level=4).select("url", "region_id")
 
 
-def _q_covering_candidates_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A29 best-first mode: the spec priority-queue coverer feeding the
-    same BETWEEN range join. The oracle replays the range join over the
-    fixture best-first covering, which also pins the coverer's
-    determinism (live covering must equal the fixture rows)."""
-    pages = load_pages(spark, sf_dir)
-    cov = coverings_df(spark, demo_regions(), max_cells=64,
-                       mode="best_first")
-    return covering_range_join(pages, cov) \
-        .select("url", "region_id", "is_interior")
-
-
 def _q_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15/A16: 8-ring neighbors of every distinct level-8 tile."""
     pages = load_pages(spark, sf_dir)
@@ -926,7 +914,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pip_salted_shuffle": _q_pip_salted,
         "covering_candidates": _q_covering_candidates,
         "region_overlap": _q_region_overlap,
-        "covering_candidates_bf": _q_covering_candidates_bf,
         "neighbors_l8": _q_neighbors,
         "dist_join_pairs": _q_dist_join,
         "exact_dedup": _q_exact_dedup,
@@ -1233,12 +1220,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(11 AS BIGINT) AS region_id
             FROM read_parquet('{FIXDIR}/expected_hull_sf0_01.parquet') e
             JOIN documents d USING (doc_id)
-        """,
-        "covering_candidates_bf": _PTS_CTE + f"""
-            SELECT p.url, c.region_id, c.is_interior
-            FROM pts p
-            JOIN read_parquet('{FIXDIR}/coverings_bf_sf0_01.parquet') c
-              ON p.cell_key BETWEEN c.range_min_key AND c.range_max_key
         """,
         "neighbors_l8": f"""
             SELECT cell, neighbor

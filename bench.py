@@ -146,9 +146,6 @@ def main() -> None:
     bench("pip_range", lambda: force(
         pip_join(pages, spark, regs, strategy="range", max_cells=64)
         .select("url", "region_id")))
-    bench("pip_range_bf", lambda: force(
-        pip_join(pages, spark, regs, strategy="range", max_cells=64,
-                 cover_mode="best_first").select("url", "region_id")))
     # non-broadcast scale path: shuffle-hash (tile, salt) join with the
     # skew head (tiles over ~n/500 rows) fanned out across 8 salts;
     # timing includes the histogram pass that finds the hot tiles

@@ -190,30 +190,21 @@ def main():
             "doc_id": pa.array(hull_doc, pa.int64()),
         }), f"{FIXDIR}/expected_hull_{tag}.parquet")
 
-        # engine coverings for the range-join oracles: the hierarchical
-        # level-sync covering (max_cells=64) and the best-first covering
-        # (max_cells=64, spec priority queue). The coverings themselves
-        # are engine-generated (DuckDB cannot run a coverer); the gate
-        # validates the BETWEEN machinery over them plus the coverer's
+        # engine covering for the range-join oracles: the hierarchical
+        # level-sync covering (max_cells=64). The covering itself is
+        # engine-generated (DuckDB cannot run a coverer); the gate
+        # validates the BETWEEN machinery over it plus the coverer's
         # run-to-run determinism (live covering must equal the fixture).
-        def write_cov(rows, path):
-            pq.write_table(pa.table({
-                "region_id": pa.array([r["region_id"] for r in rows], pa.int64()),
-                "cell_id": pa.array([r["cell_id"] for r in rows], pa.int64()),
-                "level": pa.array([r["level"] for r in rows], pa.int32()),
-                "range_min_key": pa.array([r["range_min_key"] for r in rows], pa.int64()),
-                "range_max_key": pa.array([r["range_max_key"] for r in rows], pa.int64()),
-                "is_interior": pa.array([r["is_interior"] for r in rows], pa.bool_()),
-            }), path)
-
-        cov_rows = []
-        cov_bf_rows = []
-        for reg in regions:
-            cov_rows.extend(covering_rows(reg, max_cells=64))
-            cov_bf_rows.extend(covering_rows(reg, max_cells=64,
-                                             mode="best_first"))
-        write_cov(cov_rows, f"{FIXDIR}/coverings_{tag}.parquet")
-        write_cov(cov_bf_rows, f"{FIXDIR}/coverings_bf_{tag}.parquet")
+        cov_rows = [row for reg in regions
+                    for row in covering_rows(reg, max_cells=64)]
+        pq.write_table(pa.table({
+            "region_id": pa.array([r["region_id"] for r in cov_rows], pa.int64()),
+            "cell_id": pa.array([r["cell_id"] for r in cov_rows], pa.int64()),
+            "level": pa.array([r["level"] for r in cov_rows], pa.int32()),
+            "range_min_key": pa.array([r["range_min_key"] for r in cov_rows], pa.int64()),
+            "range_max_key": pa.array([r["range_max_key"] for r in cov_rows], pa.int64()),
+            "is_interior": pa.array([r["is_interior"] for r in cov_rows], pa.bool_()),
+        }), f"{FIXDIR}/coverings_{tag}.parquet")
 
         # neighbor rings of the distinct level-8 tiles — independent oracle
         tiles = sorted({O.parent(c if c >= 0 else c + (1 << 64), 8) for c in cids})

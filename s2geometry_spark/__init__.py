@@ -14,7 +14,7 @@ Submodules stay importable directly for the full API
 
 from __future__ import annotations
 
-from .coverer import covering, covering_best_first, covering_rows
+from .coverer import covering, covering_rows
 from .demo_regions import demo_polyline, demo_regions
 from .functions.sql_api import register_sql_functions
 from .operators.pip_join import coverings_df, pip_join
@@ -24,7 +24,7 @@ from .sources.pages import geocode_pages, load_pages
 
 __all__ = [
     "Cap", "Polygon", "Polyline", "Rect", "RegionUnion",
-    "covering", "covering_best_first", "covering_rows", "coverings_df",
+    "covering", "covering_rows", "coverings_df",
     "demo_polyline", "demo_regions",
     "geocode_pages", "get_spark", "load_pages",
     "pip_join", "register_sql_functions",

@@ -9,11 +9,11 @@ Two physical strategies over the same logical query
   plans/explain.py in benches). Each page has exactly one level-K cell
   and covering cells are distinct, so no dedup is needed.
 
-* ``range`` (SURVEY B8): hierarchical best-first covering (max_cells
-  bound); broadcast range join ``cell_key BETWEEN range_min_key AND
-  range_max_key`` (BroadcastNestedLoopJoin — fine because coverings are
-  tiny). Covering cells are mutually disjoint by construction
-  (tests/test_coverer.py), so again no dedup.
+* ``range`` (SURVEY B8): level-synchronous hierarchical covering
+  (coverer.covering, max_cells bound); broadcast range join ``cell_key
+  BETWEEN range_min_key AND range_max_key`` (BroadcastNestedLoopJoin —
+  fine because coverings are tiny). Covering cells are mutually
+  disjoint by construction (tests/test_coverer.py), so again no dedup.
 
 Both then apply the exact vectorized containment test ONLY to
 non-interior candidate rows (the coverer's interior short-circuit,
@@ -21,6 +21,8 @@ SURVEY §4.1) inside one Arrow-batched pandas UDF.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -45,15 +47,13 @@ COVERINGS_SCHEMA = StructType([
 
 
 def coverings_df(spark: SparkSession, regions, uniform_level: int | None = None,
-                 max_cells: int = 64, max_level: int = 30,
-                 mode: str = "level_sync") -> DataFrame:
-    """The `coverings` dimension table (SURVEY §1.2) — always
-    broadcastable. mode: "level_sync" | "best_first" (tighter covering
-    per cell budget — see coverer.covering_best_first)."""
+                 max_cells: int = 64) -> DataFrame:
+    """The `coverings` dimension table (SURVEY §1.2), built on the
+    driver — always broadcastable."""
     rows = []
     for reg in regions:
-        rows.extend(covering_rows(reg, max_cells=max_cells, max_level=max_level,
-                                  uniform_level=uniform_level, mode=mode))
+        rows.extend(covering_rows(reg, max_cells=max_cells,
+                                  uniform_level=uniform_level))
     return spark.createDataFrame(rows, COVERINGS_SCHEMA)
 
 
@@ -62,11 +62,17 @@ def make_contains_udf(regions):
 
     The (tiny) region list is captured in the closure and shipped once
     per executor. Runs numpy kernels per Arrow batch; polygon rows get
-    the exact-arithmetic fallback for near-degenerate points.
+    the exact-arithmetic fallback for near-degenerate points. Raises
+    ValueError when two regions share a region_id: rows are dispatched
+    by id, so one of them would be tested against the other's geometry.
     """
     from ..regions import Cap, Polygon, Polyline, Rect, RegionUnion
 
     by_id = {r.region_id: r for r in regions}
+    if len(by_id) != len(regions):
+        counts = Counter(r.region_id for r in regions)
+        raise ValueError("duplicate region ids: "
+                         f"{sorted(i for i, n in counts.items() if n > 1)}")
 
     @pandas_udf(BooleanType())
     def contains_udf(region_id: pd.Series, lat_deg: pd.Series,
@@ -122,7 +128,6 @@ def covering_range_join(pages: DataFrame, cov: DataFrame) -> DataFrame:
 def pip_join(pages: DataFrame, spark: SparkSession, regions,
              strategy: str = "equi", level: int = 8,
              max_cells: int = 64,
-             cover_mode: str = "level_sync",
              hot_threshold: int | None = None,
              n_salt: int = 8) -> DataFrame:
     """pages ⋈ regions containment join → (url, region_id, ...pages cols).
@@ -178,14 +183,7 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
             pages[f"cell_l{level}"].eqNullSafe(cov_sel["_cov_cell"]),
             "inner").drop("_cov_cell")
     elif strategy == "range":
-        # cover_mode="best_first" trades more covering cells (more
-        # BETWEEN probes per row in the broadcast nested-loop join —
-        # cheap JVM comparisons) for a 2-30x tighter covered area, i.e.
-        # proportionally fewer candidate rows entering the Python exact
-        # containment UDF (the expensive per-row step). Results are
-        # identical either way (superset covering + exact filter).
-        cov = coverings_df(spark, regions, max_cells=max_cells,
-                           mode=cover_mode)
+        cov = coverings_df(spark, regions, max_cells=max_cells)
         joined = covering_range_join(pages, cov)
     else:
         raise ValueError(strategy)

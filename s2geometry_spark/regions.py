@@ -92,7 +92,7 @@ def point_to_arc_distance(p, a, b) -> float:
 
 
 def _vertex_cap(verts, extra_radius: float = 0.0):
-    """Shared conservative vertex-hull cap for coverer seeding: the
+    """Shared conservative vertex-hull cap (A21 cap_bound): the
     normalized vertex centroid + max vertex angle (+ extra_radius for
     buffered regions), with 5% + 0.01 rad slop. Used by Polygon and
     Polyline cap_bound (one copy — keep the slop policy in one place)."""
@@ -474,7 +474,7 @@ class Rect:
                 or s1_contains(other._lng, self.lng_lo))
 
     def cap_bound(self):
-        """Conservative bounding cap for coverer seeding (A21), spec
+        """Conservative bounding cap (A21), spec
         S2LatLngRect::GetCapBound [spec] shape: the smaller of a pole
         cap (always valid — covers every longitude at the rect's
         latitudes) and a mid-point corner cap, the latter considered
@@ -637,9 +637,8 @@ class Polygon:
 
     def cap_bound(self):
         """Conservative bounding cap (A21): normalized vertex centroid
-        + max vertex angle with slop. Used only to seed the best-first
-        coverer's initial candidates; the covering invariants tests
-        validate the resulting superset property."""
+        + max vertex angle with slop (`_vertex_cap`). RegionUnion
+        grows its own bound over its members' caps."""
         verts = []
         for _depth, lats, lngs in self.loops:
             for la, ln in zip(lats, lngs):

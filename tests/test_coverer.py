@@ -96,56 +96,30 @@ def test_covering_rows_keys():
         assert int(K.level(arr)[0]) == r["level"]
 
 
-def covered_area(cells):
-    if not cells:
-        return 0
-    ids = np.array([c[0] for c in cells], dtype=np.uint64)
-    return int((K.range_max(ids) - K.range_min(ids) + 1).sum())
-
-
-@pytest.mark.parametrize("reg", demo_regions(), ids=lambda r: f"region{r.region_id}")
-def test_best_first_covering_invariants(reg):
-    from s2geometry_spark.coverer import covering_best_first
-    for max_cells in (8, 64):
-        for level_mod in (1, 2):
-            cells = covering_best_first(reg, max_cells=max_cells,
-                                        level_mod=level_mod)
-            assert len(cells) <= max_cells + 3
-            check_covering(reg, cells)
-
-
-@pytest.mark.parametrize("reg", demo_regions(), ids=lambda r: f"region{r.region_id}")
-def test_best_first_is_tighter_than_level_sync(reg):
-    """The point of the priority queue: for the same cell budget the
-    covering's total leaf-range area (= candidate rows a covering join
-    must post-filter) must not exceed the level-synchronous coverer's.
-    Measured 2-30x tighter on the demo regions."""
-    from s2geometry_spark.coverer import covering_best_first
-    for max_cells in (8, 64):
-        a_bf = covered_area(covering_best_first(reg, max_cells=max_cells))
-        a_ls = covered_area(covering(reg, max_cells=max_cells))
-        assert a_bf <= a_ls, (reg.region_id, max_cells, a_bf, a_ls)
-
-
-def test_best_first_level_mod_structure():
-    from s2geometry_spark.coverer import covering_best_first
-    reg = demo_regions()[0]
-    cells = covering_best_first(reg, max_cells=64, min_level=2,
-                                level_mod=2)
-    assert cells
-    for _cid, lvl, _int in cells:
-        assert lvl >= 2
-        assert (lvl - 2) % 2 == 0, lvl
-    with pytest.raises(ValueError):
-        covering_best_first(reg, level_mod=4)
+def test_covering_rejects_levels_outside_0_30():
+    """A leaf cell (level 30) has no children: a deeper level must be
+    refused, not emit the same leaf id four times labelled level 31
+    (duplicate cells break the disjointness pip_join relies on)."""
+    reg = tiny_cap()
+    for kw in ({"min_level": -1}, {"max_level": 31},
+               {"min_level": 5, "max_level": 4}):
+        with pytest.raises(ValueError, match="covering levels"):
+            covering(reg, **kw)
+    with pytest.raises(ValueError, match="covering levels"):
+        uniform_covering(reg, 31)
+    with pytest.raises(ValueError, match="covering levels"):
+        covering_rows(reg, uniform_level=31)
+    cells = uniform_covering(reg, 30)
+    ids = [c for c, _, _ in cells]
+    assert cells and len(set(ids)) == len(ids)
+    assert all(int(K.level(np.array([c], dtype=np.uint64))[0]) == lvl == 30
+               for c, lvl, _ in cells)
 
 
 def test_empty_and_constructed_regions_through_coverer():
     """A20/A23 constructions feed the coverer (VERDICT r1 item 7)."""
-    from s2geometry_spark.coverer import covering_best_first
     empty = Cap.empty(region_id=50)
     assert covering(empty, max_cells=8) == []
-    assert covering_best_first(empty, max_cells=8) == []
     # cap built incrementally from points must cover those points
     import math
     pts = [(10.0, 10.0), (12.0, 11.0), (11.0, 13.0)]
@@ -155,7 +129,7 @@ def test_empty_and_constructed_regions_through_coverer():
         cl = math.cos(lar)
         cap = cap.add_point((cl * math.cos(lnr), cl * math.sin(lnr),
                              math.sin(lar)))
-    cells = covering_best_first(cap, max_cells=8)
+    cells = covering(cap, max_cells=8)
     assert cells
     ids = np.array([c[0] for c in cells], dtype=np.uint64)
     for la, ln in pts:
@@ -167,14 +141,13 @@ def test_empty_and_constructed_regions_through_coverer():
     r1 = Rect.from_degrees(52, 0, 5, 0, 5)
     r2 = Rect.from_degrees(52, 3, 8, 4, 9)
     u = r1.union(r2)
-    cells = covering_best_first(u, max_cells=16)
+    cells = covering(u, max_cells=16)
     check_covering(u, cells)
 
 
 def test_polyline_buffer_region():
     """S2Polyline buffer region: scalar vs vectorized distance agree,
-    coverer invariants hold, best-first works on it too."""
-    from s2geometry_spark.coverer import covering_best_first
+    coverer invariants hold."""
     from s2geometry_spark.demo_regions import demo_polyline
     pl = demo_polyline()
     # scalar twin vs vectorized (1000 sampled points)
@@ -182,11 +155,10 @@ def test_polyline_buffer_region():
     for k in range(0, 1000, 97):
         d_s = pl.distance_point((float(X[k]), float(Y[k]), float(Z[k])))
         assert d_s == pytest.approx(float(d_vec[k]), abs=1e-12)
-    # coverer invariants (both modes) — check_covering needs a region
-    # mask; Polyline contains via xyz like Cap/Polygon
-    for cells in (covering(pl, max_cells=64),
-                  covering_best_first(pl, max_cells=64)):
-        check_covering(pl, cells)
+    # coverer invariants — check_covering needs a region mask; Polyline
+    # contains via xyz like Cap/Polygon
+    for max_cells in (8, 64):
+        check_covering(pl, covering(pl, max_cells=max_cells))
     # vertices themselves are inside the buffer
     for la, ln in zip(pl.lats, pl.lngs):
         x = math.cos(la) * math.cos(ln)
@@ -301,7 +273,6 @@ def test_region_union_semantics_and_covering():
     """RegionUnion (added r3): membership == OR of members, overlap
     between members yields one verdict, and the coverer invariants
     (superset/interior/disjoint) hold through the union region."""
-    from s2geometry_spark.coverer import covering_best_first
     from s2geometry_spark.demo_regions import demo_region_union
 
     u = demo_region_union()
@@ -316,7 +287,7 @@ def test_region_union_semantics_and_covering():
     assert both.any()
 
     for cells in (covering(u, max_cells=64), uniform_covering(u, 4),
-                  covering_best_first(u, max_cells=32)):
+                  covering(u, max_cells=32)):
         check_covering(u, cells)
 
 

@@ -121,11 +121,10 @@ def test_covering_candidate_gates_evaluate_kernels_once(spark):
     (round-2 review: they had copied the unguarded round-1 BETWEEN
     shape and were paying the double-ArrowEvalPython bill)."""
     import __spark_entry__ as E
-    for name in ("covering_candidates", "covering_candidates_bf"):
-        out = E.queries()[name](spark, SF_DIR)
-        plan = X.formatted_plan(out)
-        assert plan.count("cell_id_udf(") == 1, (name, plan)
-        assert "order_key_udf(" not in plan, (name, plan)
+    out = E.queries()["covering_candidates"](spark, SF_DIR)
+    plan = X.formatted_plan(out)
+    assert plan.count("cell_id_udf(") == 1, plan
+    assert "order_key_udf(" not in plan, plan
 
 
 def test_distance_join_plan_equi_no_cartesian_udfs_cached(spark):

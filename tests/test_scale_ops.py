@@ -222,18 +222,18 @@ def test_observed_tile_histogram_metrics(spark, pages):
     assert m["tile_min"] <= m["tile_max"]
 
 
-def test_distributed_coverer_equals_driver_side(spark):
-    """applyInPandas coverer (10^6-region scale path) must emit exactly
-    the driver-side covering rows, both strategies."""
-    from s2geometry_spark.operators.coverings import coverings_df_distributed
-    from s2geometry_spark.operators.pip_join import coverings_df
-    regs = demo_regions()
-    for kwargs in ({"uniform_level": 4}, {"max_cells": 64}):
-        a = coverings_df(spark, regs, **kwargs)
-        b = coverings_df_distributed(spark, regs, **kwargs)
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-        assert b.count() > 0
+def test_pip_join_rejects_duplicate_region_ids(spark, pages):
+    """Two regions sharing an id: the containment UDF dispatches by id,
+    so one would be tested against the other's geometry. Every strategy
+    (and streaming_pip_counts, which calls pip_join) must refuse."""
+    from s2geometry_spark.operators.pip_join import pip_join
+    from s2geometry_spark.regions import Cap, Rect
+    regs = [Cap.from_latlng_radius(7, 10.0, 10.0, 20.0),
+            Rect.from_degrees(7, -30.0, 30.0, 60.0, 120.0),
+            Cap.from_latlng_radius(8, -40.0, -60.0, 10.0)]
+    for strategy in ("equi", "range", "salted"):
+        with pytest.raises(ValueError, match=r"duplicate region ids: \[7\]"):
+            pip_join(pages, spark, regs, strategy=strategy, level=LEVEL)
 
 
 def test_dedup_job_fresh_resume_and_equivalence(spark, tmp_path):
