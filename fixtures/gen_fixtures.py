@@ -35,10 +35,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from s2geometry_spark.coverer import covering_rows
+from s2geometry_spark.coverer import covering_table
 from s2geometry_spark.demo_regions import demo_regions
 from s2geometry_spark.regions import Cap, Polygon, Rect
 from tests import oracle_s2 as O
@@ -195,16 +196,10 @@ def main():
         # engine-generated (DuckDB cannot run a coverer); the gate
         # validates the BETWEEN machinery over it plus the coverer's
         # run-to-run determinism (live covering must equal the fixture).
-        cov_rows = [row for reg in regions
-                    for row in covering_rows(reg, max_cells=64)]
-        pq.write_table(pa.table({
-            "region_id": pa.array([r["region_id"] for r in cov_rows], pa.int64()),
-            "cell_id": pa.array([r["cell_id"] for r in cov_rows], pa.int64()),
-            "level": pa.array([r["level"] for r in cov_rows], pa.int32()),
-            "range_min_key": pa.array([r["range_min_key"] for r in cov_rows], pa.int64()),
-            "range_max_key": pa.array([r["range_max_key"] for r in cov_rows], pa.int64()),
-            "is_interior": pa.array([r["is_interior"] for r in cov_rows], pa.bool_()),
-        }), f"{FIXDIR}/coverings_{tag}.parquet")
+        cov = pd.concat([covering_table(reg, max_cells=64) for reg in regions],
+                        ignore_index=True)
+        pq.write_table(pa.table({c: cov[c].to_numpy() for c in cov}),
+                       f"{FIXDIR}/coverings_{tag}.parquet")
 
         # neighbor rings of the distinct level-8 tiles — independent oracle
         tiles = sorted({O.parent(c if c >= 0 else c + (1 << 64), 8) for c in cids})
@@ -220,7 +215,7 @@ def main():
         }), f"{FIXDIR}/neighbors_{tag}.parquet")
 
         print(f"{tag}: {len(doc_ids)} docs, {len(pip_doc)} pip rows, "
-              f"{len(cov_rows)} covering rows, {len(nb_cell)} neighbor rows")
+              f"{len(cov)} covering rows, {len(nb_cell)} neighbor rows")
 
 
 if __name__ == "__main__":

@@ -14,16 +14,20 @@ bounding-cap distance bounds (regions.py) and subdivision is
 level-synchronous so each round is one *vectorized* numpy region test
 over the whole frontier. This preserves the only properties the engine
 needs (covering ⊇ region, interior ⊆ region, |covering| ≤ max_cells,
-cells disjoint). Regions are ≤10^4 rows vs 10^12 pages, so coverer
-cost is driver-side and immaterial at scale. A priority-queue coverer
-covers a smaller boundary area per budget, but on the 11-region bench
-catalog its driver time and larger broadcast covering cost far more
-than the containment rows it saves (BENCH/PLAN_EVIDENCE.md).
+cells disjoint). Coverer cost is driver-side but not negligible: the
+119,765-row level-8 covering of the 11-region bench catalog cost 4-5 s
+of driver time when its table was built row by row with one-element
+numpy calls, so `covering_table` builds whole numpy columns instead.
+A priority-queue coverer covers a smaller boundary area per budget,
+but on the 11-region bench catalog its driver time and larger
+broadcast covering cost far more than the containment rows it saves.
+Both measurements are in BENCH/PLAN_EVIDENCE.md.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from . import kernels as K
 
@@ -86,28 +90,40 @@ def uniform_covering(region, level: int) -> list:
     return covering(region, max_cells=2 ** 62, min_level=level, max_level=level)
 
 
-def covering_rows(region, max_cells: int = 64,
-                  uniform_level: int | None = None):
-    """Covering as join-ready dict rows (the `coverings` table, §1.2).
+def covering_table(region, max_cells: int = 64,
+                   uniform_level: int | None = None) -> pd.DataFrame:
+    """Covering as the join-ready `coverings` table (§1.2), one row per cell.
 
     `uniform_level` selects the uniform-level equi-join covering;
-    otherwise `covering` under the `max_cells` budget. Emits signed
-    int64 cell ids plus signed-flip order keys for BETWEEN range joins
-    (SURVEY §2.2).
+    otherwise `covering` under the `max_cells` budget. Columns and
+    dtypes follow pip_join.COVERINGS_SCHEMA: region_id, signed int64
+    cell_id, int32 level, signed-flip order keys for BETWEEN range joins
+    (SURVEY §2.2) and is_interior. Built as numpy columns with one
+    vectorized kernel call per column, never one per cell.
     """
     if uniform_level is not None:
         cells = uniform_covering(region, uniform_level)
     else:
         cells = covering(region, max_cells)
-    rows = []
-    for cid, lvl, interior in cells:
-        arr = np.array([cid], dtype=np.uint64)
-        rows.append({
-            "region_id": region.region_id,
-            "cell_id": int(K.uint64_to_signed(arr)[0]),
-            "level": lvl,
-            "range_min_key": int(K.signed_order_key(K.range_min(arr))[0]),
-            "range_max_key": int(K.signed_order_key(K.range_max(arr))[0]),
-            "is_interior": bool(interior),
-        })
-    return rows
+    n = len(cells)
+    ids = np.fromiter((c for c, _, _ in cells), dtype=np.uint64, count=n)
+    return pd.DataFrame({
+        "region_id": np.full(n, region.region_id, dtype=np.int64),
+        "cell_id": K.uint64_to_signed(ids),
+        "level": np.fromiter((lvl for _, lvl, _ in cells), dtype=np.int32,
+                             count=n),
+        "range_min_key": K.signed_order_key(K.range_min(ids)),
+        "range_max_key": K.signed_order_key(K.range_max(ids)),
+        "is_interior": np.fromiter((i for _, _, i in cells), dtype=bool,
+                                   count=n),
+    })
+
+
+def covering_rows(region, max_cells: int = 64,
+                  uniform_level: int | None = None) -> list[dict]:
+    """Dict-row view of `covering_table`, values native Python int/bool.
+
+    The coverings table is built only by `covering_table`;
+    pip_join.coverings_df hands its frames to Spark over Arrow.
+    """
+    return covering_table(region, max_cells, uniform_level).to_dict("records")

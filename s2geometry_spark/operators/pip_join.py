@@ -33,7 +33,7 @@ from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                StructField, StructType)
 
 from .. import kernels as K
-from ..coverer import covering_rows
+from ..coverer import covering_table
 from ..functions import geo
 
 COVERINGS_SCHEMA = StructType([
@@ -49,12 +49,15 @@ COVERINGS_SCHEMA = StructType([
 def coverings_df(spark: SparkSession, regions, uniform_level: int | None = None,
                  max_cells: int = 64) -> DataFrame:
     """The `coverings` dimension table (SURVEY §1.2), built on the
-    driver — always broadcastable."""
-    rows = []
-    for reg in regions:
-        rows.extend(covering_rows(reg, max_cells=max_cells,
-                                  uniform_level=uniform_level))
-    return spark.createDataFrame(rows, COVERINGS_SCHEMA)
+    driver — always broadcastable. One columnar frame per region
+    (coverer.covering_table), handed to Spark as one pandas frame over
+    Arrow; an empty catalog gives 0 rows with the same schema."""
+    frames = [covering_table(reg, max_cells=max_cells,
+                             uniform_level=uniform_level) for reg in regions]
+    if not frames:
+        return spark.createDataFrame([], COVERINGS_SCHEMA)
+    return spark.createDataFrame(pd.concat(frames, ignore_index=True),
+                                 COVERINGS_SCHEMA)
 
 
 def make_contains_udf(regions):

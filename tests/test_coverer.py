@@ -96,6 +96,29 @@ def test_covering_rows_keys():
         assert int(K.level(arr)[0]) == r["level"]
 
 
+def test_covering_rows_match_per_cell_reference():
+    """covering_table's vectorized columns equal the per-cell loop it
+    replaced, value for value and type for type (native int/bool)."""
+    for reg in demo_regions() + [tiny_cap()]:
+        for kw, cells in (({"uniform_level": 4}, uniform_covering(reg, 4)),
+                          ({"max_cells": 64}, covering(reg, max_cells=64))):
+            want = []
+            for cid, lvl, interior in cells:
+                arr = np.array([cid], dtype=np.uint64)
+                want.append({
+                    "region_id": reg.region_id,
+                    "cell_id": int(K.uint64_to_signed(arr)[0]),
+                    "level": lvl,
+                    "range_min_key": int(K.signed_order_key(K.range_min(arr))[0]),
+                    "range_max_key": int(K.signed_order_key(K.range_max(arr))[0]),
+                    "is_interior": bool(interior),
+                })
+            got = covering_rows(reg, **kw)
+            assert got == want
+            assert [[type(v) for v in r.values()] for r in got] == \
+                [[type(v) for v in r.values()] for r in want]
+
+
 def test_covering_rejects_levels_outside_0_30():
     """A leaf cell (level 30) has no children: a deeper level must be
     refused, not emit the same leaf id four times labelled level 31

@@ -236,6 +236,54 @@ def test_pip_join_rejects_duplicate_region_ids(spark, pages):
             pip_join(pages, spark, regs, strategy=strategy, level=LEVEL)
 
 
+def test_coverings_df_empty_catalog_and_empty_coverings(spark, pages):
+    """No regions, or regions whose coverings are all empty, give a
+    0-row `coverings` table with the full schema, and pip_join over an
+    empty catalog matches nothing."""
+    from s2geometry_spark.operators.pip_join import COVERINGS_SCHEMA, pip_join
+    from s2geometry_spark.regions import Cap, Polygon
+    empty_regs = [Cap.empty(region_id=50), Polygon(region_id=51)]
+    for regs in ([], empty_regs):
+        for kw in ({"uniform_level": 8}, {"max_cells": 64}):
+            cov = coverings_df(spark, regs, **kw)
+            assert cov.schema == COVERINGS_SCHEMA
+            assert cov.count() == 0
+    for strategy in ("equi", "range"):
+        assert pip_join(pages, spark, [], strategy=strategy,
+                        level=LEVEL).count() == 0
+
+
+def test_coverings_df_equals_covering_rows(spark):
+    """The Arrow-built `coverings` table holds exactly the covering_rows
+    rows, under COVERINGS_SCHEMA with its non-nullable columns (the
+    eqNullSafe join key in pip_join relies on that), with Arrow on and
+    on the non-Arrow fallback."""
+    from s2geometry_spark.coverer import covering_rows
+    from s2geometry_spark.demo_regions import (demo_hull_polygon,
+                                               demo_polyline,
+                                               demo_region_union, tiny_cap)
+    from s2geometry_spark.operators.pip_join import COVERINGS_SCHEMA
+    regs = demo_regions() + [demo_polyline(), demo_region_union(),
+                             demo_hull_polygon(), tiny_cap()]
+    cases = []
+    for kw in ({"uniform_level": 8}, {"max_cells": 64}):
+        rows = [r for reg in regs for r in covering_rows(reg, **kw)]
+        assert all(type(v) is (bool if k == "is_interior" else int)
+                   for r in rows for k, v in r.items())
+        cases.append((kw, sorted(tuple(r.values()) for r in rows)))
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for kw, want in cases:
+                cov = coverings_df(spark, regs, **kw)
+                assert cov.schema == COVERINGS_SCHEMA
+                assert sorted(tuple(r) for r in cov.collect()) == want
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_dedup_job_fresh_resume_and_equivalence(spark, tmp_path):
     """The resumable dedup pipeline (jobs/dedup_job.py): a crash-
     bounded first run commits only some signature batches; the resume
