@@ -15,6 +15,22 @@ reads ``done_keys`` and processes only missing batches — crash-safe at
 batch granularity because TableIO's manifest swap is atomic and data
 written without a manifest entry is invisible.
 
+Geocode once: the run writes every input row, tagged with its batch id,
+in ONE write partitioned by that id into a run-scoped staging dir
+``<root>/<table>/_staging-<uuid>``. The hot-tile histogram and every
+batch then read the staged files; a batch is a partition-pruned read of
+its own ``_batch=b`` directory, so no read runs the geocode UDF again.
+(Filtering the geocoded pages by batch instead pushes the batch
+predicate below the geocode projection and re-runs the UDF over the
+whole input once per batch; a filter on ``_batch`` before the staging
+write does the same, so the staging write is unfiltered — a resume run
+stages all rows and reads only its pending batches.) The staging dir is
+removed when the run ends, by success or by error; a killed run's
+leftover is never read, because readers and ``done_keys`` see only
+manifest entries — the same contract as an orphan ``snap-*`` dir.
+``IcebergTableIO`` has no ``root``: its swap point needs a staging
+location (e.g. a scratch table or path) for this step.
+
 At 10^12 rows this shape holds: each batch is a partition-pruned scan
 (tile is the Iceberg identity-partition column), the hot-tile histogram
 is a counts-only aggregate, and the per-batch write is salted so no
@@ -24,6 +40,8 @@ straggler task owns a mega-tile.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,11 +60,31 @@ HOT_THRESHOLD_ROWS = 50_000
 N_SALT = 8
 OUT_COLS = ("url", "warc_ts", "text", "lang", "h", "lat", "lng",
             "cell_id", "cell_l4", "cell_l8", "cell_l12")
+BATCH_COL = "_batch"
 
 
 def batch_of(tile_col: str, n_batches: int = N_BATCHES):
     pos = F.shiftright(F.col(tile_col), 2 * (30 - TILE_LEVEL) + 1)
     return F.pmod(pos, F.lit(n_batches)).cast("int")
+
+
+def keyed_pages(spark: SparkSession, sf_dir: str,
+                n_batches: int = N_BATCHES) -> DataFrame:
+    """The job's output rows plus their batch id in BATCH_COL."""
+    return (load_pages(spark, sf_dir).select(*OUT_COLS)
+            .withColumn(BATCH_COL,
+                        batch_of(TL.tile_col(TILE_LEVEL), n_batches)))
+
+
+def stage(keyed: DataFrame, path: str) -> DataFrame:
+    """Write `keyed` once, partitioned by BATCH_COL, and read it back.
+
+    The read takes `keyed`'s schema: an empty input writes no part
+    files, and schema inference would fail on the empty dir. (Spark
+    logs "All paths were ignored" for a `_`-prefixed path such as the
+    job's staging dir, but still reads it.)"""
+    keyed.write.partitionBy(BATCH_COL).parquet(path)
+    return keyed.sparkSession.read.schema(keyed.schema).parquet(path)
 
 
 def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
@@ -66,23 +104,27 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
         return {"committed": [], "skipped": list(range(n_batches)),
                 "hot_tiles": []}
     tcol = TL.tile_col(TILE_LEVEL)
-    pages = load_pages(spark, sf_dir).select(*OUT_COLS)
-    hot = TL.hot_tiles(pages, TILE_LEVEL, hot_threshold)
-    committed, skipped = [], []
-    for b in range(n_batches):
-        if b in done:
-            skipped.append(b)
-            continue
-        if (max_batches_this_run is not None
-                and len(committed) >= max_batches_this_run):
-            break
-        batch = pages.filter(batch_of(tcol, n_batches) == b)
-        out = TL.repartition_by_tile(batch, TILE_LEVEL, hot, N_SALT) \
-            .drop(TL.SALT_COL)
-        io.append(out, table, partition_by=tcol, lineage_col=tcol,
-                  meta={"batch_key": [b], "sf_dir": sf_dir,
-                        "hot_tiles": hot})
-        committed.append(b)
+    staging = os.path.join(io.root, table, f"_staging-{uuid.uuid4().hex}")
+    try:
+        staged = stage(keyed_pages(spark, sf_dir, n_batches), staging)
+        hot = TL.hot_tiles(staged, TILE_LEVEL, hot_threshold)
+        committed, skipped = [], []
+        for b in range(n_batches):
+            if b in done:
+                skipped.append(b)
+                continue
+            if (max_batches_this_run is not None
+                    and len(committed) >= max_batches_this_run):
+                break
+            batch = staged.filter(F.col(BATCH_COL) == b).drop(BATCH_COL)
+            out = TL.repartition_by_tile(batch, TILE_LEVEL, hot, N_SALT) \
+                .drop(TL.SALT_COL)
+            io.append(out, table, partition_by=tcol, lineage_col=tcol,
+                      meta={"batch_key": [b], "sf_dir": sf_dir,
+                            "hot_tiles": hot})
+            committed.append(b)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return {"committed": committed, "skipped": skipped, "hot_tiles": hot}
 
 

@@ -162,6 +162,26 @@ def test_distance_join_plan_equi_no_cartesian_udfs_cached(spark):
         reg.pop().unpersist()
 
 
+def test_geocode_job_geocodes_once_and_prunes_batches(spark, tmp_path):
+    """run_geocode_job stages its batch-keyed pages in one write with a
+    single geocode, and reads each batch back as a partition-pruned
+    scan with no Python node. (Filtering the geocoded pages by batch
+    instead is the null-intolerant-predicate trap: the filter is pushed
+    below the geocode projection and re-runs the UDF per batch.)"""
+    import re
+    from s2geometry_spark.jobs.geocode_job import (BATCH_COL, keyed_pages,
+                                                   stage)
+    keyed = keyed_pages(spark, SF_DIR)
+    plan = X.formatted_plan(keyed)
+    assert len(set(re.findall(r"ArrowEvalPython \((\d+)\)", plan))) == 1, \
+        plan
+    staged = stage(keyed, str(tmp_path / "staging"))
+    batch = X.formatted_plan(staged.filter(F.col(BATCH_COL) == 3)
+                             .drop(BATCH_COL))
+    assert "ArrowEvalPython" not in batch, batch
+    assert re.search(r"PartitionFilters: \[[^\]]*" + BATCH_COL, batch), batch
+
+
 def test_vocab_topn_is_take_ordered(spark):
     """The global top-n must compile to TakeOrderedAndProject (per-
     partition top-n + driver merge), never a full global sort."""

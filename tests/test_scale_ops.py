@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2geometry_spark.io.table_io import ParquetTableIO
-from s2geometry_spark.jobs.geocode_job import (package_pyfiles,
+from s2geometry_spark.jobs.geocode_job import (BATCH_COL, keyed_pages,
+                                               package_pyfiles,
                                                run_geocode_job)
 from s2geometry_spark.operators import tiles as TL
 from s2geometry_spark.operators.pip_join import coverings_df
@@ -166,6 +167,102 @@ def test_geocode_job_batches_all_nonempty(spark, pages):
     assert sorted(counts) == list(range(N_BATCHES)), counts
     assert all(n > 0 for n in counts.values()), counts
     assert sum(counts.values()) == pages.count()
+
+
+JOB_TABLE = "pages_tiled"
+JOB_HOT = 2  # sf0.01 has level-4 tiles of 3-6 rows: some hot, some salted
+
+
+def _staging_dirs(io: ParquetTableIO) -> list[str]:
+    return [d for d in os.listdir(os.path.join(io.root, JOB_TABLE))
+            if d.startswith("_staging-")]
+
+
+def _same_rows(io_a: ParquetTableIO, io_b: ParquetTableIO, spark) -> bool:
+    a = io_a.read(spark, JOB_TABLE).select("url", "cell_id")
+    b = io_b.read(spark, JOB_TABLE).select("url", "cell_id")
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+@pytest.fixture(scope="module")
+def one_shot(spark, tmp_path_factory):
+    """One uninterrupted job run: the reference for the resume tests."""
+    io = ParquetTableIO(str(tmp_path_factory.mktemp("one_shot")))
+    return io, run_geocode_job(spark, SF_DIR, io, hot_threshold=JOB_HOT)
+
+
+def test_geocode_job_removes_staging_after_success(one_shot):
+    io, result = one_shot
+    assert result["committed"] == list(range(8)), result
+    assert result["hot_tiles"], "threshold should make some tiles hot"
+    assert _staging_dirs(io) == []
+
+
+def test_geocode_job_crash_keeps_prefix_and_removes_staging(
+        spark, tmp_path, monkeypatch, one_shot):
+    """A failure on the third batch's commit leaves batches 0 and 1
+    committed and no staging dir; the resume run commits the rest with
+    the same rows and the same hot-tile list as a one-shot run."""
+    io = ParquetTableIO(str(tmp_path))
+    real_append = io.append
+
+    def append(df, table, **kw):
+        if (kw.get("meta") or {}).get("batch_key") == [2]:
+            raise RuntimeError("injected failure on the third batch")
+        return real_append(df, table, **kw)
+
+    monkeypatch.setattr(io, "append", append)
+    with pytest.raises(RuntimeError, match="third batch"):
+        run_geocode_job(spark, SF_DIR, io, hot_threshold=JOB_HOT)
+    monkeypatch.undo()
+    assert io.done_keys(JOB_TABLE) == {0, 1}
+    assert _staging_dirs(io) == []
+
+    r = run_geocode_job(spark, SF_DIR, io, hot_threshold=JOB_HOT)
+    assert r["committed"] == [2, 3, 4, 5, 6, 7]
+    assert r["skipped"] == [0, 1]
+    assert _staging_dirs(io) == []
+    io_full, full = one_shot
+    assert _same_rows(io, io_full, spark)
+    assert r["hot_tiles"] == full["hot_tiles"]
+    assert [s["meta"]["hot_tiles"] for s in io.history(JOB_TABLE)] \
+        == [s["meta"]["hot_tiles"] for s in io_full.history(JOB_TABLE)]
+
+
+def test_geocode_job_skipped_lists_only_batches_before_the_break(
+        spark, tmp_path, one_shot):
+    """`skipped` lists the done batches the loop passed: a done batch
+    after the `max_batches_this_run` break point is not in it."""
+    io = ParquetTableIO(str(tmp_path))
+    io_full, full = one_shot
+    tcol = TL.tile_col(LEVEL)
+    io.append(keyed_pages(spark, SF_DIR).filter(F.col(BATCH_COL) == 6)
+              .drop(BATCH_COL), JOB_TABLE, partition_by=tcol,
+              lineage_col=tcol,
+              meta={"batch_key": [6], "sf_dir": SF_DIR,
+                    "hot_tiles": full["hot_tiles"]})
+    r1 = run_geocode_job(spark, SF_DIR, io, hot_threshold=JOB_HOT,
+                         max_batches_this_run=2)
+    assert r1 == {"committed": [0, 1], "skipped": [],
+                  "hot_tiles": full["hot_tiles"]}
+    r2 = run_geocode_job(spark, SF_DIR, io, hot_threshold=JOB_HOT)
+    assert r2 == {"committed": [2, 3, 4, 5, 7], "skipped": [0, 1, 6],
+                  "hot_tiles": full["hot_tiles"]}
+    assert _same_rows(io, io_full, spark)
+
+
+def test_geocode_job_empty_input(spark, tmp_path):
+    """A 0-row input commits 8 empty snapshots (the staged read takes
+    the explicit schema: an empty staging dir has no part files)."""
+    sf_dir = str(tmp_path / "sf_empty")
+    spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(0) \
+        .write.parquet(f"{sf_dir}/documents.parquet")
+    io = ParquetTableIO(str(tmp_path / "out"))
+    r = run_geocode_job(spark, sf_dir, io)
+    assert r == {"committed": list(range(8)), "skipped": [],
+                 "hot_tiles": []}
+    assert len(io.history(JOB_TABLE)) == 8
+    assert _staging_dirs(io) == []
 
 
 def test_package_pyfiles(tmp_path):
