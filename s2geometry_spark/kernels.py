@@ -123,17 +123,17 @@ def xyz_to_face(x: np.ndarray, y: np.ndarray, z: np.ndarray) -> np.ndarray:
 
 
 def face_xyz_to_uv(face: np.ndarray, x: np.ndarray, y: np.ndarray, z: np.ndarray):
-    """S2Projections.swift :: validFaceXyzToUv [spec]. face must be valid."""
+    """S2Projections.swift :: validFaceXyzToUv [spec]. face must be valid.
+
+    Gathers each row's numerators and denominator by face and divides
+    once: the same IEEE operation per output as evaluating all six
+    faces, without the other faces' overflowing divisions."""
+    nx, ny = -x, -y
+    den = np.choose(face, (x, y, z, x, y, z))
+    u_num = np.choose(face, (y, nx, nx, z, z, ny))
+    v_num = np.choose(face, (z, z, ny, y, nx, nx))
     with np.errstate(divide="ignore", invalid="ignore"):
-        u = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-            [y / x, -x / y, -x / z, z / x, z / y, -y / z],
-        )
-        v = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4, face == 5],
-            [z / x, z / y, -y / z, y / x, -x / y, -x / z],
-        )
-    return u, v
+        return u_num / den, v_num / den
 
 
 def face_uv_to_xyz(face: np.ndarray, u: np.ndarray, v: np.ndarray):

@@ -2,6 +2,20 @@
 
 Local mode here; on a real cluster the same confs ship via
 ``spark-submit --py-files s2geometry_spark.zip`` (SURVEY.md §7 Stage 6).
+
+``get_spark`` always sets two confs for the Python workers:
+
+- ``spark.python.daemon.module`` runs ``worker_daemon`` in place of
+  ``pyspark.daemon``. Before 3.13 each task otherwise re-parses the
+  central directory of every zip on the worker path (pyspark.zip, the
+  spark-core jar, py4j: about 0.13 CPU-s per task), and each new worker
+  imports numpy, pandas and pyarrow itself.
+- ``spark.executorEnv.PYTHONPATH`` is the directory (or, under
+  ``--py-files``, the zip) holding this package. The daemon starts
+  before any task ships the ``--py-files`` to the worker, so without it
+  the daemon module is not importable and every UDF fails with
+  "EOFException occurred while reading the port number from
+  s2geometry_spark.worker_daemon's stdout".
 """
 
 from __future__ import annotations
@@ -9,6 +23,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_cores() -> int:
@@ -48,6 +64,8 @@ def get_spark(app_name: str = "s2geometry-spark", cores: int | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", default_driver_memory())
+        .config("spark.python.daemon.module", "s2geometry_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         # Engine arithmetic is deliberately overflow-free; keep ANSI on
         # (Spark 4 default) so real errors surface.
     )

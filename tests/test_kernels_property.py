@@ -9,12 +9,16 @@ extremes) that fixed seeds can miss.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from s2geometry_spark import kernels as K
 from s2geometry_spark import unions as U
 import tests.oracle_s2 as O
+
+# the kernels divide only where a face needs it: no overflow warnings
+pytestmark = pytest.mark.filterwarnings("error::RuntimeWarning")
 
 lat_deg = st.floats(min_value=-90.0, max_value=90.0,
                     allow_nan=False, allow_infinity=False)
