@@ -45,7 +45,7 @@ PAIRS = [
 # therefore excluded from the headline efficiency aggregate (reported
 # per-query regardless): knn is an iterative driver loop over 40 query
 # points; the ann corpus is only 5k vectors.
-EXCLUDE_FROM_AGG = {"knn", "ann_brute", "ann_lsh"}
+EXCLUDE_FROM_AGG = {"knn", "ann_brute"}
 
 # the north-rule criterion is spatial-join throughput scaling; this is
 # the spatial pipeline (geocode -> covering joins -> tile agg)
@@ -124,9 +124,7 @@ def capture_plans() -> None:
         f.write(X.formatted_plan(geo))
 
     # training-data pipeline plan evidence
-    from pyspark.sql import functions as F
-
-    from s2geometry_spark.operators import ann, dedup, media
+    from s2geometry_spark.operators import dedup, media
     from s2geometry_spark.sources.pages import (documents_to_pages,
                                                 load_documents)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -138,18 +136,6 @@ def capture_plans() -> None:
                 "(band, key, url) rows shuffle — signature/shingle arrays\n"
                 "re-join after the candidate set is formed\n\n"
                 + X.formatted_plan(mh))
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = ann.ivf_centroids(embs, 8)
-    corpus = embs.select(
-        "vec_id",
-        F.element_at(ann._ivf_probe_col(F.col("embedding"), cents, 1), 1)
-        .alias("bkt"))
-    plan = X.formatted_plan(corpus)
-    assert X.count_shuffles(plan) == 0
-    with open(os.path.join(HERE, "explain_ann_ivf_assign.txt"), "w") as f:
-        f.write("IVF corpus bucket assignment\n"
-                "PROPERTY ASSERTED: map-only (zero shuffles) — centroid\n"
-                "folds are plan literals in whole-stage codegen\n\n" + plan)
     from s2geometry_spark.operators.distjoin import distance_join
     dj = distance_join(pages, 0.002, cache_registry=(dj_reg := []))
     plan = X.formatted_plan(dj)
@@ -501,7 +487,6 @@ def write_baseline() -> None:
         "`explain_salted.txt` (shuffle_hash + hot-row fan-out), "
         "`explain_minhash.txt`, `explain_distjoin.txt` (grid equi-join, "
         "no cartesian, asserted no broadcast — see below), "
-        "`explain_ann_ivf_assign.txt` (map-only), "
         "`explain_frame_sample.txt` (no Python eval), `explain_hll.txt` "
         "(aggregation-only), `explain_decontaminate.txt` (benchmark "
         "grams broadcast), `explain_url_normalize.txt` (zero-shuffle, "
@@ -515,9 +500,7 @@ def write_baseline() -> None:
         "sf0.1 — ReuseExchange already materializes ONE shuffle for "
         "both identical join sides, so the rewrite saves nothing and "
         "pays array build + million-struct explode. The join stays "
-        "(numbers in dedup.pairs_from_signatures docstring). xxh band "
-        "keys now hash 4 raw sig longs (no per-band string build), "
-        "~2%.",
+        "(numbers in dedup.pairs_from_signatures docstring).",
         "- **dist_join broadcast bug (FIXED)**: at 10M rows Catalyst's "
         "size estimate through the Python projection under-counted the "
         "cached points relation and picked a 12.7 GiB broadcast build "

@@ -538,40 +538,6 @@ def _q_ann_brute(spark, sf_dir):
     return ann.ann_brute_topk(embs, _ann_queries(embs), k=ANN_K)
 
 
-def _q_ann_lsh(spark, sf_dir):
-    embs = _load_embs(spark, sf_dir)
-    return ann.ann_lsh_topk(embs, _ann_queries(embs), k=ANN_K)
-
-
-def _q_ann_lsh_probe(spark, sf_dir):
-    """Multi-probe variant: each query also probes all 16 one-bit-flip
-    neighbor buckets (hamming<=1 probe set), which the oracle states as
-    a clean bit_count(xor(bkt_q, bkt_e)) <= 1 join predicate."""
-    embs = _load_embs(spark, sf_dir)
-    return ann.ann_lsh_topk(embs, _ann_queries(embs), k=ANN_K,
-                            probes=ann.N_PLANES)
-
-
-def _q_ann_ivf(spark, sf_dir):
-    """IVF-style ANN (deterministic seed centroids, nprobe=2) — the
-    second similarity-search scale path next to hyperplane LSH."""
-    embs = _load_embs(spark, sf_dir)
-    return ann.ann_ivf_topk(embs, _ann_queries(embs), k=ANN_K,
-                            n_centroids=8, nprobe=2)
-
-
-def _q_ann_ivf_trained(spark, sf_dir):
-    """Trained-quantizer IVF (r4): one spherical-k-means Lloyd
-    iteration over the seed centroids, made shuffle-order-independent
-    via exact-int quantized bucket sums (lang_id's exact-centroid
-    trick) — which is what lets the previously engine-only trained
-    path carry a DuckDB oracle."""
-    embs = _load_embs(spark, sf_dir)
-    cents = ann.ivf_train_centroids(embs, n_centroids=8, iters=1)
-    return ann.ann_ivf_topk(embs, _ann_queries(embs), k=ANN_K,
-                            n_centroids=8, nprobe=2, centroids=cents)
-
-
 def _q_emb_near_dup_lsh(spark, sf_dir):
     """Bucketed embedding near-dup — the scale path twin of the
     brute-force emb_near_dup gate (candidates = bucket pairs within
@@ -922,10 +888,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_tile_distinct": _q_hll_tiles,
         "cm_token_sketch": _q_cm_tokens,
         "ann_brute_topk": _q_ann_brute,
-        "ann_lsh_topk": _q_ann_lsh,
-        "ann_lsh_probe": _q_ann_lsh_probe,
-        "ann_ivf_topk": _q_ann_ivf,
-        "ann_ivf_trained_topk": _q_ann_ivf_trained,
         "emb_near_dup_lsh": _q_emb_near_dup_lsh,
         # -- stable tail: green r4 AND r3, untouched; rotate back into the
         # -- window next round (at most one round between driver rows) -----
@@ -1432,66 +1394,6 @@ def oracle_sql() -> dict[str, str]:
                 FROM q CROSS JOIN embeddings e)
             WHERE rank <= {ANN_K}
         """,
-        "ann_lsh_topk": f"""
-            WITH bkt AS (SELECT vec_id, embedding,
-                                {ann.lsh_bucket_sql('embedding')} AS bkt
-                         FROM embeddings),
-                 q AS (SELECT vec_id AS query_id, embedding AS qv, bkt
-                       FROM bkt WHERE vec_id < {ANN_N_QUERIES})
-            SELECT query_id, vec_id, rank FROM (
-                SELECT q.query_id, e.vec_id,
-                       CAST(row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {_QC_COS} DESC, e.vec_id ASC) AS INT)
-                           AS rank
-                FROM q JOIN bkt e ON q.bkt = e.bkt)
-            WHERE rank <= {ANN_K}
-        """,
-        "ann_lsh_probe": f"""
-            WITH bkt AS (SELECT vec_id, embedding,
-                                {ann.lsh_bucket_sql('embedding')} AS bkt
-                         FROM embeddings),
-                 q AS (SELECT vec_id AS query_id, embedding AS qv, bkt
-                       FROM bkt WHERE vec_id < {ANN_N_QUERIES})
-            SELECT query_id, vec_id, rank FROM (
-                SELECT q.query_id, e.vec_id,
-                       CAST(row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {_QC_COS} DESC, e.vec_id ASC) AS INT)
-                           AS rank
-                FROM q JOIN bkt e
-                  ON bit_count(xor(q.bkt, e.bkt)) <= 1)
-            WHERE rank <= {ANN_K}
-        """,
-        "ann_ivf_topk": f"""
-            WITH cent AS (SELECT vec_id AS cid, embedding AS cv
-                          FROM embeddings WHERE vec_id < 8),
-                 scored AS (SELECT e.vec_id, e.embedding, c.cid,
-                                   {ann.fold_dot_sql('e.embedding', 'c.cv')}
-                                       AS dot
-                            FROM embeddings e CROSS JOIN cent c),
-                 assigned AS (SELECT vec_id, embedding, cid,
-                                     row_number() OVER (
-                                         PARTITION BY vec_id
-                                         ORDER BY dot DESC, cid ASC) AS r
-                              FROM scored),
-                 corpus AS (SELECT vec_id, embedding, cid
-                            FROM assigned WHERE r = 1),
-                 qprobe AS (SELECT vec_id AS query_id, embedding AS qv,
-                                   cid
-                            FROM assigned
-                            WHERE vec_id < {ANN_N_QUERIES} AND r <= 2)
-            SELECT query_id, vec_id, rank FROM (
-                SELECT q.query_id, e.vec_id,
-                       CAST(row_number() OVER (
-                           PARTITION BY q.query_id
-                           ORDER BY {_QC_COS} DESC, e.vec_id ASC) AS INT)
-                           AS rank
-                FROM qprobe q JOIN corpus e ON q.cid = e.cid)
-            WHERE rank <= {ANN_K}
-        """,
-        "ann_ivf_trained_topk": ann.ivf_trained_oracle_sql(
-            n_queries=ANN_N_QUERIES, k=ANN_K, n_centroids=8, nprobe=2),
         "emb_near_dup_lsh": f"""
             WITH bkt AS (SELECT vec_id, embedding,
                                 {ann.lsh_bucket_sql('embedding')} AS bkt

@@ -266,11 +266,6 @@ def main() -> None:
     q = embs.filter(F.col("vec_id") < 16) \
         .select(F.col("vec_id").alias("query_id"), "embedding")
     bench("ann_brute", lambda: force(ann.ann_brute_topk(embs, q, k=10)))
-    bench("ann_lsh", lambda: force(ann.ann_lsh_topk(embs, q, k=10)))
-    bench("ann_lsh_probe", lambda: force(
-        ann.ann_lsh_topk(embs, q, k=10, probes=ann.N_PLANES)))
-    bench("ann_ivf", lambda: force(
-        ann.ann_ivf_topk(embs, q, k=10, n_centroids=8, nprobe=2)))
     bench("emb_near_dup_lsh", lambda: force(
         ann.emb_near_dup_lsh(embs, tau=0.4)))
 

@@ -9,13 +9,10 @@ Both are built from engine-portable operations only:
 * ``h60(s)`` — a 60-bit hash: first 15 hex digits of md5(utf8(s)) read
   as an integer. md5 is bit-identical everywhere; 60 bits always fit a
   *positive* int64, so no signed-order pitfalls (SURVEY §2.2 does not
-  apply here). The MinHash operators also accept
-  ``hash_impl="xxhash64"`` (Spark-builtin xxhash64, not reproducible
-  in DuckDB, so never gated): an alternating A/B of
-  ``dedup.minhash_lsh_pairs`` in one Spark session (sf0.1 text x10,
-  local[4] on a 4-vCPU host) measured it 13% faster end to end (median
-  15.8 s vs 18.1 s, 10 of 10 pairs — BENCH/PLAN_EVIDENCE.md). The md5
-  spec is the gated default.
+  apply here). It is the MinHash operators' only hash family: an
+  xxhash64 family measured 13% faster end to end but had no
+  non-test caller and no DuckDB twin, so it was deleted
+  (BENCH/PLAN_EVIDENCE.md keeps the A/B).
 
 * tokenization — split on runs of ``[ \\t\\n\\r\\f\\x0b]`` (an explicit
   class, not ``\\s``: Java regex ``\\s`` includes vertical tab \\x0b
@@ -47,11 +44,6 @@ def h60(s: Column) -> Column:
 def h60_sql(expr: str) -> str:
     """The identical value in DuckDB SQL."""
     return f"CAST(CONCAT('0x', SUBSTRING(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def xxh(s: Column, seed: int) -> Column:
-    """Seeded xxhash64 — the production fast path (no DuckDB twin)."""
-    return F.xxhash64(s, F.lit(seed))
 
 
 # ---------------------------------------------------------------------------
@@ -105,23 +97,6 @@ def shingles_sql(toks_col: str, k: int = 3) -> str:
     range(a,b) is empty when b <= a, which handles short docs."""
     return (f"[array_to_string({toks_col}[i:i+{k - 1}], ' ') "
             f"for i in range(1, len({toks_col})-{k - 2})]")
-
-
-MASK60 = (1 << 60) - 1
-MASK32 = (1 << 32) - 1
-
-
-def xxh_h1(s: Column) -> Column:
-    """Production fast-path twin of h60: xxhash64 truncated to 60
-    nonneg bits (no md5 hex build and reparse; NOT DuckDB-reproducible,
-    so never used in gated queries)."""
-    return F.xxhash64(s).bitwiseAND(F.lit(MASK60))
-
-
-def xxh_h2(s: Column) -> Column:
-    """32-bit second hash for the affine minhash family (xxhash64 of
-    (s, 1) — Spark chains extra columns into the hash state)."""
-    return F.xxhash64(s, F.lit(1)).bitwiseAND(F.lit(MASK32))
 
 
 def h60_from_md5(m: Column) -> Column:
@@ -231,33 +206,6 @@ def band_keys(sigs: Column, n_bands: int = N_BANDS,
         h60(F.concat_ws(",", *[
             F.element_at(sigs, b * rows + r + 1).cast("string")
             for r in range(rows)]))
-        for b in range(n_bands)
-    ])
-
-
-def minhash_sigs_xxh(shingle_strs: Column, n: int = N_MINHASH) -> Column:
-    """xxhash64 variant of minhash_sigs: same affine fold over
-    (h1, h2) pairs derived from xxhash64 instead of md5."""
-    init = F.array_repeat(F.lit(_MAX_LONG), n)
-
-    def step(acc: Column, s: Column) -> Column:
-        h1 = xxh_h1(s)
-        h2 = xxh_h2(s)
-        hashes = F.array(*[h1 + F.lit(j) * h2 for j in range(n)])
-        return F.zip_with(acc, hashes, lambda a, b: F.least(a, b))
-
-    return F.aggregate(shingle_strs, init, step)
-
-
-def band_keys_xxh(sigs: Column, n_bands: int = N_BANDS,
-                  rows: int = BAND_ROWS) -> Column:
-    """xxhash64 variant of band_keys (production fast path). xxhash64
-    is variadic over native types, so the band slice hashes as 4 raw
-    longs — no per-band string build + reparse like the md5 twin needs
-    for DuckDB portability."""
-    return F.array(*[
-        F.xxhash64(*[F.element_at(sigs, b * rows + r + 1)
-                     for r in range(rows)])
         for b in range(n_bands)
     ])
 

@@ -16,9 +16,9 @@ Two backends behind one interface (SURVEY.md §7 hard-part 4):
   commit writes its files under ``<table>/snap-<id>/`` and then
   atomically registers the snapshot in ``<table>/_snapshots.json``
   (write-temp + os.replace — readers never observe a half-written
-  manifest). Uncommitted data directories are invisible to readers, so
-  a killed job resumes cleanly: re-reading the manifest yields exactly
-  the committed prefix.
+  manifest; concurrent appenders serialize on an flock). Uncommitted
+  data directories are invisible to readers, so a killed job resumes
+  cleanly: re-reading the manifest yields exactly the committed prefix.
 
 Lineage/metrics: every commit records, per Spark task partition, the
 row count and min/max of the declared lineage column (the tile id),
@@ -28,6 +28,7 @@ answers "which work units are already durable?" for resume.
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import time
@@ -65,13 +66,20 @@ class ParquetTableIO:
             return json.load(f)["snapshots"]
 
     def _commit(self, table: str, entry: dict) -> None:
-        snaps = self.history(table)
-        snaps.append(entry)
         path = self._manifest_path(table)
-        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"snapshots": snaps}, f, indent=1)
-        os.replace(tmp, path)  # atomic on POSIX — commit point
+        # Appenders serialize on <table>/_snapshots.lock across the
+        # read-modify-replace: without it two concurrent commits read
+        # the same manifest and the later replace drops the earlier
+        # entry. Readers stay lock-free — os.replace is atomic.
+        lock_path = os.path.join(os.path.dirname(path), "_snapshots.lock")
+        with open(lock_path, "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            snaps = self.history(table)
+            snaps.append(entry)
+            tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                json.dump({"snapshots": snaps}, f, indent=1)
+            os.replace(tmp, path)  # atomic on POSIX — commit point
 
     # -- write --------------------------------------------------------------
 

@@ -14,7 +14,8 @@ Four family members, each a first-class distributed operator over the
                          never fires (see the function docstring).
 * ``emb_near_dup``     — embedding-cosine near-duplicate pairs
                          (brute-force; the LSH-bucketed scale path is
-                         operators/ann.py::lsh_buckets).
+                         operators/ann.py::emb_near_dup_lsh, which
+                         buckets with ann.lsh_bucket_col).
 * ``connected_components`` — cluster verdicts over any pair stream
                          (label propagation to fixpoint; min-url
                          canonical label per component).
@@ -107,18 +108,11 @@ def oversize_buckets(buckets: DataFrame, keys,
 
 
 def minhash_signatures(pages: DataFrame, id_col: str = "url",
-                       text_col: str = "text", k: int = 3,
-                       hash_impl: str = "md5") -> DataFrame:
+                       text_col: str = "text", k: int = 3) -> DataFrame:
     """(url, sh: array<long> distinct shingle hashes, sigs: array<long>
-    minhash signature). One base hash per shingle feeds BOTH outputs
-    (sh is the h1 part; sigs are affine combinations — functions/
-    text.py).
-
-    hash_impl: "md5" (the gated spec — DuckDB-reproducible) or
-    "xxhash64" (the production fast path — Spark-builtin, same operator
-    structure, no SQL oracle; minhash_lsh_pairs measured 13% faster
-    end to end at sf0.1 text x10, local[4] on a 4-vCPU host,
-    BENCH/PLAN_EVIDENCE.md).
+    minhash signature). One md5 per shingle feeds BOTH outputs (sh is
+    the h1 part; sigs are affine combinations — functions/text.py), the
+    hash family the DuckDB oracle replays.
 
     Docs with < k tokens have no shingles and are excluded (a 2-token
     page cannot be a shingle near-dup of anything).
@@ -136,39 +130,30 @@ def minhash_signatures(pages: DataFrame, id_col: str = "url",
     # REUSES the h1 array instead of recomputing the hash. The staging
     # also keeps Catalyst from re-inlining the crypto hash into the 17
     # downstream references (plan-asserted in tests/test_plans.py).
-    if hash_impl == "xxhash64":
-        df = df.select(
-            id_col,
-            F.transform(F.col("_shingles"), T.xxh_h1).alias("_h1s"),
-            F.transform(F.col("_shingles"), T.xxh_h2).alias("_h2s"))
-    else:
-        df = df.select(id_col,
-                       T.shingle_md5s(F.col("_shingles")).alias("_md5s"))
-        df = df.select(
-            id_col,
-            F.transform(F.col("_md5s"), T.h60_from_md5).alias("_h1s"),
-            F.transform(F.col("_md5s"), T.md5_h2).alias("_h2s"))
+    df = df.select(id_col,
+                   T.shingle_md5s(F.col("_shingles")).alias("_md5s"))
+    df = df.select(
+        id_col,
+        F.transform(F.col("_md5s"), T.h60_from_md5).alias("_h1s"),
+        F.transform(F.col("_md5s"), T.md5_h2).alias("_h2s"))
     return df.select(
         id_col,
         F.array_distinct(F.col("_h1s")).alias("sh"),
         T.affine_min_sigs(F.col("_h1s"), F.col("_h2s")).alias("sigs"))
 
 
-def minhash_band_buckets(sigs: DataFrame, id_col: str = "url",
-                         hash_impl: str = "md5") -> DataFrame:
+def minhash_band_buckets(sigs: DataFrame, id_col: str = "url") -> DataFrame:
     """(url, band, band_key) LSH bucket stream from minhash_signatures
     output — feed to oversize_buckets for boilerplate reporting."""
-    bk = T.band_keys_xxh if hash_impl == "xxhash64" else T.band_keys
     return sigs.select(
         F.col(id_col),
-        F.posexplode(bk(F.col("sigs"))).alias("band", "band_key"))
+        F.posexplode(T.band_keys(F.col("sigs"))).alias("band", "band_key"))
 
 
 def minhash_lsh_pairs(pages: DataFrame, threshold: float = 0.5,
                       id_col: str = "url", text_col: str = "text",
                       k: int = 3,
                       max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                      hash_impl: str = "md5",
                       cache_registry: list | None = None) -> DataFrame:
     """Near-dup pairs (url_a, url_b, jaccard) with set-Jaccard over
     k-token shingle hashes >= threshold, candidates from 4x4 minhash
@@ -189,19 +174,17 @@ def minhash_lsh_pairs(pages: DataFrame, threshold: float = 0.5,
     # each reference recomputes the full shingle+hash pipeline (at
     # 10^12 rows the production job writes signatures to a table —
     # TableIO — before pairing; persist is the in-session equivalent)
-    sigs = minhash_signatures(pages, id_col, text_col, k,
-                              hash_impl=hash_impl).persist()
+    sigs = minhash_signatures(pages, id_col, text_col, k).persist()
     if cache_registry is not None:
         cache_registry.append(sigs)
     return pairs_from_signatures(sigs, threshold=threshold, id_col=id_col,
-                                 max_bucket=max_bucket,
-                                 hash_impl=hash_impl)
+                                 max_bucket=max_bucket)
 
 
 def pairs_from_signatures(sigs: DataFrame, threshold: float = 0.5,
                           id_col: str = "url",
-                          max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                          hash_impl: str = "md5") -> DataFrame:
+                          max_bucket: int | None = DEFAULT_MAX_BUCKET
+                          ) -> DataFrame:
     """The pair stage alone, over a (url, sh, sigs) signatures relation
     — either the in-session persist from minhash_lsh_pairs or a
     TableIO-committed signatures table (jobs/dedup_job.py), which is
@@ -219,7 +202,7 @@ def pairs_from_signatures(sigs: DataFrame, threshold: float = 0.5,
     array materialization + 1.3M-struct explode costs more than the
     hash join it saves. Keep the join; the cap anti-join is a
     broadcast against the (small) oversize-bucket list."""
-    bands = minhash_band_buckets(sigs, id_col, hash_impl)
+    bands = minhash_band_buckets(sigs, id_col)
     bands = _bucket_filter(bands, ("band", "band_key"), max_bucket)
 
     a = bands.alias("a")
@@ -516,7 +499,6 @@ def emb_near_dup(embs: DataFrame, tau: float = 0.4,
 def dedup_apply(pages: DataFrame, threshold: float = 0.5,
                 id_col: str = "url", text_col: str = "text", k: int = 3,
                 max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                hash_impl: str = "md5",
                 cache_registry: list | None = None) -> DataFrame:
     """(url, cluster, kept) — the END-TO-END near-duplicate removal
     verdict, one row per input document: MinHash-LSH pairs →
@@ -537,7 +519,7 @@ def dedup_apply(pages: DataFrame, threshold: float = 0.5,
     release_caches after materializing, as with minhash_lsh_pairs.
     """
     pairs = minhash_lsh_pairs(pages, threshold, id_col, text_col, k,
-                              max_bucket=max_bucket, hash_impl=hash_impl,
+                              max_bucket=max_bucket,
                               cache_registry=cache_registry) \
         .select("url_a", "url_b")
     labels = connected_components(            # eager; checkpoint-backed

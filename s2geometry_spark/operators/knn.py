@@ -211,16 +211,6 @@ def knn_join(pages: DataFrame, spark: SparkSession, queries,
         level = choose_ring_level(estimate_rows(pages), max_k)
     min_width = K_MIN_WIDTH_DERIV * (2.0 ** -level)
 
-    # persist: every expansion round (and the final pass) joins against
-    # this projection — without it the geocode/xyz UDF chain re-runs
-    # over the full pages table once per round
-    pages_l = (pages
-               .withColumn("knn_cell", geo.parent_col(F.col("cell_id"), level))
-               .withColumn("pt", geo.xyz_udf(F.col("lat"), F.col("lng")))
-               .select("url", "knn_cell",
-                       F.col("pt.px").alias("px"), F.col("pt.py").alias("py"),
-                       F.col("pt.pz").alias("pz"))).persist()
-
     # per-query driver state (queries are few; pages are not)
     state = {}
     for q in queries:
@@ -235,6 +225,18 @@ def knn_join(pages: DataFrame, spark: SparkSession, queries,
             "qx": cl * math.cos(ln), "qy": cl * math.sin(ln), "qz": math.sin(la),
             "cell": cell, "radius": 1, "done": False,
         }
+
+    # persist: every expansion round (and the final pass) joins against
+    # this projection — without it the geocode/xyz UDF chain re-runs
+    # over the full pages table once per round. It is persisted only
+    # after the state loop above has validated the queries, and the
+    # finally below releases it on every exit, raising ones included.
+    pages_l = (pages
+               .withColumn("knn_cell", geo.parent_col(F.col("cell_id"), level))
+               .withColumn("pt", geo.xyz_udf(F.col("lat"), F.col("lng")))
+               .select("url", "knn_cell",
+                       F.col("pt.px").alias("px"), F.col("pt.py").alias("py"),
+                       F.col("pt.pz").alias("pz"))).persist()
 
     def ranked_hits(qids):
         """Broadcast equi-join + JVM-side d2 + window rank. Lazy plan.
@@ -299,40 +301,44 @@ def knn_join(pages: DataFrame, spark: SparkSession, queries,
         w = Window.partitionBy("query_id").orderBy(F.col("d2"), F.col("url"))
         return hits.withColumn("rank", F.row_number().over(w))
 
-    for _ in range(max_rounds):
-        pending = [qid for qid, s in state.items() if not s["done"]]
-        if not pending:
-            break
-        ranked = ranked_hits(pending)
-        stats = (ranked.filter(F.col("rank") <= F.col("k"))
-                 .groupBy("query_id")
-                 .agg(F.count("*").alias("n"), F.max("d2").alias("kth_d2"))
-                 .collect())
-        by_id = {r.query_id: r for r in stats}
-        for qid in pending:
-            s = state[qid]
-            r = by_id.get(qid)
-            guaranteed = (s["radius"] - 1) * min_width
-            kth_ok = False
-            if r is not None and r.n >= s["k"]:
-                theta_k = 2.0 * math.asin(min(1.0, math.sqrt(max(0.0, r.kth_d2)) / 2.0))
-                kth_ok = theta_k <= guaranteed
-            if kth_ok or s["_covered"]:
-                s["done"] = True
-            else:
-                s["radius"] = min(s["radius"] * 2, 2 ** 14)
-    # final pass over every query at its terminal radius. localCheckpoint
-    # materializes the (<= sum-of-k rows) result on the EXECUTORS and
-    # cuts the lineage, so the cached pages projection can be released
-    # before returning without recompute risk — and without funneling
-    # the result through driver memory (a review flagged the earlier
-    # collect+createDataFrame as a driver bottleneck for large query
-    # sets). Round 1 instead leaked pages_l into the session cache.
-    final = ranked_hits(sorted(state.keys())) \
-        .filter(F.col("rank") <= F.col("k")) \
-        .select("query_id", "url", "rank", "d2") \
-        .localCheckpoint(eager=True)
-    pages_l.unpersist()
+    try:
+        for _ in range(max_rounds):
+            pending = [qid for qid, s in state.items() if not s["done"]]
+            if not pending:
+                break
+            ranked = ranked_hits(pending)
+            stats = (ranked.filter(F.col("rank") <= F.col("k"))
+                     .groupBy("query_id")
+                     .agg(F.count("*").alias("n"),
+                          F.max("d2").alias("kth_d2"))
+                     .collect())
+            by_id = {r.query_id: r for r in stats}
+            for qid in pending:
+                s = state[qid]
+                r = by_id.get(qid)
+                guaranteed = (s["radius"] - 1) * min_width
+                kth_ok = False
+                if r is not None and r.n >= s["k"]:
+                    chord = math.sqrt(max(0.0, r.kth_d2))
+                    theta_k = 2.0 * math.asin(min(1.0, chord / 2.0))
+                    kth_ok = theta_k <= guaranteed
+                if kth_ok or s["_covered"]:
+                    s["done"] = True
+                else:
+                    s["radius"] = min(s["radius"] * 2, 2 ** 14)
+        # final pass over every query at its terminal radius.
+        # localCheckpoint materializes the (<= sum-of-k rows) result on
+        # the EXECUTORS and cuts the lineage, so the cached pages
+        # projection can be released before returning without
+        # recompute risk — and without funneling the result through
+        # driver memory (a collect+createDataFrame would make the
+        # driver the bottleneck for large query sets).
+        final = ranked_hits(sorted(state.keys())) \
+            .filter(F.col("rank") <= F.col("k")) \
+            .select("query_id", "url", "rank", "d2") \
+            .localCheckpoint(eager=True)
+    finally:
+        pages_l.unpersist()
     return final
 
 

@@ -79,15 +79,11 @@ def test_minhash_signature_hash_not_reinlined(spark):
     (sh + 16 signature slots). Catalyst's projection collapse must NOT
     push the crypto hash into those references — the round-1 trap that
     motivated the aggregate fold (16 slots -> 17x shingle-pipeline
-    recompute). One md5 per plan (resp. one xxhash64 per h1/h2
-    transform) proves the staging holds."""
+    recompute). One md5 per plan proves the staging holds."""
     from s2geometry_spark.operators.dedup import minhash_signatures
     docs = documents_to_pages(load_documents(spark, SF_DIR))
     plan_md5 = X.formatted_plan(minhash_signatures(docs))
     assert plan_md5.count("md5(") == 1, plan_md5
-    plan_xxh = X.formatted_plan(minhash_signatures(docs,
-                                                   hash_impl="xxhash64"))
-    assert plan_xxh.count("xxhash64(") == 2, plan_xxh
 
 
 def test_html_column_pruned_when_not_selected(spark):

@@ -4,7 +4,11 @@ geocode job (SURVEY.md §7 Stage 6)."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -122,6 +126,60 @@ def test_uncommitted_data_is_invisible(spark, tmp_path):
     spark.range(100).write.parquet(orphan)
     assert io.read(spark, "t").count() == 3
     assert len(io.history("t")) == 1
+
+
+# one appender process: signal ready, wait for the shared go file, then
+# commit 100 manifest entries to table "t" as fast as it can
+_COMMITTER = """
+import os, sys, time
+from s2geometry_spark.io.table_io import ParquetTableIO
+root, tag = sys.argv[1], sys.argv[2]
+open(os.path.join(root, "ready-" + tag), "w").close()
+while not os.path.exists(os.path.join(root, "go")):
+    time.sleep(0.001)
+io = ParquetTableIO(root)
+for i in range(100):
+    io._commit("t", {"snapshot_id": f"{tag}-{i}"})
+"""
+
+
+def test_table_io_concurrent_commits_keep_every_snapshot(tmp_path):
+    """Two processes appending to one table at once must not lose
+    manifest entries: each commit is a read-modify-replace of
+    _snapshots.json, so without the commit lock the later replace
+    drops whatever the other process committed in between."""
+    (tmp_path / "t").mkdir()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [repo, os.environ.get("PYTHONPATH", "")]))
+    procs = [subprocess.Popen([sys.executable, "-c", _COMMITTER,
+                               str(tmp_path), tag], env=env)
+             for tag in "ab"]
+    deadline = time.time() + 120
+    while not all((tmp_path / f"ready-{t}").exists() for t in "ab"):
+        assert all(p.poll() is None for p in procs)
+        assert time.time() < deadline
+        time.sleep(0.01)
+    (tmp_path / "go").touch()
+    assert [p.wait(timeout=120) for p in procs] == [0, 0]
+    ids = [s["snapshot_id"]
+           for s in ParquetTableIO(str(tmp_path)).history("t")]
+    assert sorted(ids) == sorted(f"{t}-{i}" for t in "ab"
+                                 for i in range(100))
+
+
+def test_table_io_truncated_manifest_raises(tmp_path):
+    """A torn manifest is an error, never an empty table: reading it as
+    [] would make a resume redo every committed batch."""
+    io = ParquetTableIO(str(tmp_path))
+    (tmp_path / "t").mkdir()
+    for i in range(3):
+        io._commit("t", {"snapshot_id": str(i)})
+    path = tmp_path / "t" / "_snapshots.json"
+    body = path.read_bytes()
+    path.write_bytes(body[:len(body) // 2])
+    with pytest.raises(json.JSONDecodeError):
+        io.history("t")
 
 
 def test_geocode_job_resume(spark, tmp_path):
@@ -537,6 +595,29 @@ def test_knn_empty_query_list_returns_empty(spark, pages):
     out = knn_join(pages, spark, [])
     assert out.columns == ["query_id", "url", "rank", "d2"]
     assert out.count() == 0
+
+
+def test_knn_raising_call_releases_pages_projection(spark, pages,
+                                                    monkeypatch):
+    """A raising knn_join must leave the session's CacheManager as it
+    found it: neither an invalid query (validated before the persist)
+    nor a failure inside a round (released by the finally) may strand
+    the persisted pages projection."""
+    from s2geometry_spark.operators import knn
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    before = cm.numCachedEntries()
+    with pytest.raises(KeyError):
+        knn.knn_join(pages, spark, [{"query_id": 0, "lng": 10.0}])
+    assert cm.numCachedEntries() == before
+
+    def boom(*_args):
+        raise RuntimeError("ring expansion failed")
+
+    monkeypatch.setattr(knn, "_batched_ring_cells", boom)
+    with pytest.raises(RuntimeError, match="ring expansion failed"):
+        knn.knn_join(pages, spark, [{"query_id": 0, "lat": 1.0,
+                                     "lng": 10.0}])
+    assert cm.numCachedEntries() == before
 
 
 def test_vectorize_tiles_matches_driver_normalize(spark, pages):

@@ -101,7 +101,7 @@ def test_affine_min_sigs_equals_aggregate_fold(spark, docs):
     """Round-4 regression pin: the staged zip_with/array_min signature
     shape must be VALUE-identical to the round-1 aggregate fold (the
     DuckDB oracle replays the fold, so any drift would show up as a
-    gate hash mismatch — catch it here first). Both hash families."""
+    gate hash mismatch — catch it here first)."""
     small = docs.limit(120)
     got_md5 = dedup.minhash_signatures(small).orderBy("url").collect()
     toks = T.tokens(F.col("text"))
@@ -115,15 +115,6 @@ def test_affine_min_sigs_equals_aggregate_fold(spark, docs):
                 .orderBy("url").collect())
     assert [(r["url"], r["sigs"]) for r in got_md5] == \
         [(r["url"], r["sigs"]) for r in fold_md5]
-
-    got_xxh = dedup.minhash_signatures(small, hash_impl="xxhash64") \
-        .orderBy("url").collect()
-    fold_xxh = (base
-                .select("url",
-                        T.minhash_sigs_xxh(F.col("_shingles")).alias("sigs"))
-                .orderBy("url").collect())
-    assert [(r["url"], r["sigs"]) for r in got_xxh] == \
-        [(r["url"], r["sigs"]) for r in fold_xxh]
 
 
 def test_exact_dedup_finds_planted_duplicate(spark, docs):
@@ -152,23 +143,6 @@ def test_lsh_bucket_matches_numpy_signs(spark):
         expect = int(((dots >= 0).astype(np.int64)
                       << np.arange(ann.N_PLANES)).sum())
         assert got[r["vec_id"]] == expect
-
-
-def test_ann_lsh_is_subset_of_brute(spark):
-    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = embs.filter(F.col("vec_id") < 8) \
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-    brute = {(r["query_id"], r["vec_id"])
-             for r in ann.ann_brute_topk(embs, q, k=500).collect()}
-    lsh = [(r["query_id"], r["vec_id"])
-           for r in ann.ann_lsh_topk(embs, q, k=10).collect()]
-    assert len(lsh) > 0
-    assert set(lsh).issubset(brute)
-    # the query itself always lands in its own bucket at rank 1
-    rank1 = {(r["query_id"], r["vec_id"])
-             for r in ann.ann_lsh_topk(embs, q, k=10).collect()
-             if r["rank"] == 1}
-    assert rank1 == {(i, i) for i in range(8)}
 
 
 def test_media_features_scalar_twin(spark, docs):
@@ -255,29 +229,6 @@ def test_simhash_cap_contract_and_oversize_reporting(spark):
     assert all(r["n_members"] == n for r in over)
 
 
-def test_minhash_xxhash64_fast_path_finds_planted_pairs(spark, docs):
-    """The xxhash64 production variant is a different hash family but
-    the SAME operator; set-Jaccard of surfaced pairs is hash-agnostic,
-    so the high-similarity planted pairs must coincide with md5's."""
-    md5_pairs = {(p["url_a"], p["url_b"]): p["jaccard"]
-                 for p in dedup.minhash_lsh_pairs(
-                     docs, threshold=0.2).collect()}
-    xxh_pairs = {(p["url_a"], p["url_b"]): p["jaccard"]
-                 for p in dedup.minhash_lsh_pairs(
-                     docs, threshold=0.2, hash_impl="xxhash64").collect()}
-    # at j>=0.95 the 4x4-band catch probability is ~0.999 per family,
-    # so both families must surface the same planted near-dups; at
-    # lower j a pair can deterministically land in bands for one hash
-    # family and not the other (observed at j=0.9) — that is LSH, not
-    # a bug, so equality is only asserted on the near-certain band
-    hi_md5 = {k for k, j in md5_pairs.items() if j >= 0.95}
-    hi_xxh = {k for k, j in xxh_pairs.items() if j >= 0.95}
-    assert hi_md5 == hi_xxh and hi_md5
-    for k in set(md5_pairs) & set(xxh_pairs):
-        # jaccard over hashed shingle sets is hash-family-agnostic
-        assert md5_pairs[k] == pytest.approx(xxh_pairs[k], abs=1e-12)
-
-
 def test_approx_count_distinct_error_bounds(spark, docs):
     """B13 sketch path: HLL++ approx distinct per tile within its
     documented rsd (engine-side only — sketches are not cross-engine
@@ -330,27 +281,6 @@ def test_emb_near_dup_lsh_recall_on_planted_pairs(spark):
     assert all(a < b for a, b in h1)
 
 
-def test_ann_multiprobe_recall(spark):
-    """Multi-probe LSH: querying each perturbed copy must find its
-    base vector at rank<=2 (rank 1 is the query itself). probes=4
-    margin-ordered flips already recover what all 16 flips do —
-    evidence the ascending-|margin| probe order targets the right
-    buckets — and beats the round-1 exact-bucket-only recall."""
-    df = _planted_embeddings(spark)
-    q = df.filter(F.col("vec_id") >= 100).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    rec = {}
-    for probes in (0, 4, 16):
-        hit = {(r["query_id"], r["vec_id"]) for r in
-               ann.ann_lsh_topk(df, q, k=2, probes=probes).collect()}
-        rec[probes] = sum(1 for i in range(100) if (i + 100, i) in hit) / 100
-    assert rec[16] >= 0.9
-    assert rec[4] >= 0.9
-    assert rec[4] > rec[0]
-    with pytest.raises(ValueError):
-        ann.ann_lsh_topk(df, q, probes=ann.N_PLANES + 1)
-
-
 def test_letter_counts_udf_non_ascii_batches(spark):
     """The mixed-batch path (vectorized byte→row mapping, no per-row
     encode loop): non-ASCII rows must not shift counts for their
@@ -364,26 +294,6 @@ def test_letter_counts_udf_non_ascii_batches(spark):
         low = v.lower().encode("utf-8")
         expect = [low.count(bytes([ord("a") + i])) for i in range(26)]
         assert list(counts) == expect, v
-
-
-def test_ann_ivf_recall_and_monotonicity(spark):
-    """IVF ANN on the planted near-dup corpus: each perturbed copy
-    must find its base at rank<=2, and widening nprobe can only add
-    candidates (recall is monotone in nprobe)."""
-    df = _planted_embeddings(spark)
-    qdf = df.filter(F.col("vec_id") >= 100).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    rec = {}
-    for nprobe in (1, 2, 4):
-        hit = {(r["query_id"], r["vec_id"]) for r in
-               ann.ann_ivf_topk(df, qdf, k=2, n_centroids=8,
-                                nprobe=nprobe).collect()}
-        rec[nprobe] = sum(1 for i in range(100) if (i + 100, i) in hit) / 100
-    # a tight near-dup pair almost always lands in the same nearest
-    # centroid, so even nprobe=1 recall is high on this workload
-    assert rec[1] >= 0.9
-    assert rec[1] <= rec[2] <= rec[4]
-    assert rec[4] >= 0.95
 
 
 def test_media_resize_scalar_twin(spark):
@@ -507,45 +417,6 @@ def test_connected_components_nonconvergence_raises(spark):
     # the error path must not strand the final round's checkpoint
     leaked = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
     assert not leaked, f"{len(leaked)} cached RDDs survive the raise"
-
-
-def test_ivf_training_improves_objective_and_composes(spark):
-    """Spherical k-means training: the mean max-inner-product objective
-    must be non-decreasing across Lloyd iterations (k-means
-    monotonicity), and trained centroids drop into ann_ivf_topk with
-    recall at least matching the seed centroids on the planted corpus."""
-    df = _planted_embeddings(spark)
-
-    def objective(cents):
-        """Mean best-centroid COSINE (normalize both sides: seed
-        centroids are raw corpus vectors, trained ones are unit)."""
-        rows = df.collect()
-        M = np.array([r["embedding"] for r in rows])
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
-        C = np.array([c for _, c in cents])
-        C = C / np.linalg.norm(C, axis=1, keepdims=True)
-        return float((M @ C.T).max(axis=1).mean())
-
-    seed = ann.ivf_centroids(df, 8)
-    t1 = ann.ivf_train_centroids(df, 8, iters=1)
-    t2 = ann.ivf_train_centroids(df, 8, iters=2)
-    o0, o1, o2 = objective(seed), objective(t1), objective(t2)
-    # normalized-mean centroids should explain the data much better
-    # than 8 arbitrary corpus vectors, and never get worse with iters
-    assert o1 >= o0
-    assert o2 >= o1 - 1e-9
-
-    qdf = df.filter(F.col("vec_id") >= 100).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-
-    def recall(cents):
-        hit = {(r["query_id"], r["vec_id"]) for r in
-               ann.ann_ivf_topk(df, qdf, k=2, nprobe=1,
-                                centroids=cents).collect()}
-        return sum(1 for i in range(100) if (i + 100, i) in hit) / 100
-
-    assert recall(t2) >= recall(seed)
-    assert recall(t2) >= 0.9
 
 
 def test_pair_ops_cache_registry_releases(spark):
