@@ -1,4 +1,4 @@
-"""Snapshot-committed table IO with per-partition lineage + metrics —
+"""Snapshot-committed table IO with per-file lineage + metrics —
 the resumable-checkpoint layer (north_rule: "resumable from checkpoint
 with per-partition lineage + metrics ... any stage resumes from the
 last committed snapshot").
@@ -12,18 +12,30 @@ Two backends behind one interface (SURVEY.md §7 hard-part 4):
   here; every call site goes through this module so the swap is a
   one-line backend choice.
 
-* ``parquet`` — sandbox/test backend with the SAME semantics: each
-  commit writes its files under ``<table>/snap-<id>/`` and then
-  atomically registers the snapshot in ``<table>/_snapshots.json``
-  (write-temp + os.replace — readers never observe a half-written
-  manifest; concurrent appenders serialize on an flock). Uncommitted
-  data directories are invisible to readers, so a killed job resumes
-  cleanly: re-reading the manifest yields exactly the committed prefix.
+* ``parquet`` — sandbox/test backend with the SAME semantics and ONE
+  commit path: ``append`` takes a directory of finished files under
+  ``<root>/<table>/``, renames it to ``<table>/snap-<id>/`` (same
+  filesystem, so the move is one ``os.rename``) and then atomically
+  registers the snapshot in ``<table>/_snapshots.json`` (write-temp +
+  os.replace — readers never observe a half-written manifest;
+  concurrent appenders serialize on an flock). A DataFrame argument is
+  first written to a ``_pending-<uuid>`` dir under the table, so a
+  Spark write and a caller's pre-written files (geocode_job writes all
+  its batches in one job) commit the same way. Uncommitted directories
+  are invisible to readers, so a killed job resumes cleanly:
+  re-reading the manifest yields exactly the committed prefix.
 
-Lineage/metrics: every commit records, per Spark task partition, the
-row count and min/max of the declared lineage column (the tile id),
-into ``<table>/_metrics`` — itself snapshot-committed. ``done_keys``
-answers "which work units are already durable?" for resume.
+Lineage/metrics: every commit with a ``lineage_col`` records, per data
+file, its row count and the min/max of that (integer) column into
+``<table>@metrics`` — itself snapshot-committed through ``append``. The
+rows come from the files' Parquet footers, read on the driver with
+pyarrow, so a commit starts no Spark job (Iceberg manifests carry the
+same per-file ``record_count`` and bounds): the bounds are the ``k=v``
+directory value when the lineage column is a partition column, else
+the row-group statistics. ``file_split`` is the file's index in the
+sorted list of its part-file paths relative to the snapshot dir.
+``done_keys`` answers "which work units are already durable?" for
+resume.
 """
 
 from __future__ import annotations
@@ -34,15 +46,76 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+METRICS_SCHEMA = pa.schema([
+    ("file_split", pa.int32()),
+    ("n_rows", pa.int64()),
+    ("key_min", pa.int64()),
+    ("key_max", pa.int64()),
+    ("snapshot_id", pa.string()),
+    ("table", pa.string()),
+])
 
 
-def _has_parquet(root: str) -> bool:
-    for _dirpath, _dirs, files in os.walk(root):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _part_files(root: str) -> list[str]:
+    """Data-file paths under `root`, relative to it, sorted (Spark's
+    hidden ``_``/``.`` files — _SUCCESS, .crc — are not data)."""
+    out = []
+    for dirpath, _dirs, files in os.walk(root):
+        rel = os.path.relpath(dirpath, root)
+        out.extend(os.path.normpath(os.path.join(rel, f)) for f in files
+                   if f.endswith(".parquet") and not f.startswith(("_", ".")))
+    return sorted(out)
+
+
+def _file_bounds(path: str, rel: str, md: pq.FileMetaData,
+                 lineage_col: str) -> tuple:
+    """(key_min, key_max) of one data file: its ``lineage_col=v``
+    directory, else the row-group statistics of that column."""
+    for part in rel.split(os.sep)[:-1]:
+        name, eq, value = part.partition("=")
+        if eq and name == lineage_col:
+            if value == "__HIVE_DEFAULT_PARTITION__":  # a null key
+                return None, None
+            if not value.lstrip("-").isdigit():
+                raise ValueError(f"lineage column {lineage_col!r} must be "
+                                 f"an integer; partition value {value!r}")
+            return int(value), int(value)
+    schema = md.schema.to_arrow_schema()
+    if lineage_col not in schema.names:
+        raise ValueError(f"lineage column {lineage_col!r} is neither a "
+                         f"partition directory nor a column of {path}")
+    if not pa.types.is_integer(schema.field(lineage_col).type):
+        raise ValueError(f"lineage column {lineage_col!r} must be an "
+                         f"integer, not {schema.field(lineage_col).type}")
+    j = next(j for j in range(md.num_columns)
+             if md.schema.column(j).path == lineage_col)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(j).statistics
+        # Spark and Arrow write integer min/max for every row group
+        # that holds a non-null value; one without them is all nulls
+        if st is None or not st.has_min_max:
+            continue
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return lo, hi
+
+
+def _metrics_rows(data_dir: str, lineage_col: str, snap_id: str,
+                  table: str) -> pa.Table:
+    """One lineage row per data file under `data_dir`, from footers."""
+    rows = []
+    for i, rel in enumerate(_part_files(data_dir)):
+        path = os.path.join(data_dir, rel)
+        md = pq.read_metadata(path)
+        lo, hi = _file_bounds(path, rel, md, lineage_col)
+        rows.append({"file_split": i, "n_rows": md.num_rows, "key_min": lo,
+                     "key_max": hi, "snapshot_id": snap_id, "table": table})
+    return pa.Table.from_pylist(rows, schema=METRICS_SCHEMA)
 
 
 class ParquetTableIO:
@@ -83,23 +156,45 @@ class ParquetTableIO:
 
     # -- write --------------------------------------------------------------
 
-    def append(self, df: DataFrame, table: str,
+    def _pending_dir(self, table: str) -> str:
+        """A fresh, not yet existing dir under the table for files that
+        a later ``append`` commits."""
+        return os.path.join(self.root, table, f"_pending-{uuid.uuid4().hex}")
+
+    def append(self, df: DataFrame | str, table: str,
                partition_by: str | None = None,
                lineage_col: str | None = None,
                meta: dict | None = None) -> str:
-        """Write df as one new snapshot; returns the snapshot id.
+        """Commit `df` as one new snapshot; returns the snapshot id.
 
-        The data write happens BEFORE the manifest commit: a crash
-        between the two leaves an orphan snap dir that no reader sees
-        (and that a retry simply ignores) — same contract as an
-        Iceberg append that never reaches metadata swap.
+        `df` is a DataFrame, or the path of a directory of finished
+        parquet files under ``<root>/<table>/`` (possibly in
+        `partition_by` k=v subdirs) that the commit moves into the
+        snapshot. The files are in place BEFORE the manifest commit: a
+        crash between the two leaves an orphan dir that no reader sees
+        (and that a retry simply ignores) — same contract as an Iceberg
+        append that never reaches metadata swap.
         """
+        table_dir = os.path.abspath(os.path.join(self.root, table))
+        if isinstance(df, DataFrame):
+            src = self._pending_dir(table)
+            writer = df.write.mode("error")
+            if partition_by:
+                writer = writer.partitionBy(partition_by)
+            writer.parquet(src)
+        else:
+            src = os.path.abspath(df)
+            if (os.path.commonpath([src, table_dir]) != table_dir
+                    or not os.path.isdir(src)):
+                raise ValueError(f"{df!r} is not a directory under "
+                                 f"{table_dir}")
         snap_id = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
+        # footers first: a non-integer lineage column fails the append
+        # before anything is committed
+        rows = (_metrics_rows(src, lineage_col, snap_id, table)
+                if lineage_col is not None else None)
         data_dir = os.path.join(self.root, table, f"snap-{snap_id}")
-        writer = df.write.mode("error")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(data_dir)
+        os.rename(src, data_dir)
 
         self._commit(table, {
             "snapshot_id": snap_id,
@@ -116,30 +211,26 @@ class ParquetTableIO:
         # its metrics row; since resume skips committed batches, that
         # gap does NOT self-heal on retry — `missing_metrics` detects
         # it and `backfill_metrics` regenerates the rows from the
-        # durable data (exercised in tests/test_scale_ops.py).
-        if lineage_col is not None and _has_parquet(data_dir):
-            self.append(
-                self._metrics_rows(df.sparkSession, data_dir, lineage_col,
-                                   snap_id, table),
-                f"{table}@metrics")
+        # durable files' footers (exercised in tests/test_scale_ops.py).
+        if rows is not None and rows.num_rows:
+            self._append_metrics(rows, table)
         return snap_id
 
-    def _metrics_rows(self, spark: SparkSession, data_dir: str,
-                      lineage_col: str, snap_id: str,
-                      table: str) -> DataFrame:
-        out = spark.read.parquet(data_dir)
-        return (out.groupBy(F.spark_partition_id().alias("file_split"))
-                .agg(F.count("*").alias("n_rows"),
-                     F.min(lineage_col).alias("key_min"),
-                     F.max(lineage_col).alias("key_max"))
-                .withColumn("snapshot_id", F.lit(snap_id))
-                .withColumn("table", F.lit(table)))
+    def _append_metrics(self, rows: pa.Table, table: str,
+                        meta: dict | None = None) -> None:
+        """Write the lineage rows as one file and commit it to
+        ``<table>@metrics`` through ``append``."""
+        mtable = f"{table}@metrics"
+        pending = self._pending_dir(mtable)
+        os.makedirs(pending)
+        pq.write_table(rows, os.path.join(pending, "part-00000.parquet"))
+        self.append(pending, mtable, meta=meta)
 
     def missing_metrics(self, spark: SparkSession, table: str) -> list[str]:
         """snapshot_ids committed in `table` that have no metrics rows
         (the crash-between-commits gap)."""
         committed = [s["snapshot_id"] for s in self.history(table)
-                     if _has_parquet(s["dir"])]
+                     if _part_files(s["dir"])]
         try:
             have = {r["snapshot_id"] for r in
                     self.metrics(spark, table)
@@ -151,19 +242,19 @@ class ParquetTableIO:
     def backfill_metrics(self, spark: SparkSession, table: str,
                          lineage_col: str) -> list[str]:
         """Regenerate metrics for committed snapshots that lack them —
-        the data is durable, so the rows are recomputable; returns the
-        backfilled snapshot ids. Run after crash recovery (or on a
-        schedule) to restore the per-partition lineage contract."""
+        the data is durable, so the rows are re-readable from its
+        footers; returns the backfilled snapshot ids. Run after crash
+        recovery (or on a schedule) to restore the per-file lineage
+        contract."""
         filled = []
         missing = set(self.missing_metrics(spark, table))
         for s in self.history(table):
             sid = s["snapshot_id"]
             if sid not in missing:
                 continue
-            self.append(
-                self._metrics_rows(spark, s["dir"], lineage_col, sid,
-                                   table),
-                f"{table}@metrics", meta={"backfilled": True})
+            self._append_metrics(
+                _metrics_rows(s["dir"], lineage_col, sid, table), table,
+                meta={"backfilled": True})
             filled.append(sid)
         return filled
 
@@ -186,7 +277,7 @@ class ParquetTableIO:
         # an empty-input commit writes a dir with no part files (still a
         # valid snapshot — e.g. a work batch that matched zero rows);
         # schema inference would fail on it, so skip data-less dirs
-        dirs = [s["dir"] for s in snaps if _has_parquet(s["dir"])]
+        dirs = [s["dir"] for s in snaps if _part_files(s["dir"])]
         if not dirs:
             raise FileNotFoundError(f"table {table!r} has only empty "
                                     "snapshots")
@@ -225,7 +316,11 @@ class IcebergTableIO:
 
     Batch-key metadata rides in the snapshot summary via the
     ``snapshot-property.`` write option; resume reads it back from
-    ``<table>.snapshots``.
+    ``<table>.snapshots``. ``append`` takes the same arguments as
+    ``ParquetTableIO.append``: a path of pre-written parquet files is
+    read and appended, and ``lineage_col`` is accepted and ignored,
+    because Iceberg's manifests already keep every data file's record
+    count and column bounds.
     """
 
     def __init__(self, spark: SparkSession, catalog: str = "spark_catalog",
@@ -243,9 +338,12 @@ class IcebergTableIO:
     def _fq(self, table: str) -> str:
         return f"{self.prefix}.{table}"
 
-    def append(self, df: DataFrame, table: str,
+    def append(self, df: DataFrame | str, table: str,
                partition_by: str | None = None,
+               lineage_col: str | None = None,
                meta: dict | None = None) -> str:  # pragma: no cover
+        if isinstance(df, str):
+            df = self.spark.read.parquet(df)
         writer = df.writeTo(self._fq(table))
         for k, v in (meta or {}).items():
             writer = writer.option(f"snapshot-property.{k}", json.dumps(v))

@@ -10,30 +10,42 @@ Work decomposition: tiles at TILE_LEVEL L go to N_BATCHES work units by
 face + Hilbert position, pmod(tile >> (2*(30-L)+1), n) — deterministic,
 independent of data order (the bits below are the constant lsb pattern).
 Each batch commits as ONE snapshot with its batch id in the manifest
-metadata and per-file-split lineage in the metrics table. A re-run
-reads ``done_keys`` and processes only missing batches — crash-safe at
-batch granularity because TableIO's manifest swap is atomic and data
-written without a manifest entry is invisible.
+metadata and per-file lineage in the metrics table. A re-run reads
+``done_keys`` and processes only missing batches — crash-safe at batch
+granularity because TableIO's manifest swap is atomic and data written
+without a manifest entry is invisible.
 
-Geocode once: the run writes every input row, tagged with its batch id,
-in ONE write partitioned by that id into a run-scoped staging dir
-``<root>/<table>/_staging-<uuid>``. The hot-tile histogram and every
-batch then read the staged files; a batch is a partition-pruned read of
-its own ``_batch=b`` directory, so no read runs the geocode UDF again.
+Geocode once, write once: the run works in a run-scoped dir
+``<root>/<table>/_staging-<uuid>``. It writes every input row, tagged
+with its batch id, in ONE write partitioned by that id (``keyed/``);
+the hot-tile histogram reads those staged files. ONE more Spark job
+then reads this run's batches from them (a partition-pruned scan, no
+geocode UDF), repartitions by (tile, salt) and writes them
+``partitionBy(_batch, tile)`` into ``batches/``. Each batch is then
+committed in batch order by ``io.append`` of its ``_batch=b`` dir,
+which renames it into ``snap-<id>`` (layout ``cell_l4=<t>/part-*``)
+and swaps the manifest; the lineage rows come from the files' Parquet
+footers, so a commit starts no Spark job (a Spark job per commit was
+the fixed cost that set this job's time: a batch holds a few hundred
+rows). The input is scanned three times per run: the geocoding staging
+write, the histogram and the batch write (four when each batch wrote
+and re-read its own files).
+
 (Filtering the geocoded pages by batch instead pushes the batch
 predicate below the geocode projection and re-runs the UDF over the
 whole input once per batch; a filter on ``_batch`` before the staging
 write does the same, so the staging write is unfiltered — a resume run
-stages all rows and reads only its pending batches.) The staging dir is
-removed when the run ends, by success or by error; a killed run's
-leftover is never read, because readers and ``done_keys`` see only
-manifest entries — the same contract as an orphan ``snap-*`` dir.
-``IcebergTableIO`` has no ``root``: its swap point needs a staging
-location (e.g. a scratch table or path) for this step.
+stages all rows and writes only its pending batches.) The staging dir,
+with any batch not yet committed, is removed when the run ends, by
+success or by error; a killed run's leftover is never read, because
+readers and ``done_keys`` see only manifest entries — the same
+contract as an orphan ``snap-*`` dir. ``IcebergTableIO`` has no
+``root``: its swap point needs a staging location (e.g. a scratch
+table or path) for this step.
 
-At 10^12 rows this shape holds: each batch is a partition-pruned scan
-(tile is the Iceberg identity-partition column), the hot-tile histogram
-is a counts-only aggregate, and the per-batch write is salted so no
+At 10^12 rows this shape holds: the batch write is a partition-pruned
+scan (tile is the Iceberg identity-partition column), the hot-tile
+histogram is a counts-only aggregate, and the write is salted so no
 straggler task owns a mega-tile.
 """
 
@@ -80,9 +92,7 @@ def stage(keyed: DataFrame, path: str) -> DataFrame:
     """Write `keyed` once, partitioned by BATCH_COL, and read it back.
 
     The read takes `keyed`'s schema: an empty input writes no part
-    files, and schema inference would fail on the empty dir. (Spark
-    logs "All paths were ignored" for a `_`-prefixed path such as the
-    job's staging dir, but still reads it.)"""
+    files, and schema inference would fail on the empty dir."""
     keyed.write.partitionBy(BATCH_COL).parquet(path)
     return keyed.sparkSession.read.schema(keyed.schema).parquet(path)
 
@@ -103,23 +113,31 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
         # hot-tile histogram, so an idempotent re-run starts no job
         return {"committed": [], "skipped": list(range(n_batches)),
                 "hot_tiles": []}
+    committed, skipped, run = [], [], []
+    for b in range(n_batches):
+        if b in done:
+            skipped.append(b)
+        elif (max_batches_this_run is not None
+                and len(run) >= max_batches_this_run):
+            break
+        else:
+            run.append(b)
     tcol = TL.tile_col(TILE_LEVEL)
     staging = os.path.join(io.root, table, f"_staging-{uuid.uuid4().hex}")
+    batches = os.path.join(staging, "batches")
     try:
-        staged = stage(keyed_pages(spark, sf_dir, n_batches), staging)
+        staged = stage(keyed_pages(spark, sf_dir, n_batches),
+                       os.path.join(staging, "keyed"))
         hot = TL.hot_tiles(staged, TILE_LEVEL, hot_threshold)
-        committed, skipped = [], []
-        for b in range(n_batches):
-            if b in done:
-                skipped.append(b)
-                continue
-            if (max_batches_this_run is not None
-                    and len(committed) >= max_batches_this_run):
-                break
-            batch = staged.filter(F.col(BATCH_COL) == b).drop(BATCH_COL)
-            out = TL.repartition_by_tile(batch, TILE_LEVEL, hot, N_SALT) \
-                .drop(TL.SALT_COL)
-            io.append(out, table, partition_by=tcol, lineage_col=tcol,
+        todo = staged.filter(F.col(BATCH_COL).isin(run))
+        (TL.repartition_by_tile(todo, TILE_LEVEL, hot, N_SALT)
+         .drop(TL.SALT_COL)
+         .write.partitionBy(BATCH_COL, tcol).parquet(batches))
+        for b in run:
+            files = os.path.join(batches, f"{BATCH_COL}={b}")
+            # a batch with no rows has no dir: commit an empty snapshot
+            os.makedirs(files, exist_ok=True)
+            io.append(files, table, partition_by=tcol, lineage_col=tcol,
                       meta={"batch_key": [b], "sf_dir": sf_dir,
                             "hot_tiles": hot})
             committed.append(b)

@@ -34,7 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import _fold_dot, cosine_col
+from .dedup import _fold_dot, cosine_col, norm_col
 
 N_PLANES = 16
 EMB_DIM = 64
@@ -93,10 +93,13 @@ def ann_brute_topk(embs: DataFrame, queries: DataFrame, k: int = 10,
     corpus scan is shuffle-free until the per-query rank exchange.
     Ties break on vec_id ascending.
     """
-    q = queries.select(F.col("query_id"), F.col(vec_col).alias("_qv"))
-    cand = embs.select(F.col(id_col), F.col(vec_col).alias("_cv")) \
+    q = queries.select(F.col("query_id"), F.col(vec_col).alias("_qv"),
+                       norm_col(F.col(vec_col)).alias("_qn"))
+    cand = embs.select(F.col(id_col), F.col(vec_col).alias("_cv"),
+                       norm_col(F.col(vec_col)).alias("_cn")) \
         .crossJoin(F.broadcast(q))
-    scored = cand.withColumn("_cos", cosine_col(F.col("_cv"), F.col("_qv")))
+    scored = cand.withColumn("_cos", cosine_col(
+        F.col("_cv"), F.col("_qv"), F.col("_cn"), F.col("_qn")))
     w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(),
                                                F.col(id_col).asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -125,7 +128,9 @@ def emb_near_dup_lsh(embs: DataFrame, tau: float = 0.4,
     host, 3 alternating pairs in one session): 2.03 s [2.00, 2.05]
     against 35.6 s [34.4, 36.6] for the brute-force
     dedup.emb_near_dup, 17x faster, at recall 0.008 (34 of its 4,137
-    pairs — wide pairs near tau rarely stay within hamming 1).
+    pairs — wide pairs near tau rarely stay within hamming 1). Brute
+    force itself fell to 10.0 s once cosine_col took per-vector norms
+    (BENCH/PLAN_EVIDENCE.md, "Embedding cosine").
 
     Plan shape (minhash-style): only (id, bucket) pairs shuffle for the
     candidate join — side A fans out 1+16 probe rows per vector, side B
@@ -152,9 +157,10 @@ def emb_near_dup_lsh(embs: DataFrame, tau: float = 0.4,
     cand = a.join(b, ["_bkt"]).filter(F.col("vec_a") < F.col("vec_b")) \
         .select("vec_a", "vec_b")
     va = embs.select(F.col(id_col).alias("vec_a"),
-                     F.col(vec_col).alias("_va"))
-    vb = embs.select(F.col(id_col).alias("vec_b"),
-                     F.col(vec_col).alias("_vb"))
+                     F.col(vec_col).alias("_va"),
+                     norm_col(F.col(vec_col)).alias("_na"))
+    vb = va.toDF("vec_b", "_vb", "_nb")
     return (cand.join(va, "vec_a").join(vb, "vec_b")
-            .filter(cosine_col(F.col("_va"), F.col("_vb")) >= tau)
+            .filter(cosine_col(F.col("_va"), F.col("_vb"), F.col("_na"),
+                               F.col("_nb")) >= tau)
             .select("vec_a", "vec_b"))

@@ -477,9 +477,17 @@ def _fold_dot(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def cosine_col(va: Column, vb: Column) -> Column:
-    return _fold_dot(va, vb) / (
-        F.sqrt(_fold_dot(va, va)) * F.sqrt(_fold_dot(vb, vb)))
+def norm_col(v: Column) -> Column:
+    """sqrt of the vector's self fold: computed once per vector, before
+    any pair join, and passed to cosine_col."""
+    return F.sqrt(_fold_dot(v, v))
+
+
+def cosine_col(va: Column, vb: Column, na: Column, nb: Column) -> Column:
+    """Fold cosine of va and vb given their norm_col values na and nb —
+    the same arithmetic as the oracle's fold(a,b) / (sqrt(fold(a,a)) *
+    sqrt(fold(b,b))), with the two self folds hoisted out of the pair."""
+    return _fold_dot(va, vb) / (na * nb)
 
 
 def emb_near_dup(embs: DataFrame, tau: float = 0.4,
@@ -489,10 +497,12 @@ def emb_near_dup(embs: DataFrame, tau: float = 0.4,
     the verification baseline for ann.py's LSH variant. Cosine itself is
     excluded from the output (pair membership is integer-exact because
     the fold order matches the oracle bit-for-bit)."""
-    a = embs.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"))
-    b = embs.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("_vb"))
+    a = embs.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("_va"),
+                    norm_col(F.col(vec_col)).alias("_na"))
+    b = a.toDF("vec_b", "_vb", "_nb")
     return (a.join(b, F.col("vec_a") < F.col("vec_b"))
-            .filter(cosine_col(F.col("_va"), F.col("_vb")) >= tau)
+            .filter(cosine_col(F.col("_va"), F.col("_vb"), F.col("_na"),
+                               F.col("_nb")) >= tau)
             .select("vec_a", "vec_b"))
 
 

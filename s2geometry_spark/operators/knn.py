@@ -10,7 +10,10 @@ cell, every uncollected point is at angular distance
 > (r − 1) · kMinWidth(L): a geodesic from the query cell to any cell
 outside ring r fully crosses rings 1..r−1, each at least one min cell
 width wide. A query is satisfied once it has ≥ k candidates and its
-k-th distance is within that guaranteed radius.
+k-th distance is within that guaranteed radius. Every query starts at
+r = 2: at r = 1 the bound is 0, so a round there could finish only an
+exhaustive query or one whose k-th neighbour sits exactly on it, at
+the cost of a full join, a window and a collect.
 
 Scale notes (10^12 pages):
   * pages are never shuffled — every round is a broadcast equi-join of
@@ -223,7 +226,7 @@ def knn_join(pages: DataFrame, spark: SparkSession, queries,
         state[int(q["query_id"])] = {
             "k": int(q.get("k", k_default)),
             "qx": cl * math.cos(ln), "qy": cl * math.sin(ln), "qz": math.sin(la),
-            "cell": cell, "radius": 1, "done": False,
+            "cell": cell, "radius": 2, "done": False,
         }
 
     # persist: every expansion round (and the final pass) joins against

@@ -4,16 +4,19 @@ geocode job (SURVEY.md §7 Stage 6)."""
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import subprocess
 import sys
 import time
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from s2geometry_spark.io.table_io import ParquetTableIO
+from s2geometry_spark.io.table_io import IcebergTableIO, ParquetTableIO
 from s2geometry_spark.jobs.geocode_job import (BATCH_COL, keyed_pages,
                                                package_pyfiles,
                                                run_geocode_job)
@@ -114,6 +117,111 @@ def test_table_io_snapshot_append_read(spark, tmp_path):
            m.groupBy("snapshot_id").agg(F.sum("n_rows").alias("total"))
            .collect()}
     assert agg == {s1: 10, s2: 5}
+
+
+def _file_lineage(spark, snap_dir: str, lineage_col: str) -> list:
+    """(rows, min, max) of `lineage_col` per data file of a snapshot,
+    computed by Spark, in sorted relative-path order (file_split)."""
+    per = (spark.read.parquet(snap_dir)
+           .groupBy(F.input_file_name().alias("f"))
+           .agg(F.count("*").alias("n"), F.min(lineage_col).alias("lo"),
+                F.max(lineage_col).alias("hi")).collect())
+    rel = {os.path.relpath(unquote(urlparse(r["f"]).path), snap_dir): r
+           for r in per}
+    return [(rel[k]["n"], rel[k]["lo"], rel[k]["hi"]) for k in sorted(rel)]
+
+
+@pytest.mark.parametrize("partition_by", [None, "tile"])
+def test_table_io_lineage_rows_from_footers(spark, tmp_path, partition_by):
+    """Per-file lineage rows, for a lineage column that is the
+    partition column (bounds from the k=v dir) and for one that is not
+    (bounds from the row-group statistics): n_rows sums to the rows
+    written, and each file's [key_min, key_max] holds every lineage
+    value in that file."""
+    io = ParquetTableIO(str(tmp_path))
+    # descending ids within each file, in row groups of ~100 rows: the
+    # file's bounds must span all its row groups, not the first or last
+    df = (spark.range(0, 1000, 1, 4).withColumn("tile", F.col("id") % 7)
+          .repartition(3, "tile" if partition_by else "id")
+          .sortWithinPartitions(F.col("id").desc()))
+    lineage = partition_by or "id"
+    spark.conf.set("parquet.block.size", "1024")
+    try:
+        sid = io.append(df, "t", partition_by=partition_by,
+                        lineage_col=lineage)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    snap = io.history("t")[0]["dir"]
+    assert any(pq.read_metadata(os.path.join(d, f)).num_row_groups > 1
+               for d, _, fs in os.walk(snap) for f in fs
+               if f.endswith(".parquet"))
+    m = io.metrics(spark, "t")
+    assert dict(m.dtypes)["key_min"] == dict(m.dtypes)["key_max"] == "bigint"
+    rows = sorted(m.filter(F.col("snapshot_id") == sid).collect(),
+                  key=lambda r: r["file_split"])
+    assert sum(r["n_rows"] for r in rows) == 1000
+    assert {r["table"] for r in rows} == {"t"}
+    files = _file_lineage(spark, snap, lineage)
+    assert [r["file_split"] for r in rows] == list(range(len(files)))
+    for r, (n, lo, hi) in zip(rows, files):
+        assert r["n_rows"] == n
+        assert r["key_min"] <= lo and hi <= r["key_max"]
+        if partition_by:
+            assert r["key_min"] == r["key_max"] == lo == hi
+
+
+def test_table_io_rejects_non_integer_lineage_column(spark, tmp_path):
+    """Lineage bounds are int64: a string lineage column is refused
+    before anything is committed, as a column and as a partition dir."""
+    io = ParquetTableIO(str(tmp_path))
+    df = spark.range(10).withColumn("k", F.concat(F.lit("x"), F.col("id")))
+    for partition_by in (None, "k"):
+        with pytest.raises(ValueError, match="integer"):
+            io.append(df, "t", partition_by=partition_by, lineage_col="k")
+    assert io.history("t") == [] and io.history("t@metrics") == []
+
+
+def test_table_io_commit_of_prewritten_files_starts_no_spark_job(
+        spark, tmp_path):
+    """Committing finished files renames them into the snapshot and
+    reads the lineage from their footers: no Spark job, for the data
+    commit and for its metrics commit. A dir outside the table is
+    refused."""
+    io = ParquetTableIO(str(tmp_path))
+    files = str(tmp_path / "t" / "_batch-out")
+    spark.range(100).withColumn("tile", F.col("id") % 5) \
+        .write.partitionBy("tile").parquet(files)
+    sc = spark.sparkContext
+    sc.setJobGroup("table_io_prewritten_commit", "rename commit")
+    try:
+        sid = io.append(files, "t", partition_by="tile", lineage_col="tile",
+                        meta={"batch_key": [0]})
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(
+        "table_io_prewritten_commit") == []
+    assert not os.path.exists(files)
+    assert io.done_keys("t") == {0}
+    assert io.read(spark, "t").count() == 100
+    n = io.metrics(spark, "t").filter(F.col("snapshot_id") == sid) \
+        .agg(F.sum("n_rows")).first()[0]
+    assert n == 100
+    outside = str(tmp_path / "elsewhere")
+    spark.range(3).write.parquet(outside)
+    with pytest.raises(ValueError, match="not a directory under"):
+        io.append(outside, "t")
+    assert len(io.history("t")) == 1
+
+
+def test_iceberg_table_io_accepts_parquet_table_io_arguments():
+    """IcebergTableIO is the documented swap point: every argument the
+    jobs pass to ParquetTableIO (lineage_col included) must be one it
+    accepts. Checked on the signatures: the class cannot be built
+    without the Iceberg jar."""
+    for name in ("append", "read", "done_keys"):
+        parquet = inspect.signature(getattr(ParquetTableIO, name)).parameters
+        iceberg = inspect.signature(getattr(IcebergTableIO, name)).parameters
+        assert set(parquet) <= set(iceberg), name
 
 
 def test_uncommitted_data_is_invisible(spark, tmp_path):
@@ -236,6 +344,16 @@ def _staging_dirs(io: ParquetTableIO) -> list[str]:
             if d.startswith("_staging-")]
 
 
+def _uncommitted_dirs(io: ParquetTableIO) -> list[str]:
+    """Dirs under the table that no manifest entry names: the staging
+    dir, its batch output, or a pending write left behind."""
+    table_dir = os.path.join(io.root, JOB_TABLE)
+    committed = {os.path.basename(s["dir"]) for s in io.history(JOB_TABLE)}
+    return [d for d in os.listdir(table_dir)
+            if os.path.isdir(os.path.join(table_dir, d))
+            and d not in committed]
+
+
 def _same_rows(io_a: ParquetTableIO, io_b: ParquetTableIO, spark) -> bool:
     a = io_a.read(spark, JOB_TABLE).select("url", "cell_id")
     b = io_b.read(spark, JOB_TABLE).select("url", "cell_id")
@@ -275,6 +393,8 @@ def test_geocode_job_crash_keeps_prefix_and_removes_staging(
     monkeypatch.undo()
     assert io.done_keys(JOB_TABLE) == {0, 1}
     assert _staging_dirs(io) == []
+    # the batch output the failed run had not committed is gone too
+    assert _uncommitted_dirs(io) == []
 
     r = run_geocode_job(spark, SF_DIR, io, hot_threshold=JOB_HOT)
     assert r["committed"] == [2, 3, 4, 5, 6, 7]
@@ -618,6 +738,34 @@ def test_knn_raising_call_releases_pages_projection(spark, pages,
         knn.knn_join(pages, spark, [{"query_id": 0, "lat": 1.0,
                                      "lng": 10.0}])
     assert cm.numCachedEntries() == before
+
+
+def test_knn_first_stats_round_finishes_a_ring_local_query(spark, pages,
+                                                         monkeypatch):
+    """A query whose top-k lies next to it finishes after ONE stats
+    round: every query starts at ring radius 2, because at radius 1 the
+    termination bound (r - 1) * min_width is 0 and that round could
+    only end exhaustive queries."""
+    from s2geometry_spark.operators.knn import knn_join
+    p = pages.select("lat", "lng").orderBy("url").first()
+    # just off a page point: the nearest page is at a tiny, non-zero
+    # distance (a zero distance would pass even a zero bound)
+    q = {"query_id": 0, "lat": p["lat"] + 1e-6, "lng": p["lng"], "k": 1}
+    collects = []
+    frame = type(pages)  # the classic DataFrame, whose collect runs
+    real_collect = frame.collect
+
+    def collect(self):
+        collects.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(frame, "collect", collect)
+    out = knn_join(pages, spark, [q])
+    monkeypatch.undo()
+    assert len(collects) == 1
+    rows = out.collect()
+    assert len(rows) == 1 and rows[0]["rank"] == 1
+    assert 0.0 < rows[0]["d2"] < 1e-12
 
 
 def test_vectorize_tiles_matches_driver_normalize(spark, pages):
