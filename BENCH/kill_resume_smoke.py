@@ -31,6 +31,9 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from s2geometry_spark.session import default_driver_memory  # noqa: E402
 
 
 def read_manifest(root: str, table: str) -> list[dict]:
@@ -49,7 +52,7 @@ def spawn(out_root: str, sf_dir: str, mult: int, cpus: int,
                SPARK_GRAFT_DOCS_MULT=str(mult))
     cmd = ["spark-submit",
            "--master", f"local[{cpus}]",
-           "--driver-memory", "16g",
+           "--driver-memory", default_driver_memory(),
            "--conf", "spark.sql.shuffle.partitions=%d" % cpus,
            "--py-files", "/tmp/s2geometry_spark_smoke.zip",
            os.path.join(REPO, "s2geometry_spark", "jobs", "dedup_job.py")]

@@ -41,10 +41,10 @@ PAIRS = [
     (8, 32, "2000", "20", "128", "64"),
 ]
 
-# operators that are overhead/driver-loop-bound at sandbox scale and
-# therefore excluded from the headline efficiency aggregate (reported
-# per-query regardless): knn is an iterative driver loop over 40 query
-# points; the ann corpus is only 5k vectors.
+# operators excluded from the headline efficiency aggregate (reported
+# per-query regardless): knn stays out so the aggregate compares with
+# the committed scaling.json, which timed it as a driver loop of ring
+# joins (it is now one pass); the ann corpus is only 5k vectors.
 EXCLUDE_FROM_AGG = {"knn", "ann_brute"}
 
 # the north-rule criterion is spatial-join throughput scaling; this is
@@ -263,7 +263,7 @@ def main() -> None:
 
 def write_baseline() -> None:
     """Regenerate BASELINE.md from the evidence JSONs on disk
-    (scaling.json + the standalone skew / kill-resume / knn-driver /
+    (scaling.json + the standalone skew / kill-resume /
     data-scaling runs when present). Shared by this harness and
     BENCH/run_data_scaling.py so either can refresh the document."""
     with open(os.path.join(HERE, "scaling.json")) as f:
@@ -439,37 +439,10 @@ def write_baseline() -> None:
             "one batch, not the job.",
             "",
         ]
-    knn_path = os.path.join(HERE, "knn_driver.json")
-    if os.path.exists(knn_path):
-        with open(knn_path) as f:
-            kd = json.load(f)
-        lines += [
-            "## kNN driver-side enumeration (BENCH/knn_driver_scaling.py)",
-            "",
-            f"Candidate-ring enumeration at level {kd['level']}, radius "
-            f"{kd['radius']} (the 17x17 worst case), driver-only:",
-            "",
-            "| queries | batched s | ms/query | per-query-BFS s | speedup |",
-            "|---|---|---|---|---|",
-        ]
-        for p in kd["points"]:
-            lines.append(
-                f"| {p['n_queries']:,} | {p['batched_sec']} | "
-                f"{p['batched_ms_per_query']} | "
-                f"{p.get('per_query_sec', '— (linear, ~47 ms/query)')} | "
-                f"{p.get('speedup', '—')} |")
-        lines += [
-            "",
-            "One vectorized all_neighbors kernel call per BFS step over "
-            "ALL pending queries (int64-packed (owner, cell) dedup) — "
-            "per-query driver cost is flat (~1 ms) where the round-3 "
-            "per-query Python BFS cost ~47 ms/query.",
-            "",
-        ]
     lines += [
-        "`*` excluded from the aggregate: driver-loop iteration (knn) "
-        "or sub-second corpus (ann_*) — overhead-bound at sandbox "
-        "scale, reported for completeness.",
+        "`*` excluded from the aggregate: knn (kept out for "
+        "comparability with runs that timed it as a driver loop) or "
+        "sub-second corpus (ann_*), reported for completeness.",
         "",
         "Numbers are min-of-2 per query within a run (min-of-3 past "
         "2s); CROSS-run variance on this shared host is significant — "

@@ -199,7 +199,8 @@ def _q_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B10: kNN via neighbor-ring cell expansion, k ∈ {1, 10, 100}.
+    """B10: exact kNN in one pass (per-partition numpy top-k, then a
+    window rank), k ∈ {1, 10, 100}.
 
     d2 is excluded from the gated output: DuckDB may contract the
     multiply-adds into FMA, shifting the last ulp (ranks are unaffected
@@ -1187,8 +1188,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT cell, neighbor
             FROM read_parquet('{FIXDIR}/neighbors_sf0_01.parquet')
         """,
-        # brute-force kNN oracle — fully independent of the ring
-        # expansion; same d2 expression and (d2, url) tie-break.
+        # brute-force kNN oracle — independent of the engine's
+        # per-partition top-k; same d2 expression and (d2, url)
+        # tie-break.
         "knn_ring": _PTS_CTE + f""",
             q(query_id, qx, qy, qz, k) AS (VALUES {_knn_values_sql()}),
             d AS (SELECT q.query_id, pts.url,

@@ -412,7 +412,7 @@ def all_neighbors(cell_id: np.ndarray) -> list:
     nbr_level == level. same_face for an offset cell is "both leaf
     coordinates in [0, 2**30)" — exactly the spec's bounds tests.
     Cube-corner diagonals may duplicate an edge neighbor; callers dedup
-    (the kNN ring expansion in operators/knn.py does).
+    (unions.expand does).
     """
     id_u = np.asarray(cell_id).astype(np.uint64)
     lvl = level(id_u)

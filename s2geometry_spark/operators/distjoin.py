@@ -14,8 +14,7 @@ all-pairs):
    between two points within ``radius`` cannot fully cross any
    intermediate level-L cell (each is >= one min width wide), so the
    two cells are identical or Chebyshev-adjacent — the 3x3 stencil is
-   a certified superset of all qualifying pairs (same argument as the
-   kNN ring termination bound, operators/knn.py).
+   a certified superset of all qualifying pairs.
 2. project each point once to (url, px, py, pz, cell, stencil[9]) and
    persist — the self-join would otherwise re-run the geocode + xyz
    kernel chain on BOTH sides (CLAUDE.md: persist self-joined

@@ -1,348 +1,140 @@
-"""kNN join via neighbor-ring cell expansion (SURVEY.md B10, north_star).
+"""kNN join in one lazy pass (SURVEY.md B10, north_star).
 
-Per query point: start from its cell at a density-chosen ring level,
-expand the 8-ring frontier (A16) until the candidate cell set provably
-contains the true top-k, equi-join candidate cells against pages on a
-level-L tile key, compute exact distances JVM-side, rank with a window.
+One ``mapInPandas`` over ``pages.select("url", "lat", "lng")`` scores
+every page against every query in numpy and keeps, per partition and
+per query, the rows whose squared chord distance d2 = ‖p − q‖²
+(monotone with angle) is at most the partition's running k-th
+smallest d2, ties included. A ``row_number`` window over query_id,
+ordered by (d2, url), then ranks the survivors and keeps rank 1..k.
 
-Termination guarantee: after completing rings 0..r around the query
-cell, every uncollected point is at angular distance
-> (r − 1) · kMinWidth(L): a geodesic from the query cell to any cell
-outside ring r fully crosses rings 1..r−1, each at least one min cell
-width wide. A query is satisfied once it has ≥ k candidates and its
-k-th distance is within that guaranteed radius. Every query starts at
-r = 2: at r = 1 the bound is 0, so a round there could finish only an
-exhaustive query or one whose k-th neighbour sits exactly on it, at
-the cost of a full join, a window and a collect.
+Why the keep set is exact: the k-th smallest d2 of any subset of the
+pages is ≥ the k-th smallest of all of them. So a row of the global
+top-k has d2 ≤ every threshold a partition ever holds, and survives
+its partition's pruning; keeping ties at the threshold means the
+window sees every row the (d2, url) order could rank ≤ k.
 
-Scale notes (10^12 pages):
-  * pages are never shuffled — every round is a broadcast equi-join of
-    a tiny (query_id, cell) table against the tile column;
-  * the data-dependent loop lives on the driver (SURVEY §4.3), but all
-    it pulls back per round is ONE aggregate row per query (count +
-    k-th distance); ranking happens in a Spark window;
-  * distance is squared chord d2 = ‖p − q‖² (monotone with angle, ties
-    broken by url) computed in pure SQL over the xyz columns —
-    whole-stage codegen, and bit-identical to the DuckDB brute-force
-    oracle's expression.
+Cost and shape:
+  * pages are never shuffled — the only Exchange is the window's,
+    above the MapInPandas, over ≤ partitions × (Σk + ties) rows;
+  * one scan and one Spark job per collect: no driver loop, no
+    collect inside the operator, nothing persisted or checkpointed;
+  * Python work is O(rows × queries): linear in the query count, so
+    the operator suits a few queries per call (every caller sends 20).
+
+d2 uses the DuckDB oracle's operand order, (dx*dx + dy*dy) + dz*dz,
+with page xyz from the numpy kernel and query xyz from math.cos/sin, so
+it is bit-identical to the brute-force oracle. Pages with a null or
+non-finite lat/lng have no distance and are never returned.
 """
 
 from __future__ import annotations
 
 import math
+import numbers
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+from pyspark.sql.types import (DoubleType, LongType, StringType,
                                StructField, StructType)
 
 from .. import kernels as K
-from ..functions import geo
 
-K_MIN_WIDTH_DERIV = 2.0 * math.sqrt(2.0) / 3.0
-
-
-def choose_ring_level(n_points: int, k: int) -> int:
-    """Pick L so the 3×3 ring around a query cell holds ≈ 2k points in
-    expectation: points/cell = n/(6·4^L); solve 9·points/cell ≈ 2k."""
-    if n_points <= 0 or k <= 0:
-        return 4
-    target_cells = max(6.0, 9.0 * n_points / (2.0 * k))
-    lvl = int(math.log(target_cells / 6.0, 4.0))
-    return max(2, min(12, lvl))
-
-
-_PAIR_DT = np.dtype([("o", np.int64), ("c", np.uint64)])
-
-
-def _pack_pairs(owners: np.ndarray, cells: np.ndarray) -> np.ndarray:
-    a = np.empty(owners.size, dtype=_PAIR_DT)
-    a["o"] = owners
-    a["c"] = cells
-    return a
-
-
-def _batched_ring_cells(centers: np.ndarray, radius: int) -> tuple:
-    """All cells within Chebyshev `radius` of EVERY center at once.
-
-    One vectorized all_neighbors kernel call per BFS step over the
-    union of all queries' frontiers — owner-tagged (query, cell) pairs
-    deduped with sort-based set ops — instead of a Python set-BFS per
-    query (the round-3 verdict's driver-hot-spot: at 10^5 queries the
-    per-query loop cost minutes of driver time; this is one kernel
-    call per step regardless of query count). Returns (owner_idx,
-    cells): parallel arrays, owner indexing into `centers`.
-
-    All centers share one level L (knn_join groups by enum level), and
-    a level-L id carries only 2L+4 significant bits (face + Hilbert
-    pos + lsb marker — the trailing zeros drop under a >> 2*(30-L)),
-    so (owner, cell) packs into ONE int64 whenever owner_bits +
-    cell_bits <= 63 — every realistic case (L <= 12 after coarsening
-    leaves 35 bits for owners). Primitive int64 unique/setdiff are
-    ~20x faster than the structured-dtype comparisons this replaces
-    (measured 52s -> ~3s at 10^4 queries x 17x17 rings); the
-    structured path stays as the general fallback.
-    """
-    n = int(centers.size)
-    if n == 0:
-        return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64))
-    owners = np.arange(n, dtype=np.int64)
-    cells0 = centers.astype(np.uint64)
-    lvl = int(K.level(cells0[:1])[0])
-    shift = 2 * (30 - lvl)
-    cell_bits = 64 - shift
-    owner_bits = max(1, int(np.ceil(np.log2(max(n, 2)))))
-    if cell_bits + owner_bits <= 63:
-        def pack(o, c):
-            return (o << cell_bits) | (c >> np.uint64(shift)).astype(np.int64)
-
-        visited = np.unique(pack(owners, cells0))
-        frontier = visited
-        for _ in range(radius):
-            if frontier.size == 0:
-                break
-            f_o = frontier >> cell_bits
-            f_c = ((frontier & ((1 << cell_bits) - 1))
-                   .astype(np.uint64) << np.uint64(shift))
-            rings = K.all_neighbors(f_c)
-            cand = np.unique(pack(np.tile(f_o, len(rings)),
-                                  np.concatenate(rings)))
-            frontier = np.setdiff1d(cand, visited, assume_unique=True)
-            visited = np.unique(np.concatenate([visited, frontier]))
-        return (visited >> cell_bits,
-                (visited & ((1 << cell_bits) - 1))
-                .astype(np.uint64) << np.uint64(shift))
-    visited = np.unique(_pack_pairs(owners, cells0))
-    frontier = visited
-    for _ in range(radius):
-        if frontier.size == 0:
-            break
-        rings = K.all_neighbors(frontier["c"])
-        cand = np.unique(_pack_pairs(np.tile(frontier["o"], len(rings)),
-                                     np.concatenate(rings)))
-        frontier = np.setdiff1d(cand, visited, assume_unique=True)
-        visited = np.unique(np.concatenate([visited, frontier]))
-    return visited["o"], visited["c"]
-
-
-def _ring_cells(center_cell: int, radius: int) -> set:
-    """All cells within Chebyshev ring `radius` of one center via 8-ring
-    BFS (A16) — handles cube-face wrap through the neighbor kernel.
-    Single-center view of _batched_ring_cells (one implementation)."""
-    _, cells = _batched_ring_cells(
-        np.array([center_cell], dtype=np.uint64), radius)
-    return {int(v) for v in cells}
-
-
-R_MAX_RING = 8  # max Chebyshev radius ever enumerated at one level
-
-
-def _enum_params(level: int, radius: int) -> tuple:
-    """(enum_level, enum_radius): coarsen the enumeration level until
-    the BFS radius is <= R_MAX_RING, so the driver materializes at most
-    O((2*R_MAX_RING+5)^2) cells per query REGARDLESS of the ring radius
-    (round-2 review: radius doubles to 2^14, and a query over an empty
-    ocean at a fine level would otherwise enumerate millions of cells
-    driver-side).
-
-    Superset guarantee: a level-L cell within Chebyshev distance r of
-    the query cell sits in a level-(L-d) ancestor whose block index
-    differs from the query ancestor's by at most ceil(r / 2^d) + 1
-    (the +1 absorbs the query cell's offset inside its 2^d x 2^d
-    block), so the coarse ring covers the fine ring and the kNN
-    termination bound — stated against the FINE ring — still holds.
-    """
-    d = 0
-    while (radius >> d) > R_MAX_RING and level - d > 0:
-        d += 1
-    r_enum = -(-radius // (1 << d)) + (1 if d else 0)
-    return level - d, r_enum
-
-
-_CAND_SCHEMA = StructType([
+_KEPT_SCHEMA = StructType([
     StructField("query_id", LongType(), False),
-    StructField("knn_cell", LongType(), False),
-])
-
-_QUERY_SCHEMA = StructType([
-    StructField("query_id", LongType(), False),
-    StructField("qx", DoubleType(), False),
-    StructField("qy", DoubleType(), False),
-    StructField("qz", DoubleType(), False),
-    StructField("k", IntegerType(), False),
+    StructField("url", StringType(), True),
+    StructField("d2", DoubleType(), False),
+    StructField("k", LongType(), False),
 ])
 
 
-def estimate_rows(df: DataFrame, sample_parts: int = 4) -> int:
-    """Bounded row-count estimate: count ``sample_parts`` input
-    partitions (a runJob over just those splits — never a full scan)
-    and extrapolate by the partition count. At 10^12 rows an exact
-    ``count()`` is itself a full pass over the table; level selection
-    only needs the order of magnitude (log4), so a per-split
-    extrapolation — splits are uniformly sized by
-    spark.sql.files.maxPartitionBytes — is plenty (r4 verdict: the
-    exact count was knn_join's one extra full scan)."""
-    ones = df.select(F.lit(1).alias("_one")).rdd
-    n_parts = ones.getNumPartitions()
-    if n_parts == 0:
-        return 0
-    s = min(sample_parts, n_parts)
-    # partitionFunc must yield an iterable (runJob mapPartitions it)
-    counts = ones.context.runJob(
-        ones, lambda it: [sum(1 for _ in it)], partitions=range(s))
-    return int(round(sum(counts) / s * n_parts))
+def _query_arrays(queries, k_default: int) -> tuple:
+    """Validate the queries; return (query_id, qx, qy, qz, k) arrays.
+
+    A missing query_id/lat/lng raises KeyError. A duplicate query_id, a
+    non-finite lat or lng, a lat outside [-90, 90] or a k that is not
+    an integer ≥ 1 raises ValueError."""
+    qids: dict = {}  # query_id -> (qx, qy, qz, k), in query order
+    for q in queries:
+        qid, lat, lng = int(q["query_id"]), float(q["lat"]), float(q["lng"])
+        k = q.get("k", k_default)
+        if qid in qids:
+            raise ValueError(f"duplicate query_id {qid}")
+        if not (math.isfinite(lat) and math.isfinite(lng)):
+            raise ValueError(f"query {qid}: non-finite lat/lng "
+                             f"({lat}, {lng})")
+        if not -90.0 <= lat <= 90.0:
+            raise ValueError(f"query {qid}: lat {lat} outside [-90, 90]")
+        if isinstance(k, bool) or not isinstance(k, numbers.Integral) \
+                or k < 1:
+            raise ValueError(f"query {qid}: k must be an integer >= 1, "
+                             f"got {k!r}")
+        la, ln = math.radians(lat), math.radians(lng)
+        cl = math.cos(la)
+        qids[qid] = (cl * math.cos(ln), cl * math.sin(ln), math.sin(la),
+                     int(k))
+    vals = list(qids.values())
+    qx, qy, qz = (np.array([v[j] for v in vals], dtype=np.float64)
+                  for j in range(3))
+    return (np.array(list(qids), dtype=np.int64), qx, qy, qz,
+            np.array([v[3] for v in vals], dtype=np.int64))
+
+
+def _within_kth(d2: np.ndarray, k: int) -> np.ndarray:
+    """Mask of the rows whose d2 is ≤ the k-th smallest (ties kept)."""
+    if d2.size <= k:
+        return np.ones(d2.size, dtype=bool)
+    return d2 <= np.partition(d2, k - 1)[k - 1]
+
+
+def _partition_top_k(qid, qx, qy, qz, k):
+    """mapInPandas body: each query's keep set for one partition."""
+    def run(batches):
+        kept_d2 = [np.empty(0, dtype=np.float64)] * qid.size
+        kept_url = [np.empty(0, dtype=object)] * qid.size
+        for pdf in batches:
+            x, y, z = K.latlng_to_xyz(
+                np.radians(pdf["lat"].to_numpy("float64")),
+                np.radians(pdf["lng"].to_numpy("float64")))
+            urls = pdf["url"].to_numpy(dtype=object)
+            located = np.isfinite(x)
+            if not located.all():
+                x, y, z, urls = (x[located], y[located], z[located],
+                                 urls[located])
+            for i in range(qid.size):
+                dx, dy, dz = x - qx[i], y - qy[i], z - qz[i]
+                d2 = (dx * dx + dy * dy) + dz * dz
+                m = _within_kth(d2, k[i])
+                d2 = np.concatenate([kept_d2[i], d2[m]])
+                url = np.concatenate([kept_url[i], urls[m]])
+                m = _within_kth(d2, k[i])
+                kept_d2[i], kept_url[i] = d2[m], url[m]
+        sizes = [a.size for a in kept_d2]
+        if sum(sizes):
+            yield pd.DataFrame({"query_id": np.repeat(qid, sizes),
+                                "url": np.concatenate(kept_url),
+                                "d2": np.concatenate(kept_d2),
+                                "k": np.repeat(k, sizes)})
+    return run
 
 
 def knn_join(pages: DataFrame, spark: SparkSession, queries,
-             level: int | None = None, k_default: int = 10,
-             max_rounds: int = 12) -> DataFrame:
+             k_default: int = 10) -> DataFrame:
     """queries: list of dicts {query_id, lat, lng, k} (degrees).
 
-    Returns a DataFrame (query_id, url, rank, d2) with rank 1..k per
-    query. `pages` needs url/lat/lng/cell_id (sources.pages shape).
-
-    When ``level`` is None the starting ring level is chosen from a
-    BOUNDED row-count estimate (estimate_rows — a few input splits,
-    not a full scan). A mis-estimate only shifts the starting level:
-    per-query ring doubling, the termination bound, and the _covered
-    exhaustion check keep the result exact regardless.
+    Returns a lazy DataFrame (query_id, url, rank, d2) with rank 1..k per
+    query, ordered by (d2, url). `pages` needs url/lat/lng. Queries are
+    validated (see _query_arrays) before any plan is built. `spark` is
+    unused; it keeps the operators' (pages, spark, ...) call shape.
     """
-    max_k = max((q.get("k", k_default) for q in queries), default=k_default)
-    if level is None:
-        level = choose_ring_level(estimate_rows(pages), max_k)
-    min_width = K_MIN_WIDTH_DERIV * (2.0 ** -level)
-
-    # per-query driver state (queries are few; pages are not)
-    state = {}
-    for q in queries:
-        la, ln = math.radians(q["lat"]), math.radians(q["lng"])
-        cl = math.cos(la)
-        cell = int(K.parent(
-            K.latlng_degrees_to_cell_id(np.array([q["lat"]], dtype=np.float64),
-                                        np.array([q["lng"]], dtype=np.float64)),
-            level)[0])
-        state[int(q["query_id"])] = {
-            "k": int(q.get("k", k_default)),
-            "qx": cl * math.cos(ln), "qy": cl * math.sin(ln), "qz": math.sin(la),
-            "cell": cell, "radius": 2, "done": False,
-        }
-
-    # persist: every expansion round (and the final pass) joins against
-    # this projection — without it the geocode/xyz UDF chain re-runs
-    # over the full pages table once per round. It is persisted only
-    # after the state loop above has validated the queries, and the
-    # finally below releases it on every exit, raising ones included.
-    pages_l = (pages
-               .withColumn("knn_cell", geo.parent_col(F.col("cell_id"), level))
-               .withColumn("pt", geo.xyz_udf(F.col("lat"), F.col("lng")))
-               .select("url", "knn_cell",
-                       F.col("pt.px").alias("px"), F.col("pt.py").alias("py"),
-                       F.col("pt.pz").alias("pz"))).persist()
-
-    def ranked_hits(qids):
-        """Broadcast equi-join + JVM-side d2 + window rank. Lazy plan.
-
-        Queries are grouped by (enum level, enum radius) — the round
-        loop doubles every pending query's radius in lockstep, so
-        within a round there is exactly ONE group; only the final pass
-        (mixed terminal radii) produces several. Each group's ring
-        expansion is one batched BFS over all its queries
-        (_batched_ring_cells: one all_neighbors kernel call per step,
-        not per query) and each level becomes ONE Arrow-backed
-        candidate DataFrame — driver work per round is a handful of
-        numpy passes regardless of query count (BENCH/knn_driver_
-        scaling evidence), where round 3 ran a Python BFS plus a
-        createDataFrame per query. Each branch joins the persisted
-        pages projection on the pure-bit-math parent key at its level
-        (no re-geocode — knn_cell is already cached)."""
-        groups: dict = {}
-        for qid in qids:
-            key = _enum_params(level, state[qid]["radius"])
-            groups.setdefault(key, []).append(qid)
-        frames_by_lvl: dict = {}
-        for (el, r_enum), qlist in sorted(groups.items()):
-            centers = K.parent(
-                np.array([state[q]["cell"] for q in qlist],
-                         dtype=np.uint64), el)
-            owners, cells = _batched_ring_cells(centers, r_enum)
-            counts = np.bincount(owners, minlength=len(qlist))
-            n_sphere = 6 * 4 ** el
-            for i, q in enumerate(qlist):
-                # exhaustive at the enum level => result is exact
-                state[q]["_covered"] = int(counts[i]) >= n_sphere
-            qid_arr = np.array(qlist, dtype=np.int64)[owners]
-            frames_by_lvl.setdefault(el, []).append(
-                pd.DataFrame({"query_id": qid_arr,
-                              "knn_cell": K.uint64_to_signed(cells)}))
-        qdf = spark.createDataFrame(
-            [{"query_id": qid, "qx": state[qid]["qx"], "qy": state[qid]["qy"],
-              "qz": state[qid]["qz"], "k": state[qid]["k"]} for qid in qids],
-            _QUERY_SCHEMA)
-        branches = []
-        for el in sorted(frames_by_lvl):
-            cand = spark.createDataFrame(
-                pd.concat(frames_by_lvl[el], ignore_index=True),
-                _CAND_SCHEMA)
-            probe = pages_l if el == level else pages_l.withColumn(
-                "knn_cell", geo.parent_col(F.col("knn_cell"), el))
-            branches.append(
-                probe.join(F.broadcast(cand), "knn_cell", "inner"))
-        if not branches:  # no queries: empty result, same schema
-            branches = [pages_l.join(
-                F.broadcast(spark.createDataFrame([], _CAND_SCHEMA)),
-                "knn_cell", "inner")]
-        hits = branches[0]
-        for b in branches[1:]:
-            hits = hits.unionByName(b)
-        hits = hits.join(F.broadcast(qdf), "query_id")
-        dx = F.col("px") - F.col("qx")
-        dy = F.col("py") - F.col("qy")
-        dz = F.col("pz") - F.col("qz")
-        hits = hits.withColumn("d2", (dx * dx + dy * dy) + dz * dz)
-        w = Window.partitionBy("query_id").orderBy(F.col("d2"), F.col("url"))
-        return hits.withColumn("rank", F.row_number().over(w))
-
-    try:
-        for _ in range(max_rounds):
-            pending = [qid for qid, s in state.items() if not s["done"]]
-            if not pending:
-                break
-            ranked = ranked_hits(pending)
-            stats = (ranked.filter(F.col("rank") <= F.col("k"))
-                     .groupBy("query_id")
-                     .agg(F.count("*").alias("n"),
-                          F.max("d2").alias("kth_d2"))
-                     .collect())
-            by_id = {r.query_id: r for r in stats}
-            for qid in pending:
-                s = state[qid]
-                r = by_id.get(qid)
-                guaranteed = (s["radius"] - 1) * min_width
-                kth_ok = False
-                if r is not None and r.n >= s["k"]:
-                    chord = math.sqrt(max(0.0, r.kth_d2))
-                    theta_k = 2.0 * math.asin(min(1.0, chord / 2.0))
-                    kth_ok = theta_k <= guaranteed
-                if kth_ok or s["_covered"]:
-                    s["done"] = True
-                else:
-                    s["radius"] = min(s["radius"] * 2, 2 ** 14)
-        # final pass over every query at its terminal radius.
-        # localCheckpoint materializes the (<= sum-of-k rows) result on
-        # the EXECUTORS and cuts the lineage, so the cached pages
-        # projection can be released before returning without
-        # recompute risk — and without funneling the result through
-        # driver memory (a collect+createDataFrame would make the
-        # driver the bottleneck for large query sets).
-        final = ranked_hits(sorted(state.keys())) \
-            .filter(F.col("rank") <= F.col("k")) \
-            .select("query_id", "url", "rank", "d2") \
-            .localCheckpoint(eager=True)
-    finally:
-        pages_l.unpersist()
-    return final
+    qid, qx, qy, qz, k = _query_arrays(queries, k_default)
+    kept = pages.select("url", "lat", "lng").mapInPandas(
+        _partition_top_k(qid, qx, qy, qz, k), _KEPT_SCHEMA)
+    w = Window.partitionBy("query_id").orderBy("d2", "url")
+    return (kept.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= F.col("k"))
+            .select("query_id", "url", "rank", "d2"))
 
 
 def demo_knn_queries(n: int = 20):

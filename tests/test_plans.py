@@ -158,6 +158,22 @@ def test_distance_join_plan_equi_no_cartesian_udfs_cached(spark):
         reg.pop().unpersist()
 
 
+def test_knn_is_one_map_in_pandas_over_unshuffled_pages(spark):
+    """knn_join scores pages in ONE MapInPandas and ranks above it: no
+    geocode kernel or Arrow UDF node, and no Exchange beneath the
+    MapInPandas, so the pages side is never shuffled."""
+    from s2geometry_spark.operators.knn import demo_knn_queries, knn_join
+    pages = load_pages(spark, SF_DIR)
+    out = knn_join(pages, spark, demo_knn_queries())
+    plan = X.formatted_plan(out, "simple")
+    assert plan.count("MapInPandas") == 1, plan
+    assert "cell_id_udf" not in plan and "ArrowEvalPython" not in plan, plan
+    # the simple plan prints top-down and every node above the
+    # MapInPandas has one child, so all text after it is its subtree
+    above, below = plan.split("MapInPandas")
+    assert "Exchange" in above and "Exchange" not in below, plan
+
+
 def test_geocode_job_geocodes_once_and_prunes_batches(spark, tmp_path):
     """run_geocode_job stages its batch-keyed pages in one write with a
     single geocode, and reads each batch back as a partition-pruned

@@ -648,65 +648,8 @@ def test_dedup_job_refuses_mismatched_resume(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# kNN ring enumeration boundedness (round-2 review: the driver-side
-# BFS must stay O(1) cells per query regardless of radius)
+# kNN join (operators/knn.py)
 # ---------------------------------------------------------------------------
-
-def test_knn_enum_bounded_and_superset():
-    import numpy as np
-
-    from s2geometry_spark import kernels as K
-    from s2geometry_spark.operators import knn
-
-    # 1. cell count stays bounded through the full radius-doubling
-    # schedule (1..2^14) at every plausible ring level
-    cap = (2 * (knn.R_MAX_RING + 2) + 1) ** 2
-    center30 = int(K.latlng_degrees_to_cell_id(
-        np.array([37.77]), np.array([-122.42]))[0])
-    for level in (4, 8, 12):
-        c = int(K.parent(np.array([center30], dtype=np.uint64), level)[0])
-        r = 1
-        while r <= 2 ** 14:
-            el, r_enum = knn._enum_params(level, r)
-            cells = knn._ring_cells(
-                int(K.parent(np.array([c], dtype=np.uint64), el)[0]), r_enum)
-            n_sphere = 6 * 4 ** el
-            assert len(cells) <= max(cap, 0) or len(cells) >= n_sphere, \
-                (level, r, el, r_enum, len(cells))
-            assert len(cells) <= cap + n_sphere  # absolute sanity
-            if len(cells) < n_sphere:
-                assert len(cells) <= cap, (level, r, len(cells))
-            r *= 2
-
-    # 2. superset: the coarse enumeration must cover the fine ring —
-    # every level-L cell within Chebyshev r of the center has its
-    # enum-level ancestor in the coarse set
-    level, r = 10, 37  # forces d > 0 (r > R_MAX_RING)
-    c = int(K.parent(np.array([center30], dtype=np.uint64), level)[0])
-    fine = knn._ring_cells(c, r)
-    el, r_enum = knn._enum_params(level, r)
-    coarse = knn._ring_cells(
-        int(K.parent(np.array([c], dtype=np.uint64), el)[0]), r_enum)
-    fine_parents = {int(v) for v in K.parent(
-        np.array(sorted(fine), dtype=np.uint64), el)}
-    assert fine_parents.issubset(coarse), \
-        f"{len(fine_parents - coarse)} fine-ring ancestors missing"
-
-
-def test_knn_estimate_rows_bounded_sample(spark):
-    """estimate_rows must land within the order of magnitude on a
-    uniform input (it reads only sample_parts splits — r4 verdict:
-    the exact count() it replaces was knn_join's one extra full scan
-    at level=None) and shift choose_ring_level by at most one."""
-    from s2geometry_spark.operators.knn import (choose_ring_level,
-                                                estimate_rows)
-    df = spark.range(10_000).repartition(8)
-    est = estimate_rows(df, sample_parts=3)
-    assert 5_000 <= est <= 20_000, est
-    assert abs(choose_ring_level(est, 10)
-               - choose_ring_level(10_000, 10)) <= 1
-    assert estimate_rows(spark.range(0).repartition(2)) == 0
-
 
 def test_knn_empty_query_list_returns_empty(spark, pages):
     """knn_join with no queries must return an empty, correctly-shaped
@@ -717,12 +660,9 @@ def test_knn_empty_query_list_returns_empty(spark, pages):
     assert out.count() == 0
 
 
-def test_knn_raising_call_releases_pages_projection(spark, pages,
-                                                    monkeypatch):
+def test_knn_raising_call_releases_pages_projection(spark, pages):
     """A raising knn_join must leave the session's CacheManager as it
-    found it: neither an invalid query (validated before the persist)
-    nor a failure inside a round (released by the finally) may strand
-    the persisted pages projection."""
+    found it."""
     from s2geometry_spark.operators import knn
     cm = spark._jsparkSession.sharedState().cacheManager()
     before = cm.numCachedEntries()
@@ -730,42 +670,40 @@ def test_knn_raising_call_releases_pages_projection(spark, pages,
         knn.knn_join(pages, spark, [{"query_id": 0, "lng": 10.0}])
     assert cm.numCachedEntries() == before
 
-    def boom(*_args):
-        raise RuntimeError("ring expansion failed")
 
-    monkeypatch.setattr(knn, "_batched_ring_cells", boom)
-    with pytest.raises(RuntimeError, match="ring expansion failed"):
-        knn.knn_join(pages, spark, [{"query_id": 0, "lat": 1.0,
-                                     "lng": 10.0}])
-    assert cm.numCachedEntries() == before
-
-
-def test_knn_first_stats_round_finishes_a_ring_local_query(spark, pages,
-                                                         monkeypatch):
-    """A query whose top-k lies next to it finishes after ONE stats
-    round: every query starts at ring radius 2, because at radius 1 the
-    termination bound (r - 1) * min_width is 0 and that round could
-    only end exhaustive queries."""
+def test_knn_builds_without_collect(spark, pages):
+    """Building the kNN frame runs no Spark job, so nothing is collected
+    on the driver; its one pass, run later, still finds a neighbour at a
+    tiny distance."""
     from s2geometry_spark.operators.knn import knn_join
     p = pages.select("lat", "lng").orderBy("url").first()
     # just off a page point: the nearest page is at a tiny, non-zero
-    # distance (a zero distance would pass even a zero bound)
+    # distance
     q = {"query_id": 0, "lat": p["lat"] + 1e-6, "lng": p["lng"], "k": 1}
-    collects = []
-    frame = type(pages)  # the classic DataFrame, whose collect runs
-    real_collect = frame.collect
-
-    def collect(self):
-        collects.append(1)
-        return real_collect(self)
-
-    monkeypatch.setattr(frame, "collect", collect)
-    out = knn_join(pages, spark, [q])
-    monkeypatch.undo()
-    assert len(collects) == 1
+    sc = spark.sparkContext
+    group = f"knn-build-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "knn_join build")
+    try:
+        out = knn_join(pages, spark, [q])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     rows = out.collect()
     assert len(rows) == 1 and rows[0]["rank"] == 1
     assert 0.0 < rows[0]["d2"] < 1e-12
+
+
+def test_knn_collect_persists_nothing(spark):
+    """A collected kNN result pins no RDD and adds no cache entry."""
+    from s2geometry_spark.operators.knn import demo_knn_queries, knn_join
+    pages = load_pages(spark, SF_DIR)
+    jsc = spark.sparkContext._jsc
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    rdds, entries = set(jsc.getPersistentRDDs().keys()), \
+        cm.numCachedEntries()
+    assert knn_join(pages, spark, demo_knn_queries()).collect()
+    assert set(jsc.getPersistentRDDs().keys()) == rdds
+    assert cm.numCachedEntries() == entries
 
 
 def test_vectorize_tiles_matches_driver_normalize(spark, pages):
