@@ -395,10 +395,10 @@ def write_baseline() -> None:
             f"Explicit salting removes the straggler "
             f"({sk['salted_speedup_vs_naive']}x vs naive). AQE's runtime "
             "split edges it out for THIS pure-join case, but only fires "
-            "inside re-plannable join stages — the (tile, salt) layout "
-            "also de-skews tile-partitioned writes and hot-key "
-            "aggregations (write_tiled / repartition_by_tile), where "
-            "AQE offers nothing; n_salt=32 measured slower (2.84s) — "
+            "inside re-plannable join stages. Tile-partitioned writes "
+            "(write_tiled, geocode_job) do not salt: they rebalance on "
+            "the tile and AQE's rebalance split breaks up oversized "
+            "partitions. n_salt=32 measured slower (2.84s) — "
             "covering fan-out overhead passes its optimum around 8.",
             "",
         ]

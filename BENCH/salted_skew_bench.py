@@ -15,11 +15,12 @@ times the SAME covering shuffle-join three ways:
      pages hash into 8 sub-buckets, no oversized partition EXISTS.
 
 Why explicit salting when AQE can split skewed JOIN partitions:
-AQE's skew handling fires only inside join stages it can re-plan; the
-(tile, salt) layout also de-skews tile-partitioned WRITES and
-aggregations over hot keys (repartition_by_tile / write_tiled), where
-AQE offers nothing. This bench pins the join case; the numbers land in
-BENCH/BASELINE.md.
+AQE's skew-join handling fires only inside join stages it can re-plan.
+Tile-partitioned WRITES (write_tiled, geocode_job) no longer salt: they
+rebalance on the tile and AQE's rebalance split
+(optimizeSkewsInRebalancePartitions) breaks an oversized partition up
+across the map tasks that wrote it. This bench pins the join case; the
+numbers land in BENCH/BASELINE.md.
 
 Run: python BENCH/salted_skew_bench.py   (~3 min, exclusive host).
 Env: SKEW_ROWS (default 8_000_000), SKEW_FRAC (default 0.3).

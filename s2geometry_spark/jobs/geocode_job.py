@@ -15,38 +15,39 @@ metadata and per-file lineage in the metrics table. A re-run reads
 granularity because TableIO's manifest swap is atomic and data written
 without a manifest entry is invisible.
 
-Geocode once, write once: the run works in a run-scoped dir
-``<root>/<table>/_staging-<uuid>``. It writes every input row, tagged
-with its batch id, in ONE write partitioned by that id (``keyed/``);
-the hot-tile histogram reads those staged files. ONE more Spark job
-then reads this run's batches from them (a partition-pruned scan, no
-geocode UDF), repartitions by (tile, salt) and writes them
-``partitionBy(_batch, tile)`` into ``batches/``. Each batch is then
-committed in batch order by ``io.append`` of its ``_batch=b`` dir,
-which renames it into ``snap-<id>`` (layout ``cell_l4=<t>/part-*``)
-and swaps the manifest; the lineage rows come from the files' Parquet
-footers, so a commit starts no Spark job (a Spark job per commit was
-the fixed cost that set this job's time: a batch holds a few hundred
-rows). The input is scanned three times per run: the geocoding staging
-write, the histogram and the batch write (four when each batch wrote
-and re-read its own files).
+Geocode once, write once: the run writes every input row, tagged with
+its batch id, in ONE write ``partitionBy(_batch, tile)`` into a
+run-scoped dir ``<root>/<table>/_staging-<uuid>``. The rows per tile
+come from the part files' Parquet footers (each file sits in one
+``cell_l4=<t>`` dir and each tile in one batch, so the counts are exact
+and take no Spark job); the hot-tile list is the tiles above the
+threshold. Each pending batch is then committed in batch order by
+``io.append`` of its ``_batch=b`` dir, which renames it into
+``snap-<id>`` (layout ``cell_l4=<t>/part-*``) and swaps the manifest;
+the lineage rows come from the same footers, so a commit starts no
+Spark job (a Spark job per commit was the fixed cost that set this
+job's time: a batch holds a few hundred rows). The input is scanned
+once per run.
 
 (Filtering the geocoded pages by batch instead pushes the batch
 predicate below the geocode projection and re-runs the UDF over the
-whole input once per batch; a filter on ``_batch`` before the staging
-write does the same, so the staging write is unfiltered — a resume run
-stages all rows and writes only its pending batches.) The staging dir,
-with any batch not yet committed, is removed when the run ends, by
-success or by error; a killed run's leftover is never read, because
-readers and ``done_keys`` see only manifest entries — the same
-contract as an orphan ``snap-*`` dir. ``IcebergTableIO`` has no
-``root``: its swap point needs a staging location (e.g. a scratch
-table or path) for this step.
+whole input once per batch; a filter on ``_batch`` before the write
+does the same, so the write is unfiltered — a resume run writes all
+rows and commits only its pending batches.) The staging dir, with any
+batch not yet committed, is removed when the run ends, by success or
+by error; a killed run's leftover is never read, because readers and
+``done_keys`` see only manifest entries — the same contract as an
+orphan ``snap-*`` dir. ``IcebergTableIO`` has no ``root``: its swap
+point needs a staging location (e.g. a scratch table or path) for this
+step.
 
-At 10^12 rows this shape holds: the batch write is a partition-pruned
-scan (tile is the Iceberg identity-partition column), the hot-tile
-histogram is a counts-only aggregate, and the write is salted so no
-straggler task owns a mega-tile.
+At 10^12 rows this shape holds: the write is one pass over the input
+(tile is the Iceberg identity-partition column), the hot-tile list is
+read from file footers, and the write rebalances on the tile, so AQE
+(``optimizeSkewsInRebalancePartitions``) splits a partition above
+``advisoryPartitionSizeInBytes`` across the map tasks that wrote it
+and no straggler task owns a mega-tile (it cannot split what one map
+task wrote).
 """
 
 from __future__ import annotations
@@ -55,6 +56,9 @@ import os
 import shutil
 import uuid
 import zipfile
+from collections import Counter
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,7 +73,6 @@ from s2geometry_spark.sources.pages import load_pages
 TILE_LEVEL = 4
 N_BATCHES = 8
 HOT_THRESHOLD_ROWS = 50_000
-N_SALT = 8
 OUT_COLS = ("url", "warc_ts", "text", "lang", "h", "lat", "lng",
             "cell_id", "cell_l4", "cell_l8", "cell_l12")
 BATCH_COL = "_batch"
@@ -88,13 +91,19 @@ def keyed_pages(spark: SparkSession, sf_dir: str,
                         batch_of(TL.tile_col(TILE_LEVEL), n_batches)))
 
 
-def stage(keyed: DataFrame, path: str) -> DataFrame:
-    """Write `keyed` once, partitioned by BATCH_COL, and read it back.
-
-    The read takes `keyed`'s schema: an empty input writes no part
-    files, and schema inference would fail on the empty dir."""
-    keyed.write.partitionBy(BATCH_COL).parquet(path)
-    return keyed.sparkSession.read.schema(keyed.schema).parquet(path)
+def tile_counts(root: str, tcol: str) -> Counter:
+    """Rows per tile under `root`, from the footers of the part files
+    in its ``<tcol>=<t>`` dirs (no Spark job)."""
+    counts: Counter = Counter()
+    for dirpath, _dirs, files in os.walk(root):
+        name, _, tile = os.path.basename(dirpath).partition("=")
+        if name != tcol:
+            continue
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                counts[int(tile)] += pq.read_metadata(
+                    os.path.join(dirpath, f)).num_rows
+    return counts
 
 
 def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
@@ -109,8 +118,8 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
     """
     done = io.done_keys(table)
     if done >= set(range(n_batches)):
-        # nothing left to run: return before the input scan and the
-        # hot-tile histogram, so an idempotent re-run starts no job
+        # nothing left to run: return before the write, so an
+        # idempotent re-run starts no job
         return {"committed": [], "skipped": list(range(n_batches)),
                 "hot_tiles": []}
     committed, skipped, run = [], [], []
@@ -124,17 +133,13 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
             run.append(b)
     tcol = TL.tile_col(TILE_LEVEL)
     staging = os.path.join(io.root, table, f"_staging-{uuid.uuid4().hex}")
-    batches = os.path.join(staging, "batches")
     try:
-        staged = stage(keyed_pages(spark, sf_dir, n_batches),
-                       os.path.join(staging, "keyed"))
-        hot = TL.hot_tiles(staged, TILE_LEVEL, hot_threshold)
-        todo = staged.filter(F.col(BATCH_COL).isin(run))
-        (TL.repartition_by_tile(todo, TILE_LEVEL, hot, N_SALT)
-         .drop(TL.SALT_COL)
-         .write.partitionBy(BATCH_COL, tcol).parquet(batches))
+        (keyed_pages(spark, sf_dir, n_batches).hint("rebalance", tcol)
+         .write.partitionBy(BATCH_COL, tcol).parquet(staging))
+        counts = tile_counts(staging, tcol)
+        hot = sorted(t for t, n in counts.items() if n > hot_threshold)
         for b in run:
-            files = os.path.join(batches, f"{BATCH_COL}={b}")
+            files = os.path.join(staging, f"{BATCH_COL}={b}")
             # a batch with no rows has no dir: commit an empty snapshot
             os.makedirs(files, exist_ok=True)
             io.append(files, table, partition_by=tcol, lineage_col=tcol,

@@ -2,24 +2,27 @@
 (SURVEY.md B20/B21; north_star: "tile assignment = S2CellId.parent(level)
 partitioning and explicit salting of hot cells for skew").
 
-Why explicit salting exists next to AQE: AQE's skew-join splitting only
-fires inside sort-merge joins after a shuffle is already materialized,
-and does nothing for skewed *writes* or *aggregations over
-high-cardinality state*. Hash-geocoded urls are uniform, but real web
-corpora are not (a popular host's pages share a tile), so the engine
-carries a first-class salting path:
+Skew on writes and on joins takes two different tools. A
+tile-partitioned WRITE is a ``rebalance`` on the tile: AQE
+(``optimizeSkewsInRebalancePartitions``, on by default) splits a
+partition above ``advisoryPartitionSizeInBytes`` across the map tasks
+that produced it, so no single task writes a mega-tile (it cannot split
+what one map task wrote). AQE's skew-join splitting fires only inside
+join stages it re-plans, so the shuffle JOIN over hot tiles carries
+explicit salting (measured in BENCH/salted_skew_bench.py). Hash-geocoded
+urls are uniform, but real web corpora are not (a popular host's pages
+share a tile):
 
 1. ``tile_histogram``  — one cheap pass: rows per tile (B12).
 2. ``hot_tiles``       — tiles whose count exceeds a threshold.
 3. ``add_salt``        — salt = pmod(xxhash64(url), n_salt) on hot
    tiles, 0 elsewhere: deterministic, no RNG, reproducible lineage.
-4. ``repartition_by_tile`` — shuffle on (tile, salt): hot tiles fan
-   out to n_salt tasks, cold tiles stay single-task. Used before
-   tile-partitioned writes so no single task owns a mega-tile.
-5. ``salted_equi_join`` — shuffle-join variant of the covering equi
+4. ``salted_equi_join`` — shuffle-join variant of the covering equi
    join for when coverings are NOT broadcastable (10^6+ regions):
    replicates only the hot covering rows n_salt times (explode), salts
    the pages side, joins on (cell, salt). Cold cells pay nothing.
+5. ``write_tiled``     — the tile-partitioned write, rebalanced on the
+   tile.
 """
 
 from __future__ import annotations
@@ -64,17 +67,6 @@ def add_salt(pages: DataFrame, level: int, hot: list[int],
     return pages.withColumn(SALT_COL, F.when(is_hot, salt).otherwise(F.lit(0)))
 
 
-def repartition_by_tile(pages: DataFrame, level: int,
-                        hot: list[int] | None = None,
-                        n_salt: int = 8,
-                        id_col: str = "url") -> DataFrame:
-    """Shuffle to (tile, salt) task granularity for a skew-safe
-    tile-partitioned write. Without hot tiles this degenerates to plain
-    repartition(tile) — the B21 layout."""
-    salted = add_salt(pages, level, hot or [], n_salt, id_col)
-    return salted.repartition(F.col(tile_col(level)), F.col(SALT_COL))
-
-
 def salted_equi_join(pages: DataFrame, coverings: DataFrame,
                      level: int, hot: list[int], n_salt: int = 8,
                      id_col: str = "url") -> DataFrame:
@@ -114,14 +106,13 @@ def salted_equi_join(pages: DataFrame, coverings: DataFrame,
 
 
 def write_tiled(pages: DataFrame, path: str, level: int,
-                hot: list[int] | None = None, n_salt: int = 8,
                 mode: str = "overwrite") -> None:
     """B21: tile-partitioned parquet layout (identity partition on
-    cell_l{K}), skew-safe via (tile, salt) task placement. The Iceberg
-    deployment swaps .partitionBy for an identity partition spec —
-    see io/table_io.py."""
-    df = repartition_by_tile(pages, level, hot, n_salt).drop(SALT_COL)
-    df.write.mode(mode).partitionBy(tile_col(level)).parquet(path)
+    cell_l{K}), skew-safe via AQE's rebalance split of oversized tile
+    partitions. The Iceberg deployment swaps .partitionBy for an
+    identity partition spec — see io/table_io.py."""
+    (pages.hint("rebalance", tile_col(level))
+     .write.mode(mode).partitionBy(tile_col(level)).parquet(path))
 
 
 def write_bucketed(pages: DataFrame, table_name: str, level: int,

@@ -174,24 +174,42 @@ def test_knn_is_one_map_in_pandas_over_unshuffled_pages(spark):
     assert "Exchange" in above and "Exchange" not in below, plan
 
 
-def test_geocode_job_geocodes_once_and_prunes_batches(spark, tmp_path):
-    """run_geocode_job stages its batch-keyed pages in one write with a
-    single geocode, and reads each batch back as a partition-pruned
-    scan with no Python node. (Filtering the geocoded pages by batch
-    instead is the null-intolerant-predicate trap: the filter is pushed
-    below the geocode projection and re-runs the UDF per batch.)"""
+def test_geocode_job_is_one_write_with_one_geocode(spark, tmp_path,
+                                                   monkeypatch):
+    """run_geocode_job writes every batch in ONE write of the keyed
+    pages: that write's plan has one ArrowEvalPython and one parquet
+    scan (no staging re-read, no hot-tile histogram), and a run starts
+    at most 3 Spark jobs. (Filtering the geocoded pages by batch before
+    the write is the null-intolerant-predicate trap: the filter is
+    pushed below the geocode projection and re-runs the UDF per
+    batch.)"""
     import re
-    from s2geometry_spark.jobs.geocode_job import (BATCH_COL, keyed_pages,
-                                                   stage)
-    keyed = keyed_pages(spark, SF_DIR)
-    plan = X.formatted_plan(keyed)
+    from pyspark.sql import DataFrameWriter
+    from s2geometry_spark.io.table_io import ParquetTableIO
+    from s2geometry_spark.jobs.geocode_job import run_geocode_job
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(X.formatted_plan(self._df))
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    sc = spark.sparkContext
+    sc.setJobGroup("geocode_job_one_write", "one full run")
+    try:
+        r = run_geocode_job(spark, SF_DIR, ParquetTableIO(str(tmp_path)))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r["committed"] == list(range(8)), r
+    assert len(plans) == 1, plans
+    plan = plans[0]
     assert len(set(re.findall(r"ArrowEvalPython \((\d+)\)", plan))) == 1, \
         plan
-    staged = stage(keyed, str(tmp_path / "staging"))
-    batch = X.formatted_plan(staged.filter(F.col(BATCH_COL) == 3)
-                             .drop(BATCH_COL))
-    assert "ArrowEvalPython" not in batch, batch
-    assert re.search(r"PartitionFilters: \[[^\]]*" + BATCH_COL, batch), batch
+    assert len(set(re.findall(r"Scan parquet [^(\n]*\((\d+)\)", plan))) \
+        == 1, plan
+    jobs = sc.statusTracker().getJobIdsForGroup("geocode_job_one_write")
+    assert 1 <= len(jobs) <= 3, jobs
 
 
 def test_vocab_topn_is_take_ordered(spark):

@@ -336,7 +336,7 @@ def test_geocode_job_batches_all_nonempty(spark, pages):
 
 
 JOB_TABLE = "pages_tiled"
-JOB_HOT = 2  # sf0.01 has level-4 tiles of 3-6 rows: some hot, some salted
+JOB_HOT = 2  # sf0.01 has level-4 tiles of 3-6 rows: some hot, some not
 
 
 def _staging_dirs(io: ParquetTableIO) -> list[str]:
@@ -430,8 +430,8 @@ def test_geocode_job_skipped_lists_only_batches_before_the_break(
 
 
 def test_geocode_job_empty_input(spark, tmp_path):
-    """A 0-row input commits 8 empty snapshots (the staged read takes
-    the explicit schema: an empty staging dir has no part files)."""
+    """A 0-row input commits 8 empty snapshots (an empty write leaves
+    no batch dirs: each is made before its commit)."""
     sf_dir = str(tmp_path / "sf_empty")
     spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(0) \
         .write.parquet(f"{sf_dir}/documents.parquet")
@@ -441,6 +441,59 @@ def test_geocode_job_empty_input(spark, tmp_path):
                  "hot_tiles": []}
     assert len(io.history(JOB_TABLE)) == 8
     assert _staging_dirs(io) == []
+
+
+def test_geocode_job_hot_tiles_from_footers_match_histogram(spark,
+                                                           tmp_path):
+    """The hot list counted from the written files' footers equals the
+    histogram's over the same keyed pages: at threshold 0 (every tile),
+    at JOB_HOT, and at the largest tile's count (no tile exceeds it)."""
+    keyed = keyed_pages(spark, SF_DIR)
+    largest = max(r["n_rows"]
+                  for r in TL.tile_histogram(keyed, LEVEL).collect())
+    for thr in (0, JOB_HOT, largest):
+        io = ParquetTableIO(str(tmp_path / f"thr{thr}"))
+        r = run_geocode_job(spark, SF_DIR, io, hot_threshold=thr)
+        assert r["hot_tiles"] == TL.hot_tiles(keyed, LEVEL, thr), thr
+    assert r["hot_tiles"] == []
+
+
+def _files_per_tile(io: ParquetTableIO) -> list[int]:
+    prefix = f"{TL.tile_col(LEVEL)}="
+    return [sum(f.endswith(".parquet")
+                for f in os.listdir(os.path.join(snap["dir"], d)))
+            for snap in io.history(JOB_TABLE)
+            for d in os.listdir(snap["dir"]) if d.startswith(prefix)]
+
+
+def test_geocode_job_rebalance_splits_a_tile_over_files(spark, tmp_path,
+                                                        one_shot):
+    """The write's skew guard is AQE's rebalance split. Over an input
+    of 8 files, the rebalance gathers each tile into one file at the
+    default advisory partition size; at 2 KiB some tile is split over
+    more than one task (more than one file in its tile dir). Both runs
+    commit the one-shot run's rows. A single-split input cannot show
+    the split: AQE does not split what one map task wrote."""
+    sf_dir = str(tmp_path / "sf_split")
+    spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(8) \
+        .write.parquet(f"{sf_dir}/documents.parquet")
+    io_whole = ParquetTableIO(str(tmp_path / "whole"))
+    run_geocode_job(spark, sf_dir, io_whole, hot_threshold=JOB_HOT)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2k")
+    try:
+        io_split = ParquetTableIO(str(tmp_path / "split"))
+        r = run_geocode_job(spark, sf_dir, io_split, hot_threshold=JOB_HOT)
+    finally:
+        spark.conf.set(key, old)
+    assert r["committed"] == list(range(8)), r
+    assert max(_files_per_tile(io_whole)) == 1
+    assert max(_files_per_tile(io_split)) > 1
+    io_full, full = one_shot
+    assert _same_rows(io_whole, io_full, spark)
+    assert _same_rows(io_split, io_full, spark)
+    assert r["hot_tiles"] == full["hot_tiles"]
 
 
 def test_package_pyfiles(tmp_path):
