@@ -28,7 +28,7 @@ from s2geometry_spark.operators.distjoin import (chord2_of_angle,
                                                  distance_join)
 from s2geometry_spark.operators.knn import demo_knn_queries, knn_join
 from s2geometry_spark.operators.pip_join import (
-    covering_range_join, coverings_df, pip_join, region_overlap_candidates)
+    covering_join, coverings_df, pip_join, region_overlap_candidates)
 from s2geometry_spark.sources.pages import (documents_to_pages,
                                             load_documents, load_pages)
 
@@ -117,7 +117,7 @@ def _q_pip_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B8: hierarchical covering + BETWEEN range join, all 8 regions."""
+    """B8: hierarchical covering + ancestor hash join, all 8 regions."""
     pages = load_pages(spark, sf_dir)
     return pip_join(pages, spark, demo_regions(), strategy="range",
                     max_cells=64).select("url", "region_id")
@@ -145,11 +145,10 @@ def _q_region_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_covering_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw covering range join (no exact filter) — validates the
-    coverer output + BETWEEN machinery against DuckDB directly."""
+    """pip_join's raw covering join (no exact filter) vs DuckDB, whose
+    twin matches leaf order keys BETWEEN the cells' range keys."""
     pages = load_pages(spark, sf_dir)
-    cov = coverings_df(spark, demo_regions(), max_cells=64)
-    return covering_range_join(pages, cov) \
+    return covering_join(pages, spark, demo_regions(), max_cells=64) \
         .select("url", "region_id", "is_interior")
 
 

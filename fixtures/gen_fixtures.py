@@ -194,7 +194,8 @@ def main():
         # engine covering for the range-join oracles: the hierarchical
         # level-sync covering (max_cells=64). The covering itself is
         # engine-generated (DuckDB cannot run a coverer); the gate
-        # validates the BETWEEN machinery over it plus the coverer's
+        # checks the engine's ancestor hash join against a BETWEEN
+        # join over it (an independent formulation) plus the coverer's
         # run-to-run determinism (live covering must equal the fixture).
         cov = pd.concat([covering_table(reg, max_cells=64) for reg in regions],
                         ignore_index=True)

@@ -97,7 +97,7 @@ def covering_table(region, max_cells: int = 64,
     `uniform_level` selects the uniform-level equi-join covering;
     otherwise `covering` under the `max_cells` budget. Columns and
     dtypes follow pip_join.COVERINGS_SCHEMA: region_id, signed int64
-    cell_id, int32 level, signed-flip order keys for BETWEEN range joins
+    cell_id, int32 level, signed-flip order keys for range-overlap joins
     (SURVEY §2.2) and is_interior. Built as numpy columns with one
     vectorized kernel call per column, never one per cell.
     """

@@ -1,21 +1,18 @@
 """Covering-based containment joins — the flagship operators (E3′).
 
-Two physical strategies over the same logical query
-"pages whose point lies inside region R":
+One physical join, ``covering_join``, serves both broadcast strategies
+of "pages whose point lies inside region R" (SURVEY B6 ``equi``: the
+uniform-level covering; B8 ``range``: the level-synchronous
+``max_cells`` covering). Covering cells are mutually disjoint
+(tests/test_coverer.py), so "leaf in the cell's leaf range" is the
+equality ``parent(leaf, level(cell)) == cell`` and no dedup is needed:
+each page is exploded into its ancestors at the covering's distinct
+levels (JVM bit algebra), which meet the cells in ONE
+BroadcastHashJoin. **No shuffle
+of pages** — the central performance property at 10^12 rows (asserted
+in tests/test_plans.py). ``salted`` is the non-broadcast shuffle path.
 
-* ``equi``  (SURVEY B6): uniform-level covering; broadcast hash join
-  ``pages.cell_l{K} == coverings.cell_id``. **No shuffle of pages** —
-  the central performance property at 10^12 rows (asserted via
-  plans/explain.py in benches). Each page has exactly one level-K cell
-  and covering cells are distinct, so no dedup is needed.
-
-* ``range`` (SURVEY B8): level-synchronous hierarchical covering
-  (coverer.covering, max_cells bound); broadcast range join ``cell_key
-  BETWEEN range_min_key AND range_max_key`` (BroadcastNestedLoopJoin —
-  fine because coverings are tiny). Covering cells are mutually
-  disjoint by construction (tests/test_coverer.py), so again no dedup.
-
-Both then apply the exact vectorized containment test ONLY to
+All then apply the exact vectorized containment test ONLY to
 non-interior candidate rows (the coverer's interior short-circuit,
 SURVEY §4.1) inside one Arrow-batched pandas UDF.
 """
@@ -46,18 +43,21 @@ COVERINGS_SCHEMA = StructType([
 ])
 
 
+def _coverings_df(spark: SparkSession, frames) -> DataFrame:
+    return spark.createDataFrame(
+        pd.concat(frames, ignore_index=True) if frames else [],
+        COVERINGS_SCHEMA)
+
+
 def coverings_df(spark: SparkSession, regions, uniform_level: int | None = None,
                  max_cells: int = 64) -> DataFrame:
     """The `coverings` dimension table (SURVEY §1.2), built on the
     driver — always broadcastable. One columnar frame per region
     (coverer.covering_table), handed to Spark as one pandas frame over
     Arrow; an empty catalog gives 0 rows with the same schema."""
-    frames = [covering_table(reg, max_cells=max_cells,
-                             uniform_level=uniform_level) for reg in regions]
-    if not frames:
-        return spark.createDataFrame([], COVERINGS_SCHEMA)
-    return spark.createDataFrame(pd.concat(frames, ignore_index=True),
-                                 COVERINGS_SCHEMA)
+    return _coverings_df(spark, [
+        covering_table(reg, max_cells=max_cells, uniform_level=uniform_level)
+        for reg in regions])
 
 
 def make_contains_udf(regions):
@@ -109,23 +109,31 @@ def make_contains_udf(regions):
     return contains_udf
 
 
-def covering_range_join(pages: DataFrame, cov: DataFrame) -> DataFrame:
-    """pages ⋈ broadcast(cov) on ``order_key(cell_id) BETWEEN
-    range_min_key AND range_max_key``, no exact filter.
-
-    coalesce(cond, false) keeps the condition null-tolerant: a plain
-    BETWEEN lets Catalyst infer ``isnotnull(cell_key)`` and re-inline the
-    cell_id_udf chain into a second ArrowEvalPython (the eqNullSafe trap
-    below; asserted in tests/test_plans.py). A null never matched anyway.
+def covering_join(pages: DataFrame, spark: SparkSession, regions,
+                  uniform_level: int | None = None,
+                  max_cells: int = 64) -> DataFrame:
+    """pages ⋈ broadcast(coverings_df(...)) where the covering cell is
+    an ancestor of, or equal to, the page's leaf ``cell_id``; no exact
+    filter; adds region_id and is_interior. The levels come from the
+    driver-side frames (no Spark job). The key is the ancestor id alone:
+    an S2 cell id encodes its level. Null-safe key: a plain `=` makes
+    Catalyst infer ``isnotnull``, push it through the geocode projection
+    and re-inline the cell_id_udf chain into a second ArrowEvalPython
+    (tests/test_plans.py). The covering's keys are non-nullable, so <=>
+    matches what `=` would; a NULL cell_id (no point) matches nothing.
     """
-    keyed = pages.withColumn("cell_key", geo.order_key_col(F.col("cell_id")))
-    cov = F.broadcast(cov.select("region_id", "range_min_key",
-                                 "range_max_key", "is_interior"))
-    return keyed.join(
-        cov,
-        F.coalesce((F.col("cell_key") >= cov["range_min_key"])
-                   & (F.col("cell_key") <= cov["range_max_key"]),
-                   F.lit(False)), "inner")
+    frames = [covering_table(reg, max_cells=max_cells,
+                             uniform_level=uniform_level) for reg in regions]
+    levels = sorted({int(lvl) for f in frames for lvl in f["level"].unique()})
+    # no level (empty covering): any one level's key matches nothing;
+    # one level (equi) skips the per-row Generate of an explode
+    keys = [geo.parent_col(F.col("cell_id"), lvl) for lvl in levels or [0]]
+    anc = keys[0] if len(keys) == 1 else F.explode(F.array(*keys))
+    cov = F.broadcast(_coverings_df(spark, frames).select(
+        F.col("cell_id").alias("_cov_cell"), "region_id", "is_interior"))
+    probe = pages.select("*", anc.alias("_anc"))
+    return (probe.join(cov, probe["_anc"].eqNullSafe(cov["_cov_cell"]))
+            .drop("_anc", "_cov_cell"))
 
 
 def pip_join(pages: DataFrame, spark: SparkSession, regions,
@@ -135,17 +143,16 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
              n_salt: int = 8) -> DataFrame:
     """pages ⋈ regions containment join → (url, region_id, ...pages cols).
 
-    `pages` must carry lat, lng and (for equi) cell_l{level} or (for
-    range) cell_id — i.e. anything from sources.pages.geocode_pages.
+    `pages` must carry lat, lng and a leaf cell_id, plus (for salted)
+    cell_l{level} — i.e. anything from sources.pages.geocode_pages.
 
     Strategies (all verified row-identical):
-    * "equi"  — broadcast hash join on the uniform-level covering +
-      exact post-filter UDF. Two Python hops (geocode upstream +
-      containment) — the general shape; coverings can be any size.
-      Also the streaming path: Structured Streaming runs it as an
-      inner stream-static broadcast join
+    * "equi"  — `covering_join` over the uniform covering at `level`,
+      then the exact post-filter UDF. Two Python hops (geocode upstream
+      + containment). Also the streaming path: Structured Streaming
+      runs it as an inner stream-static broadcast join
       (streaming.tile_stream.streaming_pip_counts).
-    * "range" — hierarchical covering, broadcast BETWEEN join.
+    * "range" — the same join over the `max_cells` hierarchical covering.
     * "salted" — the NON-broadcast scale path (tiles.salted_equi_join):
       shuffle-hash join on (tile, salt) with hot tiles fanned out
       n_salt ways, for region catalogs too big to broadcast (10^6+
@@ -165,29 +172,10 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
                         hot_threshold if hot_threshold is not None else 0)
         joined = salted_equi_join(pages, cov_sel, level, hot,
                                   n_salt=n_salt).drop("cell_id")
-    elif strategy == "equi":
-        cov = coverings_df(spark, regions, uniform_level=level)
-        cov_sel = cov.select("region_id",
-                             F.col("cell_id").alias("_cov_cell"),
-                             "is_interior")
-        # Null-safe equality (<=>) instead of `=`: with a plain equality
-        # key Catalyst infers `isnotnull(cell_l{K})` for the join, pushes
-        # it through the geocode projection, and re-inlines the ENTIRE
-        # cell_id_udf chain into a second ArrowEvalPython over every scan
-        # row — doubling the Python-kernel bill (the dominant per-row
-        # cost) at 10^12 rows. `<=>` is not null-intolerant, so no
-        # isnotnull constraint is generated and the kernel runs exactly
-        # once (asserted in tests/test_plans.py). Row-identical to `=`
-        # here: COVERINGS_SCHEMA declares cell_id non-nullable, so
-        # null<=>null matches cannot occur; BroadcastHashJoin supports
-        # null-safe keys natively.
-        joined = pages.join(
-            F.broadcast(cov_sel),
-            pages[f"cell_l{level}"].eqNullSafe(cov_sel["_cov_cell"]),
-            "inner").drop("_cov_cell")
-    elif strategy == "range":
-        cov = coverings_df(spark, regions, max_cells=max_cells)
-        joined = covering_range_join(pages, cov)
+    elif strategy in ("equi", "range"):
+        joined = covering_join(
+            pages, spark, regions, max_cells=max_cells,
+            uniform_level=level if strategy == "equi" else None)
     else:
         raise ValueError(strategy)
     # One pass with the interior flag pushed INTO the UDF. Two rejected

@@ -48,11 +48,13 @@ def tile_histogram(pages: DataFrame, level: int) -> DataFrame:
 
 def hot_tiles(pages: DataFrame, level: int, threshold: int) -> list[int]:
     """Tiles with more than `threshold` rows (driver-side list; the hot
-    set is small by definition — it's the skewed head)."""
+    set is small by definition — it's the skewed head). The NULL tile
+    (no point) joins nothing; a Spark filter on it would re-inline the
+    geocode UDF, so it is dropped here."""
     rows = (tile_histogram(pages, level)
             .filter(F.col("n_rows") > threshold)
             .select("tile").collect())
-    return sorted(r["tile"] for r in rows)
+    return sorted(r["tile"] for r in rows if r["tile"] is not None)
 
 
 def add_salt(pages: DataFrame, level: int, hot: list[int],

@@ -24,14 +24,14 @@ def formatted_plan(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
-def count_shuffles(plan: str) -> int:
-    """Shuffle exchanges only — BroadcastExchange is not a shuffle.
+def count_nodes(plan: str, node: str) -> int:
+    """Formatted-mode node headers "(n) <node>": the tree drawing and
+    longer names (BroadcastExchange for Exchange) do not count."""
+    return len(re.findall(rf"\(\d+\) {node}\b", plan))
 
-    Counts formatted-mode node headers "(n) Exchange"; the word
-    Exchange alone would also match BroadcastExchange, and the
-    hashpartitioning argument lives on a separate Arguments: line.
-    """
-    return len(re.findall(r"\(\d+\) Exchange\b", plan))
+
+def count_shuffles(plan: str) -> int:
+    return count_nodes(plan, "Exchange")  # BroadcastExchange is no shuffle
 
 
 def has_broadcast_join(plan: str) -> bool:

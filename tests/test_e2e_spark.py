@@ -91,17 +91,26 @@ def test_text_passthrough_invariant(spark):
 
 
 def test_equi_and_range_strategies_agree(spark):
-    """Same logical query, both physical strategies, identical output."""
-    from s2geometry_spark.demo_regions import demo_regions
+    """Same logical query, both strategies' coverings, identical
+    output. The second input's covering (max_cells=1024, a tiny cap
+    added) spans 7+ levels down to level-30 leaf cells."""
+    from s2geometry_spark.coverer import covering_table
+    from s2geometry_spark.demo_regions import demo_regions, tiny_cap
     from s2geometry_spark.operators.pip_join import pip_join
     from s2geometry_spark.sources.pages import load_pages
     pages = load_pages(spark, SF_DIR)
-    a = pip_join(pages, spark, demo_regions(), strategy="equi", level=4) \
-        .select("url", "region_id")
-    b = pip_join(pages, spark, demo_regions(), strategy="range", max_cells=64) \
-        .select("url", "region_id")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    deep = demo_regions() + [tiny_cap()]
+    levels = {int(lvl) for r in deep
+              for lvl in covering_table(r, max_cells=1024)["level"]}
+    assert len(levels) >= 7 and 30 in levels, sorted(levels)
+    for regs, max_cells in ((demo_regions(), 64), (deep, 1024)):
+        a = pip_join(pages, spark, regs, strategy="equi", level=4) \
+            .select("url", "region_id")
+        b = pip_join(pages, spark, regs, strategy="range",
+                     max_cells=max_cells).select("url", "region_id")
+        assert a.count() > 0
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
 
 
 def test_sql_function_surface(spark):

@@ -24,26 +24,35 @@ def test_flagship_equi_join_is_map_only(spark):
     assert "ArrowEvalPython" in plan  # the geocode kernel rides along
 
 
+def _assert_one_covering_hash_join(out) -> str:
+    """The shared covering join: one BroadcastHashJoin on the exploded
+    ancestor ids, no nested-loop join, a map-only probe and
+    the geocode kernel evaluated exactly once. Returns the plan."""
+    plan = X.assert_map_only_probe(out)
+    assert X.count_nodes(plan, "BroadcastHashJoin") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert plan.count("cell_id_udf(") == 1, plan
+    return plan
+
+
 def test_flagship_evaluates_geocode_kernel_exactly_once(spark):
     """Regression for the round-1 double-evaluation finding: a plain
     equality join key made Catalyst infer isnotnull(cell_l4), push it
     through the geocode projection and re-inline the whole cell_id_udf
     chain into a SECOND ArrowEvalPython over every scan row (~2x the
-    Python-kernel bill at scale). The eqNullSafe join key prevents the
-    inference; this asserts the kernel appears exactly once per plan
-    for both broadcast strategies, and that the range strategy's order
-    key adds no Python hop of its own."""
+    Python-kernel bill at scale). The null-safe ancestor key prevents
+    the inference. Both broadcast strategies run the one
+    covering join (a hash join, never the old BETWEEN nested-loop
+    join) on a map-only probe, and cross into Python equally often
+    (geocode + containment)."""
     pages = load_pages(spark, SF_DIR)
     plans = {}
     for strategy, kwargs in [("equi", {"level": 4}),
                              ("range", {"max_cells": 64})]:
         out = pip_join(pages, spark, demo_regions(), strategy=strategy,
                        **kwargs).select("url", "region_id")
-        plan = plans[strategy] = X.formatted_plan(out)
-        assert plan.count("cell_id_udf(") == 1, (strategy, plan)
-        assert "order_key_udf(" not in plan, (strategy, plan)
-    # the range join's order key is JVM bit math: range crosses into
-    # Python exactly as often as equi (geocode + containment)
+        plans[strategy] = _assert_one_covering_hash_join(out)
+        assert "order_key_udf(" not in plans[strategy], plans[strategy]
     assert plans["range"].count("ArrowEvalPython") \
         == plans["equi"].count("ArrowEvalPython"), plans["range"]
 
@@ -64,13 +73,6 @@ def test_salted_join_is_shuffle_hash_single_kernel_eval(spark):
     assert "ShuffledHashJoin" in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
-
-
-def test_range_join_is_broadcast_no_shuffle(spark):
-    pages = load_pages(spark, SF_DIR)
-    out = pip_join(pages, spark, demo_regions(), strategy="range",
-                   max_cells=64).select("url", "region_id")
-    X.assert_map_only_probe(out)
 
 
 def test_minhash_signature_hash_not_reinlined(spark):
@@ -113,13 +115,12 @@ def test_count_shuffles_sees_aggregation_exchange(spark):
 
 
 def test_covering_candidate_gates_evaluate_kernels_once(spark):
-    """The raw covering range-join gates carry the coalesce guard
-    (round-2 review: they had copied the unguarded round-1 BETWEEN
-    shape and were paying the double-ArrowEvalPython bill)."""
+    """The raw covering-candidates gate runs pip_join's covering join
+    (round-2 review: it had copied the unguarded round-1 BETWEEN shape
+    and was paying the double-ArrowEvalPython bill)."""
     import __spark_entry__ as E
     out = E.queries()["covering_candidates"](spark, SF_DIR)
-    plan = X.formatted_plan(out)
-    assert plan.count("cell_id_udf(") == 1, plan
+    plan = _assert_one_covering_hash_join(out)
     assert "order_key_udf(" not in plan, plan
 
 

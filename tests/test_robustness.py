@@ -1,6 +1,6 @@
 """Hostile inputs at the operator boundaries: each public operator
 states its input domain and rejects what lies outside it with a named
-error before any Spark plan is built."""
+error before any Spark plan is built, or maps it to a documented NULL."""
 
 from __future__ import annotations
 
@@ -10,8 +10,13 @@ import time
 import numpy as np
 import pytest
 
+from pyspark.sql import functions as F
+
 from s2geometry_spark import kernels as K
+from s2geometry_spark.functions import geo
 from s2geometry_spark.operators.knn import knn_join
+from s2geometry_spark.operators.pip_join import pip_join
+from s2geometry_spark.regions import Cap
 
 PAGES_DDL = "url string, lat double, lng double"
 
@@ -96,3 +101,45 @@ def test_knn_ties_and_unlocated_pages_match_brute_force(spark):
         want += [(q["query_id"], r + 1, urls[j])
                  for r, j in enumerate(order[:q["k"]])]
     assert got == sorted(want)
+
+
+# pages with no point: no lat/lng, NaN, ±inf, |lat| > 90
+NO_POINT = [("null", None, None), ("nan", math.nan, math.nan),
+            ("inf", math.inf, math.inf), ("lat-nan", math.nan, 46.0),
+            ("lng-null", 36.26, None), ("lng-inf", 36.26, -math.inf),
+            ("lat-95", 95.0, 46.0), ("lat-below-90", -90.5, 46.0)]
+# inside the cap below; a finite lng outside [-180, 180] wraps
+HAS_POINT = [("centre", 36.26, 46.0), ("wrapped", 36.26, 46.0 - 720.0)]
+
+
+def _geocoded(spark, rows):
+    df = spark.createDataFrame(rows, PAGES_DDL).repartition(2)
+    cell = geo.cell_id_udf(F.col("lat"), F.col("lng"))
+    return (df.withColumn("cell_id", cell)
+            .withColumn("cell_l4", geo.parent_col(F.col("cell_id"), 4)))
+
+
+def test_geocode_gives_null_cell_id_to_pages_without_a_point(spark):
+    """cell_id_udf maps a row outside its domain to NULL (it once gave
+    every such row one real leaf near (35.26°, 45°), and mirrored
+    |lat| > 90) and keeps the kernel's ids for the valid rows of the
+    same batch."""
+    got = {r["url"]: r["cell_id"]
+           for r in _geocoded(spark, NO_POINT + HAS_POINT).collect()}
+    assert all(got[u] is None for u, _, _ in NO_POINT), got
+    want = K.uint64_to_signed(K.latlng_degrees_to_cell_id(
+        np.array([36.26, 36.26]), np.array([46.0, 46.0 - 720.0])))
+    assert [got[u] for u, _, _ in HAS_POINT] == [int(v) for v in want]
+
+
+def test_pip_join_matches_no_page_without_a_point(spark):
+    """A page without a point is inside no region, in every strategy.
+    Before its cell id was NULL, `range` returned them all as
+    contained: their shared leaf fell in an interior cell of this cap,
+    so the exact test never saw them."""
+    cap = Cap.from_latlng_radius(1, 36.26, 46.0, 5.0)
+    pages = _geocoded(spark, NO_POINT + HAS_POINT)
+    for strategy in ("equi", "range", "salted"):
+        got = sorted(r["url"] for r in pip_join(
+            pages, spark, [cap], strategy=strategy, level=4).collect())
+        assert got == sorted(u for u, _, _ in HAS_POINT), strategy

@@ -497,6 +497,9 @@ def test_geocode_job_rebalance_splits_a_tile_over_files(spark, tmp_path,
 
 
 def test_package_pyfiles(tmp_path):
+    """The --py-files zip holds the package's sources and is importable
+    on its own: the job module imports from it in a fresh interpreter
+    whose path holds the zip and not the repo."""
     dest = str(tmp_path / "pkg.zip")
     out = package_pyfiles(dest)
     import zipfile
@@ -504,6 +507,15 @@ def test_package_pyfiles(tmp_path):
     assert "s2geometry_spark/kernels.py" in names
     assert "s2geometry_spark/jobs/geocode_job.py" in names
     assert not any("__pycache__" in n for n in names)
+    probe = ("import s2geometry_spark.jobs.geocode_job as m; "
+             "print(m.__file__)")
+    env = {**os.environ, "PYTHONPATH": out}
+    res = subprocess.run([sys.executable, "-c", probe], cwd=str(tmp_path),
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == os.path.join(
+        out, "s2geometry_spark", "jobs", "geocode_job.py")
 
 
 def test_session_defaults_fit_host(monkeypatch):
@@ -566,8 +578,8 @@ def test_pip_join_rejects_duplicate_region_ids(spark, pages):
 
 def test_coverings_df_empty_catalog_and_empty_coverings(spark, pages):
     """No regions, or regions whose coverings are all empty, give a
-    0-row `coverings` table with the full schema, and pip_join over an
-    empty catalog matches nothing."""
+    0-row `coverings` table with the full schema, and pip_join over
+    either (a covering with no level) matches nothing."""
     from s2geometry_spark.operators.pip_join import COVERINGS_SCHEMA, pip_join
     from s2geometry_spark.regions import Cap, Polygon
     empty_regs = [Cap.empty(region_id=50), Polygon(region_id=51)]
@@ -576,9 +588,10 @@ def test_coverings_df_empty_catalog_and_empty_coverings(spark, pages):
             cov = coverings_df(spark, regs, **kw)
             assert cov.schema == COVERINGS_SCHEMA
             assert cov.count() == 0
-    for strategy in ("equi", "range"):
-        assert pip_join(pages, spark, [], strategy=strategy,
-                        level=LEVEL).count() == 0
+    for regs in ([], empty_regs):
+        for strategy in ("equi", "range"):
+            assert pip_join(pages, spark, regs, strategy=strategy,
+                            level=LEVEL).count() == 0
 
 
 def test_coverings_df_equals_covering_rows(spark):
