@@ -75,6 +75,13 @@ def test_salted_join_is_shuffle_hash_single_kernel_eval(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_range_join_is_broadcast_no_shuffle(spark):
+    pages = load_pages(spark, SF_DIR)
+    out = pip_join(pages, spark, demo_regions(), strategy="range",
+                   max_cells=64).select("url", "region_id")
+    _assert_one_covering_hash_join(out)
+
+
 def test_minhash_signature_hash_not_reinlined(spark):
     """The round-4 signature restructure stages per-shingle (h1, h2)
     arrays in their own projection and references them 17x downstream
