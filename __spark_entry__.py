@@ -124,16 +124,15 @@ def _q_pip_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B20 at gate strength (r4): the NON-broadcast covering join — the
-    scale path for 10^6-row region catalogs. Shuffle-hash join on
-    (tile, salt); tiles with > 1 page (the sf0.01 skew head) fan out
-    across 4 salts, with the matching covering rows exploded 4 ways.
-    Same logical query as the equi gates, so the oracle is the SAME
-    independent scalar-PIP fixture as pip_all_range."""
+    """B20 at gate strength: the NON-broadcast covering join — the
+    scale path for 10^6-row region catalogs. The uniform level-4
+    covering in a shuffle-hash join on the ancestor id; a hot tile is
+    split by AQE's skew-join handling. Same logical query as the equi
+    gates, so the oracle is the SAME independent scalar-PIP fixture as
+    pip_all_range."""
     pages = load_pages(spark, sf_dir)
-    return pip_join(pages, spark, demo_regions(), strategy="salted",
-                    level=4, hot_threshold=1, n_salt=4) \
-        .select("url", "region_id")
+    return pip_join(pages, spark, demo_regions(), strategy="shuffle",
+                    level=4).select("url", "region_id")
 
 
 def _q_region_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,7 +1147,7 @@ def oracle_sql() -> dict[str, str]:
             JOIN documents d USING (doc_id)
         """,
         # same logical query (all 8 regions, superset covering + exact
-        # filter), different physical strategy — salting must be
+        # filter), different physical strategy — the shuffle must be
         # result-invisible, so the oracle is the same fixture replay
         "pip_salted_shuffle": f"""
             SELECT d.source || '/' || CAST(d.doc_id AS VARCHAR) AS url,

@@ -146,12 +146,10 @@ def main() -> None:
     bench("pip_range", lambda: force(
         pip_join(pages, spark, regs, strategy="range", max_cells=64)
         .select("url", "region_id")))
-    # non-broadcast scale path: shuffle-hash (tile, salt) join with the
-    # skew head (tiles over ~n/500 rows) fanned out across 8 salts;
-    # timing includes the histogram pass that finds the hot tiles
+    # non-broadcast scale path: shuffle-hash covering join, skew left
+    # to AQE (row name kept so the history stays comparable)
     bench("pip_salted", lambda: force(
-        pip_join(pages, spark, regs, strategy="salted", level=4,
-                 hot_threshold=max(1, n_pages // 500), n_salt=8)
+        pip_join(pages, spark, regs, strategy="shuffle", level=4)
         .select("url", "region_id")))
     bench("tile_counts", lambda: force(
         pages.groupBy("cell_l8").count()))

@@ -12,7 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from s2geometry_spark.session import get_spark
-spark = get_spark("canon", cores=8, shuffle_partitions=8)
+spark = get_spark("canon", shuffle_partitions=8)
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as E
 import hashlib

@@ -99,11 +99,12 @@ def level_col(cell: Column) -> Column:
 @pandas_udf(LongType())
 def cell_id_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.Series:
     """Leaf (level-30) S2CellId from degrees — fused A1..A8 chain.
-    NULL for a row with no point (null, NaN or ±inf lat/lng, or
-    |lat| > 90; a finite lng wraps); the kernel sees only valid rows."""
+    NULL for a row with no point (K.has_point: null, NaN or ±inf
+    lat/lng, or |lat| > 90; a finite lng wraps); the kernel sees only
+    valid rows."""
     lat = lat_deg.to_numpy("float64")
     lng = lng_deg.to_numpy("float64")
-    valid = (np.abs(lat) <= 90.0) & np.isfinite(lng)
+    valid = K.has_point(lat, lng)
     if valid.all():
         return pd.Series(K.uint64_to_signed(
             K.latlng_degrees_to_cell_id(lat, lng)))

@@ -237,6 +237,15 @@ def to_face_ij(cell_id: np.ndarray):
 # Fused geocode chain: lat/lng (degrees) → leaf cell id
 # ---------------------------------------------------------------------------
 
+def has_point(lat_deg: np.ndarray, lng_deg: np.ndarray) -> np.ndarray:
+    """Mask of the rows whose degrees name a point: lat in [-90, 90]
+    and a finite lng (which wraps). Null, NaN, ±inf and |lat| > 90 have
+    none; the kernels would otherwise mirror lat 95 onto (85, lng+180)
+    and give NaN one real cell. Every page operator (geocode, distance
+    join, kNN) applies this one rule."""
+    return (np.abs(lat_deg) <= 90.0) & np.isfinite(lng_deg)
+
+
 def latlng_degrees_to_cell_id(lat_deg: np.ndarray, lng_deg: np.ndarray) -> np.ndarray:
     """E1 lifecycle fused (SURVEY §3.1): degrees → uint64 leaf cell id."""
     lat = np.radians(np.asarray(lat_deg, dtype=np.float64))

@@ -214,8 +214,7 @@ def gram_hashes(text_col, k: int = 5) -> "F.Column":
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame, k: int = 5,
                   id_col: str = "url", text_col: str = "text",
-                  bench_text_col: str = "text",
-                  broadcast_bench: bool = True) -> DataFrame:
+                  bench_text_col: str = "text") -> DataFrame:
     """(url, n_hit, contaminated): flag corpus documents sharing any
     k-token shingle with a benchmark/eval set — the standard
     pre-training decontamination pass (n-gram overlap against held-out
@@ -231,15 +230,12 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, k: int = 5,
     the corpus side never shuffles its text, only the (url, gram)
     pairs that SURVIVE the broadcast join reach the per-url count
     aggregation, and the final left join is a url-keyed partial-agg
-    pattern. With broadcast_bench=False both sides shuffle on gram
-    (the fallback when someone decontaminates against half the web).
+    pattern.
     """
-    bg = (benchmark
-          .select(F.explode(gram_hashes(F.col(bench_text_col), k))
-                  .alias("gram"))
-          .distinct())
-    if broadcast_bench:
-        bg = F.broadcast(bg)
+    bg = F.broadcast(benchmark
+                     .select(F.explode(gram_hashes(F.col(bench_text_col), k))
+                             .alias("gram"))
+                     .distinct())
     dg = docs.select(F.col(id_col),
                      F.explode(gram_hashes(F.col(text_col), k))
                      .alias("gram"))

@@ -574,8 +574,7 @@ def line_dedup(pages: DataFrame, min_docs: int = 2, id_col: str = "url",
 
     * ``broadcast_boiler=True``  — hint broadcast (the common case);
     * ``broadcast_boiler=False`` — pin ``shuffle_hash``: both sides
-      shuffle on line, no driver-side build, works at any set size
-      (decontaminate's ``broadcast_bench=False`` twin);
+      shuffle on line, no driver-side build, works at any set size;
     * ``broadcast_boiler=None``  — AUTO: persist the frequent set,
       count it (the count is against the aggregated output, not the
       corpus), and pick broadcast iff count <= max_broadcast_lines.

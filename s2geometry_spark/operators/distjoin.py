@@ -32,9 +32,9 @@ all-pairs):
 
 Scale notes (10^12 rows): only (url, xyz, cell) ever shuffles — 9x
 fan-out on one side, text/html never move; both sides partition on the
-same cell key (AQE handles skewed cells; tiles.salted_equi_join is the
-explicit-salt variant if a histogram pass is warranted). No driver
-loop, no collect, no broadcast of anything data-sized.
+same cell key, and AQE's skew-join split handles a hot cell (the
+engine's one skew mechanism, operators/tiles.py). No driver loop, no
+collect, no broadcast of anything data-sized.
 
 Catalyst traps (CLAUDE.md): the join key is UDF-derived, so the
 eqNullSafe key + coalesce()-wrapped filters guard against the
@@ -80,22 +80,33 @@ def _make_proj_udf(level: int):
     here duplicates ~ms of numpy Hilbert encoding to save two
     full-table serialization passes (measured 5.8s -> ~3s projection
     at 500k rows). Values are identical to the kernel composition —
-    same K.* calls."""
+    same K.* calls. A row without a point (K.has_point) gets NULLs: its
+    stencil is NULL and explodes to nothing, its NULL cell meets no
+    stencil cell, so it is in no pair."""
     @pandas_udf(_PROJ_SCHEMA)
     def proj_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.DataFrame:
-        lat = np.radians(lat_deg.to_numpy("float64"))
-        lng = np.radians(lng_deg.to_numpy("float64"))
-        x, y, z = K.latlng_to_xyz(lat, lng)
-        cells = K.parent(
-            K.latlng_degrees_to_cell_id(lat_deg.to_numpy("float64"),
-                                        lng_deg.to_numpy("float64")),
-            level)
+        lat_d = lat_deg.to_numpy("float64")
+        lng_d = lng_deg.to_numpy("float64")
+        valid = K.has_point(lat_d, lng_d)
+        every = valid.all()
+        if not every:  # the kernels see (0, 0); its outputs become NULL
+            lat_d = np.where(valid, lat_d, 0.0)
+            lng_d = np.where(valid, lng_d, 0.0)
+        x, y, z = K.latlng_to_xyz(np.radians(lat_d), np.radians(lng_d))
+        cells = K.parent(K.latlng_degrees_to_cell_id(lat_d, lng_d), level)
         nbrs = np.stack(K.all_neighbors(cells), axis=1)  # (n, 8) uint64
         signed = K.uint64_to_signed(nbrs.reshape(-1)).reshape(nbrs.shape)
+        cell = K.uint64_to_signed(cells)
+        if every:
+            return pd.DataFrame({"px": x, "py": y, "pz": z, "cell": cell,
+                                 "nbrs": list(signed)})
+        null = ~valid
         return pd.DataFrame({
-            "px": x, "py": y, "pz": z,
-            "cell": K.uint64_to_signed(cells),
-            "nbrs": list(signed),
+            "px": pd.arrays.FloatingArray(x, null),
+            "py": pd.arrays.FloatingArray(y, null),
+            "pz": pd.arrays.FloatingArray(z, null),
+            "cell": pd.arrays.IntegerArray(cell, null),
+            "nbrs": [None if n else r for n, r in zip(null, signed)],
         })
 
     return proj_udf

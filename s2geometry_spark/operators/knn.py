@@ -23,8 +23,9 @@ Cost and shape:
 
 d2 uses the DuckDB oracle's operand order, (dx*dx + dy*dy) + dz*dz,
 with page xyz from the numpy kernel and query xyz from math.cos/sin, so
-it is bit-identical to the brute-force oracle. Pages with a null or
-non-finite lat/lng have no distance and are never returned.
+it is bit-identical to the brute-force oracle. A page without a point
+(``K.has_point``: null, NaN, ±inf or |lat| > 90) has no distance and
+is never returned.
 """
 
 from __future__ import annotations
@@ -94,14 +95,13 @@ def _partition_top_k(qid, qx, qy, qz, k):
         kept_d2 = [np.empty(0, dtype=np.float64)] * qid.size
         kept_url = [np.empty(0, dtype=object)] * qid.size
         for pdf in batches:
-            x, y, z = K.latlng_to_xyz(
-                np.radians(pdf["lat"].to_numpy("float64")),
-                np.radians(pdf["lng"].to_numpy("float64")))
+            lat = pdf["lat"].to_numpy("float64")
+            lng = pdf["lng"].to_numpy("float64")
             urls = pdf["url"].to_numpy(dtype=object)
-            located = np.isfinite(x)
+            located = K.has_point(lat, lng)
             if not located.all():
-                x, y, z, urls = (x[located], y[located], z[located],
-                                 urls[located])
+                lat, lng, urls = lat[located], lng[located], urls[located]
+            x, y, z = K.latlng_to_xyz(np.radians(lat), np.radians(lng))
             for i in range(qid.size):
                 dx, dy, dz = x - qx[i], y - qy[i], z - qz[i]
                 d2 = (dx * dx + dy * dy) + dz * dz

@@ -1,16 +1,19 @@
 """Covering-based containment joins — the flagship operators (E3′).
 
-One physical join, ``covering_join``, serves both broadcast strategies
-of "pages whose point lies inside region R" (SURVEY B6 ``equi``: the
+One physical join, ``covering_join``, serves every strategy of "pages
+whose point lies inside region R" (SURVEY B6 ``equi``: the
 uniform-level covering; B8 ``range``: the level-synchronous
-``max_cells`` covering). Covering cells are mutually disjoint
+``max_cells`` covering; B20 ``shuffle``: the uniform covering again,
+shuffled instead of broadcast). Covering cells are mutually disjoint
 (tests/test_coverer.py), so "leaf in the cell's leaf range" is the
 equality ``parent(leaf, level(cell)) == cell`` and no dedup is needed:
 each page is exploded into its ancestors at the covering's distinct
-levels (JVM bit algebra), which meet the cells in ONE
-BroadcastHashJoin. **No shuffle
-of pages** — the central performance property at 10^12 rows (asserted
-in tests/test_plans.py). ``salted`` is the non-broadcast shuffle path.
+levels (JVM bit algebra), which meet the cells in ONE hash join. The
+broadcast strategies do **no shuffle of pages** — the central
+performance property at 10^12 rows (asserted in tests/test_plans.py).
+``shuffle`` is the path for catalogs too big to broadcast; a hot tile
+there is split by AQE's skew-join handling, as tile writes are by its
+rebalance split (operators/tiles.py).
 
 All then apply the exact vectorized containment test ONLY to
 non-interior candidate rows (the coverer's interior short-circuit,
@@ -111,14 +114,17 @@ def make_contains_udf(regions):
 
 def covering_join(pages: DataFrame, spark: SparkSession, regions,
                   uniform_level: int | None = None,
-                  max_cells: int = 64) -> DataFrame:
-    """pages ⋈ broadcast(coverings_df(...)) where the covering cell is
-    an ancestor of, or equal to, the page's leaf ``cell_id``; no exact
-    filter; adds region_id and is_interior. The levels come from the
-    driver-side frames (no Spark job). The key is the ancestor id alone:
-    an S2 cell id encodes its level. Null-safe key: a plain `=` makes
-    Catalyst infer ``isnotnull``, push it through the geocode projection
-    and re-inline the cell_id_udf chain into a second ArrowEvalPython
+                  max_cells: int = 64, hint: str = "broadcast") -> DataFrame:
+    """pages ⋈ coverings_df(...) where the covering cell is an ancestor
+    of, or equal to, the page's leaf ``cell_id``; no exact filter; adds
+    region_id and is_interior. `hint` goes on the covering side:
+    "broadcast" (map-only probe) or "shuffle_hash" (both sides shuffle
+    on the key and the covering is the build side, so the pages are
+    never sorted). The levels come from the driver-side frames (no
+    Spark job). The key is the ancestor id alone: an S2 cell id encodes
+    its level. Null-safe key: a plain `=` makes Catalyst infer
+    ``isnotnull``, push it through the geocode projection and re-inline
+    the cell_id_udf chain into a second ArrowEvalPython
     (tests/test_plans.py). The covering's keys are non-nullable, so <=>
     matches what `=` would; a NULL cell_id (no point) matches nothing.
     """
@@ -129,8 +135,9 @@ def covering_join(pages: DataFrame, spark: SparkSession, regions,
     # one level (equi) skips the per-row Generate of an explode
     keys = [geo.parent_col(F.col("cell_id"), lvl) for lvl in levels or [0]]
     anc = keys[0] if len(keys) == 1 else F.explode(F.array(*keys))
-    cov = F.broadcast(_coverings_df(spark, frames).select(
-        F.col("cell_id").alias("_cov_cell"), "region_id", "is_interior"))
+    cov = _coverings_df(spark, frames).select(
+        F.col("cell_id").alias("_cov_cell"), "region_id",
+        "is_interior").hint(hint)
     probe = pages.select("*", anc.alias("_anc"))
     return (probe.join(cov, probe["_anc"].eqNullSafe(cov["_cov_cell"]))
             .drop("_anc", "_cov_cell"))
@@ -138,46 +145,35 @@ def covering_join(pages: DataFrame, spark: SparkSession, regions,
 
 def pip_join(pages: DataFrame, spark: SparkSession, regions,
              strategy: str = "equi", level: int = 8,
-             max_cells: int = 64,
-             hot_threshold: int | None = None,
-             n_salt: int = 8) -> DataFrame:
+             max_cells: int = 64) -> DataFrame:
     """pages ⋈ regions containment join → (url, region_id, ...pages cols).
 
-    `pages` must carry lat, lng and a leaf cell_id, plus (for salted)
-    cell_l{level} — i.e. anything from sources.pages.geocode_pages.
+    `pages` must carry lat, lng and a leaf cell_id — i.e. anything from
+    sources.pages.geocode_pages.
 
-    Strategies (all verified row-identical):
-    * "equi"  — `covering_join` over the uniform covering at `level`,
-      then the exact post-filter UDF. Two Python hops (geocode upstream
-      + containment). Also the streaming path: Structured Streaming
-      runs it as an inner stream-static broadcast join
-      (streaming.tile_stream.streaming_pip_counts).
-    * "range" — the same join over the `max_cells` hierarchical covering.
-    * "salted" — the NON-broadcast scale path (tiles.salted_equi_join):
-      shuffle-hash join on (tile, salt) with hot tiles fanned out
-      n_salt ways, for region catalogs too big to broadcast (10^6+
-      covering rows at 100 TB). `hot_threshold` picks the hot tiles
-      from one histogram pass over pages (rows-per-tile > threshold;
-      the pass costs one extra job — production caches/persists the
-      histogram alongside the tile layout). Row-identical to "equi"
-      (same uniform-level covering + exact filter; asserted in
-      tests/test_scale_ops.py, oracle-gated as pip_salted_shuffle).
+    Strategies (all verified row-identical), each `covering_join` plus
+    the exact post-filter UDF:
+    * "equi"  — the uniform covering at `level`, broadcast. Two Python
+      hops (geocode upstream + containment). Also the streaming path:
+      Structured Streaming runs it as an inner stream-static broadcast
+      join (streaming.tile_stream.streaming_pip_counts).
+    * "range" — the `max_cells` hierarchical covering, broadcast.
+    * "shuffle" — the uniform covering at `level` in a shuffle-hash
+      join: the NON-broadcast path for region catalogs too big to
+      broadcast (10^6+ covering rows at 100 TB). A hot tile makes one
+      oversized shuffle partition, which AQE's skew-join handling
+      splits at run time (`session.get_spark` turns it on); the call
+      runs no Spark job (tests/test_plans.py). Row-identical to
+      "equi" (tests/test_scale_ops.py, oracle-gated as
+      pip_salted_shuffle).
     """
-    contains_udf = make_contains_udf(regions)
-    if strategy == "salted":
-        from .tiles import hot_tiles, salted_equi_join
-        cov = coverings_df(spark, regions, uniform_level=level)
-        cov_sel = cov.select("region_id", "cell_id", "is_interior")
-        hot = hot_tiles(pages, level,
-                        hot_threshold if hot_threshold is not None else 0)
-        joined = salted_equi_join(pages, cov_sel, level, hot,
-                                  n_salt=n_salt).drop("cell_id")
-    elif strategy in ("equi", "range"):
-        joined = covering_join(
-            pages, spark, regions, max_cells=max_cells,
-            uniform_level=level if strategy == "equi" else None)
-    else:
+    if strategy not in ("equi", "range", "shuffle"):
         raise ValueError(strategy)
+    contains_udf = make_contains_udf(regions)
+    joined = covering_join(
+        pages, spark, regions, max_cells=max_cells,
+        uniform_level=None if strategy == "range" else level,
+        hint="shuffle_hash" if strategy == "shuffle" else "broadcast")
     # One pass with the interior flag pushed INTO the UDF. Two rejected
     # alternatives, measured at 10M rows: (a) `is_interior | udf(...)`
     # — Spark extracts the UDF into ArrowEvalPython and runs the
@@ -192,7 +188,6 @@ def pip_join(pages: DataFrame, spark: SparkSession, regions,
 
 
 def region_overlap_candidates(cov_a: DataFrame, cov_b: DataFrame,
-                              broadcast_b: bool = True,
                               same_collection: bool = True) -> DataFrame:
     """(region_a, region_b) distinct may-intersect candidate pairs
     between two region collections, from their coverings alone — the
@@ -208,11 +203,8 @@ def region_overlap_candidates(cov_a: DataFrame, cov_b: DataFrame,
     candidates->verify split.
 
     Scale shape: region catalogs are dimension-sized next to a page
-    corpus; the smaller side broadcasts and only (region_a, region_b)
-    id pairs survive to the distinct. For two HUGE catalogs, swap the
-    broadcast range join for the equi path both sides already carry:
-    re-tile both coverings to a common level (kernels.parent) and
-    equi-join on the tile, the same trick salted_equi_join uses.
+    corpus; the b side broadcasts and only (region_a, region_b) id
+    pairs survive to the distinct.
     `same_collection=True` (the self-join case): `region_a < region_b`
     drops self-pairs and mirror duplicates. For TWO DISTINCT catalogs
     pass `same_collection=False` — the ids live in different
@@ -223,11 +215,9 @@ def region_overlap_candidates(cov_a: DataFrame, cov_b: DataFrame,
     a = cov_a.select(F.col("region_id").alias("region_a"),
                      F.col("range_min_key").alias("_amin"),
                      F.col("range_max_key").alias("_amax"))
-    b = cov_b.select(F.col("region_id").alias("region_b"),
-                     F.col("range_min_key").alias("_bmin"),
-                     F.col("range_max_key").alias("_bmax"))
-    if broadcast_b:
-        b = F.broadcast(b)
+    b = F.broadcast(cov_b.select(F.col("region_id").alias("region_b"),
+                                 F.col("range_min_key").alias("_bmin"),
+                                 F.col("range_max_key").alias("_bmax")))
     cond = (F.col("_amin") <= F.col("_bmax")) \
         & (F.col("_bmin") <= F.col("_amax"))
     if same_collection:

@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-from ..functions import text as T
 from . import corpus, textstats
 
 
@@ -129,14 +128,9 @@ def corpus_pipeline(pages: DataFrame, bench_grams,
     # stage 4: the remaining verdicts are pure expressions on (url,
     # _lc, n_hit) — language id, contamination flag, split label
     lang_pred = textstats.lang_best_expr(centroids, F.col("_lc"))
-    n_hit = F.col("n_hit")
-    bucket = T.h60(F.col(id_col)) % textstats.SPLIT_BUCKETS
-    split = (F.when(bucket < textstats.SPLIT_TRAIN_LT, "train")
-             .when(bucket < textstats.SPLIT_VALID_LT, "valid")
-             .otherwise("test"))
     df = df.select(id_col, "keep_quality", "keep_rep",
-                   lang_pred.alias("lang_pred"), n_hit.alias("n_hit"),
-                   bucket.alias("bucket"), split.alias("split"))
+                   lang_pred.alias("lang_pred"), "n_hit",
+                   *textstats.split_cols(id_col))
 
     lang_ok = F.col("lang_pred").isin(*allowed_langs)
     contaminated = F.col("n_hit") > 0

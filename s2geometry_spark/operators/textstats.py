@@ -757,17 +757,22 @@ SPLIT_TRAIN_LT = 980   # buckets [0, 980) -> train
 SPLIT_VALID_LT = 990   # [980, 990) -> valid; [990, 1000) -> test
 
 
-def corpus_split(pages: DataFrame, id_col: str = "url",
-                 extra_cols: tuple = ()) -> DataFrame:
-    """(url, bucket, split): md5-hash bucket of the url in [0, 1000) and
-    the 98/1/1 train/valid/test label. Pure JVM projection — the
-    assignment is a function of the id alone, so it is stable across
-    reshards, reruns, and engines (the property a training pipeline
-    needs: a doc never migrates between splits). extra_cols passes
-    input columns through untouched (the r5 pipeline chaining hook)."""
+def split_cols(id_col: str = "url") -> tuple:
+    """(bucket, split) columns: the md5-hash bucket of the id in
+    [0, 1000) and its 98/1/1 train/valid/test label."""
     bucket = T.h60(F.col(id_col)) % SPLIT_BUCKETS
     split = (F.when(bucket < SPLIT_TRAIN_LT, "train")
              .when(bucket < SPLIT_VALID_LT, "valid")
              .otherwise("test"))
+    return bucket.alias("bucket"), split.alias("split")
+
+
+def corpus_split(pages: DataFrame, id_col: str = "url",
+                 extra_cols: tuple = ()) -> DataFrame:
+    """(url, bucket, split) from `split_cols`. Pure JVM projection — the
+    assignment is a function of the id alone, so it is stable across
+    reshards, reruns, and engines (the property a training pipeline
+    needs: a doc never migrates between splits). extra_cols passes
+    input columns through untouched (the r5 pipeline chaining hook)."""
     return pages.select(id_col, *[F.col(c) for c in extra_cols],
-                        bucket.alias("bucket"), split.alias("split"))
+                        *split_cols(id_col))

@@ -1,27 +1,23 @@
-"""Tile (cell_l{K}) partitioning and EXPLICIT hot-cell skew handling
-(SURVEY.md B20/B21; north_star: "tile assignment = S2CellId.parent(level)
-partitioning and explicit salting of hot cells for skew").
+"""Tile (cell_l{K}) partitioning and skew (SURVEY.md B20/B21;
+north_star: "tile assignment = S2CellId.parent(level) partitioning").
 
-Skew on writes and on joins takes two different tools. A
-tile-partitioned WRITE is a ``rebalance`` on the tile: AQE
-(``optimizeSkewsInRebalancePartitions``, on by default) splits a
-partition above ``advisoryPartitionSizeInBytes`` across the map tasks
-that produced it, so no single task writes a mega-tile (it cannot split
-what one map task wrote). AQE's skew-join splitting fires only inside
-join stages it re-plans, so the shuffle JOIN over hot tiles carries
-explicit salting (measured in BENCH/salted_skew_bench.py). Hash-geocoded
-urls are uniform, but real web corpora are not (a popular host's pages
-share a tile):
+Hash-geocoded urls are uniform, but real web corpora are not (a
+popular host's pages share a tile). AQE handles that skew for writes
+and for joins alike:
 
-1. ``tile_histogram``  — one cheap pass: rows per tile (B12).
-2. ``hot_tiles``       — tiles whose count exceeds a threshold.
-3. ``add_salt``        — salt = pmod(xxhash64(url), n_salt) on hot
-   tiles, 0 elsewhere: deterministic, no RNG, reproducible lineage.
-4. ``salted_equi_join`` — shuffle-join variant of the covering equi
-   join for when coverings are NOT broadcastable (10^6+ regions):
-   replicates only the hot covering rows n_salt times (explode), salts
-   the pages side, joins on (cell, salt). Cold cells pay nothing.
-5. ``write_tiled``     — the tile-partitioned write, rebalanced on the
+* a tile-partitioned WRITE is a ``rebalance`` on the tile, and AQE's
+  rebalance split (``optimizeSkewsInRebalancePartitions``) breaks a
+  partition above ``advisoryPartitionSizeInBytes`` up across the map
+  tasks that produced it, so no single task writes a mega-tile (it
+  cannot split what one map task wrote);
+* the shuffle covering JOIN (``pip_join(strategy="shuffle")``) leaves a
+  hot tile to AQE's skew-join split (``spark.sql.adaptive.skewJoin``),
+  which beat explicit salting plus its hot-tile histogram in 10 of 10
+  pairs (BENCH/PLAN_EVIDENCE.md, BENCH/salted_skew_bench.py).
+
+1. ``tile_histogram`` — one cheap pass: rows per tile (B12).
+2. ``hot_tiles``      — tiles whose count exceeds a threshold.
+3. ``write_tiled``    — the tile-partitioned write, rebalanced on the
    tile.
 """
 
@@ -30,10 +26,8 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-SALT_COL = "_salt"
 
 
 def tile_col(level: int) -> str:
@@ -55,56 +49,6 @@ def hot_tiles(pages: DataFrame, level: int, threshold: int) -> list[int]:
             .filter(F.col("n_rows") > threshold)
             .select("tile").collect())
     return sorted(r["tile"] for r in rows if r["tile"] is not None)
-
-
-def add_salt(pages: DataFrame, level: int, hot: list[int],
-             n_salt: int, id_col: str = "url") -> DataFrame:
-    """salt in [0, n_salt) on hot tiles, 0 elsewhere. Deterministic
-    (xxhash64 of the row id), so retries and resumes re-derive the
-    same placement."""
-    if not hot:
-        return pages.withColumn(SALT_COL, F.lit(0))
-    is_hot = F.col(tile_col(level)).isin(*hot)
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)).cast("int")
-    return pages.withColumn(SALT_COL, F.when(is_hot, salt).otherwise(F.lit(0)))
-
-
-def salted_equi_join(pages: DataFrame, coverings: DataFrame,
-                     level: int, hot: list[int], n_salt: int = 8,
-                     id_col: str = "url") -> DataFrame:
-    """Covering equi-join as a SHUFFLE join with explicit salting —
-    the non-broadcast path for huge covering tables.
-
-    coverings must carry (region_id, cell_id, is_interior) at `level`.
-    Hot covering rows are exploded n_salt ways; pages carry one salt
-    each — every (cell, salt) bucket sees ~1/n_salt of a hot cell's
-    pages, removing the straggler task.
-    """
-    pages_s = add_salt(pages, level, hot, n_salt, id_col)
-    if hot:
-        is_hot = F.col("cell_id").isin(*hot)
-        cov_s = (coverings
-                 .withColumn(
-                     SALT_COL,
-                     F.explode(F.when(is_hot,
-                                      F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                               .otherwise(F.array(F.lit(0)))))
-                 .withColumn(SALT_COL, F.col(SALT_COL).cast("int")))
-    else:
-        cov_s = coverings.withColumn(SALT_COL, F.lit(0))
-    # eqNullSafe (<=>) keys, same reason as pip_join's equi strategy: a
-    # plain `=` on the UDF-derived tile column makes Catalyst infer
-    # isnotnull(cell_l{K}), push it through the geocode projection, and
-    # re-inline the whole kernel chain into a second ArrowEvalPython
-    # over every scan row (asserted single-eval in tests/test_plans.py).
-    # Row-identical: the tile/salt columns are never null. ShuffledHash-
-    # Join supports null-safe keys; the shuffle_hash hint keeps the big
-    # pages side from being sorted (no sort-merge).
-    joined = pages_s.join(
-        cov_s.hint("shuffle_hash"),
-        pages_s[tile_col(level)].eqNullSafe(cov_s["cell_id"])
-        & pages_s[SALT_COL].eqNullSafe(cov_s[SALT_COL]), "inner")
-    return joined.drop(SALT_COL)
 
 
 def write_tiled(pages: DataFrame, path: str, level: int,

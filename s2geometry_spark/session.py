@@ -58,8 +58,9 @@ def get_spark(app_name: str = "s2geometry-spark", cores: int | None = None,
         # even when upstream rows carry wide text columns (SURVEY §4.4).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE: runtime coalescing + skew-join backstop (explicit salting
-        # of hot cells is still applied in operators/tiles.py — B20).
+        # AQE: runtime coalescing and the engine's one skew mechanism
+        # (B20): the skew-join split for shuffle joins, the rebalance
+        # split for tile writes (operators/tiles.py).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -4,6 +4,8 @@ flagship join, column pruning of the fat html column, pushdown."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,22 +59,38 @@ def test_flagship_evaluates_geocode_kernel_exactly_once(spark):
         == plans["equi"].count("ArrowEvalPython"), plans["range"]
 
 
-def test_salted_join_is_shuffle_hash_single_kernel_eval(spark):
-    """The non-broadcast scale path: the covering join must be a
-    ShuffledHashJoin (no broadcast of the big covering side, no sort of
-    the pages side) and the geocode kernel must still evaluate exactly
-    once — the eqNullSafe (tile, salt) keys keep Catalyst from pushing
-    an inferred isnotnull through the projection and re-inlining the
-    UDF chain (the same trap the equi strategy guards against)."""
-    pages = load_pages(spark, SF_DIR)
-    out = pip_join(pages, spark, demo_regions(), strategy="salted",
-                   level=4, hot_threshold=1, n_salt=4) \
-        .select("url", "region_id")
+def test_shuffle_join_is_one_shuffled_hash_join_built_without_a_job(
+        spark, tmp_path):
+    """The non-broadcast scale path is the covering join with the
+    covering side hinted shuffle_hash: ONE ShuffledHashJoin (no
+    broadcast of the big covering side, no sort of the pages side), no
+    salt hash, the geocode kernel evaluated exactly once (the null-safe
+    ancestor key keeps Catalyst from re-inlining the UDF chain), and
+    building it runs no Spark job — skew is AQE's split at run time,
+    not a hot-tile histogram collected while the plan is built. The
+    pages' lat/lng are read back from Parquet, so the url hash that
+    derives them is not in the plan and any xxhash64 would be a salt."""
+    from s2geometry_spark.functions import geo
+    located = str(tmp_path / "located")
+    load_pages(spark, SF_DIR).select("url", "lat", "lng") \
+        .write.parquet(located)
+    pages = spark.read.parquet(located).withColumn(
+        "cell_id", geo.cell_id_udf(F.col("lat"), F.col("lng")))
+    sc = spark.sparkContext
+    group = f"pip-shuffle-build-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "pip_join shuffle build")
+    try:
+        out = pip_join(pages, spark, demo_regions(), strategy="shuffle",
+                       level=4).select("url", "region_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     plan = X.formatted_plan(out)
-    assert plan.count("cell_id_udf(") == 1, plan
-    assert "ShuffledHashJoin" in plan, plan
+    assert X.count_nodes(plan, "ShuffledHashJoin") == 1, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
+    assert "xxhash64" not in plan, plan
+    assert plan.count("cell_id_udf(") == 1, plan
 
 
 def test_range_join_is_broadcast_no_shuffle(spark):

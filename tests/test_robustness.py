@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 from s2geometry_spark import kernels as K
 from s2geometry_spark.functions import geo
+from s2geometry_spark.operators.dedup import release_caches
+from s2geometry_spark.operators.distjoin import distance_join
 from s2geometry_spark.operators.knn import knn_join
 from s2geometry_spark.operators.pip_join import pip_join
 from s2geometry_spark.regions import Cap
@@ -139,7 +141,44 @@ def test_pip_join_matches_no_page_without_a_point(spark):
     so the exact test never saw them."""
     cap = Cap.from_latlng_radius(1, 36.26, 46.0, 5.0)
     pages = _geocoded(spark, NO_POINT + HAS_POINT)
-    for strategy in ("equi", "range", "salted"):
+    for strategy in ("equi", "range", "shuffle"):
         got = sorted(r["url"] for r in pip_join(
             pages, spark, [cap], strategy=strategy, level=4).collect())
         assert got == sorted(u for u, _, _ in HAS_POINT), strategy
+
+
+# where the kernels mirror lat 95 and -90.5 (lng 46): the same leaf and
+# xyz as these real points
+MIRRORS = [("mirror-95", 85.0, -134.0), ("mirror-below-90", -89.5, -134.0)]
+
+
+def test_distance_join_pairs_no_page_without_a_point(spark):
+    """A page without a point is in no pair. Before the shared point
+    mask, lat 95 got the xyz and cell of its mirror (85, lng+180) and
+    paired with a page there at distance 0."""
+    near = [("near-a", 10.0, 20.0), ("near-b", 10.0, 20.00001)]
+    pages = spark.createDataFrame(NO_POINT + MIRRORS + near,
+                                  PAGES_DDL).repartition(2)
+    reg: list = []
+    try:
+        got = sorted((r["url_a"], r["url_b"])
+                     for r in distance_join(pages, 1e-6,
+                                            cache_registry=reg).collect())
+    finally:
+        release_caches(reg)
+    assert got == [("near-a", "near-b")]
+
+
+def test_knn_never_returns_a_page_without_a_point(spark):
+    """A page without a point is never a neighbour, even to a query at
+    its mirror point, where it once sat at distance 0."""
+    near = [("near-95", 84.0, -134.0), ("near-below-90", -89.0, -134.0)]
+    pages = spark.createDataFrame(NO_POINT + near, PAGES_DDL).repartition(2)
+    queries = [{"query_id": i, "lat": lat, "lng": lng, "k": 1}
+               for i, (_, lat, lng) in enumerate(MIRRORS)]
+    got = sorted((r["query_id"], r["url"])
+                 for r in knn_join(pages, spark, queries).collect())
+    assert got == [(0, "near-95"), (1, "near-below-90")]
+    everything = {"query_id": 9, "lat": 0.0, "lng": 0.0, "k": 100}
+    got = {r["url"] for r in knn_join(pages, spark, [everything]).collect()}
+    assert got == {u for u, _, _ in near}

@@ -1,6 +1,6 @@
-"""Tests for the scale layer: explicit hot-tile salting, tile
-partitioned writes, snapshot-committed TableIO, and the resumable
-geocode job (SURVEY.md §7 Stage 6)."""
+"""Tests for the scale layer: tile histograms, AQE's skew split of a
+hot tile, tile partitioned writes, snapshot-committed TableIO, and the
+resumable geocode job (SURVEY.md §7 Stage 6)."""
 
 from __future__ import annotations
 
@@ -40,54 +40,71 @@ def test_tile_histogram_totals(spark, pages):
     assert all(r["n_rows"] > 0 for r in hist)
 
 
-def test_hot_tiles_and_salt(spark, pages):
+def test_hot_tiles_above_threshold(spark, pages):
     hist = {r["tile"]: r["n_rows"]
             for r in TL.tile_histogram(pages, LEVEL).collect()}
     thresh = sorted(hist.values())[len(hist) // 2]  # median → some hot
     hot = TL.hot_tiles(pages, LEVEL, thresh)
     assert hot == sorted(t for t, n in hist.items() if n > thresh)
 
-    salted = TL.add_salt(pages, LEVEL, hot, n_salt=4)
-    rows = salted.select(TL.tile_col(LEVEL), TL.SALT_COL).collect()
-    for r in rows:
-        if r[TL.tile_col(LEVEL)] in hot:
-            assert 0 <= r[TL.SALT_COL] < 4
-        else:
-            assert r[TL.SALT_COL] == 0
-    # hot tiles actually fan out across salts
-    fan = (salted.filter(F.col(TL.tile_col(LEVEL)).isin(*hot))
-           .select(TL.SALT_COL).distinct().count())
-    assert fan > 1
-
-
-def test_salted_equi_join_matches_broadcast(spark, pages):
-    """The explicit-salt shuffle join must produce exactly the rows of
-    the broadcast covering equi-join (same logical query)."""
-    cov = coverings_df(spark, demo_regions(), uniform_level=LEVEL) \
-        .select("region_id", "cell_id", "is_interior")
-    hot = TL.hot_tiles(pages, LEVEL, 1)
-    assert hot, "test corpus should have tiles with more than one row"
-    salted = TL.salted_equi_join(pages, cov, LEVEL, hot, n_salt=4) \
-        .select("url", "region_id")
-    bcast = pages.join(F.broadcast(cov),
-                       pages[TL.tile_col(LEVEL)] == cov["cell_id"]) \
-        .select("url", "region_id")
-    assert salted.exceptAll(bcast).count() == 0
-    assert bcast.exceptAll(salted).count() == 0
-
 
 def test_pip_salted_strategy_matches_equi(spark, pages):
-    """The full salted PIP (shuffle-hash covering join + exact
-    containment filter) must be row-identical to the broadcast equi
-    strategy — salting is a physical choice, never a semantic one."""
+    """The shuffle PIP behind the pip_salted_shuffle gate (shuffle-hash
+    covering join + exact containment filter) must be row-identical to
+    the broadcast equi strategy — the shuffle is a physical choice,
+    never a semantic one. The old "salted" name is no alias."""
     from s2geometry_spark.operators.pip_join import pip_join
-    salted = pip_join(pages, spark, demo_regions(), strategy="salted",
-                      level=LEVEL, hot_threshold=1, n_salt=4) \
-        .select("url", "region_id")
+    with pytest.raises(ValueError, match="salted"):
+        pip_join(pages, spark, demo_regions(), strategy="salted")
+    shuffled = pip_join(pages, spark, demo_regions(), strategy="shuffle",
+                        level=LEVEL).select("url", "region_id")
     equi = pip_join(pages, spark, demo_regions(), strategy="equi",
                     level=LEVEL).select("url", "region_id")
-    assert salted.exceptAll(equi).count() == 0
-    assert equi.exceptAll(salted).count() == 0
+    assert shuffled.exceptAll(equi).count() == 0
+    assert equi.exceptAll(shuffled).count() == 0
+
+
+def test_shuffle_pip_join_splits_a_hot_tile(spark):
+    """The shuffle strategy's skew guard is AQE's skew-join split. A
+    planted hot tile (40k pages at the centre of region 1, written by 8
+    map tasks) makes one oversized shuffle partition; with the skew
+    threshold and advisory size lowered, the final adaptive plan splits
+    it (a skewed ShuffledHashJoin read through AQEShuffleRead) and the
+    rows equal the broadcast equi strategy's. The url rides through the
+    join, as in pip_join's real output: pruned to one narrow column the
+    hot partition stays under the threshold."""
+    from s2geometry_spark.functions import geo
+    from s2geometry_spark.operators.pip_join import pip_join
+    from s2geometry_spark.plans import explain as X
+    hot = spark.range(0, 40_000, 1, 8).select(
+        F.format_string("https://hot.example/page/%08d", "id").alias("url"),
+        (F.lit(48.1) + (F.col("id") % 997) * 1e-6).alias("lat"),
+        F.lit(11.3).alias("lng"))
+    pages = (load_pages(spark, SF_DIR).select("url", "lat", "lng")
+             .unionByName(hot)
+             .withColumn("cell_id", geo.cell_id_udf(F.col("lat"),
+                                                   F.col("lng"))))
+    equi = pip_join(pages, spark, demo_regions(), strategy="equi",
+                    level=LEVEL).select("url", "region_id")
+    confs = {"spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+             "256k",
+             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k"}
+    old = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        out = pip_join(pages, spark, demo_regions(), strategy="shuffle",
+                       level=LEVEL).select("url", "region_id")
+        rows = sorted(out.collect())
+        plan = X.formatted_plan(out, "simple")
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert "isFinalPlan=true" in plan, plan
+    assert "ShuffledHashJoin" in plan and "skew=true" in plan, plan
+    assert "skewed" in plan, plan  # AQEShuffleRead ... skewed
+    assert rows == sorted(equi.collect())
+    assert sum(r["region_id"] == 1 for r in rows) >= 40_000
 
 
 def test_write_tiled_layout(spark, pages, tmp_path):
@@ -571,7 +588,7 @@ def test_pip_join_rejects_duplicate_region_ids(spark, pages):
     regs = [Cap.from_latlng_radius(7, 10.0, 10.0, 20.0),
             Rect.from_degrees(7, -30.0, 30.0, 60.0, 120.0),
             Cap.from_latlng_radius(8, -40.0, -60.0, 10.0)]
-    for strategy in ("equi", "range", "salted"):
+    for strategy in ("equi", "range", "shuffle"):
         with pytest.raises(ValueError, match=r"duplicate region ids: \[7\]"):
             pip_join(pages, spark, regs, strategy=strategy, level=LEVEL)
 
