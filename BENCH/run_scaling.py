@@ -170,6 +170,8 @@ def capture_plans() -> None:
                 + plan)
 
     # r4 additions: sketch / decontamination / url plan evidence
+    import re as _re
+
     from s2geometry_spark.operators import corpus, sketches, urls
     hll = sketches.hll_sketch(pages.select("url", "cell_l4"), "cell_l4")
     plan = X.formatted_plan(hll)
@@ -180,15 +182,15 @@ def capture_plans() -> None:
                 "the two\nhash-agg exchanges carry at most 64 register "
                 "rows per tile\nper map task, independent of input "
                 "rows\n\n" + plan)
-    bench_docs = docs.limit(500)
-    dec = corpus.decontaminate(docs, bench_docs, k=5)
-    plan = X.formatted_plan(dec)
-    assert "BroadcastHashJoin" in plan
+    bench_grams = corpus.collect_bench_grams(docs.limit(500), k=5)
+    plan = X.formatted_plan(corpus.decontaminate(docs, bench_grams, k=5))
+    assert "Exchange" not in plan and "Join" not in plan
+    assert len(_re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
     with open(os.path.join(HERE, "explain_decontaminate.txt"), "w") as f:
         f.write("benchmark decontamination\n"
-                "PROPERTY ASSERTED: the benchmark gram set broadcasts "
-                "—\nthe corpus text never shuffles; only surviving "
-                "(url, gram)\npairs reach the per-url count\n\n" + plan)
+                "PROPERTY ASSERTED: map-only — no Exchange, no join, ONE\n"
+                "ArrowEvalPython (the gram-hash probe); the corpus text\n"
+                "never shuffles\n\n" + plan)
     un = urls.url_normalize(docs.select("url"))
     plan = X.formatted_plan(un)
     assert "Exchange" not in plan and "ArrowEvalPython" not in plan
@@ -198,12 +200,9 @@ def capture_plans() -> None:
                 "in\nwhole-stage codegen\n\n" + plan)
 
     # r5 addition: the fused corpus filter pipeline
-    import re as _re
-
     from s2geometry_spark.operators import pipeline, textstats
     pipe = pipeline.corpus_pipeline(
-        docs, corpus.collect_bench_grams(bench_docs, k=5),
-        centroids=textstats.lang_centroids(docs))
+        docs, bench_grams, centroids=textstats.lang_centroids(docs))
     plan = X.formatted_plan(pipe)
     assert len(_re.findall(r"\(\d+\) Exchange", plan)) == 0
     assert len(_re.findall(r"\(\d+\) \w*Join", plan)) == 0
@@ -464,8 +463,8 @@ def write_baseline() -> None:
         "`explain_minhash.txt`, `explain_distjoin.txt` (grid equi-join, "
         "no cartesian, asserted no broadcast — see below), "
         "`explain_frame_sample.txt` (no Python eval), `explain_hll.txt` "
-        "(aggregation-only), `explain_decontaminate.txt` (benchmark "
-        "grams broadcast), `explain_url_normalize.txt` (zero-shuffle, "
+        "(aggregation-only), `explain_decontaminate.txt` (map-only "
+        "gram-hash probe), `explain_url_normalize.txt` (zero-shuffle, "
         "UDF-free).",
         "",
         "Round-4 notes settled by 10M-scale measurement:",

@@ -282,7 +282,8 @@ def _q_decontaminate(spark, sf_dir):
     docs = _docs_pages(spark, sf_dir)
     bench = docs.filter(
         T.h60(F.concat(F.lit("bm:"), F.col("url"))) % 7 == 0)
-    return corpus.decontaminate(docs, bench, k=5)
+    return corpus.decontaminate(
+        docs, corpus.collect_bench_grams(bench, k=5), k=5)
 
 
 PIPE_ALLOWED_LANGS = ("en",)

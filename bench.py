@@ -209,8 +209,8 @@ def main() -> None:
     bench_docs = docs.filter(
         F.pmod(F.xxhash64(F.concat(F.lit("bm:"), F.col("url"))), F.lit(7))
         == 0)
-    bench("decontaminate", lambda: force(
-        corpus_ops.decontaminate(text_docs, bench_docs, k=5)))
+    bench("decontaminate", lambda: force(corpus_ops.decontaminate(
+        text_docs, corpus_ops.collect_bench_grams(bench_docs, k=5), k=5)))
     # the FUSED filter pipeline (r5): quality + repetition + language
     # id + decontamination + split verdicts in ONE map-only scan.
     # Centroids and benchmark grams are fixed inputs (production

@@ -304,6 +304,20 @@ class ParquetTableIO:
             out.update(s["meta"].get(key, []))
         return out
 
+    def assert_meta(self, table: str, **params) -> None:
+        """Refuse to resume `table` with parameters other than those its
+        committed snapshots record: a resumed job mixes old and new
+        snapshots, so a different batch count or input silently drops or
+        double-counts rows. A snapshot that lacks a key accepts any
+        value; a recorded None still mismatches a non-None value."""
+        for s in self.history(table):
+            for key, value in params.items():
+                if key in s["meta"] and s["meta"][key] != value:
+                    raise ValueError(
+                        f"{table} was built with {key}={s['meta'][key]!r}; "
+                        f"this run asks for {key}={value!r} — use a fresh "
+                        "table prefix/root for a different configuration")
+
 
 class IcebergTableIO:
     """Deploy-time backend: the same interface over real Iceberg

@@ -70,25 +70,10 @@ def run_dedup_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
     # parameters: different n_batches changes batch membership
     # (pmod(xxhash64, n)) so mixing old and new batches double-counts
     # or drops documents, and a different threshold would silently
-    # return the old pairs labeled as the new run's result. Committed
-    # snapshot metadata is the source of truth; mismatches are refused
-    # (start a fresh prefix/root for a new experiment).
-    _MISSING = object()  # committed None must still mismatch non-None
-
-    def _assert_param(table: str, key: str, value) -> None:
-        for s in io.history(table):
-            got = s["meta"].get(key, _MISSING)
-            if got is not _MISSING and got != value:
-                raise ValueError(
-                    f"{table} was built with {key}={got!r}; this run asks "
-                    f"for {key}={value!r} — use a fresh table prefix/root "
-                    "for a different configuration")
-
-    _assert_param(sigs_table, "n_batches", n_batches)
-    _assert_param(sigs_table, "sf_dir", sf_dir)
-    _assert_param(sigs_table, "docs_mult", docs_mult)
-    _assert_param(pairs_table, "threshold", threshold)
-    _assert_param(pairs_table, "max_bucket", max_bucket)
+    # return the old pairs labeled as the new run's result.
+    io.assert_meta(sigs_table, n_batches=n_batches, sf_dir=sf_dir,
+                   docs_mult=docs_mult)
+    io.assert_meta(pairs_table, threshold=threshold, max_bucket=max_bucket)
 
     # single-split testdata parquet: repartition BEFORE the shingle/md5
     # fan-out or the expensive signature stage serializes on one core

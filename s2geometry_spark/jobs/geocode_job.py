@@ -13,7 +13,8 @@ Each batch commits as ONE snapshot with its batch id in the manifest
 metadata and per-file lineage in the metrics table. A re-run reads
 ``done_keys`` and processes only missing batches — crash-safe at batch
 granularity because TableIO's manifest swap is atomic and data written
-without a manifest entry is invisible.
+without a manifest entry is invisible. It refuses to resume snapshots
+recorded with another ``n_batches`` or ``sf_dir``.
 
 Geocode once, write once: the run writes every input row, tagged with
 its batch id, in ONE write ``partitionBy(_batch, tile)`` into a
@@ -116,6 +117,9 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
     `max_batches_this_run` exists for crash-injection tests and for
     bounded incremental runs — production leaves it None.
     """
+    # batch membership is pmod(tile position, n_batches): a resume with
+    # another n_batches (or input) would leave rows in no batch
+    io.assert_meta(table, n_batches=n_batches, sf_dir=sf_dir)
     done = io.done_keys(table)
     if done >= set(range(n_batches)):
         # nothing left to run: return before the write, so an
@@ -144,7 +148,7 @@ def run_geocode_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
             os.makedirs(files, exist_ok=True)
             io.append(files, table, partition_by=tcol, lineage_col=tcol,
                       meta={"batch_key": [b], "sf_dir": sf_dir,
-                            "hot_tiles": hot})
+                            "n_batches": n_batches, "hot_tiles": hot})
             committed.append(b)
     finally:
         shutil.rmtree(staging, ignore_errors=True)

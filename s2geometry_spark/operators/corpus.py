@@ -10,8 +10,12 @@ sort off the cold path at scale.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType
 
 from ..functions import text as T
 
@@ -212,40 +216,69 @@ def gram_hashes(text_col, k: int = 5) -> "F.Column":
         F.transform(T.shingles(T.tokens(text_col), k), T.h60))
 
 
-def decontaminate(docs: DataFrame, benchmark: DataFrame, k: int = 5,
-                  id_col: str = "url", text_col: str = "text",
-                  bench_text_col: str = "text") -> DataFrame:
+def n_hit_probe(bench_grams):
+    """Column builder for n_hit = |distinct doc grams ∩ benchmark
+    grams|, the one decontamination membership count (decontaminate
+    and pipeline.corpus_pipeline both call it). Apply it to a
+    gram_hashes column.
+
+    The sorted int64 gram set ships once per executor in the UDF
+    closure (the same premise as a broadcast); per Arrow batch the
+    flattened grams make ONE searchsorted pass + a reduceat segment
+    sum (the simhash_udf pattern). Exact: it compares the same int64
+    hashes the DuckDB twin joins on.
+
+    Shapes it replaced, at 50k docs x 36.5k grams: array_intersect
+    against a literal rebuilds its lookup set per row (21 s vs ~1 s at
+    local[32]); isin inside a lambda never converts to InSet and scans
+    the literals per element (23 s); a broadcast join of (url, gram)
+    pairs needs a groupBy and a left join back to keep every doc, and
+    was no faster (BENCH/PLAN_EVIDENCE.md).
+    """
+    bset = np.asarray(sorted(set(bench_grams)), dtype=np.int64)
+
+    @pandas_udf(LongType())
+    def n_hit_udf(grams: pd.Series) -> pd.Series:
+        lens = grams.str.len().to_numpy(dtype=np.int64)
+        out = np.zeros(len(lens), dtype=np.int64)
+        total = int(lens.sum())
+        if total and bset.size:
+            arrs = [np.asarray(g, dtype=np.int64)
+                    for g in grams if len(g)]
+            flat = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
+            idx = np.searchsorted(bset, flat)
+            hit = np.where(idx < bset.size, bset[np.minimum(
+                idx, bset.size - 1)] == flat, False).astype(np.int64)
+            nonempty = lens > 0
+            ne_lens = lens[nonempty]
+            ne_off = np.zeros(len(ne_lens), dtype=np.int64)
+            np.cumsum(ne_lens[:-1], out=ne_off[1:])
+            out[nonempty] = np.add.reduceat(hit, ne_off)
+        return pd.Series(out)
+
+    return n_hit_udf
+
+
+def decontaminate(docs: DataFrame, bench_grams, k: int = 5,
+                  id_col: str = "url", text_col: str = "text") -> DataFrame:
     """(url, n_hit, contaminated): flag corpus documents sharing any
     k-token shingle with a benchmark/eval set — the standard
     pre-training decontamination pass (n-gram overlap against held-out
-    benchmarks), expressed as a semi-structure join on gram HASHES.
+    benchmarks). `bench_grams` is the benchmark's gram-hash set
+    (collect_bench_grams).
 
     n_hit counts the doc's DISTINCT grams that appear anywhere in the
-    benchmark set. Docs with < k tokens have no grams and are clean by
-    definition (n_hit 0) but KEEP their output row — a decontamination
-    verdict must cover every document.
+    benchmark set (n_hit_probe). Docs with < k tokens, or null text,
+    have no grams and are clean by definition (n_hit 0) but keep their
+    output row — a decontamination verdict must cover every document.
 
-    Scale shape (10^12 docs vs a benchmark of ~10^6 grams): the
-    benchmark gram set is tiny by construction, so it broadcasts —
-    the corpus side never shuffles its text, only the (url, gram)
-    pairs that SURVIVE the broadcast join reach the per-url count
-    aggregation, and the final left join is a url-keyed partial-agg
-    pattern.
+    Scale shape (10^12 docs vs a benchmark of ~10^6 grams): a lazy,
+    map-only projection — no Exchange, no join, one ArrowEvalPython;
+    the corpus text never shuffles. The same projection runs unchanged
+    on a streaming DataFrame (stateless, append mode).
     """
-    bg = F.broadcast(benchmark
-                     .select(F.explode(gram_hashes(F.col(bench_text_col), k))
-                             .alias("gram"))
-                     .distinct())
-    dg = docs.select(F.col(id_col),
-                     F.explode(gram_hashes(F.col(text_col), k))
-                     .alias("gram"))
-    hits = (dg.join(bg, "gram")
-            .groupBy(id_col).agg(F.count("*").alias("_n")))
-    return (docs.select(id_col)
-            .join(hits, id_col, "left")
-            .select(id_col,
-                    F.coalesce(F.col("_n"), F.lit(0).cast("long"))
-                    .alias("n_hit"))
+    n_hit = n_hit_probe(bench_grams)(gram_hashes(F.col(text_col), k))
+    return (docs.select(F.col(id_col), n_hit.alias("n_hit"))
             .withColumn("contaminated", F.col("n_hit") > 0))
 
 
@@ -271,10 +304,10 @@ def decontaminate_sql(tok_cte: str, bench_pred: str, k: int = 5) -> str:
 
 def collect_bench_grams(benchmark: DataFrame, k: int = 5,
                         text_col: str = "text") -> list[int]:
-    """Driver-side distinct gram-hash list of a benchmark set — the
-    input shape streaming_decontaminate wants (benchmarks are
-    dimension-sized; this is the same premise as the batch operator's
-    broadcast join, just materialized once up front)."""
+    """Driver-side sorted distinct gram-hash list of a benchmark set —
+    the `bench_grams` input of decontaminate and
+    pipeline.corpus_pipeline (benchmarks are dimension-sized: one
+    collect, then shipped once per executor like a broadcast)."""
     rows = (benchmark
             .select(F.explode(gram_hashes(F.col(text_col), k))
                     .alias("gram"))

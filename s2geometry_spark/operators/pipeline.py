@@ -22,59 +22,17 @@ premise as a broadcast, shipped once in the plan:
   corpus itself (`centroids=None`) is the bootstrap path and costs one
   extra aggregate pass (textstats.lang_centroids).
 - `bench_grams`: the benchmark k-token gram-hash set
-  (corpus.collect_bench_grams). Measured shapes for the in-row verdict
-  at sf0.1×10 (50k docs, 36.5k grams, local[32]): JVM
-  array_intersect-with-literal rebuilds its lookup set PER ROW (21s);
-  isin inside a lambda never converts to InSet, so it scans the 36k
-  literals per ELEMENT (23s); the vectorized Arrow probe below — gram
-  hashes are computed JVM-side as exact longs, then membership is one
-  np.searchsorted against a once-per-executor sorted set — runs the
-  same verdict in ~1s and rides the SAME ArrowEvalPython as the
-  letter-count UDF (independent UDFs in one projection batch into one
-  Arrow hop). Exactness is untouched: the probe compares int64 gram
-  hashes, the same values the DuckDB twin joins on.
+  (corpus.collect_bench_grams). The verdict is corpus.n_hit_probe, the
+  same Arrow probe corpus.decontaminate projects; it rides the SAME
+  ArrowEvalPython as the letter-count UDF (independent UDFs in one
+  projection batch into one Arrow hop).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
 
 from . import corpus, textstats
-
-
-def _n_hit_probe(bench_grams):
-    """Vectorized membership count: how many of a row's (distinct,
-    JVM-computed) gram hashes appear in the benchmark set. The sorted
-    int64 set ships once per executor in the UDF closure (the same
-    premise as a broadcast); per batch the flattened grams make ONE
-    searchsorted pass + a reduceat segment sum (the simhash_udf
-    pattern)."""
-    bset = np.asarray(sorted(set(bench_grams)), dtype=np.int64)
-
-    @pandas_udf(LongType())
-    def n_hit_udf(grams: pd.Series) -> pd.Series:
-        lens = grams.str.len().to_numpy(dtype=np.int64)
-        out = np.zeros(len(lens), dtype=np.int64)
-        total = int(lens.sum())
-        if total and bset.size:
-            arrs = [np.asarray(g, dtype=np.int64)
-                    for g in grams if len(g)]
-            flat = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
-            idx = np.searchsorted(bset, flat)
-            hit = np.where(idx < bset.size, bset[np.minimum(
-                idx, bset.size - 1)] == flat, False).astype(np.int64)
-            nonempty = lens > 0
-            ne_lens = lens[nonempty]
-            ne_off = np.zeros(len(ne_lens), dtype=np.int64)
-            np.cumsum(ne_lens[:-1], out=ne_off[1:])
-            out[nonempty] = np.add.reduceat(hit, ne_off)
-        return pd.Series(out)
-
-    return n_hit_udf
 
 
 def corpus_pipeline(pages: DataFrame, bench_grams,
@@ -121,7 +79,7 @@ def corpus_pipeline(pages: DataFrame, bench_grams,
     df = df.select(id_col, "keep_quality", "keep_rep",
                    textstats.letter_counts_udf(F.col(text_col))
                    .alias("_lc"),
-                   _n_hit_probe(bench_grams)(
+                   corpus.n_hit_probe(bench_grams)(
                        corpus.gram_hashes(F.col(text_col), k))
                    .alias("n_hit"))
 

@@ -767,12 +767,9 @@ def split_cols(id_col: str = "url") -> tuple:
     return bucket.alias("bucket"), split.alias("split")
 
 
-def corpus_split(pages: DataFrame, id_col: str = "url",
-                 extra_cols: tuple = ()) -> DataFrame:
+def corpus_split(pages: DataFrame, id_col: str = "url") -> DataFrame:
     """(url, bucket, split) from `split_cols`. Pure JVM projection — the
     assignment is a function of the id alone, so it is stable across
     reshards, reruns, and engines (the property a training pipeline
-    needs: a doc never migrates between splits). extra_cols passes
-    input columns through untouched (the r5 pipeline chaining hook)."""
-    return pages.select(id_col, *[F.col(c) for c in extra_cols],
-                        *split_cols(id_col))
+    needs: a doc never migrates between splits)."""
+    return pages.select(id_col, *split_cols(id_col))

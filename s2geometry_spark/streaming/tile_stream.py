@@ -14,6 +14,11 @@ idempotent (foreachBatch → TableIO snapshot) writes.
   events stream with in-stream dedup (dropDuplicates within the
   watermark on event_id — the standard at-least-once → effectively-once
   pattern).
+
+Per-row operators need no streaming twin: a map-only projection such
+as ``corpus.decontaminate`` (its benchmark gram set collected up front
+with ``corpus.collect_bench_grams``) runs unchanged on the stream
+returned by ``stream_pages``, in append mode.
 """
 
 from __future__ import annotations
@@ -156,35 +161,3 @@ def streaming_cm_tokens(pages_stream: DataFrame) -> DataFrame:
     from ..operators.sketches import cm_sketch_tokens
 
     return cm_sketch_tokens(pages_stream)
-
-
-def streaming_decontaminate(pages_stream: DataFrame, bench_grams,
-                            k: int = 5,
-                            text_col: str = "text") -> DataFrame:
-    """Per-document contamination verdicts (url, n_hit, contaminated)
-    as documents arrive — the streaming twin of corpus.decontaminate.
-
-    The batch operator's keep-every-doc LEFT join back onto the corpus
-    would be a stream-stream join here (unsupported without
-    watermarked state for no reason), so the streaming twin folds the
-    verdict INTO the row: n_hit = |doc grams ∩ benchmark grams| via
-    array_intersect against the collected gram-hash set (a plan
-    literal, shipped once per executor like a broadcast). Stateless —
-    no watermark, no state store, append mode.
-
-    Size boundary (explicit): the literal array is an expression tree
-    with one node per gram and ArrayIntersect rebuilds its lookup set
-    per evaluation, so this twin is for benchmark sets up to ~10^5
-    grams (typical eval suites). Past that, run the batch operator
-    per micro-batch via foreachBatch — its broadcast JOIN ships the
-    gram relation once and probes a shared hash table. Build the list
-    with corpus.collect_bench_grams.
-    """
-    from ..operators.corpus import gram_hashes
-
-    grams = gram_hashes(F.col(text_col), k)
-    n_hit = F.size(F.array_intersect(
-        grams, F.lit(sorted(bench_grams)).cast("array<long>")))
-    return pages_stream.select(
-        "url", n_hit.cast("long").alias("n_hit"),
-        (n_hit > 0).alias("contaminated"))

@@ -573,8 +573,8 @@ def test_asof_forward_tolerance_subset(spark):
 
 
 def test_streaming_decontaminate_equal_batch(spark, pages_stream_dir):
-    """The stateless streaming verdict (array_intersect vs the
-    collected gram set) must equal the batch broadcast-join operator
+    """decontaminate is a map-only projection, so it runs unchanged on
+    a stream (append mode, no state) and must give the batch verdicts
     row-for-row on the same docs."""
     from s2geometry_spark.functions import text as T
     from s2geometry_spark.operators import corpus
@@ -585,13 +585,13 @@ def test_streaming_decontaminate_equal_batch(spark, pages_stream_dir):
     assert grams
     stream = TS.stream_pages(spark, pages_stream_dir,
                              max_files_per_trigger=2)
-    out = TS.streaming_decontaminate(stream, grams, k=5)
+    out = corpus.decontaminate(stream, grams, k=5)
     assert out.isStreaming
     TS.run_stream_to_memory(out, "decontam_stream", output_mode="append")
     got = {r["url"]: (r["n_hit"], r["contaminated"])
            for r in spark.table("decontam_stream").collect()}
     expect = {r["url"]: (r["n_hit"], r["contaminated"])
-              for r in corpus.decontaminate(docs, bench, k=5).collect()}
+              for r in corpus.decontaminate(docs, grams, k=5).collect()}
     assert got == expect and any(v[1] for v in got.values())
 
 

@@ -58,9 +58,8 @@ def test_pipeline_equals_stage_composition(spark, docs, bench_grams):
            for r in textstats.gopher_rep(docs, include_empty=True).collect()}
     lang = {r["url"]: r["lang_pred"]
             for r in textstats.lang_id(docs).collect()}
-    bench = docs.filter(T.h60(F.concat(F.lit("bm:"), F.col("url"))) % 7 == 0)
     dec = {r["url"]: (r["n_hit"], r["contaminated"])
-           for r in corpus.decontaminate(docs, bench, k=5).collect()}
+           for r in corpus.decontaminate(docs, bench_grams, k=5).collect()}
     spl = {r["url"]: (r["bucket"], r["split"])
            for r in textstats.corpus_split(docs).collect()}
     assert set(got) == set(q) == set(rep) == set(lang)

@@ -340,6 +340,25 @@ def test_geocode_job_resume(spark, tmp_path):
     assert len(io.history("pages_tiled")) == 8
 
 
+def test_geocode_job_refuses_mismatched_resume(spark, tmp_path):
+    """Resuming with another n_batches or input must fail before
+    anything is committed: batch membership is pmod(tile position,
+    n_batches), so 8-way batches 0-2 followed by a 4-way batch 3 would
+    leave the rows of 8-way batches 4-6 unwritten while done_keys
+    reported the table complete."""
+    io = ParquetTableIO(str(tmp_path / "root"))
+    run_geocode_job(spark, SF_DIR, io, n_batches=8, hot_threshold=100,
+                    max_batches_this_run=3)
+    with pytest.raises(ValueError, match="n_batches"):
+        run_geocode_job(spark, SF_DIR, io, n_batches=4, hot_threshold=100)
+    with pytest.raises(ValueError, match="sf_dir"):
+        run_geocode_job(spark, str(tmp_path / "other_sf"), io, n_batches=8,
+                        hot_threshold=100)
+    assert io.done_keys("pages_tiled") == {0, 1, 2}
+    r = run_geocode_job(spark, SF_DIR, io, n_batches=8, hot_threshold=100)
+    assert r["committed"] == [3, 4, 5, 6, 7]
+
+
 def test_geocode_job_batches_all_nonempty(spark, pages):
     """The batch key spreads level-4 tiles over every batch (the low
     bits of a level-4 id are its constant lsb pattern, so keying on the

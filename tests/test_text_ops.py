@@ -5,6 +5,7 @@ independent of the DuckDB e2e gate in test_e2e_spark.py."""
 from __future__ import annotations
 
 import hashlib
+import re
 
 import numpy as np
 import pytest
@@ -764,11 +765,14 @@ def test_decontaminate_planted_overlap(spark):
         ("d3", "quick brown fox trots on"),    # shares 'quick brown fox'
         ("d4", "too short"),                   # < 3 tokens -> clean
         ("d5", "the quick brown the quick brown pad"),  # dup grams: distinct once
+        ("d6", None),                          # null text -> clean
+        ("d7", ""),                            # empty text -> clean
     ], "url string, text string")
     bench = spark.createDataFrame(
         [("b1", "the quick brown fox ran away")], "url string, text string")
+    grams = corpus.collect_bench_grams(bench, k=3)
     got = {r["url"]: (r["n_hit"], r["contaminated"])
-           for r in corpus.decontaminate(docs, bench, k=3).collect()}
+           for r in corpus.decontaminate(docs, grams, k=3).collect()}
     # bench grams: {the quick brown, quick brown fox, brown fox ran, ...}
     assert got["d1"] == (2, True)    # 'the quick brown', 'quick brown fox'
     assert got["d2"] == (0, False)
@@ -778,7 +782,9 @@ def test_decontaminate_planted_overlap(spark):
     # quick brown pad} — only 'the quick brown' is shared, and its
     # repeat counts once (distinct grams)
     assert got["d5"] == (1, True)
-    assert len(got) == 5
+    assert got["d6"] == (0, False)
+    assert got["d7"] == (0, False)
+    assert len(got) == 7
 
 
 def test_decontaminate_benchmark_self_hit(spark, docs):
@@ -786,22 +792,26 @@ def test_decontaminate_benchmark_self_hit(spark, docs):
     is also in the corpus (the degenerate self-overlap case)."""
     from s2geometry_spark.operators import corpus
     bench = docs.filter(T.h60(F.concat(F.lit("bm:"), F.col("url"))) % 7 == 0)
+    grams = corpus.collect_bench_grams(bench, k=5)
     flagged = {r["url"] for r in
-               corpus.decontaminate(docs, bench, k=5)
+               corpus.decontaminate(docs, grams, k=5)
                .filter(F.col("contaminated")).collect()}
     bench_with_grams = {r["url"] for r in bench.filter(
         F.size(corpus.gram_hashes(F.col("text"), 5)) > 0).collect()}
     assert bench_with_grams and bench_with_grams <= flagged
 
 
-def test_decontaminate_broadcast_plan(spark, docs):
-    """Plan shape: the benchmark gram set broadcasts (no shuffle of the
-    corpus text for the hit join)."""
+def test_decontaminate_plan_is_map_only(spark, docs):
+    """Plan shape: one projection over the corpus scan — no Exchange,
+    no join, one ArrowEvalPython (the gram-hash probe); the corpus
+    text never shuffles."""
     from s2geometry_spark.operators import corpus
     from s2geometry_spark.plans import explain as X
-    bench = docs.limit(20)
-    plan = X.formatted_plan(corpus.decontaminate(docs, bench, k=5))
-    assert "BroadcastHashJoin" in plan
+    grams = corpus.collect_bench_grams(docs.limit(20), k=5)
+    plan = X.formatted_plan(corpus.decontaminate(docs, grams, k=5))
+    assert len(re.findall(r"\(\d+\) \w*Exchange", plan)) == 0, plan
+    assert len(re.findall(r"\(\d+\) \w*Join", plan)) == 0, plan
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
 
 
 def test_simhash_pairs_cap_that_never_fires_is_identity(spark, docs):
