@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import subprocess
 import sys
 import time
@@ -145,20 +146,19 @@ def capture_plans() -> None:
                 "re-join after the candidate set is formed\n\n"
                 + X.formatted_plan(mh))
     from s2geometry_spark.operators.distjoin import distance_join
-    dj = distance_join(pages, 0.002, cache_registry=(dj_reg := []))
+    dj = distance_join(pages, 0.002)
     plan = X.formatted_plan(dj)
-    tree = plan.split("\n\n")[0]
-    assert "CartesianProduct" not in plan
-    assert tree.count("InMemoryTableScan") == 2
+    assert X.count_shuffles(plan) == 1
+    assert re.search(r"hashpartitioning\(key#\d+L, \d+\)", plan)
+    assert "InMemoryTableScan" not in plan
+    assert not any(j in plan for j in (
+        "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+        "CartesianProduct", "BroadcastNestedLoopJoin"))
     with open(os.path.join(HERE, "explain_distjoin.txt"), "w") as f:
-        f.write("within-distance self-join (radius 0.002 rad, L8 "
-                "stencil)\nPROPERTY ASSERTED: grid equi-join on the "
-                "cell key (no cartesian);\nboth sides probe ONE "
-                "persisted points projection — the fused\nxyz+cell+"
-                "neighbors kernel is a single Arrow hop, evaluated "
-                "once\n\n" + plan)
-    while dj_reg:
-        dj_reg.pop().unpersist()
+        f.write("within-distance self-join (radius 0.002 rad, L8 half "
+                "stencil)\nPROPERTY ASSERTED: no join node and no cache; "
+                "one emit MapInPandas,\nONE hash Exchange on the cell "
+                "key, one pairs MapInPandas\n\n" + plan)
     fs = media.frame_sample(documents_to_pages(
         load_documents(spark, sf_dir), with_html=True))
     plan = X.formatted_plan(fs)
@@ -460,8 +460,9 @@ def write_baseline() -> None:
         "broadcast join with ZERO shuffle exchanges on the pages side), "
         "`explain_geocode.txt` (map-only kernel chain), "
         "`explain_salted.txt` (shuffle-hash covering join), "
-        "`explain_minhash.txt`, `explain_distjoin.txt` (grid equi-join, "
-        "no cartesian, asserted no broadcast — see below), "
+        "`explain_minhash.txt`, `explain_distjoin.txt` (half-stencil "
+        "emit, one shuffle on the cell key, numpy pairs: no join node, "
+        "no cache), "
         "`explain_frame_sample.txt` (no Python eval), `explain_hll.txt` "
         "(aggregation-only), `explain_decontaminate.txt` (map-only "
         "gram-hash probe), `explain_url_normalize.txt` (zero-shuffle, "
@@ -480,8 +481,9 @@ def write_baseline() -> None:
         "size estimate through the Python projection under-counted the "
         "cached points relation and picked a 12.7 GiB broadcast build "
         "(> the 8 GiB cap -> abort; a cluster would OOM the driver). "
-        "distance_join now pins shuffle_hash; plan test asserts no "
-        "BroadcastHashJoin. Also: a fixed-radius distance join's "
+        "distance_join later dropped the join and the cached relation "
+        "altogether (one shuffle on the cell key, no join node; plan "
+        "test). Also: a fixed-radius distance join's "
         "OUTPUT grows quadratically with density, so the bench holds "
         "r^2*n constant across scales (the query shape a user would "
         "actually scale).",

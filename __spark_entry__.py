@@ -221,12 +221,7 @@ def _q_dist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the output for the same FMA-ulp reason as knn_ring; pair
     MEMBERSHIP is safe because no sf0.01 pair's d2 falls within 1e-12
     of the threshold (asserted in tests/test_scale_ops.py)."""
-    pages = load_pages(spark, sf_dir)
-    registry: list = []
-    out = distance_join(pages, DIST_JOIN_RADIUS, cache_registry=registry) \
-        .localCheckpoint(eager=True)  # materialize, then drop the
-    dedup.release_caches(registry)    # points projection (ADVICE r3)
-    return out
+    return distance_join(load_pages(spark, sf_dir), DIST_JOIN_RADIUS)
 
 
 # ---------------------------------------------------------------------------

@@ -165,12 +165,8 @@ def main() -> None:
     # the local[2] scaling leg past the 1h subprocess timeout).
     dist_r = 0.002 * (500_000 / max(n_pages, 1)) ** 0.5
 
-    def _dist():
-        reg: list = []
-        force(distance_join(pages, dist_r, cache_registry=reg)
-              .select("url_a", "url_b"))
-        dedup.release_caches(reg)
-    bench("dist_join", _dist)
+    bench("dist_join", lambda: force(
+        distance_join(pages, dist_r).select("url_a", "url_b")))
 
     # -- training-data pipeline (multiplied text corpus) --
     bench("exact_dedup", lambda: force(dedup.exact_dedup(text_docs)))

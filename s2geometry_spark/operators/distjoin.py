@@ -1,46 +1,36 @@
 """Within-distance spatial self-join (S2ClosestPointQuery / spatial
-"distance join" family — public S2 spec; no reference checkout exists,
-SURVEY §0).
+"distance join" family — public S2 spec; SURVEY §0): all unordered
+page pairs within angular distance ``radius``, the batch twin of
+S2ClosestPointQuery(max_distance=radius) run from every point at once.
 
-Query: all unordered page pairs whose points lie within angular
-distance ``radius`` of each other — the batch twin of running
-S2ClosestPointQuery(max_distance=radius) from every point at once.
+Grid + stencil, never all-pairs (SURVEY B6/B10): level L is the
+COARSEST whose min cell width >= radius (kernels.min_width_max_level),
+so a geodesic of length <= radius cannot cross a whole level-L cell and
+the two points' cells are equal or adjacent.
 
-Physical shape (SURVEY B6/B10 discipline — grid + stencil, never
-all-pairs):
+Half stencil: the same-level neighbour relation is symmetric (checked
+over every cell at levels 2, 4 and 6). So each point probes only the
+deduplicated neighbours whose id sorts above its own cell (~5 rows per
+point instead of 9): a cross-cell pair is found once, from the lower
+cell's point meeting the higher cell's centre row; a same-cell pair is
+found once by keeping centre rows i < j; the output takes (least url,
+greatest url), and its ``cell`` is the centre cell of the greater-url
+side (what the ``dist_join_pairs`` oracle defines).
 
-1. pick the COARSEST level L whose min cell width >= radius
-   (kernels.min_width_max_level, A32 metric). Guarantee: a geodesic
-   between two points within ``radius`` cannot fully cross any
-   intermediate level-L cell (each is >= one min width wide), so the
-   two cells are identical or Chebyshev-adjacent — the 3x3 stencil is
-   a certified superset of all qualifying pairs.
-2. project each point once to (url, px, py, pz, cell, stencil[9]) and
-   persist — the self-join would otherwise re-run the geocode + xyz
-   kernel chain on BOTH sides (CLAUDE.md: persist self-joined
-   intermediates), and the stencil array (all_neighbors_udf + own
-   cell) is computed in the same single pass.
-3. left side explodes the stencil (9 rows/point), right side keeps the
-   center cell (1 row/point); shuffle equi-join on the cell key with
-   ``url_a < url_b``. Each qualifying pair is produced EXACTLY once:
-   cell(b) is unique, stencil(a) has distinct members, and the
-   symmetric orientation (b's stencil hitting a's cell) is cut by the
-   url ordering — no distinct needed.
-4. exact post-filter on squared chord distance d2 = ||p_a - p_b||^2
-   (monotone with angle), pure JVM whole-stage codegen, the same
-   fixed-order expression as the kNN oracle.
+Shape: one ``mapInPandas`` emits each point's centre row (key = own
+cell) and its probe rows, with xyz and the own cell; one ``repartition``
++ ``sortWithinPartitions`` on the key; one ``mapInPandas`` forms each
+complete key group's centre x centre and probe x centre candidates and
+keeps d2 = (dx*dx + dy*dy) + dz*dz <= d2max (the oracle's operand
+order). No join node, nothing persisted; text never shuffles. A page
+without a point (K.has_point) or with a NULL url is dropped at emit;
+equal urls never pair.
 
-Scale notes (10^12 rows): only (url, xyz, cell) ever shuffles — 9x
-fan-out on one side, text/html never move; both sides partition on the
-same cell key, and AQE's skew-join split handles a hot cell (the
-engine's one skew mechanism, operators/tiles.py). No driver loop, no
-collect, no broadcast of anything data-sized.
-
-Catalyst traps (CLAUDE.md): the join key is UDF-derived, so the
-eqNullSafe key + coalesce()-wrapped filters guard against the
-inferred-isnotnull pushdown re-inlining the kernel chain — and the
-persist barrier makes re-inlining impossible even where Catalyst
-tries. Single-evaluation asserted in tests/test_plans.py.
+Trade-off: ``repartition`` gets no AQE skew-join split, so a hot cell
+is one task's work, quadratic in its size, and its kept pairs cross
+Arrow (3,000 extra points in one cell: warm wall 3.4 -> 4.1 s at 50k
+pages; BENCH/PLAN_EVIDENCE.md). Its candidates are expanded ``_BLOCK``
+at a time, so that task never holds N² index arrays at once.
 """
 
 from __future__ import annotations
@@ -51,11 +41,24 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import (BooleanType, DoubleType, LongType,
+                               StringType, StructField, StructType)
 
 from .. import kernels as K
+
+_BLOCK = 1 << 18  # candidate pairs expanded at once in the pairs pass
+
+_EMIT_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("x", DoubleType()), StructField("y", DoubleType()),
+    StructField("z", DoubleType()),
+    StructField("key", LongType()), StructField("own", LongType()),
+    StructField("centre", BooleanType()),
+])
+_PAIR_SCHEMA = StructType([
+    StructField("url_a", StringType()), StructField("url_b", StringType()),
+    StructField("cell", LongType()),
+])
 
 
 def chord2_of_angle(radius_rad: float) -> float:
@@ -64,52 +67,87 @@ def chord2_of_angle(radius_rad: float) -> float:
     return (2.0 * math.sin(radius_rad / 2.0)) ** 2
 
 
-_PROJ_SCHEMA = StructType([
-    StructField("px", DoubleType()), StructField("py", DoubleType()),
-    StructField("pz", DoubleType()),
-    StructField("cell", LongType()),
-    StructField("nbrs", ArrayType(LongType())),
-])
+def _emit(level: int):
+    """mapInPandas body: centre row + half-stencil probe rows per point."""
+    def run(batches):
+        for pdf in batches:
+            lat = pdf["lat"].to_numpy("float64")
+            lng = pdf["lng"].to_numpy("float64")
+            keep = K.has_point(lat, lng) & pdf["url"].notna().to_numpy()
+            lat, lng = lat[keep], lng[keep]
+            urls = pdf["url"].to_numpy(dtype=object)[keep]
+            x, y, z = K.latlng_to_xyz(np.radians(lat), np.radians(lng))
+            cells = K.parent(K.latlng_degrees_to_cell_id(lat, lng), level)
+            own = K.uint64_to_signed(cells)
+            nb = np.sort(K.uint64_to_signed(
+                np.stack(K.all_neighbors(cells), axis=1)), axis=1)
+            up = nb > own[:, None]  # half stencil, corner duplicates cut
+            up[:, 1:] &= nb[:, 1:] != nb[:, :-1]
+            r, c = np.nonzero(up)
+            rows = np.concatenate([np.arange(own.size), r])
+            yield pd.DataFrame({
+                "url": urls[rows], "x": x[rows], "y": y[rows], "z": z[rows],
+                "key": np.concatenate([own, nb[r, c]]), "own": own[rows],
+                "centre": np.arange(rows.size) < own.size})
+    return run
 
 
-def _make_proj_udf(level: int):
-    """ONE Arrow hop for the whole per-point projection: xyz + level-L
-    cell + its 8 neighbors. The separate xyz_udf / all_neighbors_udf
-    composition costs three Arrow round-trips over the full table
-    (cell_id_udf upstream included); re-deriving the cell from lat/lng
-    here duplicates ~ms of numpy Hilbert encoding to save two
-    full-table serialization passes (measured 5.8s -> ~3s projection
-    at 500k rows). Values are identical to the kernel composition —
-    same K.* calls. A row without a point (K.has_point) gets NULLs: its
-    stencil is NULL and explodes to nothing, its NULL cell meets no
-    stencil cell, so it is in no pair."""
-    @pandas_udf(_PROJ_SCHEMA)
-    def proj_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.DataFrame:
-        lat_d = lat_deg.to_numpy("float64")
-        lng_d = lng_deg.to_numpy("float64")
-        valid = K.has_point(lat_d, lng_d)
-        every = valid.all()
-        if not every:  # the kernels see (0, 0); its outputs become NULL
-            lat_d = np.where(valid, lat_d, 0.0)
-            lng_d = np.where(valid, lng_d, 0.0)
-        x, y, z = K.latlng_to_xyz(np.radians(lat_d), np.radians(lng_d))
-        cells = K.parent(K.latlng_degrees_to_cell_id(lat_d, lng_d), level)
-        nbrs = np.stack(K.all_neighbors(cells), axis=1)  # (n, 8) uint64
-        signed = K.uint64_to_signed(nbrs.reshape(-1)).reshape(nbrs.shape)
-        cell = K.uint64_to_signed(cells)
-        if every:
-            return pd.DataFrame({"px": x, "py": y, "pz": z, "cell": cell,
-                                 "nbrs": list(signed)})
-        null = ~valid
-        return pd.DataFrame({
-            "px": pd.arrays.FloatingArray(x, null),
-            "py": pd.arrays.FloatingArray(y, null),
-            "pz": pd.arrays.FloatingArray(z, null),
-            "cell": pd.arrays.IntegerArray(cell, null),
-            "nbrs": [None if n else r for n, r in zip(null, signed)],
-        })
+def _pairs(chunk: pd.DataFrame, d2max: float, block: int):
+    """Pair frames of a key-sorted chunk made of complete key groups,
+    from at most ``block`` candidates at a time."""
+    key = chunk["key"].to_numpy()
+    centre = chunk["centre"].to_numpy(bool)
+    cen = np.flatnonzero(centre)  # centre rows, in key order
+    lo = np.searchsorted(key[cen], key, "left")
+    hi = np.searchsorted(key[cen], key, "right")
+    # a centre row meets the centres after it, a probe row all of them
+    start = np.where(centre, np.cumsum(centre), lo)
+    n = hi - start
+    ends = np.cumsum(n)
+    x, y, z = (chunk[c].to_numpy() for c in ("x", "y", "z"))
+    urls = chunk["url"].to_numpy(dtype=object)
+    own = chunk["own"].to_numpy()
+    total = int(ends[-1]) if ends.size else 0
+    for s in range(0, total, block):
+        pos = np.arange(s, min(s + block, total))
+        a = np.searchsorted(ends, pos, "right")
+        b = cen[start[a] + pos - (ends[a] - n[a])]
+        dx, dy, dz = x[a] - x[b], y[a] - y[b], z[a] - z[b]
+        near = (dx * dx + dy * dy) + dz * dz <= d2max
+        a, b = a[near], b[near]
+        ua, ub = urls[a], urls[b]
+        lt = ua < ub
+        keep = lt | (ua > ub)  # equal urls never pair
+        if keep.any():
+            yield pd.DataFrame({
+                "url_a": np.where(lt, ua, ub)[keep],
+                "url_b": np.where(lt, ub, ua)[keep],
+                "cell": np.where(lt, own[b], own[a])[keep]})
 
-    return proj_udf
+
+def _pair_groups(d2max: float):
+    """mapInPandas body over key-sorted partitions: the last key group
+    of a batch may continue, so it is held for the next batch. The
+    block size is read here, when the plan is built."""
+    block = _BLOCK
+
+    def run(batches):
+        held: list = []
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            key = pdf["key"].to_numpy()
+            cut = int(np.searchsorted(key, key[-1], "left"))
+            if cut:
+                yield from _pairs(pd.concat(held + [pdf.iloc[:cut]],
+                                            ignore_index=True),
+                                  d2max, block)
+                held = []
+            held.append(pdf.iloc[cut:])
+        if held:
+            yield from _pairs(pd.concat(held, ignore_index=True), d2max,
+                              block)
+    return run
 
 
 def distance_join(pages: DataFrame, radius_rad: float,
@@ -117,16 +155,13 @@ def distance_join(pages: DataFrame, radius_rad: float,
                   cache_registry: list | None = None) -> DataFrame:
     """All unordered pairs (url_a < url_b) within ``radius_rad``.
 
-    Returns (url_a, url_b, cell) where cell is the level-L key the
-    pair met on (the partition provenance — useful for skew audits;
-    unique per pair, see module docstring). ``pages`` needs only
-    url/lat/lng — the level-L cell is re-derived inside the fused
-    projection UDF and any cell_id/cell_l* columns are pruned away.
+    Returns a lazy (url_a, url_b, cell): cell is the level-L centre
+    cell of url_b (module docstring). ``pages`` needs only url/lat/lng.
 
-    ``cache_registry``: the dedup.py contract — the persisted points
-    projection is appended so callers release it after materializing
-    (dedup.release_caches); without a registry it is left persisted
-    for the session.
+    ``cache_registry``: kept for callers of the persisted shape.
+    Nothing is persisted; when given, one lazy per-point view
+    (url, px, py, pz, cell, stencil) over the emitted rows is appended,
+    its stencil being the half stencil, and releasing it is a no-op.
     """
     if level is None:
         level = K.min_width_max_level(radius_rad)
@@ -136,51 +171,16 @@ def distance_join(pages: DataFrame, radius_rad: float,
                 f"({K.K_MIN_WIDTH_DERIV:.4f} rad); the 3x3 stencil bound "
                 "needs radius <= min_width(0) — shard the query or add a "
                 "wider Chebyshev stencil")
-    d2max = chord2_of_angle(radius_rad)
-
-    proj = _make_proj_udf(level)
-    # array_union stays JVM-side: it dedups the (rare) coincident
-    # corner neighbors — a duplicate stencil cell would duplicate pairs
-    pts = (pages
-           .withColumn("o", proj(F.col("lat"), F.col("lng")))
-           .select("url", F.col("o.px").alias("px"),
-                   F.col("o.py").alias("py"), F.col("o.pz").alias("pz"),
-                   F.col("o.cell").alias("cell"),
-                   F.array_union(F.array(F.col("o.cell")), F.col("o.nbrs"))
-                   .alias("stencil"))
-           ).persist()
+    emitted = pages.select("url", "lat", "lng").mapInPandas(
+        _emit(level), _EMIT_SCHEMA)
     if cache_registry is not None:
-        cache_registry.append(pts)
-
-    left = (pts
-            .select(F.col("url").alias("url_a"), F.col("px").alias("ax"),
-                    F.col("py").alias("ay"), F.col("pz").alias("az"),
-                    F.explode("stencil").alias("jcell")))
-    right = (pts
-             .select(F.col("url").alias("url_b"), F.col("px").alias("bx"),
-                     F.col("py").alias("by"), F.col("pz").alias("bz"),
-                     F.col("cell").alias("jcell_r")))
-    dx = F.col("ax") - F.col("bx")
-    dy = F.col("ay") - F.col("by")
-    dz = F.col("az") - F.col("bz")
-    d2 = (dx * dx + dy * dy) + dz * dz
-    # BOTH sides are corpus-sized — pin the join to shuffle_hash.
-    # Catalyst's size estimate through the ArrowEvalPython projection
-    # under-counts the cached relation and picked a BROADCAST build at
-    # the 10M-row bench (12.7 GiB > the 8 GiB hard cap → job abort; on
-    # a real cluster it would OOM the driver first). A corpus self-join
-    # must never broadcast; the hint makes that structural.
-    right = right.hint("shuffle_hash")
-    # eqNullSafe key + coalesce'd predicates: no isnotnull inference,
-    # the kernel chain is never re-inlined past the persist barrier
-    pairs = (left.join(
-        right,
-        F.col("jcell").eqNullSafe(F.col("jcell_r"))
-        & F.coalesce(F.col("url_a") < F.col("url_b"), F.lit(False)),
-        "inner")
-        .filter(F.coalesce(d2 <= F.lit(d2max), F.lit(False)))
-        .select("url_a", "url_b", F.col("jcell").alias("cell")))
-    return pairs
+        cache_registry.append(emitted.groupBy(
+            "url", *(F.col(c).alias("p" + c) for c in "xyz"),
+            F.col("own").alias("cell"))
+            .agg(F.collect_list("key").alias("stencil")))
+    return (emitted.repartition("key").sortWithinPartitions("key")
+            .mapInPandas(_pair_groups(chord2_of_angle(radius_rad)),
+                         _PAIR_SCHEMA))
 
 
 def distance_join_count(pages: DataFrame, radius_rad: float,
@@ -189,9 +189,8 @@ def distance_join_count(pages: DataFrame, radius_rad: float,
     """Per-point neighbor-count profile: (url, n_within) for every page
     with at least one neighbor within ``radius_rad`` — the aggregate
     consumers (density screens, spam-cluster detection) actually want,
-    computed without materializing the full pair list twice."""
+    in one pass over the pairs."""
     pairs = distance_join(pages, radius_rad, level=level,
                           cache_registry=cache_registry)
-    both = (pairs.select(F.col("url_a").alias("url"))
-            .unionAll(pairs.select(F.col("url_b").alias("url"))))
-    return both.groupBy("url").agg(F.count("*").alias("n_within"))
+    return (pairs.select(F.explode(F.array("url_a", "url_b")).alias("url"))
+            .groupBy("url").agg(F.count("*").alias("n_within")))

@@ -150,38 +150,34 @@ def test_covering_candidate_gates_evaluate_kernels_once(spark):
 
 
 def test_distance_join_plan_equi_no_cartesian_udfs_cached(spark):
-    """The within-distance self-join must be an equi join on the cell
-    key (never BroadcastNestedLoop/Cartesian — the d2 filter is a
-    post-condition, not the join condition) and both sides must probe
-    the SAME persisted points projection, so the geocode/xyz/neighbor
-    kernel chain appears only beneath the cache, exactly once."""
+    """The within-distance self-join is one emit MapInPandas, ONE
+    hash-partitioning Exchange on the cell key and one pairs
+    MapInPandas: no join node of any kind (the d2 filter runs inside
+    the pairs pass), nothing cached, and no geocode UDF (the emit pass
+    derives the cell from lat/lng itself)."""
+    import re
+
     from s2geometry_spark.operators.distjoin import distance_join
     pages = load_pages(spark, SF_DIR)
-    reg: list = []
-    out = distance_join(pages, 0.05, cache_registry=reg)
-    plan = X.formatted_plan(out)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # a corpus x corpus self-join must NEVER broadcast: Catalyst's size
-    # estimate through the Python projection under-counted the cached
-    # relation and picked a 12.7 GiB broadcast build at the 10M bench
-    # (> the 8 GiB hard cap -> abort). The shuffle_hash hint pins it.
-    assert "BroadcastHashJoin" not in plan, plan
-    assert ("SortMergeJoin" in plan or "ShuffledHashJoin" in plan), plan
-    # both sides scan the SAME cached relation: two InMemoryTableScans,
-    # and every Python-eval node id is shared between their printouts —
-    # a re-inlined second kernel evaluation would mint NEW node ids
-    import re
-    tree = plan.split("\n\n")[0]
-    assert tree.count("InMemoryTableScan") == 2, plan
-    arrow_ids = set(re.findall(r"ArrowEvalPython \((\d+)\)", tree))
-    assert len(arrow_ids) == 1, plan  # ONE fused projection hop
-    assert tree.count("ArrowEvalPython") == 2, plan  # 1 id x 2 printouts
-    # the upstream cell_id_udf must be PRUNED (the fused UDF re-derives
-    # the cell from lat/lng precisely so the extra hop disappears)
+    plan = X.formatted_plan(distance_join(pages, 0.05))
+    assert X.count_nodes(plan, "MapInPandas") == 2, plan
+    assert X.count_shuffles(plan) == 1, plan
+    assert re.search(r"hashpartitioning\(key#\d+L, \d+\)", plan), plan
+    assert "InMemoryTableScan" not in plan, plan
+    for join in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+                 "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert join not in plan, plan
     assert "cell_id_udf(" not in plan, plan
-    while reg:
-        reg.pop().unpersist()
+
+
+def test_distance_join_pins_nothing(spark):
+    """Collecting the pairs leaves the session's persistent-RDD set as
+    it was: the join holds no cache a caller would have to release."""
+    from s2geometry_spark.operators.distjoin import distance_join
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert distance_join(load_pages(spark, SF_DIR), 0.05).collect()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_knn_is_one_map_in_pandas_over_unshuffled_pages(spark):

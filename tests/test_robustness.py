@@ -8,6 +8,7 @@ import math
 import time
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -167,6 +168,63 @@ def test_distance_join_pairs_no_page_without_a_point(spark):
     finally:
         release_caches(reg)
     assert got == [("near-a", "near-b")]
+
+
+def test_distance_join_never_pairs_equal_or_null_urls(spark):
+    """Two rows with one url never pair with each other, each still
+    pairs with a third url, and a NULL url is in no pair."""
+    pages = spark.createDataFrame(
+        [("same", 10.0, 20.0), ("same", 10.0, 20.00001),
+         ("other", 10.0, 20.00002), (None, 10.0, 20.0)],
+        PAGES_DDL).repartition(2)
+    got = sorted((r["url_a"], r["url_b"])
+                 for r in distance_join(pages, 1e-6).collect())
+    assert got == [("other", "same"), ("other", "same")]
+
+
+def test_distance_join_of_no_pages_is_empty(spark):
+    out = distance_join(spark.createDataFrame([], PAGES_DDL), 1e-3)
+    assert out.collect() == []
+    assert out.schema.simpleString() == \
+        "struct<url_a:string,url_b:string,cell:bigint>"
+
+
+def test_distance_join_hot_cell_in_blocks_matches_brute_force(
+        spark, monkeypatch):
+    """2,000 points in ONE level-4 cell (~2M candidates in one key
+    group), expanded in blocks of 10,000, against numpy brute force:
+    through Spark, and in process over 700-row batches, where the
+    held last group and the block count can be seen."""
+    from s2geometry_spark.operators import distjoin
+    monkeypatch.setattr(distjoin, "_BLOCK", 10_000)
+    rng = np.random.default_rng(5)
+    lat = 12.79 + rng.uniform(-0.5, 0.5, 2000)  # level-4 cell centre
+    lng = 19.57 + rng.uniform(-0.5, 0.5, 2000)
+    cells = K.parent(K.latlng_degrees_to_cell_id(lat, lng), 4)
+    assert np.unique(cells).size == 1
+    cell = int(K.uint64_to_signed(cells)[0])
+    urls = [f"p{i:04d}" for i in range(lat.size)]
+    radius = 1e-3
+    x, y, z = K.latlng_to_xyz(np.radians(lat), np.radians(lng))
+    dx, dy, dz = (x[:, None] - x, y[:, None] - y, z[:, None] - z)
+    near = (dx * dx + dy * dy) + dz * dz <= distjoin.chord2_of_angle(radius)
+    want = sorted((urls[i], urls[j], cell)
+                  for i, j in zip(*np.nonzero(np.triu(near, 1))))
+    assert len(want) > 10_000
+
+    pages = spark.createDataFrame(list(zip(urls, lat.tolist(),
+                                           lng.tolist())), PAGES_DDL)
+    got = distance_join(pages.repartition(2), radius, level=4).collect()
+    assert sorted(tuple(r) for r in got) == want
+
+    emitted = pd.concat(distjoin._emit(4)([pd.DataFrame(
+        {"url": urls, "lat": lat, "lng": lng})])).sort_values(
+        "key", kind="stable", ignore_index=True)
+    frames = list(distjoin._pair_groups(distjoin.chord2_of_angle(radius))(
+        emitted.iloc[i:i + 700] for i in range(0, len(emitted), 700)))
+    assert len(frames) > 100  # ~2M candidates, 10,000 at a time
+    assert sorted(pd.concat(frames).itertuples(index=False,
+                                               name=None)) == want
 
 
 def test_knn_never_returns_a_page_without_a_point(spark):
