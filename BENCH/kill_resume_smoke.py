@@ -33,7 +33,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from s2geometry_spark.session import default_driver_memory  # noqa: E402
+from s2geometry_spark.session import (default_cores,  # noqa: E402
+                                      default_driver_memory)
 
 
 def read_manifest(root: str, table: str) -> list[dict]:
@@ -73,7 +74,7 @@ def run_to_completion(out_root, sf_dir, mult, cpus, log_path):
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     mult = int(os.environ.get("SPARK_GRAFT_DOCS_MULT", "2000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     base = "/tmp/s2g_killsmoke"
     shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)

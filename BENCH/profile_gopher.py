@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from s2geometry_spark.functions import text as T
 from s2geometry_spark.operators import textstats
-from s2geometry_spark.session import get_spark
+from s2geometry_spark.session import default_cores, get_spark
 from s2geometry_spark.sources.pages import documents_to_pages, load_documents
 
 
@@ -29,7 +29,7 @@ def force(df):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     text_mult = int(os.environ.get("SPARK_GRAFT_TEXT_MULT", "10"))
     n_parts = cpus * 2
     spark = get_spark("profile-gopher", cores=cpus, shuffle_partitions=cpus)
@@ -113,7 +113,7 @@ if __name__ == "__main__" and not os.environ.get("GOPHER_VARIANTS"):
 def variants():
     """Marginal-cost variants for the run_top rewrite (r5)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     text_mult = int(os.environ.get("SPARK_GRAFT_TEXT_MULT", "10"))
     n_parts = cpus * 2
     spark = get_spark("profile-gopher-v", cores=cpus,

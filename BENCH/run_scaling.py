@@ -139,12 +139,16 @@ def capture_plans() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     docs = documents_to_pages(load_documents(spark, sf_dir))
     mh = dedup.minhash_lsh_pairs(docs, threshold=0.5)
+    plan = X.formatted_plan(mh)
+    assert X.count_nodes(plan, "MapInArrow") == 1
+    assert "ArrowEvalPython" not in plan
     with open(os.path.join(HERE, "explain_minhash.txt"), "w") as f:
         f.write("minhash LSH near-dup pairs\n"
-                "PROPERTY: banded bucket self-join (NOT all-pairs); only\n"
-                "(band, key, url) rows shuffle — signature/shingle arrays\n"
-                "re-join after the candidate set is formed\n\n"
-                + X.formatted_plan(mh))
+                "PROPERTY: signatures are one MapInArrow pass per "
+                "document (no ArrowEvalPython),\npersisted; "
+                "banded bucket self-join (NOT all-pairs);\nonly (band, "
+                "key, url) rows shuffle — signature/shingle arrays\n"
+                "re-join after the candidate set is formed\n\n" + plan)
     from s2geometry_spark.operators.distjoin import distance_join
     dj = distance_join(pages, 0.002)
     plan = X.formatted_plan(dj)
@@ -189,7 +193,8 @@ def capture_plans() -> None:
     with open(os.path.join(HERE, "explain_decontaminate.txt"), "w") as f:
         f.write("benchmark decontamination\n"
                 "PROPERTY ASSERTED: map-only — no Exchange, no join, ONE\n"
-                "ArrowEvalPython (the gram-hash probe); the corpus text\n"
+                "ArrowEvalPython (the n_hit probe hashes the text); the "
+                "corpus text\n"
                 "never shuffles\n\n" + plan)
     un = urls.url_normalize(docs.select("url"))
     plan = X.formatted_plan(un)
@@ -460,13 +465,15 @@ def write_baseline() -> None:
         "broadcast join with ZERO shuffle exchanges on the pages side), "
         "`explain_geocode.txt` (map-only kernel chain), "
         "`explain_salted.txt` (shuffle-hash covering join), "
-        "`explain_minhash.txt`, `explain_distjoin.txt` (half-stencil "
+        "`explain_minhash.txt` (one MapInArrow signature pass, banded "
+        "self-join), `explain_distjoin.txt` (half-stencil "
         "emit, one shuffle on the cell key, numpy pairs: no join node, "
         "no cache), "
         "`explain_frame_sample.txt` (no Python eval), `explain_hll.txt` "
         "(aggregation-only), `explain_decontaminate.txt` (map-only "
-        "gram-hash probe), `explain_url_normalize.txt` (zero-shuffle, "
-        "UDF-free).",
+        "n_hit probe), `explain_url_normalize.txt` (zero-shuffle, "
+        "UDF-free), `explain_pipeline.txt` (fused corpus filter: one "
+        "scan, one ArrowEvalPython).",
         "",
         "Round-4 notes settled by 10M-scale measurement:",
         "",

@@ -1,10 +1,8 @@
 """Portable text primitives for the training-data pipeline layer.
 
-Design rule (mirrors functions/geo.py A36): every primitive that feeds
-a correctness-gated query exists in TWO textually-distinct but
-semantically-identical forms — a Spark Column expression (JVM-side,
-whole-stage codegen, no Python) and a DuckDB SQL string for the oracle.
-Both are built from engine-portable operations only:
+Every primitive that feeds a correctness-gated query has a DuckDB SQL
+twin here (the ``*_sql`` functions), which the oracle replays. The
+portable decisions are:
 
 * ``h60(s)`` — a 60-bit hash: first 15 hex digits of md5(utf8(s)) read
   as an integer. md5 is bit-identical everywhere; 60 bits always fit a
@@ -21,13 +19,18 @@ Both are built from engine-portable operations only:
 
 * k-token shingles — ``k`` consecutive tokens joined by one space.
 
-All Spark forms use higher-order functions (transform/filter/aggregate/
-zip_with) so the hot path never leaves the JVM: no UDF, no shuffle,
-scales linearly with executors.
+MinHash, SimHash and decontamination hash text through one function,
+``shingle_hashes``: one Arrow pass per document in the Python worker,
+one md5 per shingle, numpy after it.
 """
 
 from __future__ import annotations
 
+import re
+from hashlib import md5
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -52,7 +55,8 @@ def h60_sql(expr: str) -> str:
 
 # Explicit ASCII-whitespace class, NOT \s: Java \s = [ \t\n\x0b\f\r]
 # but RE2 (DuckDB) \s excludes \x0b — the explicit class pins identical
-# semantics in both engines (and matches Python str.split for ASCII).
+# semantics in both engines. Python's str.split() is NOT this class: it
+# also splits on \x1c-\x1f, U+0085, U+00A0 and U+2028.
 TOKEN_SPLIT_RE = r"[ \t\n\r\f\x0b]+"
 
 
@@ -99,15 +103,58 @@ def shingles_sql(toks_col: str, k: int = 3) -> str:
             f"for i in range(1, len({toks_col})-{k - 2})]")
 
 
-def h60_from_md5(m: Column) -> Column:
-    """h60 value from an already-computed md5 hex string (bits 0..59)."""
-    return F.conv(F.substring(m, 1, 15), 16, 10).cast("long")
+# ---------------------------------------------------------------------------
+# Shingle hashes: one Arrow pass per document (MinHash, SimHash,
+# decontamination)
+# ---------------------------------------------------------------------------
+
+_SPLIT_BYTES = re.compile(TOKEN_SPLIT_RE.encode())
 
 
-def md5_h2(m: Column) -> Column:
-    """32-bit second hash for the affine minhash family: md5 hex bits
-    60..91 (the fold's h2 = conv(hex[15:23]))."""
-    return F.conv(F.substring(m, 16, 8), 16, 10).cast("long")
+def shingle_hashes(texts: pa.Array, k: int
+                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(lens, h1, h2) for the k-token shingles of each document of an
+    Arrow text column: lens[i] is document i's shingle count (0 for
+    null text or < k tokens); h1 and h2 run over all shingles in
+    document and text order. One md5 per shingle: h1 = bits 0..59 (==
+    h60 of the shingle), h2 = bits 60..91.
+
+    The text is split as bytes, never decoded, on TOKEN_SPLIT_RE with
+    empty tokens dropped. Its six ASCII bytes never occur inside a
+    multi-byte UTF-8 sequence, so valid UTF-8 tokenizes as in the JVM
+    and the DuckDB twins. Text that is not UTF-8 (a binary -> string
+    cast) hashes its raw bytes, split at the same six bytes; it never
+    fails the task.
+    """
+    lens = np.zeros(len(texts), dtype=np.int64)
+    digests = []
+    for i, text in enumerate(texts.cast(pa.large_binary()).to_pylist()):
+        if text:
+            toks = [t for t in _SPLIT_BYTES.split(text) if t]
+            shingles = map(b" ".join, zip(*[toks[o:] for o in range(k)]))
+            digest = b"".join([md5(s).digest() for s in shingles])
+            lens[i] = len(digest) // 16
+            digests.append(digest)
+    # each digest as two big-endian words: bits 0..63 and 64..127
+    words = np.frombuffer(b"".join(digests), dtype=">u8").reshape(-1, 2)
+    hi, lo = words[:, 0], words[:, 1]
+    h1 = (hi >> 4).astype(np.int64)
+    h2 = (((hi & 0xF) << 28) | (lo >> 36)).astype(np.int64)
+    return lens, h1, h2
+
+
+def first_distinct(lens: np.ndarray, vals: np.ndarray
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """Per document (lens as in shingle_hashes), the distinct values in
+    first-occurrence order — Spark's array_distinct — as (lens, vals)."""
+    doc = np.repeat(np.arange(len(lens)), lens)
+    order = np.lexsort((vals, doc))        # stable: ties keep text order
+    d, v = doc[order], vals[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = (d[1:] != d[:-1]) | (v[1:] != v[:-1])
+    keep = np.zeros(len(vals), dtype=bool)
+    keep[order[first]] = True
+    return np.bincount(doc[keep], minlength=len(lens)), vals[keep]
 
 
 def h60_from_md5_sql(m_expr: str) -> str:
@@ -126,34 +173,24 @@ BAND_ROWS = N_MINHASH // N_BANDS
 _MAX_LONG = (1 << 63) - 1
 
 
-def shingle_md5s(shingle_strs: Column) -> Column:
-    """array<string>: ONE md5 hex per shingle — the only crypto-hash
-    work in the minhash pipeline; everything else is int arithmetic."""
-    return F.transform(shingle_strs,
-                       lambda s: F.md5(F.encode(s, "UTF-8")))
-
-
 def shingle_md5s_sql(shingles_col: str) -> str:
     return f"[md5(s) for s in {shingles_col}]"
 
 
 def minhash_sigs(md5s: Column, n: int = N_MINHASH) -> Column:
-    """array<long> of n minhash values over per-shingle md5 hex strings.
+    """array<long> of n minhash values over per-shingle md5 hex strings
+    — the JVM reference fold that tests compare
+    dedup.minhash_signatures against.
 
     Hash family (Kirsch–Mitzenmacher affine): from one md5 per shingle
     take h1 = bits of hex[0:15] (60 bits, == h60 of the shingle) and
     h2 = bits of hex[15:23] (32 bits); sig_j = min over shingles of
     h1 + j*h2. All values stay < 2^60 + 16*2^32 < 2^61 — exact int64,
-    no overflow, portable to the DuckDB oracle verbatim.
+    no overflow, portable to the DuckDB oracle verbatim. One md5 per
+    shingle, not n seeded ones: n=16 md5s per shingle measured ~20x
+    slower at 50k docs.
 
-    Why not n independent seeded md5s: md5 inside a higher-order
-    lambda runs on Spark's interpreted expression path; n=16 md5s per
-    shingle measured ~20x slower at 50k docs. One-pass aggregate fold
-    also prevents Catalyst's projection collapse from inlining the
-    shingle pipeline into every signature slot.
-
-    Docs with no shingles fold to [MAX_LONG; n] — callers filter short
-    docs first (minhash_signatures does).
+    Docs with no shingles fold to [MAX_LONG; n] — filter them first.
     """
     init = F.array_repeat(F.lit(_MAX_LONG), n)
 
@@ -164,28 +201,6 @@ def minhash_sigs(md5s: Column, n: int = N_MINHASH) -> Column:
         return F.zip_with(acc, hashes, lambda a, b: F.least(a, b))
 
     return F.aggregate(md5s, init, step)
-
-
-def affine_min_sigs(h1s: Column, h2s: Column, n: int = N_MINHASH) -> Column:
-    """array<long> of n minhash values from PRE-STAGED per-shingle
-    (h1, h2) array columns: sig_j = array_min(zip_with(h1s, h2s,
-    a + b*j)) — one vectorized pass per signature slot.
-
-    Value-identical to the minhash_sigs aggregate fold (min over the
-    same exact-int affine family; shingle multiplicity cannot change a
-    min), but measured ~7x cheaper at 50k docs (round 4): the fold
-    allocates a 16-wide array per SHINGLE and runs 32 interpreted
-    lambda ops per shingle, where this shape runs 16 flat
-    zip_with+array_min passes over long arrays. h1s/h2s must come from
-    a separate projection stage (dedup.minhash_signatures) so the 17
-    references here bind to computed columns — tests/test_plans.py
-    asserts the upstream crypto hash is NOT re-inlined per slot.
-
-    Docs with no shingles yield nulls (array_min of empty) — callers
-    filter short docs first, as with the fold."""
-    return F.array(*[
-        F.array_min(F.zip_with(h1s, h2s, lambda a, b: a + b * F.lit(j)))
-        for j in range(n)])
 
 
 def minhash_sigs_sql(md5s_col: str, n: int = N_MINHASH) -> str:
@@ -226,11 +241,6 @@ def band_keys_sql(sigs_col: str, n_bands: int = N_BANDS,
 SIMHASH_BITS = 60
 SIMHASH_CHUNKS = 4          # LSH: 4 x 15-bit chunks; hamming<=3 guarantee
 SIMHASH_CHUNK_BITS = 15
-
-
-def token_hashes(text: Column) -> Column:
-    """array<long> h60 per token (multiplicity kept — spec choice)."""
-    return F.transform(tokens(text), h60)
 
 
 def token_hashes_sql(text_expr: str) -> str:

@@ -24,7 +24,7 @@ Three stages, each durable:
 
 Crash safety: a batch/stage that dies before its manifest swap is
 invisible; re-running the job recomputes only the missing pieces
-(tests/test_scale_ops.py::test_dedup_job_resume).
+(tests/test_scale_ops.py::test_dedup_job_fresh_resume_and_equivalence).
 """
 
 from __future__ import annotations

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -208,25 +209,16 @@ def vocab_topn(pages: DataFrame, n: int, text_col: str = "text") -> DataFrame:
             .limit(n))
 
 
-def gram_hashes(text_col, k: int = 5) -> "F.Column":
-    """array<long> of DISTINCT k-token shingle h60 hashes of a text
-    column — the decontamination unit (hashing first means only 8-byte
-    grams ever shuffle or broadcast, never shingle strings)."""
-    return F.array_distinct(
-        F.transform(T.shingles(T.tokens(text_col), k), T.h60))
-
-
-def n_hit_probe(bench_grams):
-    """Column builder for n_hit = |distinct doc grams ∩ benchmark
-    grams|, the one decontamination membership count (decontaminate
-    and pipeline.corpus_pipeline both call it). Apply it to a
-    gram_hashes column.
-
-    The sorted int64 gram set ships once per executor in the UDF
-    closure (the same premise as a broadcast); per Arrow batch the
-    flattened grams make ONE searchsorted pass + a reduceat segment
-    sum (the simhash_udf pattern). Exact: it compares the same int64
-    hashes the DuckDB twin joins on.
+def n_hit_probe(bench_grams, text: "F.Column", k: int = 5) -> "F.Column":
+    """n_hit = |distinct k-token shingle hashes of `text` ∩ benchmark
+    grams|, the one decontamination membership count (decontaminate and
+    pipeline.corpus_pipeline both call it). A scalar pandas UDF, so it
+    shares one ArrowEvalPython with the projection's other pandas UDFs:
+    per batch, T.shingle_hashes (h1 == h60, the int64 the DuckDB twin
+    joins on), distinct per doc, and one searchsorted pass against the
+    sorted gram set shipped once per executor in the closure (a
+    broadcast's premise). The text crosses as binary, so non-UTF-8
+    text hashes its raw bytes instead of failing the pandas decode.
 
     Shapes it replaced, at 50k docs x 36.5k grams: array_intersect
     against a literal rebuilds its lookup set per row (21 s vs ~1 s at
@@ -235,28 +227,20 @@ def n_hit_probe(bench_grams):
     pairs needs a groupBy and a left join back to keep every doc, and
     was no faster (BENCH/PLAN_EVIDENCE.md).
     """
-    bset = np.asarray(sorted(set(bench_grams)), dtype=np.int64)
+    # a trailing sentinel above every 60-bit gram keeps each
+    # searchsorted index in range, even for an empty benchmark
+    bset = np.asarray(sorted(set(bench_grams)) + [(1 << 63) - 1],
+                      dtype=np.int64)
 
     @pandas_udf(LongType())
-    def n_hit_udf(grams: pd.Series) -> pd.Series:
-        lens = grams.str.len().to_numpy(dtype=np.int64)
-        out = np.zeros(len(lens), dtype=np.int64)
-        total = int(lens.sum())
-        if total and bset.size:
-            arrs = [np.asarray(g, dtype=np.int64)
-                    for g in grams if len(g)]
-            flat = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
-            idx = np.searchsorted(bset, flat)
-            hit = np.where(idx < bset.size, bset[np.minimum(
-                idx, bset.size - 1)] == flat, False).astype(np.int64)
-            nonempty = lens > 0
-            ne_lens = lens[nonempty]
-            ne_off = np.zeros(len(ne_lens), dtype=np.int64)
-            np.cumsum(ne_lens[:-1], out=ne_off[1:])
-            out[nonempty] = np.add.reduceat(hit, ne_off)
-        return pd.Series(out)
+    def n_hit_udf(texts: pd.Series) -> pd.Series:
+        lens, h1, _ = T.shingle_hashes(pa.array(texts, pa.large_binary()), k)
+        glens, grams = T.first_distinct(lens, h1)
+        hit = bset[np.searchsorted(bset, grams)] == grams
+        doc = np.repeat(np.arange(len(glens)), glens)
+        return pd.Series(np.bincount(doc[hit], minlength=len(glens)))
 
-    return n_hit_udf
+    return n_hit_udf(text.cast("binary"))
 
 
 def decontaminate(docs: DataFrame, bench_grams, k: int = 5,
@@ -277,7 +261,7 @@ def decontaminate(docs: DataFrame, bench_grams, k: int = 5,
     the corpus text never shuffles. The same projection runs unchanged
     on a streaming DataFrame (stateless, append mode).
     """
-    n_hit = n_hit_probe(bench_grams)(gram_hashes(F.col(text_col), k))
+    n_hit = n_hit_probe(bench_grams, F.col(text_col), k)
     return (docs.select(F.col(id_col), n_hit.alias("n_hit"))
             .withColumn("contaminated", F.col("n_hit") > 0))
 
@@ -306,10 +290,8 @@ def collect_bench_grams(benchmark: DataFrame, k: int = 5,
                         text_col: str = "text") -> list[int]:
     """Driver-side sorted distinct gram-hash list of a benchmark set —
     the `bench_grams` input of decontaminate and
-    pipeline.corpus_pipeline (benchmarks are dimension-sized: one
-    collect, then shipped once per executor like a broadcast)."""
-    rows = (benchmark
-            .select(F.explode(gram_hashes(F.col(text_col), k))
-                    .alias("gram"))
-            .distinct().collect())
-    return sorted(r["gram"] for r in rows)
+    pipeline.corpus_pipeline (benchmarks are dimension-sized: their
+    text is collected once and hashed on the driver, and the grams
+    ship once per executor like a broadcast)."""
+    texts = benchmark.select(text_col).toArrow().column(0)
+    return np.unique(T.shingle_hashes(texts.combine_chunks(), k)[1]).tolist()

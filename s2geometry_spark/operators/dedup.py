@@ -30,18 +30,19 @@ Scale notes (10^12 rows):
   stream — those are reported separately by ``oversize_buckets`` and
   handled by representative sampling, exactly how production dedup
   treats boilerplate.
-- Everything JVM-side (higher-order functions); the only Python is the
-  simhash bit-fold, an Arrow-batched numpy reduceat.
+- Text is hashed in ONE Arrow pass per document (functions/text.py
+  ``shingle_hashes``): minhash_signatures and simhash_df are each one
+  mapInArrow over (id, text); everything after the hashes — banding,
+  bucket joins, verification — is JVM-side.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from ..functions import text as T
 
@@ -107,39 +108,47 @@ def oversize_buckets(buckets: DataFrame, keys,
             .filter(F.col("n_members") > max_bucket))
 
 
+def _list_array(lens: np.ndarray, values: np.ndarray) -> pa.ListArray:
+    return pa.ListArray.from_arrays(
+        np.concatenate([[0], np.cumsum(lens)]).astype(np.int32), values)
+
+
+def _starts(lens: np.ndarray) -> np.ndarray:
+    """Segment starts for ufunc.reduceat over non-empty lens."""
+    return np.cumsum(lens) - lens
+
+
 def minhash_signatures(pages: DataFrame, id_col: str = "url",
                        text_col: str = "text", k: int = 3) -> DataFrame:
-    """(url, sh: array<long> distinct shingle hashes, sigs: array<long>
-    minhash signature). One md5 per shingle feeds BOTH outputs (sh is
-    the h1 part; sigs are affine combinations — functions/text.py), the
-    hash family the DuckDB oracle replays.
-
-    Docs with < k tokens have no shingles and are excluded (a 2-token
-    page cannot be a shingle near-dup of anything).
+    """(url, sh, sigs) in one mapInArrow over (id, text), from one md5
+    per k-shingle (T.shingle_hashes): sh = the distinct h1 (h60) values
+    in first-occurrence order, sigs_j = min over shingles of h1 + j*h2
+    (the affine family T.minhash_sigs folds and the DuckDB oracle
+    replays). Docs with null text or < k tokens have no shingles and are
+    excluded (a 2-token page cannot be a shingle near-dup of anything).
     """
-    toks = T.tokens(F.col(text_col))
-    df = pages.select(
-        F.col(id_col),
-        T.shingles(toks, k).alias("_shingles"))
-    df = df.filter(F.size("_shingles") > 0)
-    # stage the per-shingle (h1, h2) arrays in their OWN projection,
-    # then build sh and the 16 signature slots from the staged columns
-    # (T.affine_min_sigs) — value-identical to the round-1 aggregate
-    # fold but ~7x cheaper (one flat zip_with+array_min pass per slot
-    # instead of a 16-wide array allocation per shingle), and sh now
-    # REUSES the h1 array instead of recomputing the hash. The staging
-    # also keeps Catalyst from re-inlining the crypto hash into the 17
-    # downstream references (plan-asserted in tests/test_plans.py).
-    df = df.select(id_col,
-                   T.shingle_md5s(F.col("_shingles")).alias("_md5s"))
-    df = df.select(
-        id_col,
-        F.transform(F.col("_md5s"), T.h60_from_md5).alias("_h1s"),
-        F.transform(F.col("_md5s"), T.md5_h2).alias("_h2s"))
-    return df.select(
-        id_col,
-        F.array_distinct(F.col("_h1s")).alias("sh"),
-        T.affine_min_sigs(F.col("_h1s"), F.col("_h2s")).alias("sigs"))
+    src = pages.select(id_col, text_col)
+    longs = ArrayType(LongType())
+    schema = StructType([src.schema.fields[0],
+                         StructField("sh", longs, True),
+                         StructField("sigs", longs, False)])
+
+    def sign(batches):
+        for batch in batches:
+            lens, h1, h2 = T.shingle_hashes(batch.column(1), k)
+            has = lens > 0
+            starts = _starts(lens[has])
+            sigs = np.stack([np.minimum.reduceat(h1 + j * h2, starts)
+                             for j in range(T.N_MINHASH)], axis=1)
+            sh_lens, sh = T.first_distinct(lens, h1)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).filter(pa.array(has)),
+                 _list_array(sh_lens[has], sh),
+                 _list_array(np.full(len(starts), T.N_MINHASH),
+                             sigs.ravel())],
+                names=[f.name for f in schema])
+
+    return src.mapInArrow(sign, schema)
 
 
 def minhash_band_buckets(sigs: DataFrame, id_col: str = "url") -> DataFrame:
@@ -237,51 +246,36 @@ def pairs_from_signatures(sigs: DataFrame, threshold: float = 0.5,
 # SimHash
 # ---------------------------------------------------------------------------
 
-@pandas_udf(LongType())
-def simhash_udf(token_hashes: pd.Series) -> pd.Series:
-    """60-bit simhash from per-token h60 hashes (multiplicity kept).
-
-    Bit b of the result is set iff sum over tokens of (2*bit_b(h) - 1)
-    is >= 0, i.e. 2*ones_b >= n — exact integer arithmetic, identical
-    to the DuckDB oracle's per-bit majority.
-
-    Vectorized (r5 restaging, ~3x less work than the r4 shape): one
-    np.unpackbits view turns the flat hash array into an (n, 64) uint8
-    bit matrix — 8 bytes/hash, same footprint as the int64 input, far
-    below the (n, 60) int64 sign matrix that OOM'd workers in r2 —
-    and ONE int64-accumulated reduceat sums all 64 bit columns per doc
-    in a single pass (the r4 shape re-scanned the flat array 60 times,
-    shift+mask+reduceat per bit). Bits 60-63 of an h60 hash are zero,
-    so their majority is never reached and they pack back to zero.
-    """
-    lens = token_hashes.str.len().to_numpy(dtype=np.int64)
-    out = np.zeros(len(lens), dtype=np.int64)
-    total = int(lens.sum())
-    if total:
-        arrs = [np.asarray(row, dtype=np.int64)
-                for row in token_hashes if len(row)]
-        flat = arrs[0] if len(arrs) == 1 else np.concatenate(arrs)
-        nonempty = lens > 0
-        ne_lens = lens[nonempty]
-        ne_off = np.zeros(len(ne_lens), dtype=np.int64)
-        np.cumsum(ne_lens[:-1], out=ne_off[1:])
-        bits = np.unpackbits(flat.view(np.uint8).reshape(-1, 8),
-                             axis=1, bitorder="little")
-        ones = np.add.reduceat(bits, ne_off, axis=0, dtype=np.int64)
-        vals = np.packbits(
-            (2 * ones >= ne_lens[:, None]).astype(np.uint8),
-            axis=1, bitorder="little").view(np.int64).ravel()
-        out[nonempty] = vals
-    return pd.Series(out)
-
-
 def simhash_df(pages: DataFrame, id_col: str = "url",
                text_col: str = "text") -> DataFrame:
-    """(url, simhash) — docs with >= 1 token."""
-    th = T.token_hashes(F.col(text_col))
-    return (pages.select(F.col(id_col), th.alias("_th"))
-            .filter(F.size("_th") > 0)
-            .select(id_col, simhash_udf(F.col("_th")).alias("simhash")))
+    """(url, simhash) for docs with >= 1 token, in one mapInArrow over
+    (id, text) on the per-token h60 hashes (T.shingle_hashes, k=1,
+    multiplicity kept). Bit b is set iff 2*ones_b >= n, the DuckDB
+    oracle's exact per-bit majority: one unpackbits view gives an
+    (n, 64) uint8 bit matrix (far below the (n, 60) int64 sign matrix
+    that OOM'd workers in r2) and one int64 reduceat sums its columns
+    per doc. Bits 60-63 of an h60 are zero and pack back to zero.
+    """
+    src = pages.select(id_col, text_col)
+    schema = StructType([src.schema.fields[0],
+                         StructField("simhash", LongType(), True)])
+
+    def fold(batches):
+        for batch in batches:
+            lens, h, _ = T.shingle_hashes(batch.column(1), 1)
+            has = lens > 0
+            bits = np.unpackbits(h.view(np.uint8).reshape(-1, 8),
+                                 axis=1, bitorder="little")
+            ones = np.add.reduceat(bits, _starts(lens[has]), axis=0,
+                                   dtype=np.int64)
+            sims = np.packbits(2 * ones >= lens[has, None], axis=1,
+                               bitorder="little").view(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).filter(pa.array(has)),
+                 pa.array(sims.ravel())],
+                names=[f.name for f in schema])
+
+    return src.mapInArrow(fold, schema)
 
 
 def simhash_chunk_buckets(sims: DataFrame,

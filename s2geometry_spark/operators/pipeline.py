@@ -79,8 +79,7 @@ def corpus_pipeline(pages: DataFrame, bench_grams,
     df = df.select(id_col, "keep_quality", "keep_rep",
                    textstats.letter_counts_udf(F.col(text_col))
                    .alias("_lc"),
-                   corpus.n_hit_probe(bench_grams)(
-                       corpus.gram_hashes(F.col(text_col), k))
+                   corpus.n_hit_probe(bench_grams, F.col(text_col), k)
                    .alias("n_hit"))
 
     # stage 4: the remaining verdicts are pure expressions on (url,

@@ -528,21 +528,6 @@ class Rect:
 
     # -- conservative distance bounds (see module docstring) ---------------
 
-    def _lng_delta(self, lng: float) -> float:
-        """Angular distance from lng to the rect's lng interval (radians)."""
-        if self.lng_lo <= self.lng_hi:
-            inside = self.lng_lo <= lng <= self.lng_hi
-            if inside:
-                return 0.0
-            d1 = abs(lng - self.lng_lo)
-            d2 = abs(lng - self.lng_hi)
-            return min(min(d1, 2 * math.pi - d1), min(d2, 2 * math.pi - d2))
-        if lng >= self.lng_lo or lng <= self.lng_hi:
-            return 0.0
-        d1 = abs(lng - self.lng_lo)
-        d2 = abs(lng - self.lng_hi)
-        return min(min(d1, 2 * math.pi - d1), min(d2, 2 * math.pi - d2))
-
     def _lng_delta_np(self, lng: np.ndarray) -> np.ndarray:
         if self.lng_lo <= self.lng_hi:
             inside = (lng >= self.lng_lo) & (lng <= self.lng_hi)

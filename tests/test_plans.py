@@ -101,16 +101,27 @@ def test_range_join_is_broadcast_no_shuffle(spark):
 
 
 def test_minhash_signature_hash_not_reinlined(spark):
-    """The round-4 signature restructure stages per-shingle (h1, h2)
-    arrays in their own projection and references them 17x downstream
-    (sh + 16 signature slots). Catalyst's projection collapse must NOT
-    push the crypto hash into those references — the round-1 trap that
-    motivated the aggregate fold (16 slots -> 17x shingle-pipeline
-    recompute). One md5 per plan proves the staging holds."""
+    """Signatures are one mapInArrow pass per document over (url, text)
+    (functions/text.py shingle_hashes): the md5 runs in the worker, so
+    no JVM md5( is left to be re-inlined into the 17 sh/sig references,
+    and no ArrowEvalPython stage is added."""
     from s2geometry_spark.operators.dedup import minhash_signatures
     docs = documents_to_pages(load_documents(spark, SF_DIR))
-    plan_md5 = X.formatted_plan(minhash_signatures(docs))
-    assert plan_md5.count("md5(") == 1, plan_md5
+    plan = X.formatted_plan(minhash_signatures(docs))
+    assert X.count_nodes(plan, "MapInArrow") == 1, plan
+    assert "md5(" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
+def test_simhash_df_is_one_map_in_arrow(spark):
+    """simhash_df hashes and folds in the same single mapInArrow pass:
+    no higher-order token-hash projection, no ArrowEvalPython."""
+    from s2geometry_spark.operators.dedup import simhash_df
+    docs = documents_to_pages(load_documents(spark, SF_DIR))
+    plan = X.formatted_plan(simhash_df(docs))
+    assert X.count_nodes(plan, "MapInArrow") == 1, plan
+    assert "md5(" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_html_column_pruned_when_not_selected(spark):

@@ -4,6 +4,7 @@ error before any Spark plan is built, or maps it to a documented NULL."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import time
 
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 
 from s2geometry_spark import kernels as K
 from s2geometry_spark.functions import geo
+from s2geometry_spark.operators import corpus, dedup
 from s2geometry_spark.operators.dedup import release_caches
 from s2geometry_spark.operators.distjoin import distance_join
 from s2geometry_spark.operators.knn import knn_join
@@ -240,3 +242,51 @@ def test_knn_never_returns_a_page_without_a_point(spark):
     everything = {"query_id": 9, "lat": 0.0, "lng": 0.0, "k": 100}
     got = {r["url"] for r in knn_join(pages, spark, [everything]).collect()}
     assert got == {u for u, _, _ in near}
+
+
+# -- text hashing: null, empty, blank, short and non-UTF-8 text -------------
+
+HOSTILE_TEXT = [("null", None), ("empty", ""), ("blank", " \t\n\x0b "),
+                ("one", "one"), ("two", "one two"),
+                ("three", "one two three")]
+
+
+def _h60(b: bytes) -> int:
+    return int(hashlib.md5(b).hexdigest()[:15], 16)
+
+
+def test_text_hashing_domain_edges(spark):
+    """MinHash (k=3) drops docs with null text or fewer than 3 tokens;
+    simhash drops docs with no token; decontaminate keeps every row,
+    with n_hit 0 where there is no gram."""
+    docs = spark.createDataFrame(HOSTILE_TEXT, "url string, text string")
+    sigs = dedup.minhash_signatures(docs).collect()
+    assert [(r["url"], r["sh"]) for r in sigs] == \
+        [("three", [_h60(b"one two three")])]
+    assert {r["url"] for r in dedup.simhash_df(docs).collect()} == \
+        {"one", "two", "three"}
+    got = {r["url"]: (r["n_hit"], r["contaminated"]) for r in
+           corpus.decontaminate(docs, [_h60(b"one two three")],
+                                k=3).collect()}
+    assert got == {u: (0, False) for u, _ in HOSTILE_TEXT[:-1]} | \
+        {"three": (1, True)}
+
+
+def test_invalid_utf8_text_hashes_raw_bytes(spark):
+    """A binary -> string cast can hold bytes that are not UTF-8: the
+    hashes are those of the raw bytes, split at the ASCII separators,
+    and no task fails (functions/text.py shingle_hashes)."""
+    raw = b"caf\xe9 \xff\xfe\tx y\x0bz"
+    docs = (spark.createDataFrame([("bad", bytearray(raw))],
+                                  "url string, b binary")
+            .select("url", F.col("b").cast("string").alias("text")))
+    toks = raw.split()
+    shingles = [b" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)]
+    [row] = dedup.minhash_signatures(docs).collect()
+    assert row["sh"] == [_h60(s) for s in shingles]
+    hashes = [_h60(t) for t in toks]
+    want = sum(1 << b for b in range(60)
+               if 2 * sum((h >> b) & 1 for h in hashes) >= len(hashes))
+    assert dedup.simhash_df(docs).collect()[0]["simhash"] == want
+    [row] = corpus.decontaminate(docs, [_h60(shingles[1])], k=3).collect()
+    assert (row["n_hit"], row["contaminated"]) == (1, True)
