@@ -5,17 +5,22 @@ three times against the same deterministic 10M-doc corpus (sf0.1
 documents x SPARK_GRAFT_DOCS_MULT):
 
   A. interrupted  — SIGKILL -9 the whole process group as soon as the
-     sigs manifest shows >= 1 committed batch (so at least one batch is
-     durable and at least one is in flight when the job dies);
+     signature write's ``dedup_sigs/_staging-*`` dir exists while no
+     batch has committed: the one write that computes every pending
+     batch is in flight, so the kill loses all of them (the job's
+     stated failure unit) and leaves the staging dir behind;
   B. resume       — same out_root, runs to completion (manifest says
-     which batches to skip — no Spark needed for that decision);
+     which batches to skip — no Spark needed for that decision); the
+     killed run's staging dir is never read;
   C. uninterrupted — fresh out_root, runs to completion.
 
 Equivalence gate: the committed keep tables of B and C are compared as
 url SETS via DuckDB (read straight from the manifests' snapshot dirs —
 orphan dirs from the kill are invisible exactly as the read contract
 promises). Prints one JSON line with kill point, per-leg wall times,
-batch bookkeeping, and the equivalence verdict; paste into
+batch bookkeeping, the leftover staging dirs, and the equivalence
+verdict; a run at the documented mult (2000) also writes it to
+BENCH/kill_resume.json, which run_scaling.py folds into
 BENCH/BASELINE.md.
 
 Run alone (~10-30 min at mult=2000): no concurrent Spark work.
@@ -35,6 +40,8 @@ sys.path.insert(0, REPO)
 
 from s2geometry_spark.session import (default_cores,  # noqa: E402
                                       default_driver_memory)
+
+DOCUMENTED_MULT = 2000
 
 
 def read_manifest(root: str, table: str) -> list[dict]:
@@ -71,9 +78,16 @@ def run_to_completion(out_root, sf_dir, mult, cpus, log_path):
     return dt
 
 
+def staging_dirs(root: str) -> list[str]:
+    table_dir = os.path.join(root, "dedup_sigs")
+    if not os.path.isdir(table_dir):
+        return []
+    return [d for d in os.listdir(table_dir) if d.startswith("_staging-")]
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    mult = int(os.environ.get("SPARK_GRAFT_DOCS_MULT", "2000"))
+    mult = int(os.environ.get("SPARK_GRAFT_DOCS_MULT", str(DOCUMENTED_MULT)))
     cpus = default_cores()
     base = "/tmp/s2g_killsmoke"
     shutil.rmtree(base, ignore_errors=True)
@@ -84,11 +98,11 @@ def main():
     root_i = os.path.join(base, "interrupted")
     root_u = os.path.join(base, "uninterrupted")
 
-    # -- leg A: start, wait for the first committed batch, SIGKILL ---
+    # -- leg A: start, wait for the signature write, SIGKILL ---------
     t0 = time.perf_counter()
     log_a = os.path.join(base, "legA.log")
     p = spawn(root_i, sf_dir, mult, cpus, log_a)
-    while not read_manifest(root_i, "dedup_sigs") and p.poll() is None:
+    while not staging_dirs(root_i) and p.poll() is None:
         time.sleep(0.5)
     if p.returncode:
         raise SystemExit(f"leg A failed before the kill "
@@ -97,20 +111,22 @@ def main():
         raise SystemExit("job finished before the kill — corpus too "
                          "small for a mid-job kill; raise mult")
     kill_at = time.perf_counter() - t0
-    # batch N+1 is in flight right now; kill the whole process group
+    # the signature write is in flight; kill the whole process group
     os.killpg(os.getpgid(p.pid), signal.SIGKILL)
     p.wait()
-    # more batches may have committed between the poll and the kill:
     # count from the manifest as the kill left it
     committed_at_kill = len(read_manifest(root_i, "dedup_sigs"))
     orphans = [d for d in os.listdir(os.path.join(root_i, "dedup_sigs"))
                if d.startswith("snap-")]
+    staging_at_kill = staging_dirs(root_i)
 
     # -- leg B: resume on the same root ------------------------------
     t_resume = run_to_completion(root_i, sf_dir, mult, cpus,
                                  os.path.join(base, "legB.log"))
     resumed = read_manifest(root_i, "dedup_sigs")
     skipped = committed_at_kill  # batches the resume did NOT recompute
+    # the resume removes its own staging dir, not the killed run's
+    staging_after_resume = staging_dirs(root_i)
 
     # -- leg C: uninterrupted fresh run -------------------------------
     t_full = run_to_completion(root_u, sf_dir, mult, cpus,
@@ -144,6 +160,9 @@ def main():
         "kill_after_sec": round(kill_at, 1),
         "batches_committed_at_kill": committed_at_kill,
         "orphan_snap_dirs_after_kill": len(orphans) - committed_at_kill,
+        "staging_dirs_after_kill": len(staging_at_kill),
+        "staging_dirs_after_resume": len(staging_after_resume),
+        "killed_staging_dir_left": staging_at_kill == staging_after_resume,
         "resume_sec": round(t_resume, 1),
         "uninterrupted_sec": round(t_full, 1),
         "batches_total": len(resumed),
@@ -156,9 +175,10 @@ def main():
     }
     # persist next to the other evidence JSONs so run_scaling.py folds
     # the section into the regenerated BENCH/BASELINE.md
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "kill_resume.json"), "w") as f:
-        json.dump(result, f)
+    if mult == DOCUMENTED_MULT:
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               "kill_resume.json"), "w") as f:
+            json.dump(result, f)
     print(json.dumps(result))
 
 

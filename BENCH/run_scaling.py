@@ -425,12 +425,13 @@ def write_baseline() -> None:
             "through `io/table_io.py`:",
             "",
             f"1. **Kill leg**: SIGKILL the whole JVM at "
-            f"t={kr['kill_after_sec']}s, mid-job — "
-            f"{kr['batches_committed_at_kill']} of "
+            f"t={kr['kill_after_sec']}s, with the one signature write "
+            f"in flight — {kr['batches_committed_at_kill']} of "
             f"{kr['batches_total']} snapshot batches committed at the "
             f"kill, **{kr['orphan_snap_dirs_after_kill']} orphan "
-            "snapshot dirs** (the staging-dir + atomic-rename protocol "
-            "leaves nothing half-visible).",
+            f"snapshot dirs** and {kr['staging_dirs_after_kill']} "
+            "staging dir left behind, never read (readers see only "
+            "manifest entries).",
             f"2. **Resume leg**: same sink, fresh process — skipped the "
             f"{kr['batches_skipped_on_resume']} committed batch(es), "
             f"completed the rest in **{kr['resume_sec']}s**.",
@@ -440,10 +441,10 @@ def write_baseline() -> None:
             f"Resumed output ≡ uninterrupted output: "
             f"{kr['keep_rows_resumed']:,} keep-rows in both, `exceptAll`"
             f" empty in BOTH directions (equivalent="
-            f"{kr['equivalent']}). Resume recovered the pre-kill work "
-            f"({kr['resume_sec']}s + {kr['kill_after_sec']}s ≈ "
-            f"{kr['uninterrupted_sec']}s): restart cost is bounded by "
-            "one batch, not the job.",
+            f"{kr['equivalent']}). A kill during the signature write "
+            "loses every batch pending in it, so the resume redoes them "
+            f"({kr['resume_sec']}s vs {kr['uninterrupted_sec']}s "
+            "uninterrupted); `max_batches_this_run` bounds that loss.",
             "",
         ]
     lines += [

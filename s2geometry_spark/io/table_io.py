@@ -20,19 +20,20 @@ Two backends behind one interface (SURVEY.md §7 hard-part 4):
   os.replace — readers never observe a half-written manifest;
   concurrent appenders serialize on an flock). A DataFrame argument is
   first written to a ``_pending-<uuid>`` dir under the table, so a
-  Spark write and a caller's pre-written files (geocode_job writes all
-  its batches in one job) commit the same way. Uncommitted directories
-  are invisible to readers, so a killed job resumes cleanly:
-  re-reading the manifest yields exactly the committed prefix.
+  Spark write and a caller's pre-written files (jobs/batches.py writes
+  all of a job's batches in one Spark job) commit the same way.
+  Uncommitted directories are invisible to readers, so a killed job
+  resumes cleanly: re-reading the manifest yields exactly the committed
+  prefix.
 
 Lineage/metrics: every commit with a ``lineage_col`` records, per data
 file, its row count and the min/max of that (integer) column into
 ``<table>@metrics`` — itself snapshot-committed through ``append``. The
-rows come from the files' Parquet footers, read on the driver with
-pyarrow, so a commit starts no Spark job (Iceberg manifests carry the
-same per-file ``record_count`` and bounds): the bounds are the ``k=v``
-directory value when the lineage column is a partition column, else
-the row-group statistics. ``file_split`` is the file's index in the
+rows come from ``footer_lineage``: the files' Parquet footers, read on
+the driver with pyarrow, so a commit starts no Spark job (Iceberg
+manifests carry the same per-file ``record_count`` and bounds): the
+bounds are the ``k=v`` directory value when the lineage column is a
+partition column, else the row-group statistics. ``file_split`` is the file's index in the
 sorted list of its part-file paths relative to the snapshot dir.
 ``done_keys`` answers "which work units are already durable?" for
 resume.
@@ -105,16 +106,28 @@ def _file_bounds(path: str, rel: str, md: pq.FileMetaData,
     return lo, hi
 
 
+def footer_lineage(data_dir: str,
+                   lineage_col: str | None = None) -> list[tuple]:
+    """(n_rows, key_min, key_max) of `lineage_col` per data file under
+    `data_dir`, in ``_part_files`` order, from the footers (no Spark
+    job); bounds are None without a `lineage_col`."""
+    out = []
+    for rel in _part_files(data_dir):
+        path = os.path.join(data_dir, rel)
+        md = pq.read_metadata(path)
+        lo, hi = (_file_bounds(path, rel, md, lineage_col)
+                  if lineage_col is not None else (None, None))
+        out.append((md.num_rows, lo, hi))
+    return out
+
+
 def _metrics_rows(data_dir: str, lineage_col: str, snap_id: str,
                   table: str) -> pa.Table:
     """One lineage row per data file under `data_dir`, from footers."""
-    rows = []
-    for i, rel in enumerate(_part_files(data_dir)):
-        path = os.path.join(data_dir, rel)
-        md = pq.read_metadata(path)
-        lo, hi = _file_bounds(path, rel, md, lineage_col)
-        rows.append({"file_split": i, "n_rows": md.num_rows, "key_min": lo,
-                     "key_max": hi, "snapshot_id": snap_id, "table": table})
+    rows = [{"file_split": i, "n_rows": n, "key_min": lo, "key_max": hi,
+             "snapshot_id": snap_id, "table": table}
+            for i, (n, lo, hi) in enumerate(
+                footer_lineage(data_dir, lineage_col))]
     return pa.Table.from_pylist(rows, schema=METRICS_SCHEMA)
 
 
@@ -292,6 +305,11 @@ class ParquetTableIO:
 
     def metrics(self, spark: SparkSession, table: str) -> DataFrame:
         return self.read(spark, f"{table}@metrics")
+
+    def n_rows(self, table: str) -> int:
+        """Committed rows of `table`, from the footers (no Spark job)."""
+        return sum(n for s in self.history(table)
+                   for n, _, _ in footer_lineage(s["dir"]))
 
     # -- resume -------------------------------------------------------------
 

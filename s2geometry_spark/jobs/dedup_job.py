@@ -1,30 +1,29 @@
 """The production dedup-curation job: resumable near-dup removal over
-the pages corpus, same checkpoint discipline as geocode_job (north_rule:
-per-partition lineage + metrics, resume from the last committed
-snapshot).
+the pages corpus on the batch skeleton it shares with geocode_job
+(jobs/batches.py). Three stages, each durable:
 
-Three stages, each durable:
+1. **signatures** — minhash signatures in N_BATCHES url-hash batches:
+   ONE write computes every pending batch, ``partitionBy`` a copy of
+   ``batch``, and each batch dir commits by rename. The files keep
+   ``batch`` (lineage from row-group stats; snapshots that earlier
+   versions wrote one batch per write union with them). Filtering the
+   docs to the pending batches before the minhash UDF, so a resume
+   hashes only its pending docs, is safe here, unlike geocode_job's
+   batch filter: the key hashes the input ``url``, not a UDF output.
+2. **pairs** — banded-LSH candidates + exact Jaccard over the committed
+   signatures (dedup.pairs_from_signatures), one snapshot.
+3. **keep list** — a url is DROPPED iff it has a verified near-dup with
+   a smaller url ("keep-min-neighbor": one anti-join, every cluster
+   keeps its minimum, order-free so re-runs are byte-stable); one
+   snapshot, which records ``n_dropped``.
 
-1. **signatures** — minhash signatures per document, computed in
-   N_BATCHES url-hash batches; each batch commits as one snapshot with
-   its batch id in the manifest (re-runs skip committed batches). At
-   10^12 rows this is the expensive stage (one md5 per shingle), so it
-   runs exactly once per corpus; every downstream pairing/threshold
-   experiment reads the table.
-2. **pairs** — banded-LSH candidate join + exact Jaccard verify over
-   the committed signatures table (operators/dedup.py::
-   pairs_from_signatures), committed as one snapshot.
-3. **keep list** — deterministic survivor set: a url is DROPPED iff it
-   has at least one verified near-dup with a lexicographically smaller
-   url ("keep-min-neighbor": one anti-join, no iteration; every dup
-   cluster keeps >= 1 representative — its global minimum — and the
-   rule is order-free so re-runs are byte-stable). Production systems
-   wanting exactly-one-per-cluster run connected components on the
-   pairs table instead; the pairs snapshot is the input either way.
-
-Crash safety: a batch/stage that dies before its manifest swap is
-invisible; re-running the job recomputes only the missing pieces
+``n_pairs`` and ``n_kept`` come from the committed files' footers, so a
+re-run with every stage committed starts no Spark job. A stage that
+dies before its manifest swap is invisible, and a re-run recomputes
+only what is missing
 (tests/test_scale_ops.py::test_dedup_job_fresh_resume_and_equivalence).
+A run killed mid-write loses all of its pending batches, not one;
+``max_batches_this_run`` bounds that loss.
 """
 
 from __future__ import annotations
@@ -35,7 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s2geometry_spark.io.table_io import ParquetTableIO
+from s2geometry_spark.jobs.batches import (BATCH_COL, commit_batches,
+                                           pending_batches, staging_dir)
 from s2geometry_spark.operators import dedup
+from s2geometry_spark.session import job_session
 from s2geometry_spark.sources.pages import documents_to_pages, load_documents
 
 N_BATCHES = 4
@@ -44,6 +46,35 @@ THRESHOLD = 0.5
 
 def _batch_of(id_col: str, n_batches: int):
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_batches)).cast("int")
+
+
+def _documents(spark: SparkSession, sf_dir: str,
+               docs_mult: int) -> DataFrame:
+    # single-split testdata parquet: repartition BEFORE the shingle/md5
+    # fan-out or the expensive signature stage serializes on one core
+    # (repo perf-trap list; geocode_job repartitions by tile likewise)
+    docs = documents_to_pages(load_documents(spark, sf_dir)) \
+        .repartition(spark.sparkContext.defaultParallelism)
+    if docs_mult > 1:
+        docs = (docs.withColumn("_i", F.explode(
+                    F.sequence(F.lit(0), F.lit(docs_mult - 1))))
+                .withColumn("url", F.concat_ws(
+                    "#", F.col("url"), F.col("_i").cast("string")))
+                .withColumn("text", F.concat_ws(
+                    " ", F.col("text"),
+                    F.concat(F.lit("v"), F.col("_i").cast("string"))))
+                .drop("_i"))
+    return docs
+
+
+def _dropped(spark: SparkSession, io: ParquetTableIO,
+             pairs_table: str) -> DataFrame:
+    """keep-min-neighbor drops the GREATER side of every verified pair
+    (url_b > url_a by construction)."""
+    if not io.n_rows(pairs_table):  # no near-dups at this threshold
+        return spark.createDataFrame([], "url string")
+    return (io.read(spark, pairs_table)
+            .select(F.col("url_b").alias("url")).distinct())
 
 
 def run_dedup_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
@@ -67,48 +98,27 @@ def run_dedup_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
     keep_table = f"{prefix}_keep"
 
     # Resume is only valid against snapshots produced with the SAME
-    # parameters: different n_batches changes batch membership
-    # (pmod(xxhash64, n)) so mixing old and new batches double-counts
-    # or drops documents, and a different threshold would silently
-    # return the old pairs labeled as the new run's result.
-    io.assert_meta(sigs_table, n_batches=n_batches, sf_dir=sf_dir,
-                   docs_mult=docs_mult)
+    # parameters (pending_batches checks the signatures'): a different
+    # threshold would silently return the old pairs labeled as the new
+    # run's result.
     io.assert_meta(pairs_table, threshold=threshold, max_bucket=max_bucket)
+    run, skipped = pending_batches(io, sigs_table, n_batches,
+                                   max_batches_this_run, sf_dir=sf_dir,
+                                   docs_mult=docs_mult)
+    if run:
+        batch = _batch_of("url", n_batches)
+        docs = _documents(spark, sf_dir, docs_mult).filter(batch.isin(run))
+        with staging_dir(io, sigs_table) as staging:
+            (dedup.minhash_signatures(docs).withColumn("batch", batch)
+             .withColumn(BATCH_COL, F.col("batch"))
+             .write.partitionBy(BATCH_COL).parquet(staging))
+            commit_batches(io, sigs_table, staging, run,
+                           {"sf_dir": sf_dir, "n_batches": n_batches,
+                            "docs_mult": docs_mult},
+                           lineage_col="batch")
 
-    # single-split testdata parquet: repartition BEFORE the shingle/md5
-    # fan-out or the expensive signature stage serializes on one core
-    # (repo perf-trap list; geocode_job repartitions by tile likewise)
-    docs = documents_to_pages(load_documents(spark, sf_dir)) \
-        .repartition(spark.sparkContext.defaultParallelism)
-    if docs_mult > 1:
-        docs = (docs.withColumn("_i", F.explode(
-                    F.sequence(F.lit(0), F.lit(docs_mult - 1))))
-                .withColumn("url", F.concat_ws(
-                    "#", F.col("url"), F.col("_i").cast("string")))
-                .withColumn("text", F.concat_ws(
-                    " ", F.col("text"),
-                    F.concat(F.lit("v"), F.col("_i").cast("string"))))
-                .drop("_i"))
-
-    done = io.done_keys(sigs_table)
-    committed, skipped = [], []
-    for b in range(n_batches):
-        if b in done:
-            skipped.append(b)
-            continue
-        if (max_batches_this_run is not None
-                and len(committed) >= max_batches_this_run):
-            break
-        batch = docs.filter(_batch_of("url", n_batches) == b)
-        sigs = dedup.minhash_signatures(batch) \
-            .withColumn("batch", F.lit(b))
-        io.append(sigs, sigs_table, lineage_col="batch",
-                  meta={"batch_key": [b], "sf_dir": sf_dir,
-                        "n_batches": n_batches, "docs_mult": docs_mult})
-        committed.append(b)
-
-    if len(committed) + len(skipped) < n_batches:
-        return {"committed": committed, "skipped": skipped,
+    if len(run) + len(skipped) < n_batches:
+        return {"committed": run, "skipped": skipped,
                 "n_pairs": -1, "n_kept": -1, "n_dropped": -1}
 
     # pair + keep stages are cheap relative to signatures; recompute
@@ -121,39 +131,28 @@ def run_dedup_job(spark: SparkSession, sf_dir: str, io: ParquetTableIO,
                                             "threshold": threshold,
                                             "max_bucket": max_bucket})
 
-    try:
-        pairs = io.read(spark, pairs_table)
-    except FileNotFoundError:
-        # a committed-but-empty pairs snapshot (no near-dups at this
-        # threshold) has no parquet files to read — nothing to drop
-        pairs = None
-    # keep-min-neighbor: drop urls appearing as the GREATER side of any
-    # verified pair (url_b > url_a by construction)
-    if pairs is None:
-        dropped = docs.select("url").limit(0)
-    else:
-        dropped = pairs.select(F.col("url_b").alias("url")).distinct()
-    keep = docs.select("url").distinct() \
-        .join(dropped, "url", "left_anti")
     if "final" not in io.done_keys(keep_table):
-        io.append(keep, keep_table, meta={"batch_key": ["final"]})
-
-    n_pairs = 0 if pairs is None else pairs.count()
-    n_dropped = dropped.count()
-    n_kept = io.read(spark, keep_table).count()
-    return {"committed": committed, "skipped": skipped,
-            "n_pairs": n_pairs, "n_kept": n_kept, "n_dropped": n_dropped}
+        dropped = _dropped(spark, io, pairs_table)
+        keep = (_documents(spark, sf_dir, docs_mult).select("url")
+                .distinct().join(dropped, "url", "left_anti"))
+        io.append(keep, keep_table, meta={"batch_key": ["final"],
+                                          "n_dropped": dropped.count()})
+    keep_meta = io.history(keep_table)[-1]["meta"]
+    # a keep snapshot written by an earlier version has no n_dropped
+    n_dropped = keep_meta["n_dropped"] if "n_dropped" in keep_meta \
+        else _dropped(spark, io, pairs_table).count()
+    return {"committed": run, "skipped": skipped,
+            "n_pairs": io.n_rows(pairs_table),
+            "n_kept": io.n_rows(keep_table), "n_dropped": n_dropped}
 
 
 def main() -> None:  # pragma: no cover — exercised via spark-submit
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     out_root = os.environ.get("SPARK_GRAFT_OUT", "/tmp/s2geometry_dedup")
     docs_mult = int(os.environ.get("SPARK_GRAFT_DOCS_MULT", "1"))
-    spark = (SparkSession.builder.appName("dedup-job")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .getOrCreate())
-    io = ParquetTableIO(out_root)
-    print(run_dedup_job(spark, sf_dir, io, docs_mult=docs_mult))
+    spark = job_session("dedup-job")
+    print(run_dedup_job(spark, sf_dir, ParquetTableIO(out_root),
+                        docs_mult=docs_mult))
     spark.stop()
 
 

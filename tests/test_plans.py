@@ -245,6 +245,43 @@ def test_geocode_job_is_one_write_with_one_geocode(spark, tmp_path,
     assert 1 <= len(jobs) <= 3, jobs
 
 
+def test_dedup_job_signatures_are_one_write_with_one_map_in_arrow(
+        spark, tmp_path, monkeypatch):
+    """run_dedup_job computes every batch's signatures in ONE write: one
+    of its parquet writes runs the minhash MapInArrow, once, over one
+    scan (the pair and keep writes read the committed tables). A fresh
+    run over sf0.1 x 10 starts fewer Spark jobs than the 33 of one
+    filtered write per batch plus three trailing counts."""
+    import re
+    from pyspark.sql import DataFrameWriter
+    from s2geometry_spark.io.table_io import ParquetTableIO
+    from s2geometry_spark.jobs.dedup_job import run_dedup_job
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(X.formatted_plan(self._df))
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_job_one_write", "one full run")
+    try:
+        r = run_dedup_job(spark, SF_DIR.replace("sf0.01", "sf0.1"),
+                          ParquetTableIO(str(tmp_path)), docs_mult=10)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r["committed"] == [0, 1, 2, 3], r
+    sig_plans = [p for p in plans if "MapInArrow" in p]
+    assert len(sig_plans) == 1, plans
+    plan = sig_plans[0]
+    assert len(set(re.findall(r"MapInArrow \((\d+)\)", plan))) == 1, plan
+    assert len(set(re.findall(r"Scan parquet [^(\n]*\((\d+)\)", plan))) \
+        == 1, plan
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup_job_one_write")
+    assert len(jobs) < 33, jobs
+
+
 def test_vocab_topn_is_take_ordered(spark):
     """The global top-n must compile to TakeOrderedAndProject (per-
     partition top-n + driver merge), never a full global sort."""

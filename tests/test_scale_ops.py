@@ -375,16 +375,17 @@ JOB_TABLE = "pages_tiled"
 JOB_HOT = 2  # sf0.01 has level-4 tiles of 3-6 rows: some hot, some not
 
 
-def _staging_dirs(io: ParquetTableIO) -> list[str]:
-    return [d for d in os.listdir(os.path.join(io.root, JOB_TABLE))
+def _staging_dirs(io: ParquetTableIO, table: str = JOB_TABLE) -> list[str]:
+    return [d for d in os.listdir(os.path.join(io.root, table))
             if d.startswith("_staging-")]
 
 
-def _uncommitted_dirs(io: ParquetTableIO) -> list[str]:
+def _uncommitted_dirs(io: ParquetTableIO,
+                      table: str = JOB_TABLE) -> list[str]:
     """Dirs under the table that no manifest entry names: the staging
     dir, its batch output, or a pending write left behind."""
-    table_dir = os.path.join(io.root, JOB_TABLE)
-    committed = {os.path.basename(s["dir"]) for s in io.history(JOB_TABLE)}
+    table_dir = os.path.join(io.root, table)
+    committed = {os.path.basename(s["dir"]) for s in io.history(table)}
     return [d for d in os.listdir(table_dir)
             if os.path.isdir(os.path.join(table_dir, d))
             and d not in committed]
@@ -554,6 +555,42 @@ def test_package_pyfiles(tmp_path):
         out, "s2geometry_spark", "jobs", "geocode_job.py")
 
 
+def test_dedup_job_spark_submit_session_has_engine_confs(tmp_path):
+    """`spark-submit --py-files <zip> jobs/dedup_job.py` completes on
+    sf0.001 with the package imported from the zip, and the session
+    its main() builds carries the engine confs (the worker daemon, its
+    PYTHONPATH, the Arrow batch size), as the event log records them."""
+    zip_path = package_pyfiles(str(tmp_path / "pkg.zip"))
+    events = tmp_path / "events"
+    events.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_SF_DIR=SF_DIR.replace("sf0.01", "sf0.001"),
+               SPARK_GRAFT_OUT=str(tmp_path / "out"))
+    script = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "s2geometry_spark", "jobs",
+        "dedup_job.py")
+    res = subprocess.run(
+        ["spark-submit", "--master", "local[2]",
+         "--conf", "spark.eventLog.enabled=true",
+         "--conf", f"spark.eventLog.dir={events}",
+         "--conf", "spark.eventLog.rolling.enabled=false",
+         "--conf", "spark.eventLog.compress=false",
+         "--py-files", zip_path, script],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=600)
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert "'n_kept'" in res.stdout, res.stdout
+    (log,) = os.listdir(events)
+    with open(events / log) as f:
+        env_update = next(e for e in map(json.loads, f) if e["Event"]
+                          == "SparkListenerEnvironmentUpdate")
+    props = dict(env_update["Spark Properties"])
+    assert props["spark.python.daemon.module"] \
+        == "s2geometry_spark.worker_daemon"
+    assert props["spark.executorEnv.PYTHONPATH"] == zip_path
+    assert props["spark.sql.execution.arrow.maxRecordsPerBatch"] == "65536"
+
+
 def test_session_defaults_fit_host(monkeypatch):
     """Unset, cores come from the CPU affinity mask and driver memory
     is half of MemTotal capped at 16g; the env vars still override."""
@@ -706,6 +743,99 @@ def test_dedup_job_fresh_resume_and_equivalence(spark, tmp_path):
     assert rerun["committed"] == [] and len(rerun["skipped"]) == 4
     assert rerun["n_pairs"] == full["n_pairs"]
     assert rerun["n_kept"] == full["n_kept"]
+
+
+SIGS_TABLE = "dedup_sigs"
+
+
+def _table_rows(io: ParquetTableIO, spark, table: str, *cols) -> set:
+    return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in io.read(spark, table).select(*cols).collect()}
+
+
+@pytest.fixture(scope="module")
+def dedup_one_shot(spark, tmp_path_factory):
+    """One uninterrupted dedup_job run: the reference for the tests of
+    its layout, its crash and its resume."""
+    from s2geometry_spark.jobs.dedup_job import run_dedup_job
+    io = ParquetTableIO(str(tmp_path_factory.mktemp("dedup_one_shot")))
+    return io, run_dedup_job(spark, SF_DIR, io)
+
+
+def test_dedup_job_sigs_files_keep_the_batch_column(spark, dedup_one_shot):
+    """Each batch's signatures commit as one snapshot whose files hold
+    (url, sh, sigs, batch), as earlier versions wrote them one batch per
+    write; each file's lineage bounds are its snapshot's batch id."""
+    io, full = dedup_one_shot
+    assert full["committed"] == [0, 1, 2, 3], full
+    snaps = io.history(SIGS_TABLE)
+    assert [s["meta"]["batch_key"] for s in snaps] == [[0], [1], [2], [3]]
+    for s in snaps:
+        files = [os.path.join(dp, f) for dp, _, fs in os.walk(s["dir"])
+                 for f in fs if f.endswith(".parquet")]
+        assert files, s
+        for f in files:
+            assert pq.read_schema(f).names == ["url", "sh", "sigs",
+                                               "batch"], f
+    batch_of_snap = {s["snapshot_id"]: s["meta"]["batch_key"][0]
+                     for s in snaps}
+    lineage = io.metrics(spark, SIGS_TABLE).collect()
+    assert {r["snapshot_id"] for r in lineage} == set(batch_of_snap)
+    assert all(r["key_min"] == r["key_max"] == batch_of_snap[r["snapshot_id"]]
+               for r in lineage)
+    assert _uncommitted_dirs(io, SIGS_TABLE) == []
+
+
+def test_dedup_job_idempotent_rerun_starts_no_spark_job(spark,
+                                                        dedup_one_shot):
+    """With every stage committed, a re-run reads its counts from the
+    manifest and the footers: no Spark job in its job group."""
+    from s2geometry_spark.jobs.dedup_job import run_dedup_job
+    io, full = dedup_one_shot
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_job_noop_resume", "idempotent re-run")
+    try:
+        again = run_dedup_job(spark, SF_DIR, io)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup(
+        "dedup_job_noop_resume") == []
+    assert again == {**full, "committed": [], "skipped": [0, 1, 2, 3]}
+    assert again["n_pairs"] == io.read(spark, "dedup_pairs").count()
+    assert again["n_kept"] == io.read(spark, "dedup_keep").count()
+
+
+def test_dedup_job_crash_keeps_prefix_and_removes_staging(
+        spark, tmp_path, monkeypatch, dedup_one_shot):
+    """A failure on batch 2's signature commit leaves batches 0 and 1
+    committed, no staging dir and no uncommitted dir; the resume commits
+    the rest, and its tables and counts equal a one-shot run's."""
+    from s2geometry_spark.jobs.dedup_job import run_dedup_job
+    io = ParquetTableIO(str(tmp_path))
+    real_append = io.append
+
+    def append(df, table, **kw):
+        if (table == SIGS_TABLE
+                and (kw.get("meta") or {}).get("batch_key") == [2]):
+            raise RuntimeError("injected failure on batch 2")
+        return real_append(df, table, **kw)
+
+    monkeypatch.setattr(io, "append", append)
+    with pytest.raises(RuntimeError, match="batch 2"):
+        run_dedup_job(spark, SF_DIR, io)
+    monkeypatch.undo()
+    assert io.done_keys(SIGS_TABLE) == {0, 1}
+    assert _staging_dirs(io, SIGS_TABLE) == []
+    assert _uncommitted_dirs(io, SIGS_TABLE) == []
+
+    r = run_dedup_job(spark, SF_DIR, io)
+    io_full, full = dedup_one_shot
+    assert r == {**full, "committed": [2, 3], "skipped": [0, 1]}
+    for table, cols in ((SIGS_TABLE, ("url", "sigs", "batch")),
+                        ("dedup_pairs", ("url_a", "url_b", "jaccard")),
+                        ("dedup_keep", ("url",))):
+        assert _table_rows(io, spark, table, *cols) \
+            == _table_rows(io_full, spark, table, *cols), table
 
 
 def test_metrics_backfill_after_crash_gap(spark, tmp_path):
